@@ -30,9 +30,9 @@ from pyspark.sql import functions as F
 
 from ..session import (
     configure_for_oracle,
+    load_spread,
     load_table,
     pinned_shuffle_width,
-    spread_small_scan,
 )
 
 JACCARD_THRESHOLD = 0.95
@@ -51,18 +51,6 @@ REPS_PER_BUCKET = 16    # candidate partners per (band, bucket) in the
                         # cost O(bucket * 16) instead of O(bucket^2)
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
-    # spread an under-split scan across the session's cores (r12, guide
-    # §2.5): the document lanes are expression-bound (tokenize/hash per
-    # row), and a single-row-group parquet file otherwise serializes
-    # them onto one core; no-op at production split counts
-    return spread_small_scan(
-        load_table(spark, sf_dir, "documents"), spark,
-        key=f"{sf_dir}/documents.parquet",  # memoized probe (ADVICE r12)
-    )
-
-
 def _norm_text():
     return F.lower(F.trim(F.col("text")))
 
@@ -70,7 +58,8 @@ def _norm_text():
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on normalized text: representative = min(doc_id) per
     distinct text, with the duplicate count."""
-    docs = _docs(spark, sf_dir)
+    configure_for_oracle(spark)
+    docs = load_spread(spark, sf_dir, "documents")
     return (
         docs.groupBy(_norm_text().alias("text_norm"))
         .agg(
@@ -85,7 +74,8 @@ def q_dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup keyed on md5 digest — the at-scale variant (32-byte
     shuffle key instead of full text). Output identical to q_dedup_exact
     whenever md5 is collision-free on the corpus."""
-    docs = _docs(spark, sf_dir)
+    configure_for_oracle(spark)
+    docs = load_spread(spark, sf_dir, "documents")
     return (
         docs.groupBy(F.md5(_norm_text()).alias("fp"))
         .agg(
@@ -123,7 +113,8 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     frac = Fraction(JACCARD_THRESHOLD).limit_denominator(10_000)
     tp, tq = frac.numerator, frac.denominator
-    docs = _docs(spark, sf_dir)
+    configure_for_oracle(spark)
+    docs = load_spread(spark, sf_dir, "documents")
     toks_arr = F.array_distinct(F.split(_norm_text(), " "))
     toks_df = docs.select("doc_id", toks_arr.alias("toks"))
     tok_rows = toks_df.select("doc_id", F.explode("toks").alias("tok"))
@@ -317,7 +308,8 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (D bounded by the same <= 4096 guard; the general path blocks by a
     rare token first, PPJoin-style). Oracle: list_has_all over the
     recomputed distinct sets."""
-    docs = _docs(spark, sf_dir)
+    configure_for_oracle(spark)
+    docs = load_spread(spark, sf_dir, "documents")
     toks_df = docs.select(
         "doc_id", F.array_distinct(F.split(_norm_text(), " ")).alias("toks")
     )
@@ -414,7 +406,8 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify join touches only colliding pairs — the LSH S-curve keeps that
     near-linear for high thresholds. Rows-only check (xxhash64 is
     Spark-specific); ground truth = dedup_ngram_jaccard."""
-    return minhash_near_dup_pairs(_docs(spark, sf_dir))
+    configure_for_oracle(spark)
+    return minhash_near_dup_pairs(load_spread(spark, sf_dir, "documents"))
 
 
 def _minhash_toks_bands(
@@ -603,7 +596,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-bit-band pigeonhole joins. Bit votes: for each bit position, +1 if
     the token hash has the bit set else -1; sign of the total is the
     signature bit. Rows-only (xxhash64)."""
-    docs = _docs(spark, sf_dir)
+    configure_for_oracle(spark)
+    docs = load_spread(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
         F.explode(F.array_distinct(F.split(_norm_text(), " "))).alias("tok"),
@@ -674,8 +668,9 @@ def q_dedup_char_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # normalized text materialized BEFORE the shingle lambda reads it —
     # an expression inside substr(i, ...) re-normalizes per shingle
     # (O(chars^2)); a column reference evaluates once per row
+    configure_for_oracle(spark)
     docs = (
-        _docs(spark, sf_dir)
+        load_spread(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 100)
         .select("doc_id", _norm_text().alias("txt"))
     )
@@ -782,7 +777,8 @@ def q_dedup_transitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     join over near-clique clusters is Σ d² ≈ |cluster|³ row explosions,
     while the collapsed one is linear in pairs plus a cube on the tiny
     group graph."""
-    sets = _docs(spark, sf_dir).select(
+    configure_for_oracle(spark)
+    sets = load_spread(spark, sf_dir, "documents").select(
         "doc_id",
         F.array_sort(F.array_distinct(F.split(_norm_text(), " "))).alias(
             "s"
@@ -941,9 +937,10 @@ def q_dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles are the band-bucket join and the bounded verified-pair
     output; the per-doc token arrays ride along for verification
     (bounded by doc length) — full text never shuffles."""
-    # _docs spreads an under-split scan (r12, guide §2.5): the 16-way
+    # load_spread spreads an under-split scan (r12, guide §2.5): the 16-way
     # md5 minhash fold below otherwise runs on the single scan core
-    docs = _docs(spark, sf_dir)
+    configure_for_oracle(spark)
+    docs = load_spread(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
         F.array_sort(
@@ -1085,8 +1082,9 @@ def q_dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combinable); banding and the capped bucket join follow
     the minhash-portable shape; verification is a bit op on two
     8-byte signatures riding the pair rows."""
-    # _docs spreads an under-split scan (r12, guide §2.5)
-    docs = _docs(spark, sf_dir)
+    # load_spread spreads an under-split scan (r12, guide §2.5)
+    configure_for_oracle(spark)
+    docs = load_spread(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
         F.explode(
@@ -1230,7 +1228,8 @@ def q_dedup_detector_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-level pairs collapse to canonical-set pairs (distinct on two
     ids) before the flag joins, so the census never revisits text or
     token arrays. Output is at most 7 rows."""
-    sets = _docs(spark, sf_dir).select(
+    configure_for_oracle(spark)
+    sets = load_spread(spark, sf_dir, "documents").select(
         "doc_id",
         F.array_sort(F.array_distinct(F.split(_norm_text(), " "))).alias(
             "s"

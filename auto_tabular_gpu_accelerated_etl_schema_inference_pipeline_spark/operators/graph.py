@@ -409,11 +409,12 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from fractions import Fraction
 
-    from ..session import load_table
-    from .dedup import _docs, _norm_text
+    from ..session import configure_for_oracle, load_spread, load_table
+    from .dedup import _norm_text
 
     docs = load_table(spark, sf_dir, "documents")
-    toks_df = _docs(spark, sf_dir).select(
+    configure_for_oracle(spark)
+    toks_df = load_spread(spark, sf_dir, "documents").select(
         "doc_id", F.array_distinct(F.split(_norm_text(), " ")).alias("toks")
     )
     vocab = [

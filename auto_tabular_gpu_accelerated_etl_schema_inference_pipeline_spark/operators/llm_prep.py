@@ -32,8 +32,8 @@ from pyspark.sql import functions as F
 from ..session import (
     configure_for_oracle,
     load_events,
+    load_spread,
     load_table,
-    spread_small_scan,
 )
 
 #: regexes shared verbatim by Spark (Java regex) and DuckDB (RE2) — the
@@ -50,18 +50,6 @@ EVAL_CUT = 5
 
 TOP_TERMS = 3
 GROUP_SAMPLE_N = 5
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
-    # spread an under-split scan across the session's cores (r12, guide
-    # §2.5): the document lanes are expression-bound (tokenize/hash per
-    # row), and a single-row-group parquet file otherwise serializes
-    # them onto one core; no-op at production split counts
-    return spread_small_scan(
-        load_table(spark, sf_dir, "documents"), spark,
-        key=f"{sf_dir}/documents.parquet",  # memoized probe (ADVICE r12)
-    )
 
 
 def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -99,7 +87,8 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaves the scan — and the eval side is a few percent of the corpus,
     so its distinct shingle set broadcasts; the probe is a map-side hash
     semi-join followed by one count-distinct shuffle on train doc_id."""
-    docs = _docs(spark, sf_dir)
+    configure_for_oracle(spark)
+    docs = load_spread(spark, sf_dir, "documents")
     # materialize the token array ONCE per row before the lambda uses it:
     # a split() expression referenced inside transform()'s element_at
     # lambdas is re-evaluated per element (no CSE across higher-order
@@ -174,7 +163,8 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit of parallelism real packing jobs use); emits (doc_id, pack_id,
     n_tokens, pack_fill_after). Oracle: per-source recursive CTE
     replaying the same fold."""
-    docs = _docs(spark, sf_dir)
+    configure_for_oracle(spark)
+    docs = load_spread(spark, sf_dir, "documents")
     with_tok = docs.select(
         "doc_id", "source", F.size(F.split(F.col("text"), " ")).cast("int").alias("n_tokens")
     )
@@ -198,7 +188,8 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Physical shape: one explode + two hash aggregations (tf on
     (doc_id, term), df on term); df output is tiny (vocabulary) and
     broadcasts back onto tf; the ranking window shuffles on doc_id."""
-    docs = _docs(spark, sf_dir)
+    configure_for_oracle(spark)
+    docs = load_spread(spark, sf_dir, "documents")
     n_docs = docs.count()  # parquet metadata count — the cheap "fit"
     terms = docs.select(
         "doc_id", F.explode(F.split(F.lower(F.trim(F.col("text"))), " ")).alias("term")
@@ -235,7 +226,8 @@ def q_group_sample_fixed_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP_SAMPLE_N rows of each source. The per-shard "inspect a handful
     of examples" op; re-runs and cluster layout cannot change the
     sample. Single narrow window shuffle on the source key."""
-    docs = _docs(spark, sf_dir)
+    configure_for_oracle(spark)
+    docs = load_spread(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")).asc(), F.col("doc_id").asc()
     )
@@ -272,7 +264,8 @@ def q_source_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side, quota approximate to sampling error) or a two-phase
     per-partition offset rank. Same broadcast-quota skeleton either way."""
     configure_for_oracle(spark)
-    docs = _docs(spark, sf_dir)
+    configure_for_oracle(spark)
+    docs = load_spread(spark, sf_dir, "documents")
     weights = spark.createDataFrame(
         list(TARGET_MIX.items()), "lang string, wt int"
     )
@@ -411,7 +404,8 @@ def q_length_bucket_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything else is per-batch aggregation. At 100 TB you'd
     repartitionByRange on (bucket, doc_id) so each output shard holds
     whole batches."""
-    docs = _docs(spark, sf_dir)
+    configure_for_oracle(spark)
+    docs = load_spread(spark, sf_dir, "documents")
     n_tok = F.size(F.split(F.col("text"), " "))
     with_b = docs.select(
         "doc_id",

@@ -343,15 +343,15 @@ def q_auto_tokenize_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed histogram/prefix-sum plan, not the single-reducer SQL
     ``percentile`` aggregate.
 
-    Serve shape (VERDICT r5 item 4): the stats pass is session-memoized
-    (shared with q_schema_infer — both profile the same fixture) and
-    the boundary model is served from the SAME persisted artifact the
-    saved-model lane builds — fit once per fixture, serve every lane.
-    The artifact's boundaries are bit-identical to what the in-query
-    fit produced (same fit, same 6dp rounding, doubles round-trip
-    parquet exactly), so the oracle is unchanged."""
+    Serve shape: the stats pass is session-memoized (shared with
+    q_schema_infer — both profile the same fixture) and the boundary
+    model is the session's cached exact-fit model
+    (cached_exact_boundaries) shared with the quantile-bin lanes — fit
+    once, serve every lane. Its boundaries are bit-identical to what the
+    in-query fit produces (same fit, same 6dp rounding), so the oracle
+    is unchanged."""
     from ..session import session_memo
-    from .quantile_bin_queries import persisted_exact_boundaries
+    from .quantile_bin_queries import cached_exact_boundaries
 
     configure_for_oracle(spark)
     df = load_table(spark, sf_dir, "lineitem")
@@ -361,13 +361,13 @@ def q_auto_tokenize_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         lambda: infer_column_classes(spark, df, "lineitem"),
     )
-    bounds = persisted_exact_boundaries(spark, sf_dir)
+    bounds = cached_exact_boundaries(spark, sf_dir)
     # This lane's oracle is written against the SERVED exact model —
     # auto_tokenize's partial-model fallback would silently refit with
     # the (sketch) production defaults and stop matching it. Fail loud
-    # instead: a partial artifact here means the classifier and the
-    # artifact recipe have drifted apart and the artifact must be
-    # re-fit, not papered over in-query.
+    # instead: a partial model here means the classifier and the
+    # boundary recipe have drifted apart, which must be fixed, not
+    # papered over in-query.
     cont = [
         r["column_name"]
         for r in stats.collect()
@@ -376,9 +376,9 @@ def q_auto_tokenize_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing = [c for c in cont if c not in bounds]
     if missing:
         raise ValueError(
-            "persisted boundary model does not cover inferred-continuous "
-            f"columns {missing}; rebuild the artifact (see "
-            "persisted_exact_boundaries) instead of falling back to an "
+            "served boundary model does not cover inferred-continuous "
+            f"columns {missing}; fix the recipe (see "
+            "cached_exact_boundaries) instead of falling back to an "
             "in-query sketch refit"
         )
     return auto_tokenize(

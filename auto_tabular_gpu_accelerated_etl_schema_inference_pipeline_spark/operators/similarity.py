@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_table, spread_small_scan
+from ..session import configure_for_oracle, load_spread, load_table
 
 TOP_K = 5
 N_QUERIES = 5           # vec_id < 5 are the query vectors
@@ -44,7 +44,6 @@ def _emb(
     spark: SparkSession, sf_dir: str, spread: bool = True
 ) -> DataFrame:
     configure_for_oracle(spark)
-    base = load_table(spark, sf_dir, "embeddings")
     if not spread:
         # Arrow lanes and bounded collects take the RAW scan (r13,
         # VERDICT r12 item 1): a query-vector collect wants the pushed
@@ -53,13 +52,10 @@ def _emb(
         # per-batch BLAS matmul — spreading it to 32 partitions forked
         # 32 Python workers for work one batch loop does faster
         # (guide §4: batch sizes large enough for vectorization).
-        return base
-    # spread an under-split scan across cores (r12, guide §2.5): the
-    # expression-bound lanes (per-row codegen folds over 64-dim vectors)
-    # otherwise serialize onto one core; no-op at production split counts
-    return spread_small_scan(
-        base, spark, key=f"{sf_dir}/embeddings.parquet"
-    )
+        return load_table(spark, sf_dir, "embeddings")
+    # the expression-bound lanes (per-row codegen folds over 64-dim
+    # vectors) otherwise serialize onto one core
+    return load_spread(spark, sf_dir, "embeddings")
 
 
 def _dbl_vec(col):

@@ -2172,9 +2172,12 @@ def q_events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(F.date_trunc("day", F.col("ts")).alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x")
     )
+    # a global aggregate yields one row even over no events; an empty
+    # series has no first state to fold from (the oracle's walk returns
+    # no rows), so it is dropped before the fold
     g = daily.agg(
         F.sort_array(F.collect_list(F.struct("d", "x"))).alias("arr")
-    )
+    ).where(F.size("arr") > 0)
     rows = g.select(
         F.explode(
             F.arrays_zip(F.col("arr"), F.expr(_HOLT_FOLD).alias("st"))

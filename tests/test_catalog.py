@@ -298,13 +298,15 @@ def test_spread_small_scan_memo(spark, sf_dir):
         spread2 = sess.spread_small_scan(docs, spark, key=key)
         rdd_probe.assert_not_called()
     assert spread2.rdd.getNumPartitions() == par
-    # a different parallelism would be a different memo slot
+    # a different parallelism would be a different cache slot
     assert (
         spark.sparkContext.applicationId,
         spark.sparkContext.startTime,
+        spark._jsparkSession.sessionUUID(),
+        "spread",
         key,
         par,
-    ) in sess._SPREAD_MEMO
+    ) in sess._CTX_CACHE
 
 
 def test_observe_fires_on_localcheckpoint(spark):

@@ -550,3 +550,27 @@ def test_holt_fold_matches_python_replay(spark, sf_dir):
         assert row["level_mu"] == l, row
         assert row["trend_mu"] == b, row
         assert row["forecast_next_mu"] == l + b, row
+
+
+def test_holt_linear_empty_events_matches_oracle(spark, sf_dir, tmp_path):
+    """With no events the global aggregate still yields one (empty)
+    series row; the fold must return no rows, as the oracle's walk
+    does, instead of slicing with length -1."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.timeseries import (
+        _HOLT_LINEAR_ORACLE,
+        q_events_holt_linear,
+    )
+
+    empty = pq.read_table(os.path.join(sf_dir, "events.parquet")).slice(0, 0)
+    path = os.path.join(str(tmp_path), "events.parquet")
+    pq.write_table(empty, path)
+    assert q_events_holt_linear(spark, str(tmp_path)).collect() == []
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+        assert con.execute(_HOLT_LINEAR_ORACLE).fetchall() == []
+    finally:
+        con.close()

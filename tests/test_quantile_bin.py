@@ -420,7 +420,7 @@ def test_auto_tokenize_serve_mode_guards_partial_model(spark, sf_dir):
     a PARTIAL model is ignored and everything refits — serving a model
     that silently covers half the columns would mix model vintages."""
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.quantile_bin_queries import (
-        persisted_exact_boundaries,
+        cached_exact_boundaries,
     )
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.schema_infer import (
         auto_tokenize,
@@ -430,7 +430,7 @@ def test_auto_tokenize_serve_mode_guards_partial_model(spark, sf_dir):
     )
 
     df = load_table(spark, sf_dir, "lineitem")
-    full = persisted_exact_boundaries(spark, sf_dir)
+    full = cached_exact_boundaries(spark, sf_dir)
     served = auto_tokenize(spark, df, "lineitem", boundaries=full)
     # fit knobs alongside a FULL model are ignored — that must warn
     # loudly (the caller thinks they're steering a fit that never runs)
@@ -461,8 +461,8 @@ def test_auto_tokenize_serve_mode_guards_partial_model(spark, sf_dir):
 
 def test_auto_tokenize_lane_rejects_partial_artifact(spark, sf_dir, monkeypatch):
     """The oracle-backed auto-tokenize lane must fail LOUDLY if the
-    persisted artifact stops covering every inferred-continuous column
-    (classifier/artifact drift) instead of silently falling back to the
+    served boundary model stops covering every inferred-continuous
+    column (classifier/model drift) instead of silently falling back to the
     sketch refit and diverging from its oracle."""
     import pytest
 
@@ -473,41 +473,88 @@ def test_auto_tokenize_lane_rejects_partial_artifact(spark, sf_dir, monkeypatch)
         q_auto_tokenize_lineitem,
     )
 
-    full = qbq.persisted_exact_boundaries(spark, sf_dir)
+    full = qbq.cached_exact_boundaries(spark, sf_dir)
     partial = {k: v for k, v in full.items() if k != "l_tax"}
     monkeypatch.setattr(
-        qbq, "persisted_exact_boundaries", lambda *a, **k: partial
+        qbq, "cached_exact_boundaries", lambda *a, **k: partial
     )
     with pytest.raises(ValueError, match="does not cover"):
         q_auto_tokenize_lineitem(spark, sf_dir)
 
 
-def test_persisted_boundaries_precomputed_seed(spark, sf_dir, tmp_path,
-                                               monkeypatch):
-    """r13: q_quantile_bin_scalable seeds the persisted boundary
-    artifact with the fit it already paid for. Contract: (a) a model
-    seeded via ``precomputed`` is bit-identical to one built from
-    scratch; (b) ``precomputed`` is IGNORED when the model already
-    exists (it is a build-cost shortcut, never an override)."""
-    import tempfile
+def test_persisted_boundaries_precomputed_seed(spark, sf_dir, monkeypatch):
+    """q_quantile_bin_scalable seeds the session's boundary model with
+    the fit it already paid for. Contract: (a) a model seeded via
+    ``precomputed`` is bit-identical to one built from scratch; (b)
+    ``precomputed`` is IGNORED when the model is already cached (it is
+    a build-cost shortcut, never an override)."""
+    from collections import OrderedDict
 
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark import (
+        session as sess,
+    )
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators import (
         quantile_bin_queries as qbq,
     )
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (
-        load_table,
-    )
 
-    built = qbq.persisted_exact_boundaries(spark, sf_dir)  # real artifact
-    fit = qbq._exact_rounded_boundaries(load_table(spark, sf_dir, "lineitem"))
+    built = qbq.cached_exact_boundaries(spark, sf_dir)  # real fit
+    fit = qbq._exact_rounded_boundaries(
+        sess.load_table(spark, sf_dir, "lineitem")
+    )
     assert fit == built  # the seed invariant the scalable lane relies on
 
-    # fresh model namespace: same fixture, empty /tmp
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    seeded = qbq.persisted_exact_boundaries(spark, sf_dir, precomputed=fit)
+    # fresh cache: same fixture, no model yet
+    monkeypatch.setattr(sess, "_CTX_CACHE", OrderedDict())
+    seeded = qbq.cached_exact_boundaries(spark, sf_dir, precomputed=fit)
     assert seeded == built
-    # model now exists — a bogus precomputed must NOT override it
-    again = qbq.persisted_exact_boundaries(
+    # model now cached — a bogus precomputed must NOT override it
+    again = qbq.cached_exact_boundaries(
         spark, sf_dir, precomputed={"bogus": [1.0]}
     )
     assert again == built
+
+
+def test_boundary_lanes_independent_of_lane_order(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The model-serving lanes return the same rows whether or not
+    quantile_bin_scalable seeded the session's boundary model first,
+    and no lane leaves a model artifact under the temp directory: a
+    lane's result must not depend on what ran before it, in this
+    process or an earlier one."""
+    import hashlib
+    import tempfile
+    from collections import OrderedDict
+
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark import (
+        session as sess,
+    )
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.quantile_bin_queries import (
+        q_quantile_bin_saved_model,
+        q_quantile_bin_scalable,
+    )
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.schema_infer import (
+        q_auto_tokenize_lineitem,
+    )
+
+    lanes = {
+        "saved_model": q_quantile_bin_saved_model,
+        "auto_tokenize": q_auto_tokenize_lineitem,
+        "scalable": q_quantile_bin_scalable,
+    }
+
+    def digest(df):
+        rows = sorted(map(tuple, df.collect()), key=repr)
+        return len(rows), hashlib.md5(repr(rows).encode()).hexdigest()
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    runs = []
+    for order in (
+        ["saved_model", "auto_tokenize", "scalable"],
+        ["scalable", "saved_model", "auto_tokenize"],
+    ):
+        monkeypatch.setattr(sess, "_CTX_CACHE", OrderedDict())
+        runs.append({n: digest(lanes[n](spark, sf_dir)) for n in order})
+    assert runs[0] == runs[1]
+    assert runs[0]["saved_model"] == runs[0]["scalable"]
+    assert not [p for p in os.listdir(tmp_path) if p.startswith("qbin_model_")]

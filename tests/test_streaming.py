@@ -250,8 +250,8 @@ def test_session_memo_bounds_live_context_entries(spark, monkeypatch):
     memoized."""
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark import session as sess
 
-    monkeypatch.setattr(sess, "_MEMO_MAX_LIVE", 6)
-    monkeypatch.setattr(sess, "_DF_MEMO", type(sess._DF_MEMO)())
+    monkeypatch.setattr(sess, "_CTX_CACHE_MAX_LIVE", 6)
+    monkeypatch.setattr(sess, "_CTX_CACHE", type(sess._CTX_CACHE)())
     builds = {"n": 0}
 
     def make(i):
@@ -266,7 +266,7 @@ def test_session_memo_bounds_live_context_entries(spark, monkeypatch):
         # touch the hot entry between inserts — LRU must keep it
         sess.session_memo(spark, "hot", "/x", make(0))
         sess.session_memo(spark, f"k{i}", "/x", make(i))
-    assert len(sess._DF_MEMO) <= 6, len(sess._DF_MEMO)
+    assert len(sess._CTX_CACHE) <= 6, len(sess._CTX_CACHE)
     n_before = builds["n"]
     sess.session_memo(spark, "hot", "/x", make(0))  # still cached
     assert builds["n"] == n_before
