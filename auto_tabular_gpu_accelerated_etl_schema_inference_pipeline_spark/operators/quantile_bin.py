@@ -545,6 +545,11 @@ def _interior_splits(bounds: list[float]) -> list[float]:
     return interior
 
 
+#: the boundary model artifact's schema — written by save_boundaries and
+#: read back with it by load_boundaries, so the load infers nothing
+_MODEL_SCHEMA = "col string, idx int, value double"
+
+
 def save_boundaries(
     spark, bounds: dict[str, list[float]], path: str
 ) -> None:
@@ -567,8 +572,7 @@ def save_boundaries(
     # (r13; the cost landed in every first-on-box model build).
     (
         spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1),
-            "col string, idx int, value double",
+            spark.sparkContext.parallelize(rows, 1), _MODEL_SCHEMA
         )
         .write.mode("overwrite")
         .parquet(path)
@@ -577,8 +581,10 @@ def save_boundaries(
 
 def load_boundaries(spark, path: str) -> dict[str, list[float]]:
     """Reload a save_boundaries artifact. The collect is bounded by
-    model size (cols × (bins+1) rows — KBs), never data size."""
-    rows = spark.read.parquet(path).collect()
+    model size (cols × (bins+1) rows — KBs), never data size. The read
+    carries the known schema: inferring it from the footer would cost a
+    Spark job of its own."""
+    rows = spark.read.schema(_MODEL_SCHEMA).parquet(path).collect()
     out: dict[str, dict[int, float]] = {}
     for r in rows:
         out.setdefault(r["col"], {})[r["idx"]] = r["value"]

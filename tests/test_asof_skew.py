@@ -93,12 +93,19 @@ def test_skew_probe_builders_split_hot_partition(spark, sf_dir):
     probe's both-sides-shuffled join — so the probe measures a split
     hot key, not an unsplit one, every time it is re-run. Thresholds
     floored for fixture size, same as the probe floors them for 60 M
-    rows and production leaves the 256 MB defaults."""
+    rows and production leaves the 256 MB defaults.
+
+    The shuffle width is pinned, like probe_skew.run() pins it: over P
+    hash partitions the hot one holds 1/5 + (4/5)/P of the rows and a
+    typical one (4/5)/P, a ratio of 1 + P/4. At the session default
+    P = cores that is exactly the skew factor 2 on a 4-core host, so
+    whether AQE marked the partition came down to hash noise."""
     import importlib
 
     probe = importlib.import_module("scripts.probe_skew")
 
     confs = {
+        "spark.sql.shuffle.partitions": "16",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.enabled": "true",

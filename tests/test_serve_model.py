@@ -1,0 +1,176 @@
+"""The fitted serving model: the classes frame (with its vocabularies)
+and the boundary artifact. Serving a batch must be one map-only plan —
+these tests pin its Spark job budget, the codes it serves and the
+artifact round trip."""
+
+import math
+import struct
+import uuid
+
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators import (
+    quantile_bin,
+    schema_infer,
+)
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted by job group."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # the status tracker is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _table(spark, path, rows):
+    spark.createDataFrame(
+        rows, "id bigint, segment string, grade int, f1 double, f2 double"
+    ).write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_serve_job_budget(spark, tmp_path):
+    """Serving runs no job of its own: the classes frame collects
+    driver-side (0 jobs), the boundary model loads with its known schema
+    (1 job, no footer inference), auto_tokenize constructs without an
+    action (0 jobs) and the served frame writes as one map-only job."""
+    rows = [
+        (i, f"s{i % 6}", i % 4, (i * 37 % 1000) / 10.0, (i * 7919 % 997) * 1.5)
+        for i in range(600)
+    ]
+    df = _table(spark, str(tmp_path / "t"), rows)
+    classes = schema_infer.infer_column_classes(spark, df, "t")
+    got, n = _jobs(spark, classes.collect)
+    assert n == 0
+    assert {r["column_name"]: r["inferred_class"] for r in got} == {
+        "id": "identifier",
+        "segment": "categorical",
+        "grade": "numeric_discrete",
+        "f1": "numeric_continuous",
+        "f2": "numeric_continuous",
+    }
+    bounds = quantile_bin.fit_quantile_boundaries(df, ["f1", "f2"], bins=10)
+    model = str(tmp_path / "model")
+    quantile_bin.save_boundaries(spark, bounds, model)
+    loaded, n = _jobs(spark, lambda: quantile_bin.load_boundaries(spark, model))
+    assert n == 1 and loaded == bounds
+    out, n = _jobs(
+        spark,
+        lambda: schema_infer.auto_tokenize(
+            spark, df, "t", classes_df=classes, boundaries=loaded
+        ),
+    )
+    assert n == 0
+    _, n = _jobs(
+        spark, lambda: out.write.mode("overwrite").parquet(str(tmp_path / "o"))
+    )
+    assert n == 1
+    assert spark.read.parquet(str(tmp_path / "o")).count() == len(rows)
+
+
+def _dense_rank_codes(df, c):
+    """value -> dense_rank over the column (nulls first), the codes the
+    bulk path has always emitted."""
+    w = Window.orderBy(F.col(c))
+    ranked = df.select(c).distinct().select(
+        c, F.dense_rank().over(w).alias("code")
+    )
+    return {r[c]: r["code"] for r in ranked.collect()}
+
+
+def test_served_codes_stable_across_batches(spark, tmp_path):
+    """A batch is coded against the vocabulary fitted on the training
+    table A, not its own: levels keep A's dense_rank codes when the
+    batch lacks one, a level A never saw gets a null code, and null gets
+    code 1 only when A held a null. Under ANSI, where an unseen-key
+    lookup must not raise."""
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        # segment holds nulls in A, grade does not; grade's native order
+        # (2 < 10 < 30) is not its string order ("10" < "2" < "30")
+        a = _table(
+            spark,
+            str(tmp_path / "a"),
+            [
+                (i, None if i % 10 == 0 else "abcd"[i % 4], (2, 10, 30)[i % 3],
+                 float(i), float(-i))
+                for i in range(400)
+            ],
+        )
+        b = _table(
+            spark,
+            str(tmp_path / "b"),
+            [
+                (0, "b", 10, 1.0, 1.0),
+                (1, "c", 30, 2.0, 2.0),
+                (2, "d", 10, 3.0, 3.0),
+                (3, "zz", 99, 4.0, 4.0),  # levels A never saw
+                (4, None, None, 5.0, 5.0),
+            ],
+        )
+        classes = schema_infer.infer_column_classes(spark, a, "a")
+        bounds = quantile_bin.fit_quantile_boundaries(a, ["f1", "f2"], bins=4)
+        served = {
+            r["id"]: r
+            for r in schema_infer.auto_tokenize(
+                spark, b, "b", classes_df=classes, boundaries=bounds
+            ).collect()
+        }
+        seg, grade = _dense_rank_codes(a, "segment"), _dense_rank_codes(a, "grade")
+        assert seg[None] == 1 and None not in grade
+        assert [grade[2], grade[10], grade[30]] == [1, 2, 3]
+        for i, s, g in ((0, "b", 10), (1, "c", 30), (2, "d", 10)):
+            assert served[i]["segment_code"] == seg[s]
+            assert served[i]["grade_code"] == grade[g]
+        assert served[3]["segment_code"] is None
+        assert served[3]["grade_code"] is None
+        assert served[4]["segment_code"] == 1  # A saw a null segment
+        assert served[4]["grade_code"] is None  # A saw no null grade
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
+def test_boundary_model_round_trip_bit_exact(spark, tmp_path):
+    """save_boundaries -> load_boundaries returns the model bit for bit
+    — -0.0, the ±inf end sentinels and duplicate interior boundaries
+    included — and the artifact carries exactly _MODEL_SCHEMA."""
+    inf = float("inf")
+    bounds = {
+        "a": [-inf, -0.0, 0.0, 0.0, 1.5, 1.5, inf],
+        "b": [-inf, 5e-324, 1.0 / 3.0, 1.7976931348623157e308, inf],
+    }
+    path = str(tmp_path / "model")
+    quantile_bin.save_boundaries(spark, bounds, path)
+    back = quantile_bin.load_boundaries(spark, path)
+
+    def bits(m):
+        return {c: [struct.pack("<d", x) for x in v] for c, v in m.items()}
+
+    assert bits(back) == bits(bounds)
+    assert math.copysign(1.0, back["a"][1]) == -1.0
+    written = spark.read.parquet(path).schema
+    assert written.simpleString() == spark.createDataFrame(
+        [], quantile_bin._MODEL_SCHEMA
+    ).schema.simpleString()
+
+
+def test_registry_classes_cache_collects_without_jobs(spark, sf_dir):
+    """The classes frame q_schema_infer and q_auto_tokenize_lineitem
+    share is cached as the driver-local frame itself, so every later
+    collect of it runs no Spark job."""
+    schema_infer.q_schema_infer(spark, sf_dir)  # builds (or hits) the cache
+    stats = schema_infer._cached_classes(spark, sf_dir, "lineitem")
+    rows, n = _jobs(spark, stats.collect)
+    assert n == 0
+    assert {r["column_name"] for r in rows if r["vocab"] is not None} == {
+        "l_linenumber", "l_returnflag", "l_linestatus",
+    }
