@@ -1,100 +1,41 @@
-"""Fitted-model persistence for the tokenizer — the reference's fitted
-state (boundary tensor at etl_benchmark.py:74 / host_thresholds at
-etl_benchmark_numba.py:62) dies with the process; a real pipeline fits
-once and transforms many times across jobs, so the boundary vectors
-(plus bin semantics metadata) persist as JSON.
+"""The tokenizer's fit/transform split as a model, plus pure-SQL model
+inference queries.
 
-State is KBs (bins+1 floats per column): save/load is driver-side file
-IO; the loaded model broadcasts into the same map-only Bucketizer
-transform. At 100 TB the model store would be object storage — the JSON
-format is trivially portable.
+The reference's fitted state (boundary tensor at etl_benchmark.py:74 /
+host_thresholds at etl_benchmark_numba.py:62) dies with the process; a
+real pipeline fits once and transforms many times. QuantileBinModel is
+that split: a sketch fit to ``bins+1`` boundary floats per column (KBs of
+driver-side state) and the map-only Bucketizer transform. Its one
+persisted format is the parquet boundary artifact of
+``quantile_bin.save_boundaries`` / ``load_boundaries``.
 """
 
 from __future__ import annotations
 
-import json
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from .quantile_bin import (
-    DEFAULT_BINS,
-    bucketize,
-    bucketize_pandas_udf,
-    fit_quantile_boundaries,
-    fit_quantile_boundaries_sampled,
-)
-
-FORMAT_VERSION = 1
+from .quantile_bin import DEFAULT_BINS, bucketize, fit_quantile_boundaries
 
 
 @dataclass
 class QuantileBinModel:
-    """Fit/transform split as a persistable model (scan -> fit -> save;
-    later: load -> transform, no re-fit)."""
+    """Fitted boundaries per column: fit once, transform any later frame
+    without refitting."""
 
-    bins: int = DEFAULT_BINS
-    boundaries: dict[str, list[float]] = field(default_factory=dict)
-    relative_error: float = 0.001
-    fit_strategy: str = "sketch"
+    boundaries: dict[str, list[float]]
 
     @classmethod
     def fit(
-        cls,
-        df: DataFrame,
-        cols: list[str],
-        bins: int = DEFAULT_BINS,
-        relative_error: float = 0.001,
-        strategy: str = "sketch",
+        cls, df: DataFrame, cols: list[str], bins: int = DEFAULT_BINS
     ) -> "QuantileBinModel":
-        if strategy == "sampled":
-            bounds = fit_quantile_boundaries_sampled(df, cols, bins)
-        else:
-            bounds = fit_quantile_boundaries(df, cols, bins, relative_error)
-        return cls(
-            bins=bins,
-            boundaries=bounds,
-            relative_error=relative_error,
-            fit_strategy=strategy,
-        )
+        return cls(fit_quantile_boundaries(df, cols, bins))
 
     def transform(
-        self,
-        df: DataFrame,
-        keep_cols: list[str] | None = None,
-        backend: str = "bucketizer",
+        self, df: DataFrame, keep_cols: list[str] | None = None
     ) -> DataFrame:
-        if backend == "pandas_udf":
-            return bucketize_pandas_udf(df, self.boundaries, keep_cols=keep_cols)
         return bucketize(df, self.boundaries, keep_cols=keep_cols)
-
-    def save(self, path: str) -> None:
-        payload = {
-            "format_version": FORMAT_VERSION,
-            "bins": self.bins,
-            "relative_error": self.relative_error,
-            "fit_strategy": self.fit_strategy,
-            "boundaries": self.boundaries,
-        }
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(payload, f)
-
-    @classmethod
-    def load(cls, path: str) -> "QuantileBinModel":
-        with open(path) as f:
-            payload = json.load(f)
-        if payload.get("format_version") != FORMAT_VERSION:
-            raise ValueError(
-                f"unsupported model format {payload.get('format_version')}"
-            )
-        return cls(
-            bins=payload["bins"],
-            boundaries={k: [float(x) for x in v] for k, v in payload["boundaries"].items()},
-            relative_error=payload["relative_error"],
-            fit_strategy=payload["fit_strategy"],
-        )
 
 
 # --- ML inference as pure SQL (operator fusion — the ICDE 2025

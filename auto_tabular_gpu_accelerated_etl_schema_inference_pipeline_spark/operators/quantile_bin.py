@@ -19,8 +19,8 @@ and searchsorted-right semantics for the boundary paths):
 
 2. ``fit_quantile_boundaries`` + ``bucketize`` — the 100 TB path.
    Fit: ``percentile_approx`` (KLL-style sketch, one distributed agg
-   job for all columns, merge-combinable; relative_error=0 → exact SQL
-   ``percentile``). The fitted
+   job for all columns, merge-combinable; relative_error=0 → the
+   distributed exact fit, bit-identical to SQL ``percentile``). The fitted
    boundary vector (101 floats/col ≈ 16 KB for 20 cols) is driver-side
    state — exactly the reference's fit/transform split
    (etl_benchmark.py:74 then :79) — and is broadcast into a JVM-side
@@ -69,6 +69,7 @@ def exact_quantile_bin(
     rows in sorted order — pd.qcut-equivalent on tie-free data, and
     deterministic on tied data because ``tiebreak`` extends the sort to a
     total order (l_quantity has only 50 distinct values — SURVEY §7).
+    The grouped binning with no group columns.
 
     Raises ``ValueError`` when neither ``keys`` nor ``tiebreak`` is given:
     an ``ORDER BY col`` alone is not a total order on tied values, so bin
@@ -81,11 +82,7 @@ def exact_quantile_bin(
             "(or keys=) columns that uniquely identify rows; ties on the "
             "binned column are otherwise assigned nondeterministically"
         )
-    out = [F.col(k) for k in keys]
-    for c in cols:
-        w = Window.orderBy(F.col(c).asc(), *[F.col(t).asc() for t in tiebreak])
-        out.append((F.ntile(bins).over(w) - F.lit(1)).cast("int").alias(f"{c}_bin"))
-    return df.select(*out)
+    return exact_quantile_bin_grouped(df, [], cols, bins, tiebreak, keys)
 
 
 def exact_quantile_bin_grouped(
@@ -99,12 +96,12 @@ def exact_quantile_bin_grouped(
     """Per-GROUP equal-count binning: ``ntile`` over a window PARTITIONED
     by ``group_cols`` — each group gets its own exact equal-frequency bin
     edges (per-segment feature scaling). Unlike the global exact lane
-    (whose unpartitioned window is a single-partition sort, oracle-only),
-    the partitioned window distributes: one shuffle on the group key,
-    then per-group local sorts. With a high-cardinality group key this IS
-    the scalable exact path; a single fat group degenerates to the global
-    case and should route to the distributed fit instead
-    (fit_quantile_boundaries_exact_distributed)."""
+    (no group columns: an unpartitioned window is a single-partition
+    sort, oracle-only), the partitioned window distributes: one shuffle
+    on the group key, then per-group local sorts. With a high-cardinality
+    group key this IS the scalable exact path; a single fat group
+    degenerates to the global case and should route to the distributed
+    fit instead (fit_quantile_boundaries_exact_distributed)."""
     if not tiebreak:
         raise ValueError(
             "exact_quantile_bin_grouped needs tiebreak columns forming a "
@@ -139,7 +136,9 @@ def fit_quantile_boundaries(
     over all columns, KLL-style sketch with O(accuracy) state per column
     regardless of row count: the 100 TB setting (measured 2.5x faster
     than df.stat.approxQuantile at the same error on sf0.1).
-    relative_error=0: exact SQL ``percentile`` (sorts per column — heavy;
+    relative_error=0: fit_quantile_boundaries_exact_distributed — bit-
+    identical to SQL ``percentile``, but a histogram + prefix-sum plan
+    instead of its single-reducer aggregate (heavier than the sketch;
     the exact-but-scalable correctness check, not the hot path)."""
     probs = [i / bins for i in range(bins + 1)]
     probs_arr = F.array(*[F.lit(p) for p in probs])
@@ -157,7 +156,6 @@ def fit_quantile_boundaries_exact_distributed(
     df: DataFrame,
     cols: list[str],
     bins: int = DEFAULT_BINS,
-    coarse_buckets: int = 256,
     driver_histogram_max: int = 2_000_000,
 ) -> dict[str, list[float]]:
     """Exact interpolated percentiles with a distributed plan — same
@@ -175,15 +173,14 @@ def fit_quantile_boundaries_exact_distributed(
          key is the distinct value set, already compressed.
       3. two-phase distributed prefix sum: a per-column min/max read
          off the PERSISTED HISTOGRAM (not a second scan of the table)
-         fits ``coarse_buckets`` equal-WIDTH range buckets per column
-         (bucketing only balances the windows — any monotone split is
-         correct; equal-width costs one codegen agg where a sketch pass
-         cost 2.4 s, and 256 buckets leave plenty of parallelism even
-         under 10x value-space skew), cumsum WITHIN (col, bucket)
+         fits COARSE_BUCKETS equal-WIDTH range buckets per column
+         (equal-width costs one codegen agg where a sketch pass cost
+         2.4 s), cumsum WITHIN (col, bucket)
          partitions, plus a collected cumsum of the tiny per-bucket
          totals. No window ever sees more than a bucket's share of a
          column's distinct values — the single-partition global window
-         the naive formulation needs is gone.
+         the naive formulation needs is gone (_bucket_prefix_sums,
+         shared with cumulative_value_counts).
       4. each histogram row emits the integer ranks it covers
          (``filter`` over a <=2*(bins+1)-element rank array, codegen) —
          ~2*(bins+1) rows per column come back to the driver.
@@ -200,23 +197,11 @@ def fit_quantile_boundaries_exact_distributed(
     import math
 
     probs = [i / bins for i in range(bins + 1)]
-    long = df.selectExpr(
-        "stack({}, {}) AS (col, value)".format(
-            len(cols),
-            ", ".join(f"'{c}', CAST({c} AS DOUBLE)" for c in cols),
-        )
-    ).filter(F.col("value").isNotNull())
-    long = long.withColumn("value", F.col("value") + F.lit(0.0))
-
     # --- value histogram first: ONE full pass over the base data; the
     # coarse-bucket min/max then reads the compact persisted histogram
     # instead of re-scanning the table (at 100 TB that second scan was
     # the single most expensive line in this function)
-    hist0 = (
-        long.groupBy("col", "value")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
-    )
+    hist0 = _value_histogram(df, cols).persist()
     stats = hist0.groupBy("col").agg(
         F.min("value").alias("lo"),
         F.max("value").alias("hi"),
@@ -268,37 +253,7 @@ def fit_quantile_boundaries_exact_distributed(
             }
         return _interpolate_boundaries(cols, probs, n_by_col, at_rank)
 
-    # --- coarse range buckets (correctness-neutral load balancing) ---
-    bucket_expr = None
-    for c in cols:
-        lo, hi = mm.get(c, (0.0, 0.0))
-        if hi > lo:
-            b_c = F.least(
-                F.floor(
-                    (F.col("value") - F.lit(lo))
-                    * F.lit(coarse_buckets / (hi - lo))
-                ),
-                F.lit(coarse_buckets - 1),
-            ).cast("int")
-        else:  # constant (or all-null) column: one bucket
-            b_c = F.lit(0)
-        cond = F.when(F.col("col") == c, b_c)
-        bucket_expr = cond if bucket_expr is None else bucket_expr.when(
-            F.col("col") == c, b_c
-        )
-    hist = hist0.withColumn("bucket", bucket_expr)
-
-    # --- two-phase prefix sum: within-bucket window + tiny bucket offsets
-    btot = (
-        hist.groupBy("col", "bucket")
-        .agg(F.sum("cnt").alias("btot"))
-        .collect()
-    )
-    offsets: dict[str, list[tuple[int, int, int]]] = {c: [] for c in cols}
-    run: dict[str, int] = {c: 0 for c in cols}
-    for r in sorted(btot, key=lambda r: (r["col"], r["bucket"])):
-        offsets[r["col"]].append((r["bucket"], run[r["col"]], r["btot"]))
-        run[r["col"]] += r["btot"]
+    hist, offsets = _bucket_prefix_sums(hist0, {c: mm[c] for c in cols})
 
     # --- target ranks routed to the bucket whose global-rank span
     # contains them DRIVER-side, so each histogram row only tests the
@@ -324,14 +279,8 @@ def fit_quantile_boundaries_exact_distributed(
         [(c, b, off, ks) for (c, b), (off, ks) in per_bucket.items()],
         "col string, bucket int, off bigint, ks array<bigint>",
     )
-    w_in = (
-        Window.partitionBy("col", "bucket")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     looked = (
-        hist.withColumn("cum_in", F.sum("cnt").over(w_in))
-        .join(F.broadcast(targets_df), ["col", "bucket"])
+        hist.join(F.broadcast(targets_df), ["col", "bucket"])
         .withColumn("cum_end", F.col("off") + F.col("cum_in"))
         .withColumn("cum_start", F.col("cum_end") - F.col("cnt"))
         .select(
@@ -387,34 +336,70 @@ def _interpolate_boundaries(
     return out
 
 
-def fit_quantile_boundaries_sampled(
-    df: DataFrame,
-    cols: list[str],
-    bins: int = DEFAULT_BINS,
-    sample_rows: int = 250_000,
-    seed: int = 42,
-) -> dict[str, list[float]]:
-    """Sample-based fit: Bernoulli-sample ~sample_rows rows, Arrow-collect
-    the sample, exact ``np.quantile`` per column driver-side.
+#: equal-width range buckets per column in the two-phase prefix sum —
+#: load balancing only (any monotone split gives the same sums); 256
+#: leaves plenty of window parallelism even under 10x value-space skew
+COARSE_BUCKETS = 256
 
-    Statistics: rank error of a p-quantile from an n-row sample is
-    ~sqrt(p(1-p)/n); n=250k gives ~1e-3 — the same class as the sketch at
-    accuracy 1000 — and n stays FIXED as the table grows, so at 100 TB
-    this is one cheap scan + a 100 MB driver sample, while sketch updates
-    cost per-row CPU on every executor. Measured at 10M x 20: 3 s vs 57 s
-    for percentile_approx(acc=1000) when the table is cached.
 
-    Use over a persisted df when making multiple passes (fit + transform)
-    — the same pattern as the reference holding the table in RAM
-    (etl_benchmark.py:47-53)."""
-    import numpy as np
+def _value_histogram(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Long-form ``(col, value, cnt)`` histogram of ``cols`` cast to
+    double: nulls dropped (percentile/window semantics), ``+ 0.0``
+    canonicalizes -0.0 so it counts with +0.0. The shuffle key is the
+    distinct value set, already compressed."""
+    long = df.selectExpr(
+        "stack({}, {}) AS (col, value)".format(
+            len(cols),
+            ", ".join(f"'{c}', CAST({c} AS DOUBLE)" for c in cols),
+        )
+    ).filter(F.col("value").isNotNull())
+    long = long.withColumn("value", F.col("value") + F.lit(0.0))
+    return long.groupBy("col", "value").agg(F.count(F.lit(1)).alias("cnt"))
 
-    n = df.count()
-    frac = min(1.0, sample_rows / max(n, 1))
-    sample = df.select(cols) if frac >= 1.0 else df.select(cols).sample(frac, seed=seed)
-    pdf = sample.toPandas()
-    probs = np.linspace(0.0, 1.0, bins + 1)
-    return {c: [float(x) for x in np.quantile(pdf[c].to_numpy(), probs)] for c in cols}
+
+def _bucket_prefix_sums(
+    hist: DataFrame, ranges: dict[str, tuple[float, float]]
+) -> tuple[DataFrame, dict[str, list[tuple[int, int, int]]]]:
+    """Two-phase distributed prefix sum over a ``(col, value, cnt)``
+    histogram whose per-column value range is ``ranges``: COARSE_BUCKETS
+    equal-width buckets per column, a running ``cum_in`` count within
+    each (col, bucket) window, and the tiny per-bucket totals collected
+    into per-column ``(bucket, off, tot)`` spans in bucket order — so a
+    row's global running count is ``off + cum_in``. No window ever sees
+    more than one bucket's share of a column's distinct values."""
+    bucket_expr = None
+    for c, (lo, hi) in ranges.items():
+        if hi > lo:
+            b_c = F.least(
+                F.floor(
+                    (F.col("value") - F.lit(lo))
+                    * F.lit(COARSE_BUCKETS / (hi - lo))
+                ),
+                F.lit(COARSE_BUCKETS - 1),
+            ).cast("int")
+        else:  # constant (or all-null) column: one bucket
+            b_c = F.lit(0)
+        cond = F.when(F.col("col") == c, b_c)
+        bucket_expr = cond if bucket_expr is None else bucket_expr.when(
+            F.col("col") == c, b_c
+        )
+    hist = hist.withColumn("bucket", bucket_expr)
+    btot = (
+        hist.groupBy("col", "bucket")
+        .agg(F.sum("cnt").alias("btot"))
+        .collect()
+    )
+    offsets: dict[str, list[tuple[int, int, int]]] = {c: [] for c in ranges}
+    run: dict[str, int] = {c: 0 for c in ranges}
+    for r in sorted(btot, key=lambda r: (r["col"], r["bucket"])):
+        offsets[r["col"]].append((r["bucket"], run[r["col"]], r["btot"]))
+        run[r["col"]] += r["btot"]
+    w_in = (
+        Window.partitionBy("col", "bucket")
+        .orderBy("value")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return hist.withColumn("cum_in", F.sum("cnt").over(w_in)), offsets
 
 
 def fit_quantile_boundaries_head_sample(
@@ -425,18 +410,17 @@ def fit_quantile_boundaries_head_sample(
 ) -> dict[str, list[float]]:
     """Prefix-sample fit: ``limit(sample_rows)`` + exact ``np.quantile``
     driver-side. The limit short-circuits the scan (CollectLimit stops
-    after enough row groups), so unlike the Bernoulli sample — which
+    after enough row groups), so unlike a Bernoulli sample — which
     decodes EVERY row to flip its coin — this reads ~sample_rows rows
     total, making fit cost constant in table size without requiring the
     table to be cached.
 
     Validity: a row-prefix is an unbiased sample only when row order is
     uncorrelated with values (i.i.d. generated data, ingestion-shuffled
-    corpora). For time-ordered or clustered layouts use
-    fit_quantile_boundaries_sampled (Bernoulli) instead — that is the
-    safe default; this is the fast path you opt into when the layout
-    allows (the reference's own fit sees rows in file order too,
-    etl_benchmark.py:74)."""
+    corpora). For time-ordered or clustered layouts use the sketch
+    fit_quantile_boundaries instead — that is the safe default; this is
+    the fast path you opt into when the layout allows (the reference's
+    own fit sees rows in file order too, etl_benchmark.py:74)."""
     import numpy as np
 
     # limit().toPandas() is a trap: Arrow collect executes the FULL scan
@@ -469,65 +453,32 @@ def fit_quantile_boundaries_head_sample(
     return {c: [float(x) for x in np.quantile(pdf[c].to_numpy(), probs)] for c in cols}
 
 
-def cumulative_value_counts(
-    df: DataFrame, col: str, coarse_buckets: int = 256
-) -> DataFrame:
+def cumulative_value_counts(df: DataFrame, col: str) -> DataFrame:
     """Distributed ``(value, cum_end)`` relation for one numeric column:
     cum_end = #rows with value' <= value — i.e. the unnormalized CDF /
     the RANGE-frame running count ``count(*) OVER (ORDER BY col)``,
     WITHOUT the single-partition global window that expression plans as.
 
-    Same two-phase prefix-sum shape as the exact quantile fit: value
-    histogram, equal-width coarse buckets from a 1-row min/max agg,
-    cumsum within (bucket) windows, tiny per-bucket offsets collected
-    and broadcast-joined back. Nulls are excluded (window functions
-    would rank them; callers decide null policy)."""
+    Same value histogram and two-phase prefix sum as the exact quantile
+    fit (_value_histogram, _bucket_prefix_sums), its bucket range from a
+    1-row min/max agg; the per-bucket offsets are broadcast-joined back.
+    Nulls are excluded (window functions would rank them; callers decide
+    null policy)."""
     mm = df.agg(
         F.min(F.col(col).cast("double")).alias("lo"),
         F.max(F.col(col).cast("double")).alias("hi"),
     ).collect()[0]
     lo = float(mm["lo"]) if mm["lo"] is not None else 0.0
     hi = float(mm["hi"]) if mm["hi"] is not None else 0.0
-    if hi > lo:
-        bucket = F.least(
-            F.floor(
-                (F.col("value") - F.lit(lo)) * F.lit(coarse_buckets / (hi - lo))
-            ),
-            F.lit(coarse_buckets - 1),
-        ).cast("int")
-    else:
-        bucket = F.lit(0)
-    hist = (
-        df.select(F.col(col).cast("double").alias("value"))
-        .filter(F.col("value").isNotNull())
-        .withColumn("value", F.col("value") + F.lit(0.0))
-        .groupBy("value")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("bucket", bucket)
+    hist, offsets = _bucket_prefix_sums(
+        _value_histogram(df, [col]), {col: (lo, hi)}
     )
-    btot = sorted(
-        (
-            (r["bucket"], r["btot"])
-            for r in hist.groupBy("bucket")
-            .agg(F.sum("cnt").alias("btot"))
-            .collect()
-        )
+    off_df = df.sparkSession.createDataFrame(
+        [(col, b, off) for b, off, _ in offsets[col]],
+        "col string, bucket int, off bigint",
     )
-    run = 0
-    rows = []
-    for b, t in btot:
-        rows.append((b, run))
-        run += t
-    offsets = df.sparkSession.createDataFrame(rows, "bucket int, off bigint")
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        hist.withColumn("cum_in", F.sum("cnt").over(w_in))
-        .join(F.broadcast(offsets), "bucket")
-        .select("value", (F.col("off") + F.col("cum_in")).alias("cum_end"))
+    return hist.join(F.broadcast(off_df), ["col", "bucket"]).select(
+        "value", (F.col("off") + F.col("cum_in")).alias("cum_end")
     )
 
 
@@ -739,18 +690,15 @@ def tokenize_table(
     cols: list[str] | None = None,
     bins: int = DEFAULT_BINS,
     keep_cols: list[str] | None = None,
-    relative_error: float = 0.001,
-    backend: str = "bucketizer",
 ) -> DataFrame:
     """scan -> fit(quantiles) -> transform(bucketize): the reference's whole
-    pipeline (etl_benchmark.py gpu_etl_pytorch) as one call."""
+    pipeline (etl_benchmark.py gpu_etl_pytorch) as one call — sketch fit,
+    JVM Bucketizer transform."""
     if cols is None:
         cols = [
             f.name
             for f in df.schema.fields
             if f.dataType.typeName() in ("double", "float")
         ]
-    bounds = fit_quantile_boundaries(df, cols, bins, relative_error)
-    if backend == "pandas_udf":
-        return bucketize_pandas_udf(df, bounds, keep_cols=keep_cols)
+    bounds = fit_quantile_boundaries(df, cols, bins)
     return bucketize(df, bounds, keep_cols=keep_cols)

@@ -47,13 +47,18 @@ def q_quantile_bin_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _exact_rounded_boundaries(df: DataFrame) -> dict[str, list[float]]:
-    """Deterministic, DuckDB-expressible boundary fit shared by the three
-    transform lanes below: the distributed exact percentile fit
-    (histogram + two-phase prefix sum — NOT the single-reducer SQL
-    ``percentile`` aggregate) with the 6dp ulp treatment of
-    q_quantile_bin_exact_boundaries. Production keeps the sketch fit
-    (relative_error>0); only boundary PLACEMENT differs between the two,
-    the transform semantics are identical."""
+    """Deterministic, DuckDB-expressible boundary fit shared by the
+    lineitem boundary lanes: the distributed exact percentile
+    fit (histogram + two-phase prefix sum — NOT the single-reducer SQL
+    ``percentile`` aggregate), boundaries rounded to 6dp before the
+    transform dedupes them (mirrored in boundary_bin_oracle).
+    Interpolated quantiles differ between engines in final ulps, which
+    makes the DEDUPED interior lists differ in LENGTH on low-cardinality
+    columns (discount/tax). With 2dp data, 6dp-rounded boundaries are
+    either exact data values (unchanged) or strictly between adjacent
+    2dp values — so no comparison b <= v can flip. Production keeps the
+    sketch fit; only boundary PLACEMENT differs between the two, the
+    transform semantics are identical."""
     from .quantile_bin import fit_quantile_boundaries
 
     bounds = fit_quantile_boundaries(
@@ -151,25 +156,19 @@ def q_quantile_bin_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_quantile_bin_exact_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boundary-path semantics proven against the oracle: exact SQL
-    ``percentile`` fit (bit-identical to DuckDB ``quantile_cont`` — both
-    Type-7 linear interpolation) + Bucketizer transform, mirrored in SQL
-    by counting interior boundaries <= v. This gives the SCALABLE lane's
-    semantics an oracle (the ntile oracle only covers the exact lane);
-    the sketch-fit variant differs solely in boundary placement."""
-    from .quantile_bin import bucketize, fit_quantile_boundaries
+    """Boundary-path semantics proven against the oracle: the in-query
+    exact fit (the distributed histogram/prefix-sum fit, bit-identical
+    to SQL ``percentile``, which like DuckDB ``quantile_cont`` is Type-7
+    linear interpolation) with 6dp rounding + Bucketizer transform,
+    mirrored in SQL by counting interior boundaries <= v. This gives the
+    SCALABLE lane's semantics an oracle (the ntile oracle only covers
+    the exact lane); the sketch-fit variant differs solely in boundary
+    placement."""
+    from .quantile_bin import bucketize
 
     configure_for_oracle(spark)
     df = load_table(spark, sf_dir, "lineitem")
-    bounds = fit_quantile_boundaries(df, LINEITEM_MEASURES, bins=100, relative_error=0.0)
-    # Round boundaries to 6dp before dedupe (mirrored in the oracle):
-    # interpolated quantiles differ between engines in final ulps, which
-    # makes the DEDUPED interior lists differ in LENGTH on low-cardinality
-    # columns (discount/tax). With 2dp data, 6dp-rounded boundaries are
-    # either exact data values (unchanged) or strictly between adjacent
-    # 2dp values — so no comparison b <= v can flip.
-    bounds = {c: [round(x, 6) for x in v] for c, v in bounds.items()}
-    return bucketize(df, bounds, keep_cols=LINEITEM_KEYS)
+    return bucketize(df, _exact_rounded_boundaries(df), keep_cols=LINEITEM_KEYS)
 
 
 #: seed-pinned generated fixture (VERDICT r3 item 6): rows/cols/seed AND
@@ -232,16 +231,39 @@ _NTILE_COLS = ",\n  ".join(
     for c in LINEITEM_MEASURES
 )
 
-_PROBS = ",".join(str(i / 100) for i in range(101))
-_BND_COLS = ",\n    ".join(
-    f"list_sort(list_distinct(list_transform("
-    f"list_slice(quantile_cont({c}, [{_PROBS}]), 2, 100), x -> round(x, 6)))) AS b_{c}"
-    for c in LINEITEM_MEASURES
+
+def boundary_bin_oracle(cols: list[str], head: str, scan: str | None = None) -> str:
+    """DuckDB mirror of _exact_rounded_boundaries + bucketize: per column
+    the 6dp-rounded, deduped interior exact percentiles (``quantile_cont``
+    — Type-7, like Spark's ``percentile``), and per row the count of
+    interior boundaries <= v. ``head`` is the SELECT list ahead of the
+    bin columns (over row alias ``t``); the rows come from lineitem, or
+    from the ``scan`` table expression when given."""
+    probs = ",".join(str(i / 100) for i in range(101))
+    bnd = ",\n    ".join(
+        f"list_sort(list_distinct(list_transform("
+        f"list_slice(quantile_cont({c}, [{probs}]), 2, 100), x -> round(x, 6)))) AS b_{c}"
+        for c in cols
+    )
+    bins = ",\n  ".join(
+        f"CAST(len(list_filter(b.b_{c}, x -> x <= t.{c})) AS INTEGER) AS {c}_bin"
+        for c in cols
+    )
+    if scan is None:
+        ctes, src, rows = "", "lineitem", "lineitem t"
+    else:
+        ctes, src, rows = f"t AS (\n  SELECT * FROM {scan}\n), ", "t", "t"
+    return f"""
+WITH {ctes}b AS (
+  SELECT
+    {bnd}
+  FROM {src}
 )
-_BIN_COLS = ",\n  ".join(
-    f"CAST(len(list_filter(b.b_{c}, x -> x <= t.{c})) AS INTEGER) AS {c}_bin"
-    for c in LINEITEM_MEASURES
-)
+SELECT {head},
+  {bins}
+FROM {rows}, b
+"""
+
 
 def q_quantile_bin_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw-Arrow kernel lane (mapInArrow — no pandas layer; see
@@ -270,30 +292,13 @@ QUERIES = {
     "tokenize_generated": q_tokenize_generated,
 }
 
-# Shared oracle for the three transform lanes (Bucketizer / pandas_udf /
-# mapInArrow): all consume the same exact-fit 6dp-rounded boundaries, so
-# bin = #(interior boundaries <= v) is one SQL shape. Keeping three
-# entries (not one) keeps each lane independently sampled by the gate.
-_EXACT_BOUNDARY_ORACLE = f"""
-WITH b AS (
-  SELECT
-    {_BND_COLS}
-  FROM lineitem
-)
-SELECT t.l_orderkey, t.l_linenumber,
-  {_BIN_COLS}
-FROM lineitem t, b
-"""
-
-_GEN_PROBS = ",".join(str(i / 100) for i in range(101))
-_GEN_BND_COLS = ",\n    ".join(
-    f"list_sort(list_distinct(list_transform("
-    f"list_slice(quantile_cont({c}, [{_GEN_PROBS}]), 2, 100), x -> round(x, 6)))) AS b_{c}"
-    for c in _GEN_COLNAMES
-)
-_GEN_BIN_COLS = ",\n  ".join(
-    f"CAST(len(list_filter(b.b_{c}, x -> x <= t.{c})) AS INTEGER) AS {c}_bin"
-    for c in _GEN_COLNAMES
+# Shared oracle for the boundary lanes (in-query fit, Bucketizer /
+# pandas_udf / mapInArrow / saved model): all consume the same exact-fit
+# 6dp-rounded boundaries, so bin = #(interior boundaries <= v) is one SQL
+# shape. Keeping one entry per lane keeps each lane independently
+# sampled by the gate.
+_EXACT_BOUNDARY_ORACLE = boundary_bin_oracle(
+    LINEITEM_MEASURES, "t.l_orderkey, t.l_linenumber"
 )
 
 ORACLES = {
@@ -301,18 +306,10 @@ ORACLES = {
     "quantile_bin_saved_model": _EXACT_BOUNDARY_ORACLE,
     "quantile_bin_pandas_udf": _EXACT_BOUNDARY_ORACLE,
     "quantile_bin_map_in_arrow": _EXACT_BOUNDARY_ORACLE,
-    "tokenize_generated": f"""
-WITH t AS (
-  SELECT * FROM read_parquet('{_generated_path()}/*.parquet')
-), b AS (
-  SELECT
-    {_GEN_BND_COLS}
-  FROM t
-)
-SELECT t.id,
-  {_GEN_BIN_COLS}
-FROM t, b
-""",
+    "quantile_bin_exact_boundaries": _EXACT_BOUNDARY_ORACLE,
+    "tokenize_generated": boundary_bin_oracle(
+        _GEN_COLNAMES, "t.id", scan=f"read_parquet('{_generated_path()}/*.parquet')"
+    ),
     "quantile_bin_per_group": """
 SELECT l_orderkey, l_linenumber, l_returnflag, l_linestatus,
   CAST(ntile(10) OVER (PARTITION BY l_returnflag, l_linestatus
@@ -324,15 +321,5 @@ FROM lineitem
 SELECT l_orderkey, l_linenumber,
   {_NTILE_COLS}
 FROM lineitem
-""",
-    "quantile_bin_exact_boundaries": f"""
-WITH b AS (
-  SELECT
-    {_BND_COLS}
-  FROM lineitem
-)
-SELECT t.l_orderkey, t.l_linenumber,
-  {_BIN_COLS}
-FROM lineitem t, b
 """,
 }

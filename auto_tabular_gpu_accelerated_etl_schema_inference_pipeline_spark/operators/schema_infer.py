@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import configure_for_oracle, ctx_cache, load_table
+from .quantile_bin import LINEITEM_MEASURES
+from .quantile_bin_queries import boundary_bin_oracle
 
 CATEGORICAL_MAX_DISTINCT_RATIO = 0.10
 CATEGORICAL_MAX_DISTINCT = 100
@@ -302,8 +304,6 @@ def auto_tokenize(
     spark: SparkSession,
     df: DataFrame,
     table: str,
-    relative_error: float | None = None,
-    boundary_round: int | None = None,
     classes_df: DataFrame | None = None,
     boundaries: dict[str, list[float]] | None = None,
 ) -> DataFrame:
@@ -312,11 +312,8 @@ def auto_tokenize(
     quantile codes, categorical/discrete -> dict codes, timestamp ->
     epoch-day bucket, text -> md5 fingerprint, identifier -> passthrough.
 
-    ``relative_error``: quantile-fit accuracy — None (the default)
-    resolves to the 0.001 sketch fit, the 100 TB setting; 0.0 switches
-    to exact SQL ``percentile``, which
-    (with ``boundary_round``, see q_quantile_bin_exact_boundaries for the
-    ulp rationale) makes the whole routed output oracle-matchable.
+    Without ``boundaries`` the continuous columns get the 100-bin sketch
+    fit (fit_quantile_boundaries' default accuracy, the 100 TB setting).
 
     Categorical/discrete codes are 1-based ranks in the vocabulary
     the classes frame carries (see _dict_code); without ``classes_df``
@@ -324,21 +321,16 @@ def auto_tokenize(
     ``dense_rank`` over the column.
 
     Serve mode: ``classes_df`` (a precomputed infer_column_classes
-    frame) and ``boundaries`` (a fitted, already-rounded boundary model
-    covering every continuous column) skip the profiling pass and the
-    fit respectively — the production deployment shape, where both are
-    fitted once on the training corpus and served to every later batch.
-    The batch is coded against the FITTED vocabulary, so codes are
-    stable across batches; a value the fit never saw gets a null code.
-    Serving runs no Spark job of its own: the result is one map-only
-    plan. A model covering less than the full continuous set is
-    ignored and everything is refit (a partial model is a stale
-    model) — the fit
-    knobs apply to THAT refit. When a full model is served, the fit
-    knobs are ignored by construction (the model already encodes its
-    recipe); passing ANY fit knob alongside a full model — even one
-    spelled as the default value — warns loudly, because it means the
-    caller thinks they are steering a fit that will never run."""
+    frame) and ``boundaries`` (a fitted boundary model) skip the
+    profiling pass and the fit respectively — the production deployment
+    shape, where both are fitted once on the training corpus and served
+    to every later batch. The batch is coded against the FITTED
+    vocabulary, so codes are stable across batches; a value the fit
+    never saw gets a null code. Serving runs no Spark job of its own:
+    the result is one map-only plan. A model that does not cover every
+    continuous column raises ``ValueError``: refitting the missing
+    columns would mix model vintages, and refitting them all would
+    silently drop the model the caller served."""
     from .quantile_bin import bucketize, fit_quantile_boundaries
 
     if classes_df is None:
@@ -373,87 +365,47 @@ def auto_tokenize(
     # resolve), then select tokens + bin codes together. No join — works
     # for tables with no identifier column (the reference's canonical
     # all-numeric col_0..col_19 shape) and keeps the plan map-only.
-    if boundaries is not None and all(c in boundaries for c in cont):
-        # None-default sentinel (ADVICE r7): ANY explicitly passed fit
-        # knob — including an explicit 0.001 — means the caller thinks
-        # a fit will run; `!= 0.001` couldn't distinguish that intent
-        # from an unset default.
-        if relative_error is not None or boundary_round is not None:
-            import warnings
-
-            warnings.warn(
-                "auto_tokenize: a full boundary model is being served, "
-                "so relative_error/boundary_round are ignored — the "
-                "model already encodes its fit recipe. Drop the knobs "
-                "or drop the model.",
-                stacklevel=2,
+    if boundaries is None:
+        bounds = fit_quantile_boundaries(df, cont, bins=100)
+    else:
+        missing = [c for c in cont if c not in boundaries]
+        if missing:
+            raise ValueError(
+                f"auto_tokenize: the served boundary model does not cover "
+                f"the continuous columns {missing} of {table!r}"
             )
         bounds = {c: boundaries[c] for c in cont}  # serve path: no refit
-    else:
-        bounds = fit_quantile_boundaries(
-            df, cont, bins=100,
-            relative_error=0.001 if relative_error is None else relative_error,
-        )
-        if boundary_round is not None:
-            bounds = {
-                c: [round(x, boundary_round) for x in v]
-                for c, v in bounds.items()
-            }
     binned = bucketize(df, bounds, keep_cols=list(df.columns))
     return binned.select(*out_cols, *[F.col(f"{c}_bin") for c in cont])
 
 
 def q_auto_tokenize_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end auto pipeline on lineitem, oracle-backed: the exact-
-    percentile fit (relative_error=0, 6dp boundary rounding — same ulp
-    treatment as q_quantile_bin_exact_boundaries) makes every routed
-    output deterministic and SQL-expressible: identifiers pass through,
-    discrete/categorical get vocabulary rank codes (== dense_rank over
-    the full column: the vocabulary is fitted on lineitem itself),
-    timestamps get epoch-day buckets, continuous measures get
-    interior-boundary-count bins. The production path keeps the sketch fit (relative_error>0);
-    only the boundary PLACEMENT differs — the exact fit is the
-    distributed histogram/prefix-sum plan, not the single-reducer SQL
-    ``percentile`` aggregate.
+    """End-to-end auto pipeline on lineitem, oracle-backed: the served
+    boundary model is the exact fit with 6dp rounding (the distributed
+    histogram/prefix-sum plan, not the single-reducer SQL ``percentile``
+    aggregate; same ulp treatment as q_quantile_bin_exact_boundaries),
+    which makes every routed output deterministic and SQL-expressible:
+    identifiers pass through, discrete/categorical get vocabulary rank
+    codes (== dense_rank over the full column: the vocabulary is fitted
+    on lineitem itself), timestamps get epoch-day buckets, continuous
+    measures get interior-boundary-count bins. The production path keeps
+    the sketch fit; only the boundary PLACEMENT differs.
 
     Serve shape: the classes frame is cached per session (shared with
     q_schema_infer — both profile the same fixture) and the boundary
     model is the session's cached exact-fit model
     (cached_exact_boundaries) shared with the quantile-bin lanes — fit
-    once, serve every lane. Its boundaries are bit-identical to what the
-    in-query fit produces (same fit, same 6dp rounding), so the oracle
-    is unchanged."""
+    once, serve every lane. auto_tokenize raises if that model stops
+    covering an inferred-continuous column (classifier/recipe drift)."""
     from .quantile_bin_queries import cached_exact_boundaries
 
     configure_for_oracle(spark)
-    df = load_table(spark, sf_dir, "lineitem")
-    stats = _cached_classes(spark, sf_dir, "lineitem")
-    bounds = cached_exact_boundaries(spark, sf_dir)
-    # This lane's oracle is written against the SERVED exact model —
-    # auto_tokenize's partial-model fallback would silently refit with
-    # the (sketch) production defaults and stop matching it. Fail loud
-    # instead: a partial model here means the classifier and the
-    # boundary recipe have drifted apart, which must be fixed, not
-    # papered over in-query.
-    cont = [
-        r["column_name"]
-        for r in stats.collect()
-        if r["inferred_class"] == "numeric_continuous"
-    ]
-    missing = [c for c in cont if c not in bounds]
-    if missing:
-        raise ValueError(
-            "served boundary model does not cover inferred-continuous "
-            f"columns {missing}; fix the recipe (see "
-            "cached_exact_boundaries) instead of falling back to an "
-            "in-query sketch refit"
-        )
     return auto_tokenize(
         spark,
-        df,
+        load_table(spark, sf_dir, "lineitem"),
         "lineitem",
-        classes_df=stats,
-        boundaries=bounds,
+        classes_df=_cached_classes(spark, sf_dir, "lineitem"),
+        boundaries=cached_exact_boundaries(spark, sf_dir),
     )
 
 
@@ -543,38 +495,20 @@ FROM classed
 """
 
 
-_ATL_MEASURES = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
-_ATL_PROBS = ",".join(str(i / 100) for i in range(101))
-_ATL_BND = ",\n    ".join(
-    f"list_sort(list_distinct(list_transform("
-    f"list_slice(quantile_cont({c}, [{_ATL_PROBS}]), 2, 100), x -> round(x, 6)))) AS b_{c}"
-    for c in _ATL_MEASURES
-)
-_ATL_BINS = ",\n  ".join(
-    f"CAST(len(list_filter(b.b_{c}, x -> x <= t.{c})) AS INTEGER) AS {c}_bin"
-    for c in _ATL_MEASURES
-)
-
 #: the routed lineitem output, mirrored: passthrough identifiers,
 #: dense_rank codes (1-based, as Spark emits them), trunc-toward-zero
 #: epoch-day buckets (DuckDB CAST(double AS INT) ROUNDS, Spark's cast
 #: truncates — trunc() pins them to agree), and exact-percentile bins
 #: with the same 6dp-round + dedupe + interior-count semantics as the
 #: quantile_bin_exact_boundaries oracle.
-_AUTO_TOKENIZE_LINEITEM_ORACLE = f"""
-WITH b AS (
-  SELECT
-    {_ATL_BND}
-  FROM lineitem
-)
-SELECT t.l_orderkey, t.l_partkey, t.l_suppkey,
+_AUTO_TOKENIZE_LINEITEM_ORACLE = boundary_bin_oracle(
+    LINEITEM_MEASURES,
+    """t.l_orderkey, t.l_partkey, t.l_suppkey,
   CAST(dense_rank() OVER (ORDER BY t.l_linenumber) AS INTEGER) AS l_linenumber_code,
   CAST(dense_rank() OVER (ORDER BY t.l_returnflag) AS INTEGER) AS l_returnflag_code,
   CAST(dense_rank() OVER (ORDER BY t.l_linestatus) AS INTEGER) AS l_linestatus_code,
-  CAST(trunc(epoch_us(t.l_shipdate) / 86400000000.0) AS INTEGER) AS l_shipdate_daybucket,
-  {_ATL_BINS}
-FROM lineitem t, b
-"""
+  CAST(trunc(epoch_us(t.l_shipdate) / 86400000000.0) AS INTEGER) AS l_shipdate_daybucket""",
+)
 
 
 #: partition-advisor cardinality bands (rows-per-value reasoning:

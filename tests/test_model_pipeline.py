@@ -1,4 +1,4 @@
-"""Model persistence + composite pipeline + env check."""
+"""Composite pipeline + env check."""
 
 import os
 import sys
@@ -8,39 +8,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.envcheck import (  # noqa: E402
     engine_info,
 )
-from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.model import (  # noqa: E402
-    QuantileBinModel,
-)
-from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.quantile_bin import (  # noqa: E402
-    LINEITEM_KEYS,
-    LINEITEM_MEASURES,
-)
-from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (  # noqa: E402
-    load_table,
-)
-
-
-def test_model_save_load_roundtrip(spark, sf_dir, tmp_path):
-    li = load_table(spark, sf_dir, "lineitem")
-    model = QuantileBinModel.fit(li, LINEITEM_MEASURES, bins=100)
-    p = str(tmp_path / "model.json")
-    model.save(p)
-    loaded = QuantileBinModel.load(p)
-    assert loaded.bins == model.bins
-    assert loaded.boundaries == model.boundaries
-    a = model.transform(li, keep_cols=LINEITEM_KEYS)
-    b = loaded.transform(li, keep_cols=LINEITEM_KEYS)
-    assert a.exceptAll(b).count() == 0
-
-
-def test_model_sampled_strategy(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    model = QuantileBinModel.fit(li, ["l_extendedprice"], bins=10, strategy="sampled")
-    toks = model.transform(li, keep_cols=LINEITEM_KEYS)
-    stats = toks.selectExpr(
-        "min(l_extendedprice_bin) AS mn", "max(l_extendedprice_bin) AS mx"
-    ).collect()[0]
-    assert stats["mn"] >= 0 and stats["mx"] <= 9
 
 
 def test_training_data_prep(spark, sf_dir):

@@ -74,7 +74,7 @@ def test_tokenize_generated_roundtrip(spark, tmp_path):
     create_dummy_data(spark, path, rows=10_000, cols=4)  # idempotent
     df = spark.read.parquet(path)
     assert df.columns == [f"col_{i}" for i in range(4)]
-    toks = tokenize_table(df, relative_error=0.001)
+    toks = tokenize_table(df)
     row = toks.select(
         F.max(F.greatest(*[F.col(f"col_{i}_bin") for i in range(4)])).alias("mx"),
         F.min(F.least(*[F.col(f"col_{i}_bin") for i in range(4)])).alias("mn"),
@@ -160,23 +160,22 @@ def test_auto_tokenize_all_continuous_table(spark, tmp_path):
 
 
 def test_head_sample_fit_close_to_bernoulli(spark, sf_dir):
-    """Prefix-sample boundaries must agree with Bernoulli-sample
-    boundaries within sampling error on i.i.d.-ordered data (lineitem
-    fixture rows are not value-ordered): interior medians within a few
+    """Prefix-sample boundaries must agree with the full-table sketch
+    fit within sampling error on i.i.d.-ordered data (lineitem fixture
+    rows are not value-ordered): interior boundaries within a few
     percent of each other in rank terms — checked via the coarse bin
-    assignment agreeing for >= 95% of rows."""
+    assignment agreeing for >= 90% of rows."""
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.quantile_bin import (
         bucketize,
         fit_quantile_boundaries_head_sample,
-        fit_quantile_boundaries_sampled,
     )
 
     df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     cols = ["l_extendedprice"]
     b_head = fit_quantile_boundaries_head_sample(df, cols, bins=10, sample_rows=20000)
-    b_bern = fit_quantile_boundaries_sampled(df, cols, bins=10, sample_rows=20000)
+    b_sketch = fit_quantile_boundaries(df, cols, bins=10)
     a = bucketize(df, b_head).select("l_extendedprice_bin")
-    b = bucketize(df, b_bern).select("l_extendedprice_bin")
+    b = bucketize(df, b_sketch).select("l_extendedprice_bin")
     import pyspark.sql.functions as F
 
     n = df.count()
@@ -190,8 +189,8 @@ def test_head_sample_fit_close_to_bernoulli(spark, sf_dir):
         )
     )
     agree = joined.filter(F.col("l_extendedprice_bin") == F.col("bin2")).count()
-    # two independent 20k-row samples, 9 interior boundaries, ~0.2% rank
-    # error each -> a few % of rows may straddle a boundary pair
+    # a 20k-row sample against the sketch, 9 interior boundaries, ~0.2%
+    # rank error each -> a few % of rows may straddle a boundary pair
     assert agree / n >= 0.9
 
 
@@ -414,49 +413,37 @@ def test_gpu_factory_branch_with_mocked_torch(monkeypatch):
     assert got[-1] == len(interior)
 
 
-def test_auto_tokenize_serve_mode_guards_partial_model(spark, sf_dir):
-    """Serve-mode contract (round-6 train/serve split): a boundaries
-    model covering every continuous column is used verbatim (no refit);
-    a PARTIAL model is ignored and everything refits — serving a model
-    that silently covers half the columns would mix model vintages."""
+def test_auto_tokenize_serve_mode_guards_partial_model(spark, sf_dir, monkeypatch):
+    """Serve-mode contract (train/serve split): a boundaries model
+    covering every continuous column is used verbatim (no refit); a
+    PARTIAL model raises — serving a model that silently covers half
+    the columns would mix model vintages."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators import (
+        quantile_bin,
+    )
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.quantile_bin_queries import (
         cached_exact_boundaries,
     )
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.schema_infer import (
         auto_tokenize,
     )
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (
-        load_table,
-    )
 
     df = load_table(spark, sf_dir, "lineitem")
     full = cached_exact_boundaries(spark, sf_dir)
-    served = auto_tokenize(spark, df, "lineitem", boundaries=full)
-    # fit knobs alongside a FULL model are ignored — that must warn
-    # loudly (the caller thinks they're steering a fit that never runs)
-    import warnings
 
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        auto_tokenize(
-            spark, df, "lineitem", relative_error=0.0, boundary_round=6,
-            boundaries=full,
-        )
-    assert any("ignored" in str(w.message) for w in caught), caught
-    refit = auto_tokenize(
-        spark, df, "lineitem", relative_error=0.0, boundary_round=6,
-    )
-    assert served.columns == refit.columns
-    assert served.exceptAll(refit).count() == 0
-    assert refit.exceptAll(served).count() == 0
-    # partial model: drop one continuous column -> must refit (same
-    # values again, because the refit reproduces the exact boundaries)
+    def no_fit(*a, **k):
+        raise AssertionError("a served model must not be refitted")
+
+    monkeypatch.setattr(quantile_bin, "fit_quantile_boundaries", no_fit)
+    served = auto_tokenize(spark, df, "lineitem", boundaries=full)
+    bins = [f"{c}_bin" for c in LINEITEM_MEASURES]
+    direct = bucketize(df, full, keep_cols=["l_orderkey"])
+    served = served.select("l_orderkey", *bins)
+    assert served.exceptAll(direct).count() == 0
+    assert direct.exceptAll(served).count() == 0
     partial = {k: v for k, v in full.items() if k != "l_tax"}
-    refit2 = auto_tokenize(
-        spark, df, "lineitem", relative_error=0.0, boundary_round=6,
-        boundaries=partial,
-    )
-    assert refit2.exceptAll(refit).count() == 0
+    with pytest.raises(ValueError, match="does not cover"):
+        auto_tokenize(spark, df, "lineitem", boundaries=partial)
 
 
 def test_auto_tokenize_lane_rejects_partial_artifact(spark, sf_dir, monkeypatch):
