@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import listing_memo
+
 DEFAULT_BINS = 100
 
 #: lineitem's measure columns — the flagship tokenization target
@@ -534,15 +536,21 @@ def load_boundaries(spark, path: str) -> dict[str, list[float]]:
     """Reload a save_boundaries artifact. The collect is bounded by
     model size (cols × (bins+1) rows — KBs), never data size. The read
     carries the known schema: inferring it from the footer would cost a
-    Spark job of its own."""
-    rows = spark.read.schema(_MODEL_SCHEMA).parquet(path).collect()
-    out: dict[str, dict[int, float]] = {}
-    for r in rows:
-        out.setdefault(r["col"], {})[r["idx"]] = r["value"]
-    return {
-        c: [idx_map[i] for i in sorted(idx_map)]
-        for c, idx_map in out.items()
-    }
+    Spark job of its own. The model is memoized per session under the
+    path's file listing (``session.listing_memo``): the first load is
+    one job, a repeat none, until a file under the path is added,
+    removed or rewritten (``save_boundaries`` overwrites with new part
+    files). Every call returns a fresh copy."""
+
+    def collect() -> dict[str, list[float]]:
+        rows = spark.read.schema(_MODEL_SCHEMA).parquet(path).collect()
+        out: dict[str, dict[int, float]] = {}
+        for r in rows:
+            out.setdefault(r["col"], {})[r["idx"]] = r["value"]
+        return {c: [m[i] for i in sorted(m)] for c, m in out.items()}
+
+    bounds = listing_memo(spark, ("boundaries", path), path, collect)
+    return {c: list(v) for c, v in bounds.items()}
 
 
 def bucketize(

@@ -2086,7 +2086,7 @@ FROM agg
 #: identity (v − v%10)/10 — integer-exact in BOTH engines (the quotient
 #: is < 2^53, so even DuckDB's float division is exact; % is C-style
 #: truncating remainder in both).
-#: The ORACLE runs the recurrence as this recursive CTE over a
+#: The ORACLE runs the recurrence as a recursive CTE over a
 #: MATERIALIZED 30-row daily spine (DuckDB's default CTE inlining would
 #: re-run the events aggregate per level, the r4 batch-15 hazard).
 #: Spark replays the IDENTICAL arithmetic as an ordered array fold
@@ -2095,24 +2095,47 @@ FROM agg
 #: checkpoint-materialized (the r12 shape) the ~30-level walk measured
 #: ~4.5 s of per-level re-planning for a 30-row result, against a
 #: ~0.6 s single-plan fold (the q_events_cusum_changepoints
-#: state-append pattern). The step expressions below are assembled
-#: from the same (v − v%10)/10 truncation text, so the two engines
-#: still execute the same integer arithmetic — only the iteration
-#: mechanism differs (plan recursion vs array fold).
-_HOLT_WALK_SQL = """
+#: state-append pattern). Both engines' step expressions come from the
+#: one template below, so they execute the same integer arithmetic —
+#: only the iteration mechanism differs (plan recursion vs array fold).
+_HOLT_MU = "1000000"
+
+
+def _holt_div10(v: str, brk: str = " ", tail: str = " ") -> str:
+    """(v − v%10)/10 as BIGINT: trunc-toward-zero division by 10 (the
+    dividend is an exact multiple of 10). ``brk`` and ``tail`` are the
+    whitespace before the subtraction and before ``AS BIGINT``."""
+    return f"CAST(({v}{brk}- (({v}) % 10)) / 10{tail}AS BIGINT)"
+
+
+def _holt_level(x: str, l: str, b: str, brk: str = " ", tail: str = " ") -> str:
+    """l' = (2·x·10⁶ + 8·(l+b)) ÷ 10 over SQL operands: day count ``x``,
+    previous level ``l`` and trend ``b``."""
+    return _holt_div10(f"2 * {x} * {_HOLT_MU} + 8 * ({l} + {b})", brk, tail)
+
+
+def _holt_trend(l_new: str, l: str, b: str, brk: str = " ") -> str:
+    """b' = (l' − l + 9·b) ÷ 10 over SQL operands."""
+    return _holt_div10(f"{l_new} - {l} + 9 * {b}", brk)
+
+
+# the oracle walk names l' and the previous state as columns, and breaks
+# the two long expressions over lines
+_WALK_LEVEL = _holt_level(
+    "s.x", "w.l_mu", "w.b_mu", brk="\n" + " " * 12, tail="\n" + " " * 11
+)
+_WALK_TREND = _holt_trend("l_new", "l_prev", "b_prev", brk="\n" + " " * 10)
+_HOLT_WALK_SQL = f"""
 walk(rn, d, x, l_mu, b_mu) AS (
-  SELECT rn, d, x, x * 1000000, CAST(0 AS BIGINT) FROM {spine}
+  SELECT rn, d, x, x * {_HOLT_MU}, CAST(0 AS BIGINT) FROM {{spine}}
   WHERE rn = 1
   UNION ALL
   SELECT rn, d, x, l_new,
-    CAST((l_new - l_prev + 9 * b_prev
-          - ((l_new - l_prev + 9 * b_prev) % 10)) / 10 AS BIGINT)
+    {_WALK_TREND}
   FROM (
     SELECT s.rn, s.d, s.x, w.l_mu AS l_prev, w.b_mu AS b_prev,
-      CAST((2 * s.x * 1000000 + 8 * (w.l_mu + w.b_mu)
-            - ((2 * s.x * 1000000 + 8 * (w.l_mu + w.b_mu)) % 10)) / 10
-           AS BIGINT) AS l_new
-    FROM walk w JOIN {spine} s ON s.rn = w.rn + 1
+      {_WALK_LEVEL} AS l_new
+    FROM walk w JOIN {{spine}} s ON s.rn = w.rn + 1
   ) step
 )
 SELECT CAST(d AS DATE) AS day, x AS n_events, l_mu AS level_mu,
@@ -2133,23 +2156,18 @@ WITH RECURSIVE daily AS MATERIALIZED (
     + _HOLT_WALK_SQL.format(spine="spine")
 )
 
-#: the Holt step, assembled from the SAME truncation-identity text the
-#: oracle recursion uses ((v − v%10)/10 == trunc-toward-zero div 10 —
-#: % is truncating remainder in both engines, the dividend is an exact
-#: multiple of 10, and the quotient is < 2^53 so the float division is
-#: exact):  l' = (2·x·10⁶ + 8·(l+b)) ÷ 10,  b' = (l' − l + 9·b) ÷ 10
+#: the same step as an array fold: the state is the last (l, b) the
+#: fold appended, and l' is inlined into b'
 _HOLT_L_PREV = "element_at(acc, -1).l"
 _HOLT_B_PREV = "element_at(acc, -1).b"
-_HOLT_A1 = f"(2 * e.x * 1000000 + 8 * ({_HOLT_L_PREV} + {_HOLT_B_PREV}))"
-_HOLT_L_NEW = f"CAST(({_HOLT_A1} - ({_HOLT_A1} % 10)) / 10 AS BIGINT)"
-_HOLT_A2 = f"({_HOLT_L_NEW} - {_HOLT_L_PREV} + 9 * {_HOLT_B_PREV})"
-_HOLT_B_NEW = f"CAST(({_HOLT_A2} - ({_HOLT_A2} % 10)) / 10 AS BIGINT)"
+_HOLT_L_NEW = _holt_level("e.x", _HOLT_L_PREV, _HOLT_B_PREV)
 _HOLT_FOLD = f"""aggregate(
   slice(arr, 2, size(arr) - 1),
-  array(named_struct('l', element_at(arr, 1).x * 1000000,
+  array(named_struct('l', element_at(arr, 1).x * {_HOLT_MU},
                      'b', CAST(0 AS BIGINT))),
   (acc, e) -> concat(acc, array(
-    named_struct('l', {_HOLT_L_NEW}, 'b', {_HOLT_B_NEW})))
+    named_struct('l', {_HOLT_L_NEW},
+                 'b', {_holt_trend(_HOLT_L_NEW, _HOLT_L_PREV, _HOLT_B_PREV)})))
 )"""
 
 

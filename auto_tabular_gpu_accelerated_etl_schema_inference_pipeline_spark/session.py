@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 from collections import OrderedDict
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = [
@@ -105,8 +106,9 @@ def configure_for_oracle(spark: SparkSession) -> SparkSession:
 
 #: The one per-session cache: everything derived once per (SparkContext,
 #: SparkSession) — checkpoint-pinned shared relations, forked sessions,
-#: split-count probes, parquet footers, the exact boundary model — lives
-#: here under ctx_cache's key discipline.
+#: split-count probes, the exact boundary model, and parquet schemas and
+#: saved boundary models (both tied to a file listing, see listing_memo)
+#: — lives here under ctx_cache's key discipline.
 _CTX_CACHE: OrderedDict = OrderedDict()
 
 #: LRU bound for entries of the LIVE context. Dead-context entries are
@@ -114,6 +116,11 @@ _CTX_CACHE: OrderedDict = OrderedDict()
 #: forked sessions hitting memoized lanes) would grow the cache without
 #: limit while holding checkpoint-pinned blocks.
 _CTX_CACHE_MAX_LIVE = 64
+
+
+def _ctx_key(spark: SparkSession, key: tuple) -> tuple:
+    sc = spark.sparkContext
+    return (sc.applicationId, sc.startTime, spark._jsparkSession.sessionUUID(), *key)
 
 
 def ctx_cache(spark: SparkSession, key: tuple, build):
@@ -130,9 +137,8 @@ def ctx_cache(spark: SparkSession, key: tuple, build):
     other (dead) contexts are purged, then the live context is LRU-
     evicted down to _CTX_CACHE_MAX_LIVE — dropping the reference lets
     the ContextCleaner reclaim pinned blocks."""
-    sc = spark.sparkContext
-    ctx = (sc.applicationId, sc.startTime)
-    k = (*ctx, spark._jsparkSession.sessionUUID(), *key)
+    k = _ctx_key(spark, key)
+    ctx = k[:2]
     if k in _CTX_CACHE:
         _CTX_CACHE.move_to_end(k)
         return _CTX_CACHE[k]
@@ -235,20 +241,73 @@ def spread_small_scan(
     return df.repartition(par) if under else df
 
 
+def _listing_signature(spark: SparkSession, path: str) -> tuple | None:
+    """Sorted (leaf file, length, mtime) under ``path``, listed in this
+    process through the path's Hadoop FileSystem (``listFiles``,
+    recursive — the listing Spark's file index makes anyway; no Spark
+    job). None when the path cannot be listed (missing, or a glob): the
+    caller then builds uncached and Spark raises its own error. The file
+    name is in the signature, so an overwrite that writes new part files
+    changes it even within one mtime tick."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    out = []
+    try:
+        files = p.getFileSystem(spark._jsc.hadoopConfiguration()).listFiles(p, True)
+        while files.hasNext():
+            st = files.next()
+            out.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    except Py4JJavaError:
+        return None
+    return tuple(sorted(out))
+
+
+def listing_memo(spark: SparkSession, key: tuple, path: str, build):
+    """``build()`` memoized in ctx_cache under ``key`` until the files
+    under ``path`` change: the entry holds the listing signature beside
+    the value and is replaced when the signature no longer matches, so
+    a path takes one cache entry however often it is rewritten. A path
+    that cannot be listed is built uncached every call."""
+    sig = _listing_signature(spark, path)
+    if sig is None:
+        return build()
+    k = _ctx_key(spark, key)
+    if k in _CTX_CACHE and _CTX_CACHE[k][0] != sig:
+        del _CTX_CACHE[k]
+    return ctx_cache(spark, key, lambda: (sig, build()))[1]
+
+
+#: Confs that change the schema Spark infers from parquet footers (and
+#: partition directories); each is part of the schema memo's key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+
 def parquet_schema(spark: SparkSession, path: str):
-    """Cached schema of a parquet file/dir. A footer read costs ~70 ms
-    of driver time, and every streaming lane derives its source schema
-    on every construction; fixture files are immutable for a context's
-    lifetime."""
-    return ctx_cache(
-        spark, ("schema", path), lambda: spark.read.parquet(path).schema
+    """The schema Spark infers for a parquet file/dir — the one place it
+    is derived. Inference reads footers in a Spark job (~150 ms); the
+    result is memoized per session under the path, the _SCHEMA_CONFS
+    values and the path's listing signature, so a repeat costs a file
+    listing and no job. Any added, removed or rewritten
+    file under the path, or a change of one of those confs, invalidates
+    it. A missing path raises Spark's own PATH_NOT_FOUND error."""
+    confs = tuple(spark.conf.get(c) for c in _SCHEMA_CONFS)
+    return listing_memo(
+        spark, ("schema", path, confs), path, lambda: spark.read.parquet(path).schema
     )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan (reference O3, etl_benchmark.py:27): schema comes from
-    the parquet footer; Catalyst pushes filters/projections into the scan."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """Parquet scan (reference O3, etl_benchmark.py:27) with the footer
+    schema from the parquet_schema memo; Catalyst pushes
+    filters/projections into the scan."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -257,7 +316,7 @@ def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     lanes, whose single-row-group fixture files otherwise serialize all
     per-row work onto one core (no-op at production split counts)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    return spread_small_scan(spark.read.parquet(path), spark, key=path)
+    return spread_small_scan(load_table(spark, sf_dir, name), spark, key=path)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

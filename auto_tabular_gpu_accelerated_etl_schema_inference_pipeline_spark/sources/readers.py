@@ -5,8 +5,9 @@ etl_benchmark.py:27; CSV/JSON inference is declared by its name and
 provided here).
 
 Scale notes:
-- Parquet: schema from the footer, no inference cost; predicate pushdown
-  and column pruning built-in — the default at 100 TB.
+- Parquet: schema from the footer, read once per session and file
+  listing (``read_parquet``); predicate pushdown and column pruning
+  built-in — the default at 100 TB.
 - CSV/JSON ``infer_schema=True`` runs an extra sampling pass over the
   input; production pipelines at scale should infer once on a sample
   (``samplingRatio``), freeze the schema with ``schema_of``, and pass it
@@ -18,10 +19,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..session import parquet_schema
+
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Reference O3 (etl_benchmark.py:27): scan with footer schema."""
-    return spark.read.parquet(path)
+    """Reference O3 (etl_benchmark.py:27): scan with footer schema. The
+    schema comes from ``session.parquet_schema``, memoized per session
+    under the path's file listing: the first read of a path pays the
+    footer-inference job, a repeat runs none until a file under the path
+    is added, removed or rewritten (or a schema-shaping parquet conf
+    changes)."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def read_csv(

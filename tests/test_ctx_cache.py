@@ -101,3 +101,21 @@ def test_ctx_cache_sessions_never_share(cache):
     assert sess.ctx_cache(parent, ("k",), build) is a
     assert sess.ctx_cache(fork, ("k",), build) is b
     assert build.n == 2
+
+
+def test_listing_memo_replaces_stale_entry(cache, monkeypatch):
+    """listing_memo keeps one entry per key: a changed file listing
+    rebuilds and replaces it, and a path that cannot be listed builds
+    uncached on every call."""
+    listing = {"/x": (("/x/part-0", 10, 1),)}
+    monkeypatch.setattr(sess, "_listing_signature", lambda spark, p: listing.get(p))
+    s, build = _session(), Builds()
+    a = sess.listing_memo(s, ("k", "/x"), "/x", build)
+    assert sess.listing_memo(s, ("k", "/x"), "/x", build) is a and build.n == 1
+    listing["/x"] = (("/x/part-1", 10, 1),)
+    b = sess.listing_memo(s, ("k", "/x"), "/x", build)
+    assert b is not a and build.n == 2 and len(cache) == 1
+    assert sess.listing_memo(s, ("k", "/x"), "/x", build) is b and build.n == 2
+    sess.listing_memo(s, ("k", "/gone"), "/gone", build)
+    sess.listing_memo(s, ("k", "/gone"), "/gone", build)
+    assert build.n == 4 and len(cache) == 1

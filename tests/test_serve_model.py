@@ -1,18 +1,23 @@
 """The fitted serving model: the classes frame (with its vocabularies)
 and the boundary artifact. Serving a batch must be one map-only plan —
-these tests pin its Spark job budget, the codes it serves and the
-artifact round trip."""
+these tests pin its Spark job budget, the codes it serves, the
+artifact round trip and the invalidation of the schema and model memos."""
 
 import math
 import struct
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators import (
     quantile_bin,
     schema_infer,
+)
+from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.sources import (
+    readers,
 )
 
 
@@ -39,14 +44,17 @@ def _table(spark, path, rows):
 
 def test_serve_job_budget(spark, tmp_path):
     """Serving runs no job of its own: the classes frame collects
-    driver-side (0 jobs), the boundary model loads with its known schema
-    (1 job, no footer inference), auto_tokenize constructs without an
-    action (0 jobs) and the served frame writes as one map-only job."""
+    driver-side (0 jobs); the boundary model loads with its known schema
+    (1 job, no footer inference) and a repeat load is a memo hit (0);
+    the batch read infers its footer schema once (1 job) and a repeat
+    read is a memo hit (0); auto_tokenize constructs without an action
+    (0 jobs) and the served frame writes as one map-only job."""
     rows = [
         (i, f"s{i % 6}", i % 4, (i * 37 % 1000) / 10.0, (i * 7919 % 997) * 1.5)
         for i in range(600)
     ]
-    df = _table(spark, str(tmp_path / "t"), rows)
+    path = str(tmp_path / "t")
+    df = _table(spark, path, rows)
     classes = schema_infer.infer_column_classes(spark, df, "t")
     got, n = _jobs(spark, classes.collect)
     assert n == 0
@@ -62,10 +70,16 @@ def test_serve_job_budget(spark, tmp_path):
     quantile_bin.save_boundaries(spark, bounds, model)
     loaded, n = _jobs(spark, lambda: quantile_bin.load_boundaries(spark, model))
     assert n == 1 and loaded == bounds
+    loaded, n = _jobs(spark, lambda: quantile_bin.load_boundaries(spark, model))
+    assert n == 0 and loaded == bounds
+    batch, n = _jobs(spark, lambda: readers.read_parquet(spark, path))
+    assert n == 1
+    batch, n = _jobs(spark, lambda: readers.read_parquet(spark, path))
+    assert n == 0 and batch.schema == df.schema
     out, n = _jobs(
         spark,
         lambda: schema_infer.auto_tokenize(
-            spark, df, "t", classes_df=classes, boundaries=loaded
+            spark, batch, "t", classes_df=classes, boundaries=loaded
         ),
     )
     assert n == 0
@@ -74,6 +88,42 @@ def test_serve_job_budget(spark, tmp_path):
     )
     assert n == 1
     assert spark.read.parquet(str(tmp_path / "o")).count() == len(rows)
+
+
+def test_serve_memos_see_changed_files(spark, tmp_path):
+    """The model and schema memos never serve stale files: overwriting
+    the model is seen by the very next load_boundaries, a parquet file
+    added to a batch directory by the very next read_parquet (rows and
+    schema), and mutating a returned model does not change the next
+    load. Each memo is warm (a repeat runs no job) before the change."""
+    inf = float("inf")
+    old = {"f1": [-inf, 0.0, 1.0, inf]}
+    new = {"f1": [-inf, 0.5, inf], "f2": [-inf, 2.0, inf]}
+    model = str(tmp_path / "model")
+    quantile_bin.save_boundaries(spark, old, model)
+    assert quantile_bin.load_boundaries(spark, model) == old
+    got, n = _jobs(spark, lambda: quantile_bin.load_boundaries(spark, model))
+    assert n == 0 and got == old
+    got["f1"].append(9.0)
+    got["f2"] = [0.0]
+    assert quantile_bin.load_boundaries(spark, model) == old
+    quantile_bin.save_boundaries(spark, new, model)
+    assert quantile_bin.load_boundaries(spark, model) == new
+
+    batch = str(tmp_path / "batch")
+    spark.range(5).selectExpr("id", "id * 1.5 AS f1").write.parquet(batch)
+    readers.read_parquet(spark, batch)
+    df, n = _jobs(spark, lambda: readers.read_parquet(spark, batch))
+    assert n == 0 and df.count() == 5
+    # sorts before Spark's part-* files, so footer inference takes its
+    # schema, which adds a column
+    pq.write_table(
+        pa.table({"id": [100, 101], "f1": [1.0, 2.0], "extra": ["x", "y"]}),
+        f"{batch}/a-added.parquet",
+    )
+    df = readers.read_parquet(spark, batch)
+    assert df.count() == 7
+    assert "extra" in df.columns and df.schema == spark.read.parquet(batch).schema
 
 
 def _dense_rank_codes(df, c):

@@ -354,6 +354,48 @@ def test_schema_evolution_read(spark, tmp_path):
     assert merged.exceptAll(fast).count() == 0
 
 
+def test_parquet_schema_tracks_rewrites_and_confs(spark, tmp_path):
+    """parquet_schema is memoized per session, yet a table rewritten
+    with an added column shows the column on the next call, and the
+    nanosAsLong flip is part of the key: a TIMESTAMP(NANOS) column is
+    bigint with it and rejected by Spark without it. A missing path
+    raises Spark's own error."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark.sql import types as T
+
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (
+        parquet_schema,
+    )
+
+    path = str(tmp_path / "t")
+    spark.range(3).write.parquet(path)
+    assert parquet_schema(spark, path).names == ["id"]
+    spark.range(3).withColumn("extra", F.lit(1.5)).write.mode("overwrite").parquet(
+        path
+    )
+    assert parquet_schema(spark, path).names == ["id", "extra"]
+    assert readers.read_parquet(spark, path).columns == ["id", "extra"]
+
+    nanos = str(tmp_path / "nanos.parquet")
+    ts = pa.array([1_700_000_000_123_456_789], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), nanos)
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "true")
+        assert parquet_schema(spark, nanos)["ts"].dataType == T.LongType()
+        spark.conf.set(conf, "false")
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            parquet_schema(spark, nanos)
+    finally:
+        spark.conf.set(conf, before)
+
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        readers.read_parquet(spark, str(tmp_path / "missing"))
+
+
 def test_footer_stats_metadata_only(spark, sf_dir):
     """footer_stats must (a) push COUNT/MIN/MAX into the parquet scan
     (PushedAggregation — answered from row-group footers, zero data
