@@ -14,6 +14,7 @@ from collections import OrderedDict
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 TABLES = [
     "region",
@@ -288,17 +289,76 @@ _SCHEMA_CONFS = (
 )
 
 
+#: The footer Spark's inference reads (mergeSchema off): a
+#: _common_metadata file, else a _metadata file, else the first data file
+#: in path order.
+_FOOTER_RANK = {"_common_metadata": 0, "_metadata": 1}
+
+
+def _infer_parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """What ``spark.read.parquet(path).schema`` infers, without its Spark
+    job. With mergeSchema off, Spark's inference reads ONE footer
+    (_FOOTER_RANK) in a one-task job. Here Spark's own file index (a read
+    with an empty user schema, which lists but infers nothing), its
+    footer reader and converter (``ParquetFileFormat.readSchema``, the
+    session's confs) and its relation (``HadoopFsRelation.schema``, which
+    joins the partition columns) run on the driver over that same
+    footer. Spark infers itself, and raises its own error, when
+    mergeSchema is on or there is no footer to read."""
+    if spark.conf.get("spark.sql.parquet.mergeSchema").lower() == "true":
+        return spark.read.parquet(path).schema
+    probe = spark.read.schema(T.StructType()).parquet(path)
+    rel = probe._jdf.queryExecution().analyzed().relation()
+    files = rel.location().allFiles()
+    if files.isEmpty():
+        return spark.read.parquet(path).schema
+    first = min(
+        (files.apply(i) for i in range(files.size())),
+        key=lambda st: (
+            _FOOTER_RANK.get(st.getPath().getName(), 2),
+            st.getPath().toString(),
+        ),
+    )
+    jvm, jss = spark._jvm, spark._jsparkSession
+    pff = getattr(
+        getattr(jvm.org.apache.spark.sql.execution.datasources.parquet, "ParquetFileFormat$"),
+        "MODULE$",
+    )
+    footers = pff.readParquetFootersInParallel(
+        jss.sessionState().newHadoopConf(),
+        jvm.org.apache.spark.api.python.PythonUtils.toSeq([first]),
+        spark.conf.get("spark.sql.files.ignoreCorruptFiles").lower() == "true",
+    )
+    data = pff.readSchema(footers, jss)
+    if data.isEmpty():  # a corrupt footer skipped under ignoreCorruptFiles
+        return spark.read.parquet(path).schema
+    full = rel.copy(
+        rel.location(),
+        rel.partitionSchema(),
+        data.get().asNullable(),
+        rel.bucketSpec(),
+        rel.fileFormat(),
+        rel.options(),
+        jss,
+    ).schema()
+    return T._parse_datatype_json_string(full.json())
+
+
 def parquet_schema(spark: SparkSession, path: str):
     """The schema Spark infers for a parquet file/dir — the one place it
-    is derived. Inference reads footers in a Spark job (~150 ms); the
-    result is memoized per session under the path, the _SCHEMA_CONFS
-    values and the path's listing signature, so a repeat costs a file
-    listing and no job. Any added, removed or rewritten
-    file under the path, or a change of one of those confs, invalidates
-    it. A missing path raises Spark's own PATH_NOT_FOUND error."""
+    is derived, and it costs no Spark job (``_infer_parquet_schema``
+    reads the footer on the driver). The result is memoized per session
+    under the path, the _SCHEMA_CONFS values and the path's listing
+    signature, so a repeat costs a file listing and no footer read. Any
+    added, removed or rewritten file under the path, or a change of one
+    of those confs, invalidates it. A missing path raises Spark's own
+    PATH_NOT_FOUND error."""
     confs = tuple(spark.conf.get(c) for c in _SCHEMA_CONFS)
     return listing_memo(
-        spark, ("schema", path, confs), path, lambda: spark.read.parquet(path).schema
+        spark,
+        ("schema", path, confs),
+        path,
+        lambda: _infer_parquet_schema(spark, path),
     )
 
 

@@ -25,10 +25,10 @@ from ..session import parquet_schema
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Reference O3 (etl_benchmark.py:27): scan with footer schema. The
     schema comes from ``session.parquet_schema``, memoized per session
-    under the path's file listing: the first read of a path pays the
-    footer-inference job, a repeat runs none until a file under the path
-    is added, removed or rewritten (or a schema-shaping parquet conf
-    changes)."""
+    under the path's file listing: the first read of a path reads one
+    footer on the driver (no Spark job), a repeat reads none until a
+    file under the path is added, removed or rewritten (or a
+    schema-shaping parquet conf changes)."""
     return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 

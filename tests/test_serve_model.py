@@ -46,9 +46,9 @@ def test_serve_job_budget(spark, tmp_path):
     """Serving runs no job of its own: the classes frame collects
     driver-side (0 jobs); the boundary model loads with its known schema
     (1 job, no footer inference) and a repeat load is a memo hit (0);
-    the batch read infers its footer schema once (1 job) and a repeat
-    read is a memo hit (0); auto_tokenize constructs without an action
-    (0 jobs) and the served frame writes as one map-only job."""
+    the batch read infers its footer schema on the driver (0 jobs) and a
+    repeat read is a memo hit (0); auto_tokenize constructs without an
+    action (0 jobs) and the served frame writes as one map-only job."""
     rows = [
         (i, f"s{i % 6}", i % 4, (i * 37 % 1000) / 10.0, (i * 7919 % 997) * 1.5)
         for i in range(600)
@@ -73,7 +73,7 @@ def test_serve_job_budget(spark, tmp_path):
     loaded, n = _jobs(spark, lambda: quantile_bin.load_boundaries(spark, model))
     assert n == 0 and loaded == bounds
     batch, n = _jobs(spark, lambda: readers.read_parquet(spark, path))
-    assert n == 1
+    assert n == 0 and batch.schema == df.schema
     batch, n = _jobs(spark, lambda: readers.read_parquet(spark, path))
     assert n == 0 and batch.schema == df.schema
     out, n = _jobs(

@@ -396,6 +396,65 @@ def test_parquet_schema_tracks_rewrites_and_confs(spark, tmp_path):
         readers.read_parquet(spark, str(tmp_path / "missing"))
 
 
+def test_parquet_schema_is_spark_inference_without_a_job(spark, sf_dir, tmp_path):
+    """parquet_schema reads the one footer Spark's inference would read,
+    on the driver: the schema equals spark.read.parquet(path).schema
+    (field order, types, nullability) for fixture tables, a partitioned
+    directory, one partition, a partition column that is also a data
+    column, a non-nullable pyarrow column, a _common_metadata summary
+    that Spark prefers over the data files, and a glob; none of them
+    runs a Spark job. An empty directory raises Spark's own error."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (
+        parquet_schema,
+    )
+
+    pool = str(tmp_path / "pool")
+    spark.range(40).selectExpr("id", "id % 4 AS batch", "CAST(id AS double) x").write.partitionBy(
+        "batch"
+    ).parquet(pool)
+    overlap = tmp_path / "overlap" / "k=1"
+    overlap.mkdir(parents=True)
+    pq.write_table(pa.table({"k": pa.array([5], pa.int64()), "v": [1.0]}), overlap / "p.parquet")
+    strict = tmp_path / "strict"
+    strict.mkdir()
+    schema = pa.schema([pa.field("n", pa.int32(), nullable=False), pa.field("b", pa.binary())])
+    pq.write_table(pa.table({"n": [1], "b": [b"x"]}, schema=schema), strict / "a.parquet")
+    summary = tmp_path / "summary"
+    summary.mkdir()
+    pq.write_table(pa.table({"id": [1]}), summary / "a.parquet")
+    pq.write_metadata(pa.schema([("id", pa.int64()), ("more", pa.string())]), summary / "_common_metadata")
+    paths = [os.path.join(sf_dir, f"{t}.parquet") for t in ("lineitem", "events")] + [
+        pool,
+        f"{pool}/batch=2",
+        str(tmp_path / "overlap"),
+        str(strict),
+        str(summary),
+        f"{pool}/batch=*",
+    ]
+    sc = spark.sparkContext
+    for path in paths:
+        group = f"schema-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            got = parquet_schema(spark, path)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0, path
+        assert got.json() == spark.read.parquet(path).schema.json(), path
+    assert parquet_schema(spark, str(summary)).names == ["id", "more"]
+
+    (tmp_path / "empty").mkdir()
+    with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
+        parquet_schema(spark, str(tmp_path / "empty"))
+
+
 def test_footer_stats_metadata_only(spark, sf_dir):
     """footer_stats must (a) push COUNT/MIN/MAX into the parquet scan
     (PushedAggregation — answered from row-group footers, zero data
