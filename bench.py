@@ -7,18 +7,29 @@ local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line.
 
 Spark is lazy, so each phase is forced with an action (the analog of the
 reference's cuda.synchronize() before/after timing — SURVEY.md §4).
+
+Besides the seconds in ``queries``, the line carries a ``layers`` block:
+per headline lane, its construct and execute seconds and the Spark jobs,
+stages, tasks, shuffle-write and spill bytes and Python worker time its
+job groups ran, read from Spark's event log with perfbench's rollup.
+Counts do not move with host load, so scripts/bench_diff.py gates on
+them as well as on seconds.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shlex
 import shutil
 import sys
 import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.eventlog import read_lines, rollup  # noqa: E402
+from perfbench.spans import set_job_group  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -262,36 +273,6 @@ HEADLINE = [
 ]
 
 
-def disk_cold_read_gauge() -> float:
-    """Cold-disk sequential-read gauge: write 256 MB to a per-run temp
-    file, fsync, evict exactly that file's pages with
-    posix_fadvise(DONTNEED) (works unprivileged; pages are clean
-    post-fsync), then time a plain sequential re-read. ~0.2 s on a
-    healthy device, tens of seconds mid-storm. Per-run tempfile +
-    try/finally so concurrent bench/solo_bench runs cannot race on one
-    path and an exception cannot leak the 256 MB file (ADVICE r11)."""
-    fd, io_path = tempfile.mkstemp(prefix="spark_graft_calib_io_",
-                                   suffix=".bin")
-    try:
-        blob = b"\xa5" * (8 << 20)
-        with os.fdopen(fd, "wb") as fh:
-            for _ in range(32):
-                fh.write(blob)
-            fh.flush()
-            os.fsync(fh.fileno())
-        with open(io_path, "rb") as fh:
-            os.posix_fadvise(fh.fileno(), 0, 0, os.POSIX_FADV_DONTNEED)
-            tc = time.perf_counter()
-            while fh.read(8 << 20):
-                pass
-            return time.perf_counter() - tc
-    finally:
-        try:
-            os.remove(io_path)
-        except OSError:
-            pass
-
-
 def run_ref_section(spark) -> dict[str, float]:
     """Reference-scale workload: 10M rows x 20 cols, 100 bins — the exact
     shape behind BASELINE.md (etl_benchmark.py ROWS/COLS/BINS). Two-phase
@@ -405,14 +386,11 @@ def _ref_section_subprocess(parent_spark) -> dict[str, float]:
     # 12 same-HEAD runs in round 10, and the single-shot headline landed
     # 28% off the certified number on weather alone. The headline is now
     # the MEDIAN attempt (the best-of-N early-stop protocol this
-    # replaces favored the quiet-host tail); every attempt's total and
-    # its own in-subprocess CPU gauge are disclosed (ref_total_runs /
-    # ref_calib_cpu_runs) so the spread stays visible per run.
+    # replaces favored the quiet-host tail); every attempt's total is
+    # disclosed (ref_total_runs) so the spread stays visible per run.
     attempts = int(os.environ.get("SPARK_GRAFT_REF_ATTEMPTS", "3"))
     runs: list[dict[str, float]] = []
     totals: list[float] = []
-    calibs: list[float] = []
-    disk_calibs: list[float] = []
     for _ in range(max(1, attempts)):
         try:
             proc = subprocess.run(
@@ -427,16 +405,12 @@ def _ref_section_subprocess(parent_spark) -> dict[str, float]:
             continue
         runs.append(run)
         totals.append(round(run.get("ref_total", -1.0), 4))
-        calibs.append(round(run.get("ref_calib_cpu", -1.0), 4))
-        disk_calibs.append(round(run.get("ref_calib_disk", -1.0), 4))
     if not runs:
         print("bench: all ref subprocesses failed; in-process fallback",
               file=sys.stderr)
         parent_spark.catalog.clearCache()
         runs = [run_ref_section(parent_spark)]
         totals = [round(runs[0].get("ref_total", -1.0), 4)]
-        calibs = [round(runs[0].get("ref_calib_cpu", -1.0), 4)]
-        disk_calibs = [-1.0]
     # Headline = the median RUN (lower median for even counts), so the
     # phase split (ref_fit/ref_transform/ref_warm_read) stays internally
     # consistent with the headline total instead of mixing attempts.
@@ -444,8 +418,6 @@ def _ref_section_subprocess(parent_spark) -> dict[str, float]:
         (len(runs) - 1) // 2
     ]
     med["ref_total_runs"] = totals  # type: ignore[assignment]
-    med["ref_calib_cpu_runs"] = calibs  # type: ignore[assignment]
-    med["ref_calib_disk_runs"] = disk_calibs  # type: ignore[assignment]
     return med
 
 
@@ -477,24 +449,40 @@ def ref_only_main() -> None:
         wdf, [f"col_{i}" for i in range(20)], bins=100, sample_rows=50_000
     )
     bucketize(wdf, wb).write.format("noop").mode("overwrite").save()
-    # Per-run host-weather gauge (VERDICT r10 item 4 disclosure): the
-    # same fixed CPU workload the parent measures once, re-measured
-    # inside EVERY ref subprocess so each attempt's total can be read
-    # against the host state it actually ran under.
-    tc = time.perf_counter()
-    spark.range(2_000_000_000).selectExpr("max(xxhash64(id))").collect()
-    calib = time.perf_counter() - tc
-    # Per-attempt disk gauge (VERDICT r11 item 1): each ref attempt's
-    # total is read against the IO state it actually ran under,
-    # mirroring ref_calib_cpu.
-    calib_disk = disk_cold_read_gauge()
-    out = run_ref_section(spark)
-    out["ref_calib_cpu"] = calib
-    out["ref_calib_disk"] = calib_disk
-    print(json.dumps(out))
+    print(json.dumps(run_ref_section(spark)))
 
 
-def main() -> None:
+#: the event-log measures a lane's ``layers`` record sums over its
+#: construct and execute job groups
+LANE_MEASURES = ("jobs", "stages", "tasks", "shuffle_write_bytes",
+                 "spill_bytes", "python_s")
+
+
+def lane_layers(by_group: dict[str, dict[str, float]],
+                walls: dict[str, tuple[float, float]]) -> dict[str, dict]:
+    """One ``layers`` record per lane in ``walls`` (lane -> construct and
+    execute seconds). ``by_group`` is the event-log rollup by job group;
+    each LANE_MEASURES entry is summed over the lane's
+    ``<lane>:construct`` and ``<lane>:execute`` groups. ``memo_hit`` means
+    construct ran no Spark job. A lane that ran no job gets zero counts."""
+    layers = {}
+    for name, (construct_s, execute_s) in walls.items():
+        construct = by_group.get(f"{name}:construct", {})
+        execute = by_group.get(f"{name}:execute", {})
+        rec: dict = {"construct_s": round(construct_s, 4),
+                     "execute_s": round(execute_s, 4)}
+        for m in LANE_MEASURES:
+            total = construct.get(m, 0) + execute.get(m, 0)
+            rec[m] = round(total, 4) if m == "python_s" else int(total)
+        rec["memo_hit"] = construct.get("jobs", 0) == 0
+        layers[name] = rec
+    return layers
+
+
+def _measure(event_dir: str):
+    """Run every timed section with Spark's event log in ``event_dir``.
+    Returns (timings, lane walls, flagship total, lineitem rows); the
+    session is stopped on return, so the log is complete."""
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark import (
         get_spark,
         load_table,
@@ -507,7 +495,23 @@ def main() -> None:
     )
     import __spark_entry__ as entrymod
 
-    spark = get_spark(app_name="bench")
+    # The event-log confs reach only this session's JVM: the --ref-only
+    # subprocesses copy os.environ, and read_lines expects exactly one
+    # application in event_dir.
+    submit_args = os.environ.get("PYSPARK_SUBMIT_ARGS")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        f"--conf {shlex.quote(conf)}"
+        for conf in ("spark.eventLog.enabled=true",
+                     "spark.eventLog.compress=false",
+                     f"spark.eventLog.dir=file://{event_dir}")
+    ) + " " + (submit_args or "pyspark-shell")
+    try:
+        spark = get_spark(app_name="bench")
+    finally:
+        if submit_args is None:
+            del os.environ["PYSPARK_SUBMIT_ARGS"]
+        else:
+            os.environ["PYSPARK_SUBMIT_ARGS"] = submit_args
 
     # Warmup: JVM/codegen/Arrow init (the reference's timings likewise
     # exclude interpreter + torch import/CUDA-context startup).
@@ -515,45 +519,6 @@ def main() -> None:
     load_table(spark, SF_DIR, "lineitem").limit(1000).count()
 
     timings: dict[str, float] = {}
-
-    # Host-weather calibration: a fixed, data-independent parallel CPU
-    # workload (xxhash64 over 200M longs across all threads). On this
-    # microVM the host silently overcommits cores (measured ~9 effective
-    # of 32 vCPUs on an idle guest during round 4, vs full width in
-    # round 3) — this entry gives every bench artifact its own
-    # normalization denominator: query_time / calib_cpu_parallel is
-    # comparable across rounds even when raw seconds are not.
-    tc = time.perf_counter()
-    spark.range(2_000_000_000).selectExpr(
-        "max(xxhash64(id))"
-    ).collect()
-    timings["calib_cpu_parallel"] = time.perf_counter() - tc
-    # Second gauge: memory-bandwidth/cache-bound — an in-partition sort
-    # of 200M hashed longs (range is pre-partitioned, so NO exchange, NO
-    # shuffle files: disk stays out of the measurement). Round-4 probes
-    # showed ALU throughput intact while bandwidth-heavy work (sorts,
-    # parquet decode) ran 3-5x slow, so the two gauges separate which
-    # resource the host is stealing.
-    tc = time.perf_counter()
-    spark.range(200_000_000).selectExpr(
-        "xxhash64(id) AS k"
-    ).sortWithinPartitions("k").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    timings["calib_mem_bandwidth"] = time.perf_counter() - tc
-    # Third gauge: cold-disk sequential read. Round-11 discovery: an
-    # IO-throughput collapse (cold reads ~150 MB/s vs the >1.4 GB/s
-    # good phases) is invisible to BOTH gauges above — CPU intact,
-    # in-memory bandwidth intact — yet it dominates the ref lane,
-    # whose 1.5 GB file this box evicts right after writing.
-    # ~0.2 s on a healthy device, tens of seconds mid-storm — the
-    # adjudication signal for ref_warm_read and every other disk-bound
-    # disclosure. r11 postmortem: IO weather on this box swings ~7x
-    # between samples, so ONE sample at bench start cannot bracket a
-    # ~25-minute run — sample at start AND end (VERDICT r11 item 1),
-    # disclose both, and mark the artifact weather-invalid when the
-    # bracket spread exceeds 2x.
-    timings["calib_disk_cold_read"] = disk_cold_read_gauge()
 
     # --- reference-scale workload FIRST (fresh subprocess JVM) ---
     # Run before the 50 headline queries: each reference benchmark run is
@@ -608,44 +573,50 @@ def main() -> None:
     timings["flagship_total_runs"] = flagship_runs  # type: ignore[assignment]
 
     # --- headline queries (forced via noop-equivalent count) ---
+    # Each lane's construct (fn) and execute (the noop write) run under
+    # their own job groups, so the event log attributes every job to one
+    # phase of one lane.
+    sc = spark.sparkContext
+    walls: dict[str, tuple[float, float]] = {}
     queries = entrymod.queries()
     for name in HEADLINE:
         fn = queries.get(name)
         if fn is None:
             continue
         try:
+            set_job_group(sc, f"{name}:construct")
             tq0 = time.perf_counter()
             qdf = fn(spark, SF_DIR)
+            tq1 = time.perf_counter()
+            set_job_group(sc, f"{name}:execute")
             qdf.write.format("noop").mode("overwrite").save()
-            timings[name] = time.perf_counter() - tq0
+            tq2 = time.perf_counter()
+            timings[name] = tq2 - tq0
+            walls[name] = (tq1 - tq0, tq2 - tq1)
         except Exception as exc:  # a broken bench entry shouldn't kill the run
             timings[name] = -1.0
             print(f"bench: {name} failed: {exc}", file=sys.stderr)
+        finally:
+            set_job_group(sc, None)
+    spark.stop()
+    return timings, walls, flagship_total, n
 
-    # Closing bracket sample of the disk gauge (VERDICT r11 item 1): the
-    # start sample alone cannot certify a ~25-minute window on a host
-    # whose IO weather swings ~7x between samples.
-    timings["calib_disk_cold_read_end"] = disk_cold_read_gauge()
-    disk_runs = [
-        round(timings["calib_disk_cold_read"], 4),
-        round(timings["calib_disk_cold_read_end"], 4),
-    ]
-    bracket_spread = max(disk_runs) / max(min(disk_runs), 1e-9)
-    timings["calib_disk_cold_read_runs"] = disk_runs  # type: ignore[assignment]
-    timings["calib_disk_bracket_spread"] = bracket_spread
-    # weather_valid is the artifact's own verdict on itself: >2x intra-
-    # run IO spread means per-lane seconds are not comparable across
-    # rounds and the disclosure should be re-run, not trusted.
-    timings["weather_valid"] = 1.0 if bracket_spread <= 2.0 else 0.0
-    if bracket_spread > 2.0:
-        print(f"bench: WEATHER-INVALID — disk gauge bracket {disk_runs} "
-              f"spread {bracket_spread:.2f}x > 2x; re-run in a calmer "
-              "window", file=sys.stderr)
 
+def main() -> None:
+    event_dir = tempfile.mkdtemp(prefix="bench_eventlog_")
+    try:
+        timings, walls, flagship_total, n = _measure(event_dir)
+        layers = lane_layers(rollup(read_lines(event_dir)), walls)
+    finally:
+        shutil.rmtree(event_dir, ignore_errors=True)
+
+    # layers goes before queries: a reader of the line's tail still finds
+    # the end of queries, sf and rows there
     result = {
         "metric": "flagship_tokenize_total",
         "value": round(flagship_total, 4),
         "unit": "sec",
+        "layers": layers,
         "queries": {
             k: round(v, 4) if isinstance(v, float) else v
             for k, v in timings.items()

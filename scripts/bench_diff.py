@@ -1,13 +1,21 @@
-"""Per-query bench regression check — the mechanical form of the
-"zero regressions >20%" discipline VERDICT r7 graded.
+"""Per-lane bench regression gate: the mechanical form of the "zero
+regressions >20%" discipline.
 
 Compares two bench JSON lines (e.g. the fresh BENCH_LOCAL.json vs the
-committed BENCH_r07.json), prints every query slower than THRESHOLD x
-the old time, and exits non-zero if any exceed it — so "regression
-check done" is a command with an exit code, not prose. Sub-second
-entries are exempt below ABS_FLOOR seconds of absolute growth (noise:
-JVM warmup order, first-touch page cache); calibration probes and
-best-of-N lists are skipped.
+committed BENCH_r13.json) and exits non-zero if any lane
+
+- is slower than THRESHOLD x the old time (sub-second entries are exempt
+  below ABS_FLOOR seconds of absolute growth: JVM warmup order,
+  first-touch page cache);
+- failed in NEW (bench.py records a failed lane as -1.0) but not in OLD;
+- ran more Spark jobs or stages, or more than doubled its shuffle-write
+  or spill bytes by more than BYTES_FLOOR, per the ``layers`` records of
+  both files. Counts do not move with host load, so a counter flag is a
+  code change. A file without ``layers`` diffs on seconds only.
+
+So "regression check done" is a command with an exit code, not prose.
+Best-of-N lists are skipped, and a lane that already failed in OLD is
+not compared.
 
 Usage: python scripts/bench_diff.py OLD.json NEW.json [threshold]
 """
@@ -15,75 +23,52 @@ Usage: python scripts/bench_diff.py OLD.json NEW.json [threshold]
 from __future__ import annotations
 
 import json
-import os
-import statistics
 import sys
 
 THRESHOLD = 1.2
 ABS_FLOOR = 0.4  # ignore regressions smaller than this in absolute s
-GAUGES = ("calib_cpu_parallel", "calib_mem_bandwidth", "calib_disk_cold_read")
-# bracket bookkeeping (VERDICT r11 item 1) is metadata, not a lane
-SKIP = set(GAUGES) | {
-    "calib_disk_cold_read_end",
-    "calib_disk_bracket_spread",
-    "weather_valid",
-}
-# Per-query gauge affinity (VERDICT r10 item 5): which calibration gauge
-# each lane's cross-round history tracks. Generated by
-# scripts/gauge_affinity.py from the committed BENCH_r*.json series;
-# lanes absent from the map fall back to the median host factor.
-AFFINITY_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "gauge_affinity.json"
-)
+BYTES_FLOOR = 1 << 20  # ignore byte growth smaller than this
 
 
-def load(path: str) -> tuple[dict[str, float], dict[str, float]]:
+def load(path: str) -> tuple[dict[str, float], dict[str, dict] | None]:
+    """(lane -> seconds, lane -> layers record or None)."""
     with open(path) as fh:
         doc = json.load(fh)
-    out, gauges = {}, {}
-    for k, v in doc.get("queries", {}).items():
-        if isinstance(v, list):
-            continue
-        if k in SKIP:
-            gauges[k] = float(v)
-            continue
-        out[k] = float(v)
-    return out, gauges
-
-
-def load_affinity() -> dict[str, str]:
-    """query -> gauge name, from the committed affinity map (advisory)."""
-    try:
-        with open(AFFINITY_PATH) as fh:
-            doc = json.load(fh)
-    except (OSError, ValueError):
-        return {}
-    return {
-        name: rec["gauge"]
-        for name, rec in doc.items()
-        if isinstance(rec, dict) and rec.get("gauge") in GAUGES
+    seconds = {
+        k: float(v)
+        for k, v in doc.get("queries", {}).items()
+        if not isinstance(v, list)
     }
+    return seconds, doc.get("layers")
+
+
+def counter_flags(old: dict[str, dict], new: dict[str, dict]) -> list[str]:
+    flags = []
+    for name in sorted(set(old) & set(new)):
+        o, n = old[name], new[name]
+        for m in ("jobs", "stages"):
+            if n[m] > o[m]:
+                flags.append(f"{name}: {m} {o[m]} -> {n[m]}")
+        for m in ("shuffle_write_bytes", "spill_bytes"):
+            if n[m] > 2 * o[m] and n[m] - o[m] > BYTES_FLOOR:
+                flags.append(f"{name}: {m} {o[m]} -> {n[m]}")
+    return flags
 
 
 def main(argv: list[str]) -> int:
     old_path, new_path = argv[0], argv[1]
     threshold = float(argv[2]) if len(argv) > 2 else THRESHOLD
-    (old, old_gauges), (new, new_gauges) = load(old_path), load(new_path)
-    # A snapshot whose own start/end disk-gauge bracket spread exceeded
-    # 2x declared itself weather-invalid at measurement time (VERDICT
-    # r11 item 1): say so up front — per-lane flags from such a window
-    # are weather artifacts and the run should be repeated, not
-    # adjudicated lane by lane.
-    for label, g in (("old", old_gauges), ("new", new_gauges)):
-        if g.get("weather_valid") == 0.0:
-            spread = g.get("calib_disk_bracket_spread", float("nan"))
-            print(f"WEATHER-INVALID {label} snapshot: intra-run disk "
-                  f"bracket spread {spread:.2f}x > 2x — re-run it in a "
-                  "calmer window before trusting any flag below")
+    (old, old_layers), (new, new_layers) = load(old_path), load(new_path)
     shared = sorted(set(old) & set(new))
     regressions = []
+    failed = []
     improved = 0
     for name in shared:
+        if old[name] < 0:
+            continue
+        if new[name] < 0:
+            failed.append(name)
+            continue
         ratio = new[name] / max(old[name], 1e-9)
         if ratio > threshold and new[name] - old[name] > ABS_FLOOR:
             regressions.append((name, old[name], new[name], ratio))
@@ -92,7 +77,8 @@ def main(argv: list[str]) -> int:
     print(
         f"{len(shared)} shared queries | {improved} improved >"
         f"{round((1 - 1 / threshold) * 100)}% | "
-        f"{len(regressions)} regressed >{round((threshold - 1) * 100)}%"
+        f"{len(regressions)} regressed >{round((threshold - 1) * 100)}% | "
+        f"{len(failed)} newly failed"
     )
     only_old = sorted(set(old) - set(new))
     only_new = sorted(set(new) - set(old))
@@ -100,83 +86,22 @@ def main(argv: list[str]) -> int:
         print(f"dropped from new: {only_old}")
     if only_new:
         print(f"new entries: {only_new}")
+    for name in failed:
+        print(f"  FAILED  {name}: {old[name]:.2f}s -> failed")
     for name, o, n, r in sorted(regressions, key=lambda t: -t[3]):
         print(f"  REGRESSED {r:.2f}x  {name}: {o:.2f}s -> {n:.2f}s")
-    # Weather-normalized ADVISORY view (r9: three same-HEAD runs flagged
-    # 30/28/10 DIFFERENT entries on a host whose gauges drifted 10-44%):
-    # the median new/old ratio across all shared queries is a robust
-    # global host factor; a flag that survives dividing it out is a
-    # code-shaped regression worth solo adjudication, the rest are
-    # weather. Advisory only — the exit code stays on the raw flags.
-    if regressions:
-        # Median over shared queries whose ratio stayed UNDER the
-        # threshold: if a code change regresses a large fraction of
-        # entries, including them would fold the regression into the
-        # "host factor" and the advisory view would launder it as
-        # weather. ADVICE r10: exclusion is by RATIO, not by raw-flag
-        # membership — a broad regression concentrated in sub-second
-        # lanes (exempted from the raw flag only by ABS_FLOOR) must not
-        # inflate the anchor either.
-        clean = [
-            new[n] / max(old[n], 1e-9)
-            for n in shared
-            if new[n] / max(old[n], 1e-9) <= threshold
-        ]
-        if clean:
-            w = statistics.median(clean)
-            label = "weather factor (median ratio)"
-        else:
-            # every shared query exceeded the ratio threshold: no
-            # unbiased anchor exists, so attribute only the SMALLEST
-            # ratio to weather — a full-set median would land inside the
-            # regressed mass and launder a broad code regression as
-            # weather (a truly uniform slowdown still normalizes away,
-            # which is the irreducible ambiguity of a single-host diff)
-            w = min(new[n] / max(old[n], 1e-9) for n in shared)
-            label = "weather factor (min ratio, all regressed)"
-        # Two-gauge refinement (VERDICT r10 item 5): the scalar median
-        # under-corrects lanes bound to whichever resource the host is
-        # stealing (r10 adjudication: CPU gauge 1.7x degraded, a
-        # CPU-bound lane flagged at 1.9x, scalar factor only ~1.1).
-        # Lanes with a committed gauge affinity normalize by THEIR
-        # gauge's measured drift; the gauge is measured independently of
-        # every lane, so this cannot launder a single-lane code
-        # regression — only host-wide resource theft.
-        affinity = load_affinity()
-        drift = {
-            g: new_gauges[g] / max(old_gauges[g], 1e-9)
-            for g in GAUGES
-            if g in old_gauges and g in new_gauges
-        }
-
-        def factor(name: str) -> tuple[float, str]:
-            g = affinity.get(name)
-            if g in drift:
-                return drift[g], g.replace("calib_", "")
-            return w, "median"
-
-        # floor applies to NORMALIZED growth (n/f - o): using raw
-        # (n - o*f) would shrink the effective floor by 1/f on a slow
-        # host — re-flagging exactly the weather noise this view exists
-        # to suppress
-        survive = []
-        for name, o, n, r in regressions:
-            f, src = factor(name)
-            if r / f > threshold and (n / f - o) > ABS_FLOOR:
-                survive.append((name, o, n, r / f, src))
-        gauge_note = " ".join(
-            f"{g.replace('calib_', '')}={drift[g]:.2f}x" for g in drift
-        )
+    flags = []
+    if old_layers is None or new_layers is None:
+        print("counters: not compared (a file has no layers)")
+    else:
+        flags = counter_flags(old_layers, new_layers)
         print(
-            f"{label}: {w:.2f}x | gauge drift: {gauge_note or 'n/a'} | "
-            f"{len(survive)} flags survive normalization:"
+            f"{len(set(old_layers) & set(new_layers))} shared layers | "
+            f"{len(flags)} counter flags"
         )
-        for name, o, n, r, src in sorted(survive, key=lambda t: -t[3]):
-            print(
-                f"  CODE-SHAPED {r:.2f}x  {name}: {o:.2f}s -> {n:.2f}s"
-                f" [{src} factor]"
-            )
-    return 1 if regressions else 0
+        for flag in flags:
+            print(f"  COUNTER {flag}")
+    return 1 if regressions or failed or flags else 0
 
 
 if __name__ == "__main__":

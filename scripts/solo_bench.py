@@ -1,8 +1,8 @@
 """Solo adjudication timer — the established x3-on-a-quiet-host protocol
-for bench-tail regressions (VERDICT r4/r5): time named registry queries
-in a fresh bench-style session, 3 runs each, with the same host-weather
-calibration gauges bench.py records so a slow number can be attributed
-to the host or to the code.
+for bench-tail regressions: time named registry queries in a fresh
+bench-style session, 3 runs each. bench.py's ``layers`` counts tell a
+code change from host load; this timer re-measures the seconds of the
+lanes that moved.
 
 Usage: python scripts/solo_bench.py auto_tokenize_lineitem rare_level_collapse
 """
@@ -32,21 +32,6 @@ def main(names: list[str]) -> None:
     load_table(spark, SF_DIR, "lineitem").limit(1000).count()
 
     out: dict = {"sf": SF_DIR}
-    t0 = time.perf_counter()
-    spark.range(2_000_000_000).selectExpr("max(xxhash64(id))").collect()
-    out["calib_cpu_parallel"] = round(time.perf_counter() - t0, 4)
-    t0 = time.perf_counter()
-    spark.range(200_000_000).selectExpr("xxhash64(id) AS k").sortWithinPartitions(
-        "k"
-    ).write.format("noop").mode("overwrite").save()
-    out["calib_mem_bandwidth"] = round(time.perf_counter() - t0, 4)
-    # disk cold-read gauge (bench.py's third gauge, r11): adjudicates
-    # IO-bound flags that neither CPU nor in-memory bandwidth explains;
-    # shared helper = per-run tempfile + try/finally (ADVICE r11)
-    from bench import disk_cold_read_gauge
-
-    out["calib_disk_cold_read"] = round(disk_cold_read_gauge(), 4)
-
     queries = entrymod.queries()
     for name in names:
         runs = []

@@ -1,11 +1,44 @@
 """The benchmark (perfbench) wraps named functions of the package by
 replacing ``vars(owner)[attr]``; a rename or a move that drops one of
 those names crashes every benchmark run. perfbench's own tests are not
-part of this suite, so the names are pinned here."""
+part of this suite, so the names are pinned here. bench.py imports
+perfbench's event-log rollup for its ``layers`` block, so importing
+``bench`` here pins those names too."""
 
+import bench
+from perfbench.eventlog import MEASURES
 from perfbench.workloads import LAYERS
 
 
 def test_benchmark_layers_resolve():
     missing = [name for owner, attr, name, _ in LAYERS if attr not in vars(owner)]
     assert not missing, missing
+
+
+def test_bench_lane_records_from_rollup():
+    def group(**counts):
+        return {**dict.fromkeys(MEASURES, 0), **counts}
+
+    by_group = {
+        "memo:execute": group(jobs=1, stages=1, tasks=4, python_s=0.25),
+        "cold:construct": group(jobs=2, stages=2, tasks=3),
+        "cold:execute": group(jobs=1, stages=2, tasks=8,
+                              shuffle_write_bytes=4096, spill_bytes=512),
+        "other:construct": group(jobs=5),
+    }
+    walls = {"memo": (0.01, 0.2), "cold": (0.5, 0.3), "idle": (0.001, 0.002)}
+    layers = bench.lane_layers(by_group, walls)
+    assert set(layers) == set(walls)
+    assert layers["memo"]["memo_hit"] is True
+    assert layers["cold"]["memo_hit"] is False
+    assert layers["cold"] == {
+        "construct_s": 0.5, "execute_s": 0.3, "jobs": 3, "stages": 4,
+        "tasks": 11, "shuffle_write_bytes": 4096, "spill_bytes": 512,
+        "python_s": 0, "memo_hit": False,
+    }
+    assert layers["memo"]["python_s"] == 0.25
+    assert layers["idle"] == {
+        "construct_s": 0.001, "execute_s": 0.002, "jobs": 0, "stages": 0,
+        "tasks": 0, "shuffle_write_bytes": 0, "spill_bytes": 0,
+        "python_s": 0, "memo_hit": True,
+    }

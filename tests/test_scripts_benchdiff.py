@@ -1,8 +1,5 @@
-"""Tests for scripts/bench_diff.py weather-normalized advisory view
-(ADVICE r10: the factor must be the median over NON-regressed shared
-queries — otherwise a broad code regression inflates the "host factor"
-and the advisory view misreports it as weather — and even-length lists
-must use a true median, not the upper-middle element)."""
+"""Tests for scripts/bench_diff.py: counter flags from the ``layers``
+records, the seconds rule, and lanes that newly fail."""
 
 import json
 import os
@@ -15,168 +12,82 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from scripts import bench_diff  # noqa: E402
 
 
-def _run(tmp_path, old, new, capsys):
+def _layer(jobs=2, stages=3, shuffle=0, spill=0):
+    return {"construct_s": 0.1, "execute_s": 0.5, "jobs": jobs,
+            "stages": stages, "tasks": 8, "shuffle_write_bytes": shuffle,
+            "spill_bytes": spill, "python_s": 0.0, "memo_hit": False}
+
+
+def _run(tmp_path, capsys, old, new, old_layers=None, new_layers=None):
     op, np_ = tmp_path / "old.json", tmp_path / "new.json"
-    op.write_text(json.dumps({"queries": old}))
-    np_.write_text(json.dumps({"queries": new}))
+    for path, queries, layers in ((op, old, old_layers), (np_, new, new_layers)):
+        doc = {"queries": queries}
+        if layers is not None:
+            doc["layers"] = layers
+        path.write_text(json.dumps(doc))
     rc = bench_diff.main([str(op), str(np_)])
     return rc, capsys.readouterr().out
 
 
-def test_broad_code_regression_not_absorbed_as_weather(tmp_path, capsys):
-    # 6 of 10 queries regress 3x (code-shaped); the 4 steady ones define
-    # the host factor (~1.0). Pre-fix, the median over ALL shared ratios
-    # landed inside the regressed mass (3.0) and normalization erased
-    # every flag; post-fix all 6 survive.
-    old = {f"q{i}": 2.0 for i in range(10)}
-    new = {f"q{i}": 6.0 for i in range(6)}
-    new.update({f"q{i}": 2.02 for i in range(6, 10)})
-    rc, out = _run(tmp_path, old, new, capsys)
+def test_one_more_job_on_one_lane_fails_with_equal_seconds(tmp_path, capsys):
+    seconds = {f"q{i}": 2.0 for i in range(5)}
+    old_layers = {name: _layer() for name in seconds}
+    new_layers = {**old_layers, "q3": _layer(jobs=3)}
+    rc, out = _run(tmp_path, capsys, seconds, seconds, old_layers, new_layers)
     assert rc == 1
-    assert "6 flags survive normalization" in out
-    assert out.count("CODE-SHAPED") == 6
+    assert "1 counter flags" in out
+    assert "COUNTER q3: jobs 2 -> 3" in out
 
 
-def test_uniform_host_slowdown_is_weather(tmp_path, capsys):
-    # Everything 1.5x slower uniformly: raw flags fire (exit code 1 by
-    # contract) but the advisory view attributes all of it to weather.
+def test_uniform_slowdown_with_equal_counters_flags_no_counter(tmp_path, capsys):
     old = {f"q{i}": 2.0 for i in range(9)}
     new = {f"q{i}": 3.0 for i in range(9)}
-    rc, out = _run(tmp_path, old, new, capsys)
-    assert rc == 1  # exit code stays on the raw flags
-    assert "0 flags survive normalization" in out
+    layers = {name: _layer(shuffle=5 << 20) for name in old}
+    rc, out = _run(tmp_path, capsys, old, new, layers, layers)
+    assert rc == 1  # the seconds rule: every lane is 1.5x slower
+    assert "9 regressed" in out
+    assert "0 counter flags" in out
+    assert "COUNTER" not in out
 
 
-def test_even_count_uses_true_median(tmp_path, capsys):
-    # Two non-regressed entries with ratios 1.04 and 1.16 (both under
-    # the 1.2 threshold): true median is 1.10. The pre-fix upper-middle
-    # pick would print 1.16; assert on the printed factor.
-    old = {"a": 10.0, "b": 10.0, "r": 10.0}
-    new = {"a": 10.4, "b": 11.6, "r": 23.0}
-    rc, out = _run(tmp_path, old, new, capsys)
+def test_byte_flags_need_double_and_one_mib(tmp_path, capsys):
+    seconds = {"small": 1.0, "big": 1.0, "spill": 1.0}
+    old_layers = {"small": _layer(shuffle=1000), "big": _layer(shuffle=4 << 20),
+                  "spill": _layer(spill=1 << 20)}
+    new_layers = {"small": _layer(shuffle=900_000),  # x900 but < 1 MiB more
+                  "big": _layer(shuffle=7 << 20),  # +3 MiB but < 2x
+                  "spill": _layer(spill=3 << 20)}  # 3x and +2 MiB
+    rc, out = _run(tmp_path, capsys, seconds, seconds, old_layers, new_layers)
     assert rc == 1
-    assert "weather factor (median ratio): 1.10x" in out
+    assert out.count("COUNTER") == 1
+    assert f"COUNTER spill: spill_bytes {1 << 20} -> {3 << 20}" in out
 
 
-def test_all_regressed_falls_back_to_min_ratio(tmp_path, capsys):
-    # Degenerate case: every shared query tripped the raw flag (host
-    # 2.5x slower AND one lane regressed further). The fallback must
-    # anchor on the SMALLEST ratio — a full-set median would land
-    # inside the regressed mass and erase the real flag — and must be
-    # LABELED as the min-ratio fallback, not as a median (ADVICE r11).
-    old = {"a": 2.0, "b": 2.0}
-    new = {"a": 5.0, "b": 6.4}
-    rc, out = _run(tmp_path, old, new, capsys)
+def test_file_without_layers_diffs_on_seconds_only(tmp_path, capsys):
+    seconds = {"a": 2.0, "b": 2.0}
+    new_layers = {name: _layer(jobs=9) for name in seconds}
+    rc, out = _run(tmp_path, capsys, seconds, seconds, None, new_layers)
+    assert rc == 0
+    assert "counters: not compared" in out
+    assert "COUNTER" not in out
+    rc, out = _run(tmp_path, capsys, seconds, {"a": 2.0, "b": 4.0},
+                   None, new_layers)
     assert rc == 1
-    assert "weather factor (min ratio, all regressed): 2.50x" in out
-    assert "(median ratio)" not in out
-    assert "1 flags survive normalization" in out
-    assert "CODE-SHAPED 1.28x  b" in out
+    assert "REGRESSED 2.00x  b" in out
 
 
-def test_abs_floor_exempt_fast_lanes_excluded_from_anchor(tmp_path, capsys):
-    # ADVICE r11: a broad code regression concentrated in SUB-SECOND
-    # lanes is exempt from the raw flag only via ABS_FLOOR — those lanes
-    # must still be excluded from the median anchor, or their inflated
-    # ratios launder the one slow-lane flag as weather. 6 fast lanes
-    # regress 3x (0.1s -> 0.3s, abs growth 0.2 < floor), 4 steady lanes
-    # define the true factor (~1.0), one slow lane regresses 3x.
-    old = {f"fast{i}": 0.1 for i in range(6)}
-    old.update({f"steady{i}": 2.0 for i in range(4)})
-    old["slow"] = 5.0
-    new = {f"fast{i}": 0.3 for i in range(6)}
-    new.update({f"steady{i}": 2.02 for i in range(4)})
-    new["slow"] = 15.0
-    rc, out = _run(tmp_path, old, new, capsys)
+def test_newly_failing_lane_fails_the_gate(tmp_path, capsys):
+    rc, out = _run(tmp_path, capsys, {"a": 2.0}, {"a": -1.0})
     assert rc == 1
-    # pre-fix anchor = median over everything not raw-flagged = the six
-    # 3.0 ratios + four 1.01 ratios -> ~3.0, erasing the slow-lane flag
-    assert "weather factor (median ratio): 1.01x" in out
-    assert "CODE-SHAPED" in out and "slow" in out
+    assert "FAILED  a" in out
+    assert "0 improved" in out
 
 
-def _run_with_gauges(tmp_path, old, new, old_g, new_g, affinity, capsys,
-                     monkeypatch):
-    op, np_ = tmp_path / "old.json", tmp_path / "new.json"
-    op.write_text(json.dumps({"queries": {**old, **old_g}}))
-    np_.write_text(json.dumps({"queries": {**new, **new_g}}))
-    aff = tmp_path / "affinity.json"
-    aff.write_text(json.dumps(
-        {k: {"gauge": v, "corr": 0.9, "n": 8} for k, v in affinity.items()}
-    ))
-    monkeypatch.setattr(bench_diff, "AFFINITY_PATH", str(aff))
-    rc = bench_diff.main([str(op), str(np_)])
-    return rc, capsys.readouterr().out
-
-
-def test_cpu_degraded_host_unflags_untouched_cpu_lane(tmp_path, capsys,
-                                                      monkeypatch):
-    # VERDICT r10 item 5 scenario (the grouped_linear_regression
-    # adjudication): CPU gauge 1.7x degraded, mem gauge steady; an
-    # untouched CPU-bound lane reads 1.8x slower while the IO/mem-bound
-    # majority is steady, so the scalar median (~1.0) under-corrects and
-    # the lane survives as a false CODE-SHAPED flag. With the lane's
-    # committed cpu affinity, its OWN gauge's drift normalizes it away.
-    old = {"cpu_lane": 2.0}
-    old.update({f"mem{i}": 2.0 for i in range(6)})
-    new = {"cpu_lane": 3.6}  # 1.8x, abs growth 1.6 > floor
-    new.update({f"mem{i}": 2.02 for i in range(6)})
-    rc, out = _run_with_gauges(
-        tmp_path, old, new,
-        {"calib_cpu_parallel": 0.6, "calib_mem_bandwidth": 8.0},
-        {"calib_cpu_parallel": 1.02, "calib_mem_bandwidth": 8.1},
-        {"cpu_lane": "calib_cpu_parallel"}, capsys, monkeypatch,
-    )
-    assert rc == 1  # raw flag still fires — exit code contract unchanged
-    assert "gauge drift: cpu_parallel=1.70x" in out
-    assert "0 flags survive normalization" in out
-
-
-def test_io_degraded_host_unflags_untouched_disk_lane(tmp_path, capsys,
-                                                      monkeypatch):
-    # VERDICT r11 item 2 / r12 item 8 scenario (the r11 disk-throughput
-    # collapse): disk gauge 3x degraded, cpu/mem gauges steady; an
-    # untouched disk-affine lane reads 2.5x slower while the compute-
-    # bound majority is steady, so the scalar median (~1.0) under-
-    # corrects and the lane would survive as a false CODE-SHAPED flag.
-    # With the lane's committed disk affinity, its OWN gauge's drift
-    # normalizes it away (advisory view only — the raw-flag exit code
-    # contract is unchanged).
-    old = {"disk_lane": 2.0}
-    old.update({f"cpu{i}": 2.0 for i in range(6)})
-    new = {"disk_lane": 5.0}  # 2.5x, abs growth 3.0 > floor
-    new.update({f"cpu{i}": 2.02 for i in range(6)})
-    rc, out = _run_with_gauges(
-        tmp_path, old, new,
-        {"calib_cpu_parallel": 0.7, "calib_mem_bandwidth": 8.0,
-         "calib_disk_cold_read": 0.12},
-        {"calib_cpu_parallel": 0.71, "calib_mem_bandwidth": 8.1,
-         "calib_disk_cold_read": 0.36},
-        {"disk_lane": "calib_disk_cold_read"}, capsys, monkeypatch,
-    )
-    assert rc == 1  # raw flag still fires — exit code contract unchanged
-    assert "disk_cold_read=3.00x" in out
-    assert "0 flags survive normalization" in out
-
-
-def test_real_regression_in_cpu_lane_still_survives_gauge(tmp_path, capsys,
-                                                          monkeypatch):
-    # The gauge is measured independently of the lane: a 3x code
-    # regression in a cpu-affine lane on a host whose cpu gauge drifted
-    # only 1.1x must STILL survive (no laundering through affinity).
-    old = {"cpu_lane": 2.0}
-    old.update({f"mem{i}": 2.0 for i in range(6)})
-    new = {"cpu_lane": 6.0}
-    new.update({f"mem{i}": 2.02 for i in range(6)})
-    rc, out = _run_with_gauges(
-        tmp_path, old, new,
-        {"calib_cpu_parallel": 0.6, "calib_mem_bandwidth": 8.0},
-        {"calib_cpu_parallel": 0.66, "calib_mem_bandwidth": 8.1},
-        {"cpu_lane": "calib_cpu_parallel"}, capsys, monkeypatch,
-    )
-    assert rc == 1
-    assert "1 flags survive normalization" in out
-    assert "cpu_lane" in out and "[cpu_parallel factor]" in out
+def test_lane_failed_in_old_is_not_compared(tmp_path, capsys):
+    rc, out = _run(tmp_path, capsys, {"a": -1.0, "b": 2.0}, {"a": 2.0, "b": 2.0})
+    assert rc == 0
+    assert "0 improved" in out and "0 regressed" in out
+    assert "FAILED" not in out
 
 
 if __name__ == "__main__":
