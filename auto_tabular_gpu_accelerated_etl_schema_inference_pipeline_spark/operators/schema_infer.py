@@ -5,10 +5,10 @@ etl_benchmark.py:27). We provide it properly:
 
 1. ``infer_column_classes`` — classify every column (identifier /
    numeric_continuous / numeric_discrete / categorical / text / json /
-   timestamp / vector) from the Spark schema + one distributed stats
-   pass (exact distinct counts, JSON-shape counts), then fit the
-   vocabulary of every dict-encoded column. The result is the classes
-   model serving needs, held driver-side.
+   timestamp / vector) from the Spark schema + exact per-column stats
+   (distinct counts, JSON-shape counts), then fit the vocabulary of
+   every dict-encoded column. The result is the classes model serving
+   needs, held driver-side.
 2. ``categorical_encode`` — dictionary-encode low-cardinality strings
    (vocab = sorted distinct values -> code, broadcast back).
 3. ``auto_tokenize`` — route every column through the strategy its
@@ -16,9 +16,10 @@ etl_benchmark.py:27). We provide it properly:
    operator), dict codes for categoricals, epoch-day buckets for
    timestamps, passthrough for identifiers.
 
-Scale: the stats pass is one groupBy-free aggregate (count distinct via
-partial HLL or exact per column) and the vocabulary fit one more
-(a vocabulary is small by definition of "categorical"); the transform
+Scale: profiling is one plan, ``_value_counts``: every column's value
+counts from a UNION of single-column scans through one shared exchange.
+The stats, the vocabularies and the partition advisor all read it, so
+profiling a table runs at most 5 Spark jobs at any width; the transform
 is map-only — dict codes are a literal lookup, not a join.
 """
 
@@ -26,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType
 
 from ..session import configure_for_oracle, ctx_cache, load_table
 from .quantile_bin import LINEITEM_MEASURES
@@ -33,32 +35,6 @@ from .quantile_bin_queries import boundary_bin_oracle
 
 CATEGORICAL_MAX_DISTINCT_RATIO = 0.10
 CATEGORICAL_MAX_DISTINCT = 100
-
-
-def _class_expr():
-    """Classification decision tree as a column expression over the
-    per-column stats rows — identical CASE logic lives in the oracle."""
-    dr = F.col("n_distinct") / F.col("n_rows")
-    is_cat = (F.col("n_distinct") <= CATEGORICAL_MAX_DISTINCT) & (
-        dr <= CATEGORICAL_MAX_DISTINCT_RATIO
-    )
-    return (
-        F.when(F.col("spark_type") == "timestamp", F.lit("timestamp"))
-        .when(F.col("spark_type").startswith("array"), F.lit("vector"))
-        .when(
-            (F.col("spark_type") == "string") & (F.col("n_json") == F.col("n_rows")),
-            F.lit("json"),
-        )
-        .when((F.col("spark_type") == "string") & is_cat, F.lit("categorical"))
-        .when(F.col("spark_type") == "string", F.lit("text"))
-        .when(
-            F.col("spark_type").isin("bigint", "int") & F.col("is_key_name"),
-            F.lit("identifier"),
-        )
-        .when(F.col("spark_type").isin("bigint", "int") & is_cat, F.lit("numeric_discrete"))
-        .when(F.col("spark_type").isin("bigint", "int"), F.lit("identifier"))
-        .otherwise(F.lit("numeric_continuous"))
-    )
 
 
 _STRATEGY = {
@@ -72,59 +48,8 @@ _STRATEGY = {
     "numeric_continuous": "quantile_bin",
 }
 
-
-def _column_stats_union(
-    df: DataFrame,
-) -> tuple[list[tuple[str, str, bool]], DataFrame]:
-    """The profiling pass pre-collect: per-column (name, type,
-    key-named) metadata plus the UNION of per-column pruned aggregates
-    infer_column_classes executes. Factored out so
-    tests/test_plans.py::test_profiling_pass_prunes_columns_no_expand
-    audits the exact plan object the real function runs — a regression
-    back to the Expand/multi-countDistinct shape fails the pin even if
-    a hand-rebuilt twin would not."""
-    from functools import reduce
-
-    meta: list[tuple[str, str, bool]] = []
-    parts: list[DataFrame] = []
-    for f in df.schema.fields:
-        c = f.name
-        t = f.dataType.simpleString()
-        # normalize Spark 4's timestamp_ntz (parquet isAdjustedToUTC=false)
-        # to plain "timestamp" — the classification and the oracle don't
-        # care about the zone flavor
-        if t.startswith("timestamp"):
-            t = "timestamp"
-        is_key = c.endswith("key") or c.endswith("_id") or c == "doc_id"
-        meta.append((c, t, is_key))
-        distinct = (
-            F.countDistinct(F.col(c))
-            if not t.startswith("array")
-            else F.countDistinct(F.col(c).cast("string"))
-        )
-        n_json = (
-            F.count(F.when(F.col(c).rlike(r"^\{.*\}$"), 1)).cast("bigint")
-            if t == "string"
-            else F.lit(0).cast("bigint")
-        )
-        parts.append(
-            df.select(F.col(c)).agg(
-                F.lit(c).alias("__c"),
-                F.count(F.lit(1)).alias("__n"),
-                distinct.cast("bigint").alias("__nd"),
-                n_json.alias("__nj"),
-            )
-        )
-    return meta, reduce(lambda a, b: a.unionAll(b), parts)
-
-
-#: the per-column stats rows classification reads
-_STATS_SCHEMA = (
-    "table_name string, column_name string, spark_type string, "
-    "n_rows bigint, n_distinct bigint, n_json bigint, is_key_name boolean"
-)
 #: the classes model: per-column stats, class and strategy, plus the
-#: fitted vocabulary of every dict-encoded column (see _fit_vocabularies)
+#: fitted vocabulary of every dict-encoded column
 _CLASSES_SCHEMA = (
     "table_name string, column_name string, spark_type string, "
     "n_rows bigint, n_distinct bigint, n_json bigint, "
@@ -133,30 +58,66 @@ _CLASSES_SCHEMA = (
 _DICT_CLASSES = ("categorical", "numeric_discrete")
 
 
-def _fit_vocabularies(
-    df: DataFrame, cols: list[str]
-) -> dict[str, list[str | None]]:
-    """One aggregate over the dict-encoded columns -> each column's
-    vocabulary: its distinct values sorted in native order (ints stay
-    numeric) and then cast to string, led by None when the column holds
-    a null. A value's 1-based position is its dense_rank code over the
-    column, nulls first as the ascending window orders them. Bounded:
-    classification caps these columns at CATEGORICAL_MAX_DISTINCT
-    values."""
-    if not cols:
-        return {}
-    aggs = []
-    for i, c in enumerate(cols):
-        aggs.append(
-            F.array_sort(F.collect_set(F.col(c)))
-            .cast("array<string>").alias(f"__v{i}")
+def _value_counts(df: DataFrame) -> DataFrame:
+    """Every column's value counts as one long frame ``(i, v, n)``: ``n``
+    rows of column ``i`` (its position in ``df``) hold the value ``v``.
+
+    ``v`` is a struct with one slot per column type, named by the type
+    (``v.bigint``, ``v.string``, ...), so every value keeps its native
+    type: ``-0.0`` groups with ``0.0``, NaN with NaN, and ints order as
+    numbers. An array value is cast to string. A null cell gives a null
+    ``v``. The plan is a UNION of per-column projections, each scanning
+    one column chunk, under one ``groupBy(i, v)``: all columns share a
+    single exchange, and a filter on ``i`` prunes the union to the
+    columns it keeps."""
+    from functools import reduce
+
+    cols = [
+        (F.col(f.name).cast("string"), StringType())
+        if isinstance(f.dataType, ArrayType)
+        else (F.col(f.name), f.dataType)
+        for f in df.schema.fields
+    ]
+    slots = list(dict.fromkeys(t for _, t in cols))
+    parts = [
+        df.select(
+            F.lit(i).alias("i"),
+            F.when(
+                c.isNotNull(),
+                F.struct(*[
+                    (c if s == t else F.lit(None).cast(s)).alias(s.simpleString())
+                    for s in slots
+                ]),
+            ).alias("v"),
         )
-        aggs.append(F.bool_or(F.col(c).isNull()).alias(f"__n{i}"))
-    row = df.agg(*aggs).collect()[0]
-    return {
-        c: ([None] if row[f"__n{i}"] else []) + row[f"__v{i}"]
-        for i, c in enumerate(cols)
-    }
+        for i, (c, t) in enumerate(cols)
+    ]
+    return (
+        reduce(DataFrame.unionAll, parts)
+        .groupBy("i", "v")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def _classify(t: str, is_key: bool, n_rows: int, n_distinct: int, n_json: int) -> str:
+    """The oracle's CASE (_schema_infer_oracle) over one column's stats.
+    A 0-row column is never categorical: the oracle's ratio is NULL."""
+    is_cat = (
+        n_rows > 0
+        and n_distinct <= CATEGORICAL_MAX_DISTINCT
+        and n_distinct / n_rows <= CATEGORICAL_MAX_DISTINCT_RATIO
+    )
+    if t == "timestamp":
+        return "timestamp"
+    if t.startswith("array"):
+        return "vector"
+    if t == "string":
+        if n_json == n_rows:
+            return "json"
+        return "categorical" if is_cat else "text"
+    if t in ("bigint", "int"):
+        return "numeric_discrete" if is_cat and not is_key else "identifier"
+    return "numeric_continuous"
 
 
 def infer_column_classes(spark: SparkSession, df: DataFrame, table: str) -> DataFrame:
@@ -164,18 +125,20 @@ def infer_column_classes(spark: SparkSession, df: DataFrame, table: str) -> Data
     for dict-encoded classes, the fitted ``vocab`` — everything
     auto_tokenize needs to serve a later batch.
 
-    The stats pass is a UNION of per-column aggregates collected in one
-    action — each subtree scans exactly ITS column (Parquet prunes to
-    one column chunk, so the union's total I/O equals ONE full-width
-    scan) and computes the exact distinct + JSON-shape counts with an
-    ordinary two-phase agg. This replaced a single multi-countDistinct
-    aggregate, which Catalyst plans via Expand: every row is replicated
-    once per distinct-counted column (17x the rows through the first
-    agg), which phase-measured at 8.4 s vs ~1.5 s for the pruned union
-    on the same fixture — and at 100 TB an Expand over the full row
-    width is strictly worse than N pruned single-column scans of the
-    same total bytes. Independent subtrees also schedule concurrently
-    inside the one job. Then one aggregate fits the vocabularies.
+    Both passes read one _value_counts plan, whatever the column count:
+    - the stats (rows, exact distinct values, JSON-shaped values) are
+      one ``groupBy(i)`` over it, read with one collect: 3 jobs, one
+      per exchange and the result;
+    - the vocabularies are the same frame filtered to the dict-encoded
+      columns, which prunes the union to their scans: 2 jobs, none when
+      no column is dict-encoded. A vocabulary is the column's values
+      sorted on the driver in native order (ints numeric, strings by
+      code point, as Spark orders them) and cast to string, led by None
+      when the column holds a null, so a value's 1-based position is
+      its dense_rank over the column.
+    So profiling runs at most 5 jobs, and the driver holds at most
+    CATEGORICAL_MAX_DISTINCT values per dict-encoded column, never a
+    text column's distinct values.
 
     The returned frame is built from an Arrow table, so it is a
     LocalRelation: collecting it runs no Spark job (a frame built from
@@ -183,46 +146,48 @@ def infer_column_classes(spark: SparkSession, df: DataFrame, table: str) -> Data
     per collect)."""
     import pyarrow as pa
 
-    meta, union = _column_stats_union(df)
-    per_col = {r["__c"]: r for r in union.collect()}
-    stats = df.sparkSession.createDataFrame(
-        pa.Table.from_pylist(
-            [
-                {
-                    "table_name": table,
-                    "column_name": c,
-                    "spark_type": t,
-                    "n_rows": per_col[c]["__n"],
-                    "n_distinct": per_col[c]["__nd"],
-                    "n_json": per_col[c]["__nj"],
-                    "is_key_name": is_key,
-                }
-                for c, t, is_key in meta
-            ]
-        ),
-        _STATS_SCHEMA,
+    counts = _value_counts(df)
+    is_json = (
+        F.col("v.string").rlike(r"^\{.*\}$")
+        if "string" in counts.schema["v"].dataType.fieldNames()
+        else F.lit(False)
     )
-    classes = stats.select(
-        "table_name",
-        "column_name",
-        "spark_type",
-        "n_rows",
-        "n_distinct",
-        "n_json",
-        _class_expr().alias("inferred_class"),
-    ).withColumn("strategy", F.element_at(
-        F.create_map(*[F.lit(x) for kv in _STRATEGY.items() for x in kv]),
-        F.col("inferred_class"),
-    )).collect()
-    vocab = _fit_vocabularies(
-        df,
-        [r["column_name"] for r in classes if r["inferred_class"] in _DICT_CLASSES],
-    )
+    stats = {
+        r["i"]: r
+        for r in counts.groupBy("i").agg(
+            F.sum("n").alias("n_rows"),
+            F.count("v").alias("n_distinct"),
+            F.sum(F.when(is_json, F.col("n")).otherwise(0)).alias("n_json"),
+        ).collect()
+    }
+    rows = []
+    for i, f in enumerate(df.schema.fields):
+        t = f.dataType.simpleString()
+        # normalize Spark 4's timestamp_ntz (parquet isAdjustedToUTC=false)
+        # to plain "timestamp" — the classification and the oracle don't
+        # care about the zone flavor
+        if t.startswith("timestamp"):
+            t = "timestamp"
+        s = stats.get(i)  # a 0-row frame has no counts
+        n = (s["n_rows"], s["n_distinct"], s["n_json"]) if s else (0, 0, 0)
+        is_key = f.name.endswith("key") or f.name.endswith("_id") or f.name == "doc_id"
+        k = _classify(t, is_key, *n)
+        rows.append({
+            "table_name": table, "column_name": f.name, "spark_type": t,
+            "n_rows": n[0], "n_distinct": n[1], "n_json": n[2],
+            "inferred_class": k, "strategy": _STRATEGY[k], "vocab": None,
+        })
+    values = {i: [] for i, r in enumerate(rows) if r["inferred_class"] in _DICT_CLASSES}
+    if values:
+        for r in counts.where(F.col("i").isin(list(values))).collect():
+            slot = rows[r["i"]]["spark_type"]
+            values[r["i"]].append(None if r["v"] is None else r["v"][slot])
+    for i, vs in values.items():
+        rows[i]["vocab"] = ([None] if None in vs else []) + [
+            str(x) for x in sorted(x for x in vs if x is not None)
+        ]
     return df.sparkSession.createDataFrame(
-        pa.Table.from_pylist(
-            [{**r.asDict(), "vocab": vocab.get(r["column_name"])} for r in classes]
-        ),
-        _CLASSES_SCHEMA,
+        pa.Table.from_pylist(rows), _CLASSES_SCHEMA
     )
 
 
@@ -244,8 +209,8 @@ def q_schema_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inferred classes for lineitem + documents + embeddings columns
     (the vocabularies dropped). Each table's classes frame is cached per
     session and shared with q_auto_tokenize_lineitem, so one bench/driver
-    session pays each table's per-column profiling union (see
-    infer_column_classes) exactly once."""
+    session profiles each table (see infer_column_classes) exactly
+    once."""
     configure_for_oracle(spark)
     from functools import reduce
 
@@ -285,7 +250,7 @@ def q_categorical_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dict_code(c: str, vocab: list[str | None]):
     """Column ``c``'s code against its fitted vocabulary (see
-    _fit_vocabularies): the 1-based position, which is the dense_rank
+    infer_column_classes): the 1-based position, which is the dense_rank
     the fitted column gave the value. A literal lookup, map-only — no
     join, no window. A value the fit never saw gets a null code
     (array_position's 0, not an error, so ANSI sessions serve it too);
@@ -533,29 +498,14 @@ def q_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     10000: only useful as a file-internal sort key). The heuristic a
     data engineer applies before writing a 100 TB table, as a query.
 
-    ONE pass computes every column's stats (a single multi-aggregate —
-    no per-column scans), then the wide row unpivots to (column,
-    stats) rows via stack()."""
+    Every column's stats come from one _value_counts plan: ndv is the
+    count of non-null values, n_null the rows of the null value."""
     configure_for_oracle(spark)
-    li = load_table(spark, sf_dir, "lineitem")
-    aggs = []
-    for c in ADVISOR_COLS:
-        aggs.append(F.countDistinct(F.col(c)).alias(f"{c}__ndv"))
-        aggs.append(
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(
-                f"{c}__nnull"
-            )
-        )
-    wide = li.agg(F.count(F.lit(1)).alias("n_rows"), *aggs)
-    stack_expr = ", ".join(
-        f"'{c}', {c}__ndv, {c}__nnull" for c in ADVISOR_COLS
-    )
-    tall = wide.select(
-        "n_rows",
-        F.expr(
-            f"stack({len(ADVISOR_COLS)}, {stack_expr})"
-            " AS (column_name, ndv, n_null)"
-        ),
+    li = load_table(spark, sf_dir, "lineitem").select(*ADVISOR_COLS)
+    tall = _value_counts(li).groupBy("i").agg(
+        F.sum("n").alias("n_rows"),
+        F.count("v").alias("ndv"),
+        F.sum(F.when(F.col("v").isNull(), F.col("n")).otherwise(0)).alias("n_null"),
     )
     rec = (
         F.when(F.col("ndv") <= 1, F.lit("constant"))
@@ -564,8 +514,9 @@ def q_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("sort_within"))
     )
     return tall.select(
-        "column_name",
-        F.col("ndv").cast("bigint").alias("ndv"),
+        F.element_at(F.array(*map(F.lit, ADVISOR_COLS)), F.col("i") + 1)
+        .alias("column_name"),
+        "ndv",
         F.expr("n_null * 1000000L div n_rows").alias("null_ppm"),
         F.expr("n_rows div ndv").alias("rows_per_value"),
         rec.alias("recommendation"),

@@ -616,34 +616,36 @@ def test_memoized_builders_raw_plans_audited(spark, sf_dir):
 
 
 def test_profiling_pass_prunes_columns_no_expand(spark, sf_dir):
-    """Round-6 profiling rewrite pinned: infer_column_classes must plan
-    as per-column aggregates over PRUNED single-column scans — no
-    Expand node (the multi-countDistinct shape that replicates every
-    row once per counted column, measured 2x slower), and every leaf
-    scan must read exactly one column. Collection is driver-side, so
-    audit _column_stats_union — the EXACT pre-collect union object
-    infer_column_classes executes — over a numeric + string column
-    mix."""
+    """Profiling is one plan: _value_counts, the frame every profiling
+    pass (infer_column_classes, partition_advisor) reads, unions
+    per-column projections over PRUNED single-column scans — no Expand
+    node (the multi-countDistinct shape that replicates every row once
+    per counted column) and every leaf scan reads exactly one column —
+    and all columns share exactly one exchange, keyed on (i, v), for a
+    2-column and a 5-column frame alike."""
+    import re
+
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.schema_infer import (
-        _column_stats_union,
+        _value_counts,
     )
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (
         load_table,
     )
 
-    df = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_returnflag"
-    )
-    meta, u = _column_stats_union(df)
-    assert [m[0] for m in meta] == ["l_orderkey", "l_returnflag"]
-    plan = u._jdf.queryExecution().executedPlan().toString()
-    assert "Expand" not in plan, plan[:2000]
-    import re
-
-    read_schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-    assert read_schemas, plan[:2000]
-    for rs in read_schemas:
-        assert rs.count(":") == 1, f"scan reads more than one column: {rs}"
+    li = load_table(spark, sf_dir, "lineitem")
+    for cols in (
+        ["l_orderkey", "l_returnflag"],
+        ["l_orderkey", "l_returnflag", "l_quantity", "l_linenumber", "l_shipdate"],
+    ):
+        plan = _value_counts(li.select(*cols))._jdf.queryExecution().executedPlan().toString()
+        assert "Expand" not in plan, plan[:2000]
+        read_schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+        assert len(read_schemas) == len(cols), plan[:2000]
+        for rs in read_schemas:
+            assert rs.count(":") == 1, f"scan reads more than one column: {rs}"
+        exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+        assert len(exchanges) == 1, plan[:2000]
+        assert re.match(r"i#\d+, v#\d+, \d+$", exchanges[0]), exchanges
 
 
 def test_range_join_bucketed_is_equi_join(spark, sf_dir):

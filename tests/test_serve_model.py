@@ -224,3 +224,89 @@ def test_registry_classes_cache_collects_without_jobs(spark, sf_dir):
     assert {r["column_name"] for r in rows if r["vocab"] is not None} == {
         "l_linenumber", "l_returnflag", "l_linestatus",
     }
+
+
+def test_profiling_job_budget(spark, tmp_path):
+    """infer_column_classes runs at most 5 Spark jobs whatever the
+    frame's width: 3 for the stats over the shared value counts, 2 for
+    the dict-encoded columns' vocabularies. Checked on a 2-column frame
+    and on a 24-column frame shaped like the serving pool (an id, 20
+    floats, a 12-level string, a 5-level int, a timestamp)."""
+    path = str(tmp_path / "pool")
+    spark.range(2400).select(
+        "id",
+        *[F.rand(seed=k).alias(f"col_{k}") for k in range(20)],
+        F.concat(F.lit("seg_"), (F.col("id") % 12).cast("string")).alias("segment"),
+        (F.col("id") % 5 + 1).cast("int").alias("grade"),
+        F.timestamp_seconds(F.lit(1_600_000_000) + F.col("id") * 3600).alias("event_ts"),
+    ).write.parquet(path)
+    pool = spark.read.parquet(path)
+    for df in (pool.select("segment", "grade"), pool):
+        classes, n = _jobs(
+            spark, lambda: schema_infer.infer_column_classes(spark, df, "pool")
+        )
+        assert n <= 5, (len(df.columns), n)
+        got = {r["column_name"]: r["inferred_class"] for r in classes.collect()}
+        assert got["segment"] == "categorical" and got["grade"] == "numeric_discrete"
+
+
+def test_profiled_classes_and_vocabularies(spark):
+    """Hand-computed stats, classes and vocabularies: -0.0 and 0.0 are
+    one value and NaN another; a null-bearing dict column's vocabulary
+    is led by None; an int column's vocabulary is in numeric order, not
+    string order; a column of JSON objects is json; an array column is
+    counted by its string form."""
+    nan = float("nan")
+    rows = [
+        (
+            i,
+            (-0.0, 0.0, nan, 1.5)[i % 4],
+            None if i % 10 == 0 else "bca"[i % 3],
+            (30, 2, 10)[i % 3],
+            '{"k": %d}' % i,
+            [float(i % 2), 1.0],
+        )
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id bigint, x double, seg string, grade int, js string, emb array<float>"
+    )
+    got = {
+        r["column_name"]: (
+            r["spark_type"], r["n_rows"], r["n_distinct"], r["n_json"],
+            r["inferred_class"], r["strategy"], r["vocab"],
+        )
+        for r in schema_infer.infer_column_classes(spark, df, "t").collect()
+    }
+    assert got == {
+        "doc_id": ("bigint", 40, 40, 0, "identifier", "passthrough", None),
+        "x": ("double", 40, 3, 0, "numeric_continuous", "quantile_bin", None),
+        "seg": ("string", 40, 3, 0, "categorical", "dict_encode", [None, "a", "b", "c"]),
+        "grade": ("int", 40, 3, 0, "numeric_discrete", "dict_encode", ["2", "10", "30"]),
+        "js": ("string", 40, 40, 40, "json", "json_extract", None),
+        "emb": ("array<float>", 40, 2, 0, "vector", "lsh_bucket", None),
+    }
+
+
+def test_profiling_zero_rows_under_ansi(spark, tmp_path):
+    """A 0-row frame profiles under ANSI instead of dividing by zero.
+    As in the oracle, whose distinct ratio is NULL there, no column is
+    categorical or discrete; a string column is json (0 of 0 rows are
+    JSON-shaped)."""
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        df = _table(spark, str(tmp_path / "t"), [(1, "a", 2, 1.0, 2.0)]).limit(0)
+        got = {
+            r["column_name"]: (r["n_rows"], r["n_distinct"], r["inferred_class"], r["vocab"])
+            for r in schema_infer.infer_column_classes(spark, df, "t").collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert got == {
+        "id": (0, 0, "identifier", None),
+        "segment": (0, 0, "json", None),
+        "grade": (0, 0, "identifier", None),
+        "f1": (0, 0, "numeric_continuous", None),
+        "f2": (0, 0, "numeric_continuous", None),
+    }
