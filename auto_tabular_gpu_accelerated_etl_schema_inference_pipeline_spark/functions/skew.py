@@ -46,9 +46,8 @@ def q_join_skew_salted(spark, sf_dir: str):
     (large, user_id moderately hot) x per-user dim from customer, salted
     8 ways, then aggregated by market segment. The salt is provably
     result-neutral — the oracle is the PLAIN join's aggregate."""
-    from ..session import configure_for_oracle, load_events, load_table
+    from ..session import load_events, load_table
 
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir).select("user_id", "value")
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -71,9 +70,8 @@ def q_join_null_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries a mega-partition of unmatchable rows. Key here: suppkey
     nulled for low-discount rows (~40% of lineitem — a realistic
     sparse-FK column)."""
-    from ..session import configure_for_oracle, load_table
+    from ..session import load_table
 
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_linenumber",
@@ -137,10 +135,9 @@ def q_join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Result-neutrality: the bloom filter only drops rows that cannot
     join (false positives pass through to the exact join) — the oracle
     is the PLAIN join's aggregate."""
-    from ..session import configure_for_oracle, forked_session, load_table
+    from ..session import forked_session, load_table
 
     s = forked_session(spark, "skew.runtime_bloom")
-    configure_for_oracle(s)
     s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     s.conf.set(
         "spark.sql.optimizer.runtime.bloomFilter."

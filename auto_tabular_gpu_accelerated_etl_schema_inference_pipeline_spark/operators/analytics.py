@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_events, load_table
+from ..session import load_events, load_table
 
 #: epoch-day arithmetic shared by both engines (integer microseconds ->
 #: integer day -> integer week); avoids date_trunc('week') whose anchor
@@ -44,7 +44,6 @@ def q_events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted distinct in each subsequent week offset. The classic
     growth-analytics rollup, all in integer week arithmetic."""
     ev = load_events(spark, sf_dir)
-    configure_for_oracle(spark)
     # integer `div` end to end: double division of epoch-micros would be
     # exact here (values < 2^53) but integer floor division needs no proof
     week = F.expr(f"(unix_micros(ts) div {_US_PER_DAY}) div 7")
@@ -220,7 +219,6 @@ def q_orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     of parts appearing in the same order, kept at support >= 2. The
     self-join runs on the deduplicated (order, part) relation and the
     canonical p1 < p2 ordering halves the pair space."""
-    configure_for_oracle(spark)
     return basket_support_direct_form(_basket_items(spark, sf_dir))
 
 
@@ -234,7 +232,6 @@ def q_orders_market_basket_guarded(
     pathological 10 k / 30 k-item orders in
     PROBE_MARKET_BASKET_r08.json: stream twin 9.17x, full query 6.36x,
     polite-data overhead 0.99x."""
-    configure_for_oracle(spark)
     return basket_support_guarded_form(_basket_items(spark, sf_dir))
 
 
@@ -273,7 +270,6 @@ def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. The diagnostic run before picking broadcast/salt/bucket
     strategies; global top-k plans as TakeOrderedAndProject (no full
     sort), the total is a broadcast single row."""
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     counts = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_rows"))
     total = li.agg(F.count(F.lit(1)).alias("n_total"))
@@ -310,7 +306,6 @@ def q_histogram_equal_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal-frequency binning: one 1-row min/max agg broadcast into a
     map-only projection — no percentile machinery. Bucket edges are
     reported 6dp-rounded; identical double arithmetic on both engines."""
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     mm = li.agg(
         F.min("l_extendedprice").alias("lo"),
@@ -355,7 +350,6 @@ def q_profile_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean / stddev, all columns in ONE scan via long-form stack. Doubles
     rounded 6dp; mean and stddev derived from exact centi-unit integer
     sums so aggregation order can't wobble the low bits."""
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     long = li.selectExpr(
         "stack({}, {}) AS (col, value)".format(
@@ -427,7 +421,6 @@ def q_denormalize_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every dimension is broadcast; the lineitem⋈orders fact-fact join is
     the single shuffle (bucketed co-partitioning at scale). The flat
     table is what downstream training jobs actually read."""
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -483,7 +476,6 @@ def q_winsorize_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes quantile_bin_exact_boundaries oracle-stable."""
     from .quantile_bin import fit_quantile_boundaries_exact_distributed
 
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     bounds = fit_quantile_boundaries_exact_distributed(
         li, ["l_extendedprice"], bins=100
@@ -526,7 +518,6 @@ def q_cdf_transform_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     division to disagree over."""
     from .quantile_bin import cumulative_value_counts
 
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     cdf = cumulative_value_counts(li, "l_extendedprice")
     n = li.count()
@@ -557,7 +548,6 @@ def q_revenue_share_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     PARTITIONED by nation (distributes, unlike a global total). The fact
     scan joins broadcast supplier→nation dims; the only wide shuffle is
     the groupBy on s_suppkey."""
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
@@ -620,7 +610,6 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric (6dp-rounded, deduped — the oracle-stable ulp treatment)."""
     from .quantile_bin import fit_quantile_boundaries_exact_distributed
 
-    configure_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
         F.max(
@@ -689,7 +678,6 @@ def q_weekly_revenue_wow(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on the AGGREGATED series (one row per week — hundreds of rows),
     so the unpartitioned window is a non-issue: the wide data only ever
     passes through the distributed weekly groupBy."""
-    configure_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
     from pyspark.sql import Window
 
@@ -738,7 +726,6 @@ def q_weekly_top_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking window is PARTITIONED by week over the (week, part)
     aggregate, so both the aggregation and the ranking distribute; ties
     broken by part key for determinism."""
-    configure_for_oracle(spark)
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -782,7 +769,6 @@ def q_doc_length_histogram_by_source(
     tokens): the corpus-profiling rollup a data-mixing step reads. One
     map-only bucket projection + one groupBy — distributes on
     (source, bucket)."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     n_tok = F.size(F.split(F.lower(F.trim(F.col("text"))), " "))
     bucket = F.expr(
@@ -819,7 +805,6 @@ def q_join_explosion_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-10 exploding keys plus an ALL row with the exact total — what
     you check BEFORE running a similarity self-join, sized here without
     executing the join (two small aggregates over one groupBy)."""
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     counts = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n"))
     sq = counts.select(
@@ -859,7 +844,6 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     original price; v2 = keys not ≡0 mod 5, price bumped on keys ≡0 mod
     7). Payload comparison is on the exact decimal price — at 100 TB
     compare a row digest instead; the join shuffles only (key, digest)."""
-    configure_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
     price = F.col("o_totalprice").cast("decimal(12,2)")
     v1 = orders.filter(F.col("o_orderkey") % 3 != 0).select(
@@ -916,7 +900,6 @@ def q_grouped_linear_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     written sign-explicitly so Spark's `div` (truncate) and DuckDB's
     `//` (floor) cannot disagree on negative slopes. One shuffle (the
     groupBy); the customer→nation dims broadcast."""
-    configure_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
@@ -988,7 +971,6 @@ def q_category_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the train/serving-skew check run on every pipeline drop. Two
     aggregations (week×category, category) + a broadcast join; shares
     are integer `div` ppm so both engines agree exactly."""
-    configure_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
     week = F.expr(
         "datediff(cast(o_orderdate as date), date'1970-01-01') div 7"
@@ -1053,7 +1035,6 @@ def q_psi_numeric_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipped (the ε-free convention, stated not hidden)."""
     from .quantile_bin import fit_quantile_boundaries_exact_distributed
 
-    configure_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
     bounds = fit_quantile_boundaries_exact_distributed(
         orders, ["o_totalprice"], bins=PSI_BINS
@@ -1133,7 +1114,6 @@ def q_trimmed_mean_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine when groups are numerous and small; a single fat group routes
     to the distributed fit); transform: broadcast the 20-row bounds,
     filter, exact integer average in micro-units."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     lens = docs.select(
         "source",
@@ -1180,7 +1160,6 @@ def q_weighted_median_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     group key, per-group local sort) — the distributed exact form; a
     single fat group routes to the prefix-sum machinery instead
     (quantile_bin.cumulative_value_counts)."""
-    configure_for_oracle(spark)
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -1242,7 +1221,6 @@ def q_ab_experiment_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 2 rows via partial aggregation. The distinct-user counts shuffle
     once on user_id (exact; swap approx_count_distinct at 100 TB if ±2%
     suffices)."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     arm = F.when(
         F.substring(F.md5(F.col("user_id").cast("string")), 1, 1) < "8",
@@ -1296,7 +1274,6 @@ def q_quantile_normalize_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the mapping join (a range probe against a bounded sorted
     table; an IVF-style bucketed join replaces it if the value domain
     ever stops being bounded)."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
@@ -1380,7 +1357,6 @@ def q_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile_bin.cumulative_value_counts applies: range-partition by
     price, local running max, broadcast per-partition boundary maxima —
     identical results, no single-task sort."""
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     per_part = li.groupBy("l_partkey").agg(
         F.min(F.round(F.col("l_extendedprice") * 100).cast("bigint")).alias(
@@ -1445,7 +1421,6 @@ def q_mad_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile_bin, same as weighted_median."""
     from pyspark.sql import Window
 
-    configure_for_oracle(spark)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_nationkey",
@@ -1540,7 +1515,6 @@ def q_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw merged sample — same result, |rows|-sized window.)"""
     from pyspark.sql import Window
 
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     d = docs.filter(
         F.col("source").isin(KS_SOURCE_A, KS_SOURCE_B)
@@ -1617,7 +1591,6 @@ def q_item_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor part — no corpus-wide window, no cartesian."""
     from pyspark.sql import Window
 
-    configure_for_oracle(spark)
     pairs = market_basket_pairs(spark, sf_dir).select(
         "p1", "p2", F.col("support").cast("bigint").alias("cooc")
     )
@@ -1702,7 +1675,6 @@ def q_abc_classification_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     one broadcast total."""
     from pyspark.sql import Window
 
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     rev = li.groupBy("l_partkey").agg(
         F.sum(
@@ -1760,7 +1732,6 @@ def q_supplier_hhi_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     HHI = Σ share_ppm² div 1e8 lands on the familiar 0..10000 scale —
     exact integers only. Two aggregations (supplier rollup, nation
     rollup broadcast back), one final groupBy."""
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     sup = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_nationkey"
@@ -1821,7 +1792,6 @@ def q_event_type_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     market basket's order-part dedup), so frequencies count user-days,
     not raw event volume. One distinct aggregate + a self-join on
     user-day bounded by types-per-user-day (≤ |event types|)."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     inc = (
         ev.select(
@@ -1896,7 +1866,6 @@ def q_user_behavior_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum, entropy = Σ n_t·nll_t div n — so the cross-engine comparison
     is pure integers despite the log. Two small aggregates keyed on
     user."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     per_type = ev.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).alias("n_t")

@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_events, load_table
+from ..session import load_events, load_table
 
 OUT_SCHEMA = (
     "event_id bigint, user_id bigint, ts timestamp, "
@@ -81,7 +81,6 @@ def asof_join_pandas(events: DataFrame, orders: DataFrame) -> DataFrame:
 
 def q_asof_join_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry twin of asof_join_events_orders with the same oracle."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     return asof_join_pandas(ev, orders)

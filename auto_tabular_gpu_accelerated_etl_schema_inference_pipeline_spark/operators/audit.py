@@ -22,13 +22,12 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_events, load_table
+from ..session import load_events, load_table
 
 
 def q_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Five production constraints on lineitem/orders: non-null,
     two value-range rules, candidate-key uniqueness, and FK integrity."""
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
 
@@ -138,7 +137,6 @@ def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     privacy-preserving release must suppress or generalize. One
     groupBy shuffle on the quasi-identifier; violating classes are tiny
     by definition, so the output never explodes."""
-    configure_for_oracle(spark)
     cust = load_table(spark, sf_dir, "customer")
     return (
         cust.groupBy("c_nationkey", "c_mktsegment")
@@ -162,7 +160,6 @@ def q_footer_stats_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.readers import footer_stats
 
-    configure_for_oracle(spark)
     return footer_stats(
         spark,
         os.path.join(sf_dir, "lineitem.parquet"),
@@ -189,7 +186,6 @@ def q_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Benford expectation happens downstream of this 9-row table.
 
     Scale: map-only digit extraction + a 9-bucket partial agg."""
-    configure_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     digit = F.substring(cents.cast("string"), 1, 1).cast("int")
@@ -240,7 +236,6 @@ def q_sequence_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes directly with one global lead()."""
     from pyspark.sql import Window
 
-    configure_for_oracle(spark)
     BUCKET = 4096
     ids = load_table(spark, sf_dir, "events").select(
         "event_id", F.expr(f"event_id div {BUCKET}").alias("b")
@@ -318,7 +313,6 @@ def q_order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one groupBy on the lineitem side (partial-aggregated), a
     LEFT join from headers on orderkey, one rollup on the 3-value
     status — nothing wider than the detail aggregation ever shuffles."""
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     detail = li.groupBy("l_orderkey").agg(
@@ -378,7 +372,6 @@ def q_pseudonymize_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     lever); same-user rows still join on the pseudonym, which is the
     property exports need. Map-only; the rollup proves join-ability
     survives (per-pseudonym event counts match per-user counts)."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     pid = F.substring(
         F.sha2(F.concat(F.lit(PSEUDO_SALT), F.col("user_id").cast("string")), 256),
@@ -415,7 +408,6 @@ def q_l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one groupBy shuffle on the quasi-identifier with an
     exact count-distinct (bounded by the band domain, ~dozens); the
     violating-class output is small by construction."""
-    configure_for_oracle(spark)
     cust = load_table(spark, sf_dir, "customer")
     band = F.floor(F.col("c_acctbal") / 2000).cast("bigint")
     return (
@@ -462,7 +454,6 @@ def q_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram; every total after that (per-band, per-class, global) is a
     window over that bounded histogram — |classes|·|bands| rows — so no
     second scan and no row-scale shuffle."""
-    configure_for_oracle(spark)
     cust = load_table(spark, sf_dir, "customer")
     band = F.floor(F.col("c_acctbal") / 2000).cast("bigint")
     g = (
@@ -560,7 +551,6 @@ def q_dp_noisy_counts_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-side-combined count per source; noise is a
     per-row expression over the |sources|-row aggregate."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     per_src = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     u = (
@@ -621,7 +611,6 @@ def q_disparate_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-side aggregate to |sources| rows; the max rate
     rides a window over that bounded relation."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     passed = (F.col("n_chars") >= 200).cast("bigint")
     per_src = docs.groupBy("source").agg(

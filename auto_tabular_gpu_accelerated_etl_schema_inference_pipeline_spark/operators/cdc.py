@@ -23,18 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_events
-
-
-def _ev(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
-    return load_events(spark, sf_dir)
+from ..session import load_events
 
 
 def q_cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2: each change opens a version effective until the next change
     of the same key (half-open intervals, NULL = still current)."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
@@ -51,7 +46,7 @@ def q_cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cdc_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log compaction: the latest change per key wins (deterministic
     tiebreak on event_id for equal timestamps)."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
     )
@@ -72,7 +67,7 @@ def q_cdc_apply_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     key survives only if its LATEST record is not a tombstone. Same
     single-shuffle compaction plan; the delete filter is applied after
     the per-key argmax, exactly like a table-format merge-on-read."""
-    ev = _ev(spark, sf_dir).withColumn(
+    ev = load_events(spark, sf_dir).withColumn(
         "op", F.when(F.col("event_type") == "error", F.lit("D")).otherwise(F.lit("U"))
     )
     w = Window.partitionBy("user_id").orderBy(
@@ -99,7 +94,7 @@ def q_cdc_point_in_time_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the key plus a residual interval filter, no ranking window at all
     (the payoff of materializing SCD2 form). Scales as a plain key join;
     per-key interval counts bound the fan-out."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )

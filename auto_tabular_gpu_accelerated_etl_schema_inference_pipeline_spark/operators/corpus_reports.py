@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_table
+from ..session import load_table
 from .llm_prep import EVAL_CUT, EVAL_MOD, q_decontaminate
 
 
@@ -79,7 +79,6 @@ def q_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary — the tokenizer-design diagnostic (what fraction of the
     corpus a vocab of size N fails to cover). Vocabulary fit is one
     groupBy(word) + deterministic top-N; scoring is a broadcast join."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
@@ -164,7 +163,6 @@ def q_source_gini_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the rank window is partitioned BY SOURCE and bounded by
     per-source doc count; the weighted sums collapse map-side to one row
     per source. n_chars (an int) is the only shuffled payload."""
-    configure_for_oracle(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -225,7 +223,6 @@ def q_lexical_diversity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts; the per-source rollup is |sources| rows. Token strings
     shuffle once — at 100 TB key on xxhash64(token) instead (the
     inverted-index note, retrieval.py:14)."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     occ = docs.select(
         "source",

@@ -28,12 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import (
-    configure_for_oracle,
-    load_spread,
-    load_table,
-    pinned_shuffle_width,
-)
+from ..session import load_spread, load_table, pinned_shuffle_width
 
 JACCARD_THRESHOLD = 0.95
 MINHASH_K = 32          # number of hash functions
@@ -58,7 +53,6 @@ def _norm_text():
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on normalized text: representative = min(doc_id) per
     distinct text, with the duplicate count."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     return (
         docs.groupBy(_norm_text().alias("text_norm"))
@@ -74,7 +68,6 @@ def q_dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup keyed on md5 digest — the at-scale variant (32-byte
     shuffle key instead of full text). Output identical to q_dedup_exact
     whenever md5 is collision-free on the corpus."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     return (
         docs.groupBy(F.md5(_norm_text()).alias("fp"))
@@ -113,7 +106,6 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     frac = Fraction(JACCARD_THRESHOLD).limit_denominator(10_000)
     tp, tq = frac.numerator, frac.denominator
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     toks_arr = F.array_distinct(F.split(_norm_text(), " "))
     toks_df = docs.select("doc_id", toks_arr.alias("toks"))
@@ -308,7 +300,6 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (D bounded by the same <= 4096 guard; the general path blocks by a
     rare token first, PPJoin-style). Oracle: list_has_all over the
     recomputed distinct sets."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     toks_df = docs.select(
         "doc_id", F.array_distinct(F.split(_norm_text(), " ")).alias("toks")
@@ -406,7 +397,6 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify join touches only colliding pairs — the LSH S-curve keeps that
     near-linear for high thresholds. Rows-only check (xxhash64 is
     Spark-specific); ground truth = dedup_ngram_jaccard."""
-    configure_for_oracle(spark)
     return minhash_near_dup_pairs(load_spread(spark, sf_dir, "documents"))
 
 
@@ -596,7 +586,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-bit-band pigeonhole joins. Bit votes: for each bit position, +1 if
     the token hash has the bit set else -1; sign of the total is the
     signature bit. Rows-only (xxhash64)."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
@@ -668,7 +657,6 @@ def q_dedup_char_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # normalized text materialized BEFORE the shingle lambda reads it —
     # an expression inside substr(i, ...) re-normalizes per shingle
     # (O(chars^2)); a column reference evaluates once per row
-    configure_for_oracle(spark)
     docs = (
         load_spread(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 100)
@@ -724,7 +712,6 @@ def q_fuzzy_join_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_properties.py. Not routed by default: the TPC-H name
     vocabulary (~100 names over ~92 color blocks) never approaches the
     threshold."""
-    configure_for_oracle(spark)
     parts = load_table(spark, sf_dir, "part")
     names = (
         parts.groupBy("p_name")
@@ -777,7 +764,6 @@ def q_dedup_transitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     join over near-clique clusters is Σ d² ≈ |cluster|³ row explosions,
     while the collapsed one is linear in pairs plus a cube on the tiny
     group graph."""
-    configure_for_oracle(spark)
     sets = load_spread(spark, sf_dir, "documents").select(
         "doc_id",
         F.array_sort(F.array_distinct(F.split(_norm_text(), " "))).alias(
@@ -939,7 +925,6 @@ def q_dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded by doc length) — full text never shuffles."""
     # load_spread spreads an under-split scan (r12, guide §2.5): the 16-way
     # md5 minhash fold below otherwise runs on the single scan core
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
@@ -1083,7 +1068,6 @@ def q_dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     the minhash-portable shape; verification is a bit op on two
     8-byte signatures riding the pair rows."""
     # load_spread spreads an under-split scan (r12, guide §2.5)
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
@@ -1228,7 +1212,6 @@ def q_dedup_detector_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-level pairs collapse to canonical-set pairs (distinct on two
     ids) before the flag joins, so the census never revisits text or
     token arrays. Output is at most 7 rows."""
-    configure_for_oracle(spark)
     sets = load_spread(spark, sf_dir, "documents").select(
         "doc_id",
         F.array_sort(F.array_distinct(F.split(_norm_text(), " "))).alias(

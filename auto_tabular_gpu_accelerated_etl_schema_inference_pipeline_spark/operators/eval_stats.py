@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_table
+from ..session import load_table
 
 #: a user whose LAST event is more than this many hours before the end
 #: of the observation window is treated as churned (event observed);
@@ -60,7 +60,6 @@ def q_kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     |distinct lifetimes| rows (bounded by the window length in hours),
     so its ordered windows are trivially small. Nothing row-scale ever
     sorts globally."""
-    configure_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.min(F.unix_timestamp("ts")).alias("first_s"),
@@ -193,7 +192,6 @@ def q_cohens_kappa_raters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: map-only flags, one map-side-combinable aggregate to a
     single row. Text never shuffles."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     a = (F.length("text") >= KAPPA_MIN_CHARS).cast("bigint")
     b = (
@@ -286,7 +284,6 @@ def q_sprt_sequential_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     report is one row."""
     import math
 
-    configure_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
     c1 = round(math.log(SPRT_P1 / SPRT_P0), 6)
     c0 = round(math.log((1 - SPRT_P1) / (1 - SPRT_P0)), 6)
@@ -417,7 +414,6 @@ def q_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no data duplication beyond the narrow (source, b, w·len, w)
     projection), one (source, replica) partial agg, then per-source
     windows over exactly BOOT_B rows."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     tagged = docs.select(
         "source", "doc_id", F.col("n_chars").cast("bigint").alias("len")
@@ -535,7 +531,6 @@ def q_cuped_adjusted_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one scan → per-user (x, y) partial agg; global moments
     are a 1-row aggregate broadcast back; per-arm collapse is 2 rows."""
-    configure_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
     # integer floor division on both engines (a double `/2` then cast
     # truncates in Spark but ROUNDS in DuckDB on odd sums)
@@ -708,7 +703,6 @@ def q_funnel_step_significance(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard sessionize window) → per-session flags; the step explode
     is 2 rows per session; everything downstream operates on the 4-row
     (step × arm) table."""
-    configure_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
     wu = Window.partitionBy("user_id").orderBy("ts")
     sess = ev.withColumn(

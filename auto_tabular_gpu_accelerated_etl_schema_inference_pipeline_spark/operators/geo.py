@@ -262,9 +262,8 @@ def q_geo_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines (see _hilbert_sql), map-only, shuffle-free;
     hilbert_bucket (top bits) is the target file id a layout job would
     range-partition by."""
-    from ..session import configure_for_oracle, load_table
+    from ..session import load_table
 
-    configure_for_oracle(spark)
     load_table(spark, sf_dir, "customer").createOrReplaceTempView(
         "customer"
     )

@@ -409,11 +409,10 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from fractions import Fraction
 
-    from ..session import configure_for_oracle, load_spread, load_table
+    from ..session import load_spread, load_table
     from .dedup import _norm_text
 
     docs = load_table(spark, sf_dir, "documents")
-    configure_for_oracle(spark)
     toks_df = load_spread(spark, sf_dir, "documents").select(
         "doc_id", F.array_distinct(F.split(_norm_text(), " ")).alias("toks")
     )
@@ -623,10 +622,9 @@ def q_recursive_cte_order_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternative."""
     from pyspark.sql import Window as W
 
-    from ..session import configure_for_oracle, forked_session, load_table
+    from ..session import forked_session, load_table
 
     s = forked_session(spark, "graph.rcte_order_chain")
-    configure_for_oracle(s)
     o = (
         load_table(s, sf_dir, "orders")
         .filter(F.col("o_custkey") < 200)
@@ -707,10 +705,8 @@ def q_eigencentrality_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetrized); the max is a broadcast 1-row aggregate. At 100 TB this
     is the checkpointed-loop pattern of connected_components with the
     same one-shuffle-per-round bound."""
-    from ..session import configure_for_oracle
     from .analytics import market_basket_pairs
 
-    configure_for_oracle(spark)
     pairs = market_basket_pairs(spark, sf_dir).select(
         "p1", "p2", F.col("support").alias("w")
     )
@@ -790,9 +786,8 @@ def q_entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster → map back) is how ER avoids row-level O(n²) at 100 TB; the
     oracle is the recursive transitive closure over the identical edge
     predicate."""
-    from ..session import configure_for_oracle, load_table
+    from ..session import load_table
 
-    configure_for_oracle(spark)
     part = load_table(spark, sf_dir, "part")
     names = part.groupBy("p_name").agg(
         F.count(F.lit(1)).alias("n_parts")
@@ -871,10 +866,8 @@ def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation). ``localCheckpoint`` truncates lineage per round as in
     connected_components. The hop bound makes the result deterministic
     and lets the oracle replay it as a depth-capped recursive closure."""
-    from ..session import configure_for_oracle
     from .analytics import market_basket_pairs
 
-    configure_for_oracle(spark)
     pairs = market_basket_pairs(spark, sf_dir).select("p1", "p2")
     edges = (
         pairs.select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
@@ -942,10 +935,8 @@ def q_label_propagation_communities(
     per-node argmax window (bounded by the node's distinct neighbor
     labels ≤ degree). Lineage is pinned per round (localCheckpoint, the
     pagerank discipline) so round k+1 doesn't replay round k."""
-    from ..session import configure_for_oracle
     from .analytics import market_basket_pairs
 
-    configure_for_oracle(spark)
     e = market_basket_pairs(spark, sf_dir).select("p1", "p2")
     edges = (
         e.union(e.select(F.col("p2").alias("p1"), F.col("p1").alias("p2")))

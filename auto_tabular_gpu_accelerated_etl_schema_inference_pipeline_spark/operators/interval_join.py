@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_table
+from ..session import load_table
 
 _US_PER_DAY = 86_400_000_000
 
@@ -86,7 +86,6 @@ def q_interval_bucket_join_orders(
     during the 3 days starting at its order date — a keyless calendar-
     window join ("what shipped fleet-wide while this order was placed"),
     executed as the bucketized equi-join, never a nested loop."""
-    configure_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     iv = orders.filter(F.col("o_totalprice") > BIG_ORDER_THRESHOLD).select(
@@ -139,7 +138,6 @@ def q_interval_merge_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..session import load_table
 
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",

@@ -29,12 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import (
-    configure_for_oracle,
-    load_events,
-    load_spread,
-    load_table,
-)
+from ..session import load_events, load_spread, load_table
 
 #: regexes shared verbatim by Spark (Java regex) and DuckDB (RE2) — the
 #: subset syntax below parses identically in both.
@@ -59,7 +54,6 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``documents.text`` has none — the email lane is exercised by the unit
     test's inline frame). Map-only regexp_replace, whole-stage codegen;
     at 100 TB this is a pure scan-transform with zero shuffle."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     return ev.select(
         "event_id",
@@ -87,7 +81,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaves the scan — and the eval side is a few percent of the corpus,
     so its distinct shingle set broadcasts; the probe is a map-side hash
     semi-join followed by one count-distinct shuffle on train doc_id."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     # materialize the token array ONCE per row before the lambda uses it:
     # a split() expression referenced inside transform()'s element_at
@@ -163,7 +156,6 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit of parallelism real packing jobs use); emits (doc_id, pack_id,
     n_tokens, pack_fill_after). Oracle: per-source recursive CTE
     replaying the same fold."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     with_tok = docs.select(
         "doc_id", "source", F.size(F.split(F.col("text"), " ")).cast("int").alias("n_tokens")
@@ -188,7 +180,6 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Physical shape: one explode + two hash aggregations (tf on
     (doc_id, term), df on term); df output is tiny (vocabulary) and
     broadcasts back onto tf; the ranking window shuffles on doc_id."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     n_docs = docs.count()  # parquet metadata count — the cheap "fit"
     terms = docs.select(
@@ -226,7 +217,6 @@ def q_group_sample_fixed_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP_SAMPLE_N rows of each source. The per-shard "inspect a handful
     of examples" op; re-runs and cluster layout cannot change the
     sample. Single narrow window shuffle on the source key."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")).asc(), F.col("doc_id").asc()
@@ -263,8 +253,6 @@ def q_source_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (keep rows whose md5 sorts below quota_g/n_g of the keyspace — pure
     map-side, quota approximate to sampling error) or a two-phase
     per-partition offset rank. Same broadcast-quota skeleton either way."""
-    configure_for_oracle(spark)
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     weights = spark.createDataFrame(
         list(TARGET_MIX.items()), "lang string, wt int"
@@ -348,7 +336,6 @@ def q_embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists are unhashable — and a CSV of small ints is also the compact
     wire form for a quantized-embedding EXPORT surface. (A downstream
     Spark consumer keeps the array form: stop before this select.)"""
-    configure_for_oracle(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     # dv and scale materialized as COLUMNS before the quantize lambdas
     # read them: an expression referenced inside a lambda body is
@@ -404,7 +391,6 @@ def q_length_bucket_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything else is per-batch aggregation. At 100 TB you'd
     repartitionByRange on (bucket, doc_id) so each output shard holds
     whole batches."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     n_tok = F.size(F.split(F.col("text"), " "))
     with_b = docs.select(
@@ -467,7 +453,6 @@ def q_html_strip_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle): the 100 TB shape is a pure scan-transform. The tag regex
     '<[^>]*>' and the explicit whitespace class are chosen to behave
     identically under Java regex (Spark) and RE2 (DuckDB oracle)."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     html = F.concat(
         F.lit('<html><body><p>'),
@@ -539,7 +524,6 @@ def q_top_p_source_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded per source group."""
     from pyspark.sql import Window
 
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim(F.col("text"))), " ")
     feat = docs.select(
@@ -613,7 +597,6 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected EVERY doc id in the shard into one aggregation-buffer
     array (corpus/8 ids in a single row at 100 TB). Shuffle keys are
     the shard id (8 groups)."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     shard = F.expr(
         f"CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 4), 16, 10)"
@@ -670,7 +653,6 @@ def q_url_canonicalize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per canonical URL, variant count and min doc_id (the keeper) —
     variants > 1 proves the collapse did work. Map-only regexp chain +
     one digest-keyed groupBy."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     staged = F.concat(
         F.lit("https://WWW.Example.com//doc/"),

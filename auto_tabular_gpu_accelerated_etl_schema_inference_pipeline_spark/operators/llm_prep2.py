@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_events, load_table
+from ..session import load_events, load_table
 
 #: chunk window / stride, in whitespace tokens (fixture docs average ~50
 #: tokens, so each doc yields a handful of overlapping chunks)
@@ -47,7 +47,6 @@ def q_doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Physical shape: sequence+posexplode+slice inside the scan stage —
     a pure map-side 1-to-N expansion with zero shuffle at any scale
     (the chunker every embedding/RAG pipeline runs before encoding)."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim(F.col("text"))), " ")
     exploded = docs.select(
@@ -85,7 +84,6 @@ def q_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression over those exact integers in both engines, and the
     per-row z-score is emitted in micro-units so the comparison is
     integer equality."""
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     aggs = [F.count("*").alias("n")]
     for c in _Z_COLS:
@@ -116,7 +114,6 @@ def q_agg_salted_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew handling can't split a hash aggregate. Decimal partial sums
     commute exactly, so the result is bit-identical to the unsalted
     single-phase SQL the oracle runs."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     partial = (
         ev.groupBy(
@@ -194,7 +191,6 @@ def q_quality_gate_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, uppercase-character ratio, distinct-token ratio. Map-only
     column expressions; the flags compress to one int so downstream can
     GROUP BY drop-reason over 100 TB without re-running the rules."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     n_tok = F.size(toks)
@@ -231,7 +227,6 @@ def q_dedup_incremental_vs_history(spark: SparkSession, sf_dir: str) -> DataFram
     (or becomes a bloom filter at 100 TB) so the new slice is filtered
     map-side — the full historical text is never re-read, never
     shuffled. Output: surviving new docs."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     fp = F.md5(F.lower(F.trim(F.col("text"))))
     hist = (
@@ -281,7 +276,6 @@ def q_dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALL k bits hit. At 100 TB the definite-new majority (most of a fresh
     crawl) short-circuits here — only maybe-dups pay the exact digest
     join, which is the whole point of the bloom stage."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     fp = F.md5(F.lower(F.trim(F.col("text"))))
     hist = (
@@ -345,7 +339,6 @@ def q_embedding_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     UDF, no model server. Emits logit in micro-units (exact) + the keep
     decision; a real deployment swaps the literal weights for a trained
     model's — the plan shape is identical."""
-    configure_for_oracle(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     w = F.array(*[F.lit(_scorer_weight(i)) for i in range(_SCORER_DIM)])
     dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -375,7 +368,6 @@ def q_blocklist_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     array expressions, zero shuffle, whole-stage codegen; at 100 TB a
     large deny list swaps the array literal for a broadcast join
     against a terms table (same plan shape as decontaminate)."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     toks = F.array_distinct(F.split(F.lower(F.trim(F.col("text"))), " "))
     block = F.array(*[F.lit(t) for t in BLOCKLIST_TERMS])
@@ -419,7 +411,6 @@ def q_negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and any partitioning; the corpus size N is a 1-row broadcast.
     Map-side explode of a K-element sequence — no shuffle, output
     exactly K·N rows minus self-collisions."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     pairs = (

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_table
+from ..session import load_table
 
 #: shard count for the deterministic global shuffle — at 100 TB this is
 #: O(total_bytes / shard_target_bytes) (thousands); the VALUE doesn't
@@ -55,7 +55,6 @@ def q_corpus_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^32, a·K mod 2^32 = ((a_hi·K mod 2^16)·2^16 + a_lo·K) mod 2^32
     with a_hi = a div 2^16, a_lo = a mod 2^16 — every intermediate
     < 2^48, exact BIGINT on both engines for ALL doc_id."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     hash_sql = (
         f"pmod((pmod((pmod(doc_id, {MOD32}L) div 65536) * {KNUTH_C}L, "
@@ -104,7 +103,6 @@ def q_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is bounded by cluster size. Same plan skeleton as
     dedup.q_dedup_exact (dedup.py:56) with an argmax instead of a
     count."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id", "n_chars", F.md5(F.col("text")).alias("digest")
@@ -153,7 +151,6 @@ def q_sampling_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a broadcast 1-row total — the per-source table is KBs at any
     corpus size; the expensive part of applying the mix (the actual
     per-doc sampler) is production.q_sample_weighted's shape."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     per_src = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
@@ -239,7 +236,6 @@ def q_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-doc overlap detection at a fraction of the shingle volume."""
     from pyspark.sql import Window as W
 
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
@@ -342,7 +338,6 @@ def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source copies — the self-join input is bounded by #keys ×
     #sources, not #docs), then a key-keyed self-join whose per-key
     fanout is at most C(|sources|, 2) — never quadratic in documents."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     norm = F.lower(F.trim(F.col("text")))
     prefix = F.array_join(F.slice(F.split(norm, " "), 1, 5), " ")

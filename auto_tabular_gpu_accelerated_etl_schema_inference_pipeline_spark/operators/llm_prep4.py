@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_table
+from ..session import load_table
 
 #: DSIR hashed-feature dimensionality. 64 here so the sf0.01 fixture
 #: populates every bucket; production uses 10k-100k buckets (Xie et al.
@@ -60,7 +60,6 @@ def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-joins tokens to a BROADCAST 64-row weight table and partial-aggs
     to one row per doc. Nothing wider than (doc_id, bucket) ever
     shuffles; text never leaves the scan."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     arr = F.split(F.lower(F.trim(F.col("text"))), " ")
     buckets = F.expr(
@@ -181,7 +180,6 @@ def q_content_defined_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     never global); the chunk reassembly groups by (doc, chunk) and
     re-sorts only within a chunk (sort_array over ≤ chunk-length
     structs). One shuffle on doc_id end to end."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
@@ -263,7 +261,6 @@ def q_truncation_loss_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: token counts are ``size(split(·))`` — a pure map, no
     explode, text never shuffles; the aggregate collapses map-side to
     |sources| rows."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     n = F.size(F.split(F.lower(F.trim(F.col("text"))), " "))
     return (
@@ -338,7 +335,6 @@ def q_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a global ordering; the global interleave is the downstream
     writer's (stage, source, source_rank) sort, which range-partitions
     cleanly). Text never shuffles — only (doc_id, source, n_chars)."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.col("n_chars").asc(), F.col("doc_id").asc()
@@ -402,7 +398,6 @@ def q_watermark_greenlist_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     γ̂ calibration is a 1-row map-side-combined aggregate broadcast back
     (a second map-only pass — a global window here would drag every
     per-doc row into one partition); one |sources|-row aggregate."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     arr = F.split(F.lower(F.trim(F.col("text"))), " ")
     g = F.expr(
@@ -511,7 +506,6 @@ def q_max_cover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     a plan-serialized set that grows with every pick's vocabulary is a
     scalability regression past a few thousand terms). K rounds ⇒ K
     bounded shuffles."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     arr = F.split(F.lower(F.trim(F.col("text"))), " ")
     bigrams = F.expr(
@@ -634,7 +628,6 @@ def q_quota_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-side count per source; all windows run over
     the |sources|-row aggregate."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     per_src = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs")
@@ -720,7 +713,6 @@ def q_context_length_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: token counts are map-only size(split(·)); the explode
     is |CTX_SWEEP| rows per doc; one (length) aggregate. Text never
     shuffles."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     n = F.size(F.split(F.lower(F.trim(F.col("text"))), " "))
     swept = docs.select(n.alias("n_tok")).select(
@@ -796,7 +788,6 @@ def q_minhash_lsh_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the output is |grid| × |levels| rows from a range source —
     the one operator in the registry whose cost is O(1) by design
     (the planner must be free to consult)."""
-    configure_for_oracle(spark)
     grid = spark.createDataFrame(
         [(b, r) for b, r in LSH_GRID], "b int, r int"
     )
@@ -871,7 +862,6 @@ def q_span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: posexplode is bounded by document length; the only
     window partitions BY DOC over its own masked positions (never
     corpus-wide); output one row per document."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",

@@ -79,9 +79,8 @@ def q_decision_tree_calibration(spark, sf_dir: str):
     model server with the scan itself — the operator-fusion argument."""
     from pyspark.sql import functions as F
 
-    from ..session import configure_for_oracle, load_table
+    from ..session import load_table
 
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     leaf_label = F.create_map(
         *[
@@ -169,9 +168,8 @@ def q_auc_quality_screen(spark, sf_dir: str):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ..session import configure_for_oracle, load_table
+    from ..session import load_table
 
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     v = F.size(F.split(F.lower(F.trim(F.col("text"))), " "))
     pos = (F.col("lang") == AUC_POS_LANG).cast("bigint")
@@ -262,9 +260,8 @@ def q_naive_bayes_source_confusion(spark, sf_dir: str):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ..session import configure_for_oracle, load_table
+    from ..session import load_table
 
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",

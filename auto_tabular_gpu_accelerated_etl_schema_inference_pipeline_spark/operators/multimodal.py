@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_table
+from ..session import load_table
 
 FEATURE_SCHEMA = (
     "doc_id bigint, n_bytes int, checksum_prefix string, fake_embedding_0 double"
@@ -96,7 +96,6 @@ def q_multimodal_featurize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column featurization through mapInPandas (Arrow batches).
     Deterministic (md5-based), so fully oracle-checkable: DuckDB mirrors
     the arithmetic on the same utf8 bytes."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     blobs = with_binary_payload(docs)
     return blobs.mapInPandas(_featurize_batches, schema=FEATURE_SCHEMA)
@@ -140,7 +139,6 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-payload frame sampling via exploding mapInPandas. Deterministic
     byte-window "codec" -> fully oracle-checkable (fixture text is ASCII,
     so DuckDB's char-indexed substr sees the same bytes)."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     blobs = with_binary_payload(docs, ascii_normalize=True)
     return blobs.mapInPandas(_frame_sample_batches, schema=FRAME_SCHEMA)
@@ -175,7 +173,6 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 'resize' over binary payloads via mapInPandas
     (ASCII fixture text -> DuckDB mirrors the byte decimation with
     char indexing)."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     return with_binary_payload(docs, ascii_normalize=True).mapInPandas(
         _resize_batches, schema=RESIZE_SCHEMA
@@ -230,7 +227,6 @@ def q_multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed audio-energy analysis over binary payloads via
     mapInPandas (ASCII fixture bytes -> DuckDB mirrors with ascii() over
     char windows; exact integer energy/peak)."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     return with_binary_payload(docs, ascii_normalize=True).mapInPandas(
         _audio_window_batches, schema=AUDIO_SCHEMA
@@ -297,7 +293,6 @@ def q_multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     most MAX_FRAMES rows per doc. Exact integer arithmetic end-to-end."""
     from pyspark.sql import Window
 
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     frames = with_binary_payload(docs, ascii_normalize=True).mapInPandas(
         _scene_frame_batches, schema=_SCENE_SCHEMA
@@ -374,7 +369,6 @@ def q_multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-byte key, candidate volume proportional to true near-dup volume.
     The oracle replays signatures in SQL byte-window arithmetic and
     verifies the pair set with a naive bit_count(xor) cross join."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     sigs = with_binary_payload(docs, ascii_normalize=True).mapInPandas(
         _phash_batches, schema=_PHASH_SCHEMA

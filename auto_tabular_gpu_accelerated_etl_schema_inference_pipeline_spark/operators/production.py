@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from ..session import configure_for_oracle, load_events, load_table
+from ..session import load_events, load_table
 
 # hex md5 prefixes are uniform in [0x00, 0xff]: prefix < '0d' keeps
 # 13/256 ~ 5.1% of rows, deterministically per key
@@ -101,7 +101,6 @@ def q_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     stands in for the real one), not by a second scan. The observed
     values are returned as a one-row frame; the oracle recomputes the
     same aggregates relationally, proving observe() loses nothing."""
-    configure_for_oracle(spark)
     df = load_table(spark, sf_dir, "lineitem")
     obs = Observation("quality")
     observed = df.observe(
@@ -179,11 +178,6 @@ def incremental_user_totals(
     )
 
 
-def q_incremental_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
-    return incremental_user_totals(spark, sf_dir)
-
-
 def q_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic ~80/10/10 train/val/test assignment keyed on
     md5(doc_id) — the split every training pipeline needs, engineered so
@@ -193,7 +187,6 @@ def q_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     between refreshes). Map-only at any scale; thresholds are hex-prefix
     compares like q_sample_hash (cc/256 = 79.7% train, e6/256 = 89.8%
     cumulative val)."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
     split = (
@@ -220,7 +213,6 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: map-only digest + split columns (text never shuffles —
     the digest is the shuffle key), one groupBy(digest), leaking groups
     are small by construction."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
     split = (
@@ -277,7 +269,6 @@ def q_incremental_backfill_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the result is provably identical to the direct full aggregate —
     which is exactly what the oracle computes. Cutoff derives from
     max(ts), so the query stays deterministic per fixture."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     cutoff = ev.agg(
         (
@@ -324,7 +315,6 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     any engine (the sampling analog of md5 hash-sampling). Map-only
     scoring + TakeOrderedAndProject; keys quantized to e12 integers so
     the ranking can't ulp-flip at the boundary."""
-    configure_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
     h = F.expr(
         "cast(conv(substring(md5(cast(o_orderkey as string)), 1, 8), 16, 10)"
@@ -371,7 +361,6 @@ def q_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     base or probes a pre-bucketed layout — never a full recompute).
     Deltas here are deterministic key-mod slices so the fixture replay
     is stable."""
-    configure_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
@@ -424,7 +413,7 @@ QUERIES = {
     "sample_hash": q_sample_hash,
     "sample_stratified": q_sample_stratified,
     "observe_metrics": q_observe_metrics,
-    "incremental_user_totals": q_incremental_user_totals,
+    "incremental_user_totals": incremental_user_totals,
 }
 
 ORACLES = {

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import configure_for_oracle, load_table
+from ..session import load_table
 from .quantile_bin import (
     LINEITEM_KEYS,
     LINEITEM_MEASURES,
@@ -20,7 +20,6 @@ def q_quantile_bin_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     order with (l_orderkey, l_linenumber), matching the oracle's ORDER BY
     exactly. This is the oracle-grade variant of the reference's
     pd.qcut loop (etl_benchmark.py:30-34)."""
-    configure_for_oracle(spark)
     df = load_table(spark, sf_dir, "lineitem")
     return exact_quantile_bin(
         df, LINEITEM_MEASURES, bins=100, keys=LINEITEM_KEYS, tiebreak=LINEITEM_KEYS
@@ -34,7 +33,6 @@ def q_quantile_bin_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort; no single-partition window)."""
     from .quantile_bin import exact_quantile_bin_grouped
 
-    configure_for_oracle(spark)
     df = load_table(spark, sf_dir, "lineitem")
     return exact_quantile_bin_grouped(
         df,
@@ -75,7 +73,6 @@ def q_quantile_bin_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     only divergence is parity-tested in tests/test_quantile_bin.py."""
     from .quantile_bin import bucketize
 
-    configure_for_oracle(spark)
     df = load_table(spark, sf_dir, "lineitem")
     bounds = _exact_rounded_boundaries(df)
     # Seed the session's boundary model with the fit THIS lane just paid
@@ -105,7 +102,6 @@ def q_quantile_bin_saved_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .quantile_bin import bucketize, load_boundaries, save_boundaries
 
-    configure_for_oracle(spark)
     df = load_table(spark, sf_dir, "lineitem")
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "model")
@@ -148,7 +144,6 @@ def q_quantile_bin_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow KERNEL, not the fit, so it doesn't re-pay the fit."""
     from .quantile_bin import bucketize_pandas_udf
 
-    configure_for_oracle(spark)
     df = load_table(spark, sf_dir, "lineitem")
     return bucketize_pandas_udf(
         df, cached_exact_boundaries(spark, sf_dir), keep_cols=LINEITEM_KEYS
@@ -166,7 +161,6 @@ def q_quantile_bin_exact_boundaries(spark: SparkSession, sf_dir: str) -> DataFra
     placement."""
     from .quantile_bin import bucketize
 
-    configure_for_oracle(spark)
     df = load_table(spark, sf_dir, "lineitem")
     return bucketize(df, _exact_rounded_boundaries(df), keep_cols=LINEITEM_KEYS)
 
@@ -205,7 +199,6 @@ def q_tokenize_generated(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.generator import generate_normal_table
     from .quantile_bin import bucketize, fit_quantile_boundaries
 
-    configure_for_oracle(spark)
     path = _generated_path()
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         df = generate_normal_table(
@@ -274,7 +267,6 @@ def q_quantile_bin_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw-Arrow kernel, not the fit."""
     from .quantile_bin import bucketize_map_in_arrow
 
-    configure_for_oracle(spark)
     df = load_table(spark, sf_dir, "lineitem")
     return bucketize_map_in_arrow(
         df, cached_exact_boundaries(spark, sf_dir), keep_cols=LINEITEM_KEYS

@@ -24,12 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_events, load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    configure_for_oracle(spark)
-    return load_table(spark, sf_dir, name)
+from ..session import load_events, load_table
 
 
 # Money arithmetic runs in DECIMAL, not DOUBLE: double partial-aggregation
@@ -81,7 +76,7 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape to preserve at scale: Scan(pushed filter on l_shipdate,
     pruned columns) -> partial HashAggregate -> single small shuffle ->
     final HashAggregate."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     one = F.lit(1).cast("decimal(1,0)")
     # (12,2)×(7,2) has true scale 4 — the cast to (18,4) is LOSSLESS and
     # keeps the next product (× (1+tax), scale 6) well under Spark's
@@ -112,11 +107,13 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only shuffle; at 100 TB that one join co-partitions on
     o_orderkey/l_orderkey (or is bucket-colocated if both sides are
     bucketed by orderkey at write time)."""
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = load_table(spark, sf_dir, "customer").filter(
+        F.col("c_mktsegment") == "BUILDING"
+    )
+    orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp")
     )
     return (
@@ -134,12 +131,12 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local-supplier volume: 6-table join; every dimension broadcast, the
     lineitem⋈orders equi-join is the single big shuffle."""
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = load_table(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -160,7 +157,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forecast revenue: pure scan-filter-agg — pushdown showcase. The
     three predicates reach the parquet reader (PushedFilters) and only
     two columns are read (ReadSchema)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -184,8 +181,8 @@ def q_top_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders by totalprice per customer segment — windowed top-k.
     Partitioned window (shuffle on segment) — scales; ties broken by
     o_orderkey for determinism."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     joined = orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
     w = Window.partitionBy("c_mktsegment").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
@@ -199,7 +196,7 @@ def q_top_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer running order total (rows-unbounded-preceding frame)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy(F.col("o_orderdate").asc(), F.col("o_orderkey").asc())
@@ -218,7 +215,7 @@ def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP(l_returnflag, l_linestatus) — hierarchical grand totals."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("n_rows"),
         _dsum(_money("l_extendedprice")).alias("sum_price"),
@@ -227,7 +224,7 @@ def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE(o_orderstatus, o_orderpriority) — all grouping-set combos."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.cube("o_orderstatus", "o_orderpriority").agg(
         F.count("*").alias("n_orders"),
         _dsum(_money("o_totalprice")).alias("sum_price"),
@@ -236,7 +233,7 @@ def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-segment descriptive stats incl. exact count-distinct."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     bal = _money("c_acctbal")
     n = F.count("*")
     s1 = F.sum(bal).cast("double")
@@ -258,7 +255,7 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL approximate distinct (sketch — rows-only check; the 100 TB way
     to count uniques without a giant exact-distinct shuffle)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.approx_count_distinct("l_orderkey", rsd=0.01).alias("approx_orders"),
         F.count("*").alias("n_rows"),
@@ -272,8 +269,8 @@ def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(high-balance ∪ building) ∖ (customers with >5 orders): UNION +
     EXCEPT with distinct set semantics."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     high = cust.filter(F.col("c_acctbal") > 5000).select("c_custkey")
     building = cust.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     busy = (
@@ -290,8 +287,8 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi + anti join union: customers WITH orders tagged 1, customers
     WITHOUT orders tagged 0 (left_semi / left_anti showcase)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").select(
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey")
     )
     with_orders = (
@@ -314,7 +311,7 @@ def q_join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String functions over part: case, substring, split, concat,
     regexp_extract, length."""
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
         F.upper(F.col("p_name")).alias("name_upper"),
@@ -328,7 +325,7 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time functions over orders: truncation, parts, monthly agg."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.select(
             F.to_date(F.date_trunc("month", F.col("o_orderdate"))).alias("month_start"),
@@ -347,7 +344,6 @@ def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_json_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-in-string extraction (events.props = '{"k": N}') + aggregate
     per event_type."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     k = F.get_json_object(F.col("props"), "$.k").cast("int")
     return (
@@ -364,7 +360,7 @@ def q_json_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_filter_project_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Minimal filter+project: the canonical pushdown check (plan must show
     PushedFilters + 3-column ReadSchema)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.filter(F.col("l_discount") > 0.08).select(
         "l_orderkey", "l_linenumber", "l_discount"
     )

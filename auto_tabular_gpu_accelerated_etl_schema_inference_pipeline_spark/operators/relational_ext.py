@@ -14,18 +14,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    configure_for_oracle(spark)
-    return load_table(spark, sf_dir, name)
+from ..session import load_table
 
 
 def q_window_funcs_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead/rank/dense_rank/percent_rank/cume_dist/first/last over a
     deterministic per-customer order (ties broken by o_orderkey)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_orderdate").asc(), F.col("o_orderkey").asc()
     )
@@ -46,7 +41,7 @@ def q_window_funcs_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pivot_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot order status (O/F/P) into columns per priority."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["O", "F", "P"])
@@ -66,7 +61,7 @@ def q_stat_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
     the equivalent FILTERed count matrix (column names must match
     crosstab's `value`-named output exactly, including the space in
     '4-NOT SPECIFIED')."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.stat.crosstab("o_orderstatus", "o_orderpriority")
 
 
@@ -84,7 +79,7 @@ def q_stat_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     query surface emits each item set as one deterministic scalar string
     (``array_join(array_sort(...))``), which is also the right wire shape
     for a 100 TB sketch result (one tiny row, no nested types)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     freq = orders.stat.freqItems(["o_orderpriority", "o_orderstatus"], support=0.2)
     return freq.select(
         F.array_join(F.array_sort("o_orderpriority_freqItems"), ",").alias(
@@ -101,7 +96,6 @@ def q_lateral_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     table-generating-function surface with ordinality (explode alone
     loses position; builds positional inverted indexes / n-gram offset
     tables). Map-side row expansion, no shuffle."""
-    configure_for_oracle(spark)
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("v_docs")
     return spark.sql(
         """
@@ -116,7 +110,7 @@ def q_lateral_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_unpivot_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (melt) the four measures into (key, measure, value) rows
     via stack — the inverse of pivot; per-measure global stats after."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     melted = li.select(
         "l_orderkey",
         "l_linenumber",
@@ -134,7 +128,6 @@ def q_unpivot_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (finer control than cube/rollup) via SQL —
     the SQL API surface of the engine."""
-    configure_for_oracle(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
     return spark.sql(
         """
@@ -149,7 +142,6 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS + scalar subquery through the SQL API."""
-    configure_for_oracle(spark)
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
     return spark.sql(
@@ -170,7 +162,7 @@ def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar math family over part: abs/ceil/floor/sqrt/exp-ln/pow/mod/
     sign (irrational outputs are pure double fns of identical inputs —
     engine-independent)."""
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     price = F.col("p_retailprice")
     return part.select(
         "p_partkey",
@@ -193,7 +185,7 @@ def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array function family over tokenized text: size, distinct, sort,
     slice, contains, array_join, element access."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     return docs.select(
         "doc_id",
@@ -210,7 +202,7 @@ def q_collect_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """collect_set aggregate with deterministic presentation: the set of
     order statuses per priority, sorted then joined to a string (string
     output keeps the oracle comparison list-free)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.array_join(F.sort_array(F.collect_set("o_orderstatus")), ",").alias(
             "statuses"
@@ -223,7 +215,7 @@ def q_global_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-10 orders by price: ORDER BY ... LIMIT with a total
     order (tiebreak on key). Spark runs this as per-partition top-k +
     merge (TakeOrderedAndProject) — no global sort materialization."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
         .limit(10)
@@ -235,7 +227,7 @@ def q_null_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-handling family: nullif/coalesce/nvl2-equivalents + null-safe
     aggregation over synthesized nulls (fixtures are null-free, so nulls
     are derived deterministically)."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     nk = F.nullif(F.col("c_nationkey").cast("int"), F.lit(7))  # nation 7 -> NULL
     return cust.select(
         "c_custkey",
@@ -256,7 +248,7 @@ def q_agg_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final decimal(,0)->double casts are single correctly-rounded int
     conversions — identical in both engines at any magnitude (unlike
     scaled decimals, which double-round past 2^53)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     q = (F.col("l_quantity") * 100).cast("decimal(12,0)")
     p = (F.col("l_extendedprice") * 100).cast("decimal(12,0)")
     d = (F.col("l_discount") * 100).cast("decimal(12,0)")
@@ -286,7 +278,7 @@ def q_agg_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     are both Type-7 linear interpolation — bit-identical up to final-ulp
     interpolation arithmetic, so both sides round to 6dp (2dp data: no
     comparison can flip, same rule as quantile_bin_exact_boundaries)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
 
     def pct(c: str, p: float):
         return F.round(F.percentile(F.col(c), F.lit(p)), 6)
@@ -308,7 +300,7 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     nondeterministic here; range frames are the correct trailing-window
     primitive for event-time features at scale (partitioned by key, one
     shuffle, per-partition sort)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     epoch = F.unix_timestamp("o_orderdate")
     w = (
         Window.partitionBy("o_custkey")
@@ -332,7 +324,7 @@ def q_text_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     count per token (one shuffle on the token key) -> deterministic
     top-50. At 100 TB the explode never materializes the corpus: it
     streams batches through the count's partial aggregation."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
         .filter(F.col("word") != "")
@@ -350,9 +342,8 @@ def q_error_safe_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     poison-row containment a 100 TB batch needs so one bad record can't
     kill a ten-hour job. DuckDB mirrors: NULL-on-zero division,
     TRY_CAST, NULL out-of-range list index."""
-    from ..session import configure_for_oracle, load_table
+    from ..session import load_table
 
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",

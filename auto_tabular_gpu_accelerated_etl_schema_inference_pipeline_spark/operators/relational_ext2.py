@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_events, load_table
+from ..session import load_events, load_table
 
 
 def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -18,7 +18,6 @@ def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     then navigate it with size / element_at / map_keys. Maps are the
     natural shape for sparse per-entity feature bags; building them from
     a grouped aggregate is one shuffle."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir).filter(F.col("user_id") < 50)
     per = ev.groupBy("user_id", "event_type").agg(F.count("*").alias("cnt"))
     g = per.groupBy("user_id").agg(
@@ -44,7 +43,6 @@ def q_events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     tz/precision hazards). Scale: grid size = active span per user, the
     explode is map-side, the ffill window is partitioned per user —
     nothing global."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir).filter(F.col("user_id") < 20)
     hour = F.floor(F.unix_timestamp("ts") / 3600).cast("bigint")
     hourly = (
@@ -82,7 +80,6 @@ def q_struct_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     with withField, drop one with dropFields, read back with dot paths —
     the schema-evolution idiom for nested parquet (at scale you rewrite
     ONE nested field without exploding/rebuilding the whole struct)."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir).filter(F.col("event_id") < 2000)
     s = F.struct(
         F.col("event_type").alias("etype"),
@@ -109,7 +106,6 @@ def q_higher_order_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter + size. These run INSIDE codegen on the array — no explode,
     no shuffle, no UDF: the idiomatic way to compute vector features at
     scale. Rounded 6dp (fold order vs DuckDB list_sum)."""
-    configure_for_oracle(spark)
     from ..session import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
@@ -149,7 +145,6 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartitionByRange(zval) + sortWithinPartitions, which this query
     deliberately leaves out so the transform stays a pure scan-transform
     (the write policy, not the operator, owns partitioning)."""
-    configure_for_oracle(spark)
     from ..session import load_table
 
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 5000)
@@ -169,7 +164,6 @@ def q_agg_bitwise_bool(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate family per event_type — set-membership masks and
     all/any-style data-quality flags computed as single hash aggregates
     (exact integer semantics in both engines)."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     return ev.groupBy("event_type").agg(
         F.bit_and("user_id").alias("uid_bit_and"),
@@ -188,7 +182,6 @@ def q_agg_approx_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate (no DuckDB twin); tests/test_properties.py pins the sketch's
     result against the exact groupBy top-k at fixture scale, where the
     sketch capacity exceeds the cardinality so counts must be exact."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     return (
         ev.select(F.expr("approx_top_k(event_type, 5)").alias("tk"))
@@ -205,7 +198,6 @@ def q_url_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     what an engine without parse_url would run). Clickstream
     normalization is the standard use: group by host/path, join on a
     query param. Map-only."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir).filter(F.col("event_id") < 2000)
     url = F.concat(
         F.lit("https://shop.example.com/"),
@@ -251,7 +243,6 @@ def q_agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     compose), and the final count is a popcount sum. The pattern that
     makes exact distinct feasible on dense-ish integer keys at 100 TB.
     Oracle = plain count(DISTINCT), proving the bitmap path exact."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     return (
         ev.selectExpr(
@@ -278,7 +269,6 @@ def q_agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     concatenation is deterministic on any engine/partitioning (an
     unordered listagg is a nondeterminism bug, not an operator).
     DuckDB mirrors with string_agg(... ORDER BY). One grouped shuffle."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir).filter(F.col("user_id") < 30)
     ev.createOrReplaceTempView("listagg_events")
     return spark.sql(
@@ -306,7 +296,6 @@ def q_encoding_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary (signed URLs, digest columns, opaque keys). The roundtrip
     flag proves decode(unbase64(base64(x))) is lossless; values mirror
     DuckDB's to_base64/hex exactly. Map-only."""
-    configure_for_oracle(spark)
     from ..session import load_table
 
     part = load_table(spark, sf_dir, "part")
@@ -350,7 +339,6 @@ FROM nation n, LATERAL (
 def q_lateral_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery with per-group ORDER BY/LIMIT —
     byte-identical SQL on both engines (see _LATERAL_TOPK_SQL)."""
-    configure_for_oracle(spark)
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView(
         "customer"
@@ -449,7 +437,6 @@ def q_udaf_geo_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom aggregate via GROUPED_AGG pandas_udf: per-type geometric
     mean of event value. Oracle: exp(avg(ln x)) — same log-domain mean.
     Rounded 6dp (log-sum association order differs across engines)."""
-    configure_for_oracle(spark)
     from ..functions.udf_kernels import geometric_mean_udaf
 
     ev = load_events(spark, sf_dir).filter(F.col("value") > 0)

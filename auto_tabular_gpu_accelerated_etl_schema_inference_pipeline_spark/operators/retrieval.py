@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_table, pinned_shuffle_width
+from ..session import load_table, pinned_shuffle_width
 
 #: cap on stored postings per token — the sorted PREFIX is deterministic,
 #: so both engines agree on which doc_ids survive the cap.
@@ -48,7 +48,6 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """token -> exact document frequency, total occurrences, and a capped
     sorted posting-list sample. The core lookup structure behind exact-
     match search and the df table BM25 consumes."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     occ = docs.select(
         "doc_id", F.explode(_tokens()).alias("token")
@@ -153,7 +152,6 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5)), reported in exact µ-units
     (idf rounded 6dp first) so the cross-engine comparison is integral.
     """
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     terms = list(BM25_QUERY_TERMS)
 
@@ -254,7 +252,6 @@ def q_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word 3-gram spans appearing in >= 2 distinct documents, with their
     document reach and total occurrence count — the n-gram-granularity
     approximation of exact-substring duplicate detection."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     grams = (
         docs.select("doc_id", _tokens().alias("toks"))
@@ -319,7 +316,6 @@ def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     zip_with/aggregate against one broadcast query vector."""
     from pyspark.sql import Window
 
-    configure_for_oracle(spark)
     bm25 = (
         q_bm25_search(spark, sf_dir)
         .orderBy(F.desc("score_micro"), "doc_id")
@@ -454,7 +450,6 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort materializes); the only windows run over the k selected
     rows. Relevance grading is a pure map over the split array. The
     1-row DCG/IDCG aggregates broadcast-join at the end."""
-    configure_for_oracle(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
-from ..session import configure_for_oracle, ctx_cache, load_table
+from ..session import ctx_cache, load_table
 from .quantile_bin import LINEITEM_MEASURES
 from .quantile_bin_queries import boundary_bin_oracle
 
@@ -211,7 +211,6 @@ def q_schema_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     session and shared with q_auto_tokenize_lineitem, so one bench/driver
     session profiles each table (see infer_column_classes) exactly
     once."""
-    configure_for_oracle(spark)
     from functools import reduce
 
     parts = [
@@ -225,7 +224,6 @@ def q_categorical_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dictionary-encode lineitem's categorical columns: vocab = sorted
     distinct values -> 0-based code, joined back (broadcast — a vocab is
     small by the definition of categorical)."""
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     out = li.select("l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus")
     for c in ("l_returnflag", "l_linestatus"):
@@ -364,7 +362,6 @@ def q_auto_tokenize_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     covering an inferred-continuous column (classifier/recipe drift)."""
     from .quantile_bin_queries import cached_exact_boundaries
 
-    configure_for_oracle(spark)
     return auto_tokenize(
         spark,
         load_table(spark, sf_dir, "lineitem"),
@@ -500,7 +497,6 @@ def q_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Every column's stats come from one _value_counts plan: ndv is the
     count of non-null values, n_null the rows of the null value."""
-    configure_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem").select(*ADVISOR_COLS)
     tall = _value_counts(li).groupBy("i").agg(
         F.sum("n").alias("n_rows"),
@@ -549,7 +545,6 @@ def q_rare_level_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     builds the level-frequency table (broadcast back); the recode is a
     map-side join — the fit/transform split again. Output: per FINAL
     level, row count and distinct original levels absorbed."""
-    configure_for_oracle(spark)
     part = load_table(spark, sf_dir, "part")
     freq = part.groupBy("p_brand").agg(F.count(F.lit(1)).alias("n"))
     recoded = part.join(F.broadcast(freq), "p_brand").select(
@@ -592,7 +587,6 @@ def q_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     so Spark's truncating `div` and the oracle's flooring `//` agree;
     a target whose group sums can go negative routes through the
     offset-shift trick instead."""
-    configure_for_oracle(spark)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_mktsegment",

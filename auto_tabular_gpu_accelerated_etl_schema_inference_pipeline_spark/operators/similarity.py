@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_spread, load_table
+from ..session import load_spread, load_table
 
 TOP_K = 5
 N_QUERIES = 5           # vec_id < 5 are the query vectors
@@ -43,7 +43,6 @@ LSH_PLANES = 8
 def _emb(
     spark: SparkSession, sf_dir: str, spread: bool = True
 ) -> DataFrame:
-    configure_for_oracle(spark)
     if not spread:
         # Arrow lanes and bounded collects take the RAW scan (r13,
         # VERDICT r12 item 1): a query-vector collect wants the pushed
@@ -867,7 +866,6 @@ def q_similarity_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     each query's candidate set."""
     from pyspark.sql import Window
 
-    configure_for_oracle(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id",

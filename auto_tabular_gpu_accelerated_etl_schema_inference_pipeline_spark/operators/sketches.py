@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_events
+from ..session import load_events
 
 CMS_DEPTH = 4
 CMS_WIDTH = 64
@@ -41,7 +41,6 @@ def q_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed counters — always >= true, the CMS guarantee, pinned by a
     property test). Both the counters and the probes are deterministic,
     so the whole structure is value-verified cross-engine."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     keyed = ev.select(F.col("user_id").cast("string").alias("k"))
     depths = keyed.select(
@@ -132,7 +131,6 @@ def q_hll_portable_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline exploits); the estimate folds the 256-row table in-array.
     The exact count alongside is the audit column, not the production
     path."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     h = F.expr(
         "cast(conv(substring(md5(cast(event_id as string)), 1, 8),"
@@ -248,7 +246,6 @@ def q_hll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage processes kilobytes per partition regardless of event
     volume. The exact countDistinct alongside is the fixture-scale
     audit, not the production path."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     h = F.expr(
         "cast(conv(substring(md5(cast(user_id as string)), 1, 8),"

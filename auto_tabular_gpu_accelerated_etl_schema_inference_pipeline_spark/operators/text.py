@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_spread
+from ..session import load_spread
 
 #: tiny stopword list used by quality scoring (public-domain common words)
 STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "it"]
@@ -40,7 +40,6 @@ def q_text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token count + a BPE-ish subword proxy: count of
     alphanumeric runs of length<=4 after splitting long words (regexp-based
     deterministic approximation of byte-pair segment counts)."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     toks = _tokens()
     # BPE-ish proxy: every word contributes ceil(len/4) subword units.
@@ -62,7 +61,6 @@ def q_text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique-token ratio, mean word length — the standard pre-training
     corpus filters (C4/Gopher-style rules, here as deterministic
     arithmetic)."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     toks = _tokens()
     n_tok = F.size(toks)
@@ -93,7 +91,6 @@ def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lexicon-overlap language ID: count marker-word hits per language,
     argmax with deterministic tiebreak (en > fr > es > de order), compare
     against the labeled ``lang`` column."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     toks = _tokens()
     scores = {}
@@ -146,7 +143,6 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprints: md5 of normalized text (exact-dup key) plus
     md5 of the first-5-token prefix (cheap near-dup blocking key). md5 is
     bit-identical across engines, unlike engine-native hash functions."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     norm = F.lower(F.trim(F.col("text")))
     prefix = F.array_join(F.slice(F.split(norm, " "), 1, 5), " ")
@@ -163,7 +159,6 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     these two cheap ratios are the standard pre-training quality gates
     alongside q_text_quality_score's length/stopword heuristics).
     Map-only array expressions — no shuffle, no UDF."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     # token array materialized BEFORE the bigram lambda reads it — an
     # expression-valued array inside element_at is re-evaluated per
@@ -215,7 +210,6 @@ def q_text_word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded token stream itself is never shuffled unreduced beyond the
     first partial. Rounded 6dp: the Σ c·log2(c) double sum is
     aggregation-order-dependent only below 1e-12 here."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id",
@@ -259,7 +253,6 @@ def q_text_top_ngram_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     Coverage is exact integer ppm: (1e6 * count * len(bigram)) div
     len(normalized text) — truncating integer division agrees across
     engines on non-negatives."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     # same materialize-before-lambda discipline as q_text_repetition:
     # element_at over a raw split() expression re-splits per element
@@ -354,7 +347,6 @@ def q_text_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer ppm). The EDBT-2016 Spark-sentiment shape: the lexicon is a
     tiny broadcast-able set, the scan is map-only array filtering — no
     shuffle, no UDF, linear at any corpus size."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     toks = _tokens()
     pos_arr = F.array(*[F.lit(w) for w in SENT_POS])
@@ -408,7 +400,6 @@ def q_text_kwic(spark: SparkSession, sf_dir: str) -> DataFrame:
     array (lambda-CSE rule: the array is a column before slicing).
     Positions are 1-based to match SQL ordinality. Map-only explode —
     output rows = term frequency, not corpus size."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id", F.split(F.lower(F.trim(F.col("text"))), " ").alias("toks")
@@ -470,7 +461,6 @@ def q_text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same ordering with zero cross-engine float risk. Map-only
     regexp_extract_all + size: zero shuffle at any scale; the regex is
     a plain character class, identical under Java regex and RE2."""
-    configure_for_oracle(spark)
     docs = load_spread(spark, sf_dir, "documents")
     words = F.size(_tokens())
     syll = F.size(

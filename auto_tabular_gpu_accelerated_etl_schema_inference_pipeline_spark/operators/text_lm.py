@@ -26,13 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_table
+from ..session import load_table
 
 HASH_DIMS = 64
 
 
 def _tok(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -128,7 +127,6 @@ def _bpe_fit(spark: SparkSession, sf_dir: str, want_vocab: bool = True):
     With ``want_vocab=False`` the last round's vocabulary rewrite is
     skipped (the merge table is already complete) and None is returned
     for the vocab."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     wf = (
         docs.select(
@@ -397,7 +395,6 @@ def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale) + per-doc partial aggregation."""
     from pyspark.sql import Window
 
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",

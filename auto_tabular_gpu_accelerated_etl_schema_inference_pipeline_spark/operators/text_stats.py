@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_table
+from ..session import load_table
 
 #: vocabulary-growth checkpoints: corpus prefixes at i/HEAPS_STEPS of the
 #: doc_id range, i = 1..HEAPS_STEPS (doc_id order is the fixture's stable
@@ -58,7 +58,6 @@ def q_vocab_growth_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst shares no subtrees across DAG branches). The ≤-joins are
     broadcast nested-loop joins against the 10-row spine, i.e. a
     map-side filter per checkpoint, never a row-scale shuffle."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = _tokens(docs)
     firsts = tok.groupBy("w").agg(F.min("doc_id").alias("first_doc"))
@@ -159,7 +158,6 @@ def q_zipf_slope_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: term histogram in one pass, then TakeOrderedAndProject
     for the top 100 (no global sort materializes), then a 100-row
     aggregate. The rank window orders 100 rows."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     freq = (
         _tokens(docs)
@@ -255,7 +253,6 @@ def q_chi2_term_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by presence cardinality; the top-term list (50 rows) and the
     per-source doc counts (|sources| rows) broadcast; the absent-cell
     spine is a 50 × |sources| cross join of two broadcast relations."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     pres = (
         _tokens(docs).select("doc_id", "source", "w").distinct()
@@ -400,7 +397,6 @@ def q_burstiness_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one (doc, term) count aggregate, broadcast top-term
     filter, per-term collapse — text never shuffles, the output is 50
     rows."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = _tokens(docs)
     per_doc = tok.groupBy("doc_id", "w").agg(
@@ -486,7 +482,6 @@ def q_pmi_cooccurrence_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pt⋈pt formulation re-ran the whole presence subtree for each side
     because Catalyst shares no subtrees. Marginals ride in on the
     broadcast top list."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     pres = _tokens(docs).select("doc_id", "w").distinct()
     top = (
@@ -589,7 +584,6 @@ def q_ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     decile thresholds derive from a window over the bounded per-doc
     table. A doc's own first use counts as novel (first_doc = doc_id ⇒
     strictly-earlier test fails)."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     arr = F.split(F.lower(F.trim(F.col("text"))), " ")
     bigrams = F.expr(
@@ -700,7 +694,6 @@ def q_js_divergence_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE corpus scan → the bounded histogram; every total
     (per-bin, per-source, global) is a window over it."""
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     b = F.expr(f"n_chars div {JS_BIN_CHARS}").cast("bigint")
     g = (

@@ -25,25 +25,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import (
-    configure_for_oracle,
-    load_events,
-    load_table,
-    pinned_shuffle_width,
-)
+from ..session import load_events, load_table, pinned_shuffle_width
 
 SESSION_GAP_MIN = 30
-
-
-def _ev(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_for_oracle(spark)
-    return load_events(spark, sf_dir)
 
 
 def q_events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling windows per event_type: count, exact value sum,
     distinct users."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     return (
         ev.groupBy(
             F.date_trunc("hour", F.col("ts")).alias("window_start"),
@@ -61,7 +51,7 @@ def q_events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-hour windows sliding by 1 hour (each event lands in exactly two
     windows), via the built-in F.window — the same operator Structured
     Streaming uses, here in batch mode."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     return (
         ev.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
         .agg(
@@ -81,7 +71,7 @@ def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: per-user sessions split on gaps > 30 min (lag +
     gap indicator + running sum — the standard distributed formulation).
     Output: one row per session with bounds, length and exact value sum."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     w_user = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     gap_us = SESSION_GAP_MIN * 60 * 1_000_000
     with_gap = ev.withColumn(
@@ -125,8 +115,7 @@ def q_asof_join_events_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on the key + ranking window (deterministic tiebreak on
     o_orderkey) — Spark's scalable as-of formulation; DuckDB's native
     ASOF JOIN is the oracle's cross-check formulated the same way."""
-    ev = _ev(spark, sf_dir)
-    configure_for_oracle(spark)
+    ev = load_events(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     # Same plan pin as asof_directions_join_form (r10): the borderline
     # customer-key join flaps between physicals on cost estimates
@@ -202,8 +191,7 @@ def q_asof_join_directions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (merge-sorted union instead of a join) — the crossover is
     measured, not asserted: scripts/probe_asof_range.py drives BOTH
     core formulations (below) over a synthetic hot-customer corpus."""
-    ev = _ev(spark, sf_dir)
-    configure_for_oracle(spark)
+    ev = load_events(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     return asof_directions_join_form(ev, orders)
 
@@ -329,7 +317,7 @@ def q_asof_join_directions_union(
     any depth, which the join form's fan-out (documented there) does
     not. Measured: scripts/probe_asof_range.py drives both core
     formulations over a synthetic hot-customer corpus."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     return asof_directions_union_form(ev, orders)
 
@@ -443,7 +431,7 @@ def q_events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     form (join on (user, hour_bucket)) with the same oracle,
     parity-tested in tests/test_asof_skew.py and hot-user
     scale-probed by scripts/probe_asof_range.py."""
-    return range_join_direct_form(_ev(spark, sf_dir))
+    return range_join_direct_form(load_events(spark, sf_dir))
 
 
 def range_join_direct_form(ev: DataFrame) -> DataFrame:
@@ -490,7 +478,7 @@ def q_events_range_join_bucketed(
     BroadcastNestedLoopJoin or a cartesian product. The left join +
     conditional count keeps zero-activity signups at count 0, and the
     final groupBy(signup_id) collapses the two bucket probes."""
-    return range_join_bucketed_form(_ev(spark, sf_dir))
+    return range_join_bucketed_form(load_events(spark, sf_dir))
 
 
 def range_join_bucketed_form(ev: DataFrame) -> DataFrame:
@@ -549,7 +537,7 @@ def q_events_session_window_native(spark: SparkSession, sf_dir: str) -> DataFram
     gap (session_window spans [first_ts, last_ts + gap)); the islands SQL
     states the same with lag + running sum, proving native == SQL
     islands. Single shuffle on user_id."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
         .agg(
@@ -577,7 +565,7 @@ def q_events_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     mechanics). Decimal partials make the re-aggregation exact; distinct
     counts are intentionally absent (not mergeable — at scale they'd be
     HLL sketches merged upward)."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     hourly = ev.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("bucket_start")
     ).agg(
@@ -615,7 +603,7 @@ def q_events_rolling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort and frame scan run per-user within the shuffle partition, no
     global sort at any scale. Sum runs in decimal (order-proof), events
     restricted to user_id < 40 to keep the gate query small."""
-    ev = _ev(spark, sf_dir).filter(F.col("user_id") < 40)
+    ev = load_events(spark, sf_dir).filter(F.col("user_id") < 40)
     mic = F.unix_micros("ts")
     w = (
         Window.partitionBy("user_id")
@@ -643,7 +631,7 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates + two broadcast joins of per-user anchor timestamps
     (KBs): no window over the full stream, no state. Timestamps
     compared as unix micros (exact integers)."""
-    ev = _ev(spark, sf_dir).select(
+    ev = load_events(spark, sf_dir).select(
         "user_id", "event_type", F.unix_micros("ts").alias("us")
     )
     s1 = (
@@ -685,7 +673,7 @@ def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id for the lead() window — partitioned, so it distributes; the
     final (type, next_type) aggregation is at most |types|² rows.
     Deterministic under ts ties via the event_id tiebreak."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
@@ -710,7 +698,7 @@ def q_events_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     windowed dedup Structured Streaming's dropDuplicatesWithinWatermark
     approximates. One partitioned window shuffle; integer microsecond
     arithmetic on both engines."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     w = Window.partitionBy("user_id", "event_type").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
@@ -740,7 +728,7 @@ def q_session_path_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort since session_idx is monotone in it), so a bot session's
     million events never materialize as one aggregation-buffer array;
     slice-after-collect would bound only the output, not the buffer."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     w_user = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
@@ -807,7 +795,7 @@ def q_events_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-aggregation (one shuffle), then a RANGE frame over integer hours
     PARTITIONED by event_type (distributed); rows lacking a 2-bucket
     history are unflaggable and reported with flag NULL."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     hourly = ev.groupBy(
         F.expr("unix_micros(ts) div 3600000000").alias("hour"),
         "event_type",
@@ -856,7 +844,7 @@ def q_cep_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-signup ranking window, and the error veto is a left-anti join —
     all shapes that survive scale because state is bounded by the
     pattern's own time window (exactly the streaming CEP argument)."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     s = ev.filter(F.col("event_type") == "signup").select(
         F.col("event_id").alias("signup_id"),
         F.col("user_id").alias("u"),
@@ -908,7 +896,7 @@ def q_events_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact 2dp cents. The frame is O(5) per row, so the collected arrays
     are bounded — this is the general recipe for exact small-window
     order statistics at scale (NEVER collect unbounded frames)."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.col("ts").asc(), F.col("event_id").asc())
@@ -936,7 +924,7 @@ def q_events_running_distinct_types(
     state is bounded by the DOMAIN, not the row count (the condition to
     check before using this pattern at scale; unbounded domains route to
     HLL instead)."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.col("ts").asc(), F.col("event_id").asc())
@@ -961,7 +949,7 @@ def q_tz_conversion_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed offsets, so the IANA-db vintage can't desync the engines).
     Integer outputs (local hour/minute + day shift) keep the comparison
     type-trivial. Map-only."""
-    ev = _ev(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     tokyo = F.from_utc_timestamp("ts", "Asia/Tokyo")
     kolkata = F.from_utc_timestamp("ts", "Asia/Kolkata")
     utc_day = F.expr(f"unix_micros(ts) div {_US_PER_DAY}")
@@ -996,7 +984,6 @@ def q_events_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one partial-agg shuffle onto at most 168 slots; the
     1-row global total broadcasts back."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     us = F.unix_micros("ts")
     cents = F.round(F.col("value") * 100).cast("bigint")
@@ -1043,7 +1030,6 @@ def q_events_clamped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     same justification as the rolling-median frame. Exact integer cents
     throughout; the oracle replays the identical fold with
     list_reduce."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint")
     delta = (
@@ -1086,7 +1072,6 @@ def q_events_ses_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DAY-level series (bounded by calendar span, not event volume) —
     the same state-bound argument as the rolling-median frame.
     """
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     daily = (
         ev.select(
@@ -1129,7 +1114,6 @@ def q_events_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fold state per type is the day-level series — bounded by calendar
     span, the same argument as the SES fold. The oracle replays the
     recursion as a depth-indexed recursive CTE."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     daily = (
         ev.select(
@@ -1200,7 +1184,6 @@ def q_business_days_to_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rollup groups on the 5-value priority with map-side partials
     and AQE coalescing. Averages reported in exact truncated milli-days
     (sum·1000 div n)."""
-    configure_for_oracle(spark)
     # epoch DAY via date arithmetic, never epoch micros: the fixture
     # timestamps are NTZ, and a micros path would route through the
     # session timezone — datediff on the DATE cast is tz-free on both
@@ -1255,7 +1238,6 @@ def q_events_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rows = calendar span), one self-join shifted by k per lag over
     that grid — all broadcast-sized after the first aggregation, so
     the 100 TB cost is the ONE scan producing daily totals."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     daily = (
         ev.filter(F.col("event_type").isin(XCORR_A, XCORR_B))
@@ -1322,7 +1304,6 @@ def q_events_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id and AQE-coalesce."""
     from pyspark.sql import Window
 
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     days = (
         ev.select(
@@ -1374,7 +1355,6 @@ def q_events_bollinger_breach(spark: SparkSession, sf_dir: str) -> DataFrame:
     single global series; per-type banding would partition by type."""
     from pyspark.sql import Window
 
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     daily = (
         ev.select(
@@ -1420,7 +1400,6 @@ def q_events_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the same key, AQE-coalesced; per-row state is a single lead."""
     from pyspark.sql import Window
 
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     us = F.unix_micros("ts")
     w = Window.partitionBy("user_id").orderBy(us, "event_id")
@@ -1458,7 +1437,6 @@ def q_events_error_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
     first — the pre-filter keeps the window state proportional to error
     volume, not total traffic (the difference between feasible and not
     at 100 TB/day)."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir).filter(F.col("event_type") == "error")
     mic = F.unix_micros("ts")
     w = (
@@ -1493,7 +1471,6 @@ def q_event_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile over a day of history before setting the watermark delay."""
     from pyspark.sql import Window
 
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     us = F.unix_micros("ts")
     w = (
@@ -1527,7 +1504,6 @@ def q_user_path_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair set is value-exact."""
     from pyspark.sql import Window
 
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     rows = ev.select(
         "user_id",
@@ -1579,7 +1555,6 @@ def q_conversion_latency_histogram(spark: SparkSession, sf_dir: str) -> DataFram
     float log). Users who never purchase land in bucket −1 (the
     never-converted cohort is the product question, not a dropped row).
     Two tiny per-user aggregates, one histogram groupBy."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     first_ev = ev.groupBy("user_id").agg(
         F.min(F.unix_micros("ts")).alias("first_us")
@@ -1614,7 +1589,6 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparable rollup to q_attribution_last_touch, so the two models'
     disagreement is directly queryable. Same bounded-lookback join
     shape; one extra count window per purchase."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("p_id"),
@@ -1671,7 +1645,6 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a deterministic tiebreak) plus a bounded lookback so the probe
     fan-out stays windowed at scale; purchases with no qualifying click
     credit the 'organic' bucket. Exact integer cents."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("p_id"),
@@ -1732,7 +1705,6 @@ def q_events_linear_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to events_gap_fill — dense grid via
     sequence+explode (map-side, span-bounded), four ignorenulls windows
     partitioned per user. Nothing global."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir).filter(F.col("user_id") < 20)
     hour = F.floor(F.unix_timestamp("ts") / 3600).cast("bigint")
     hourly = (
@@ -1848,7 +1820,6 @@ def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is quadratic in the TIME DOMAIN (|hours|² — bounded by the
     observation window, never by |events|; ~260k pairs per month-year),
     and the selection window orders that bounded pair set."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     hour = F.floor(F.unix_timestamp("ts") / 3600).cast("bigint")
     hourly = (
@@ -1926,7 +1897,6 @@ def q_ses_backtest_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded by calendar span); the rolling-origin evaluation is an
     in-array higher-order expression (O(days²) lambda evals per type —
     days ≤ 366, so ≤ ~134k integer ops per group, map-side)."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     daily = (
         ev.select(
@@ -2020,7 +1990,6 @@ def q_interarrival_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one lag window partitioned per user (the sessionize
     shape), then a map-side-combined per-type aggregate."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = (
@@ -2185,7 +2154,6 @@ def q_events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fold is one plan, one bounded single-row aggregate. Fold state
     is the day-level series — bounded by calendar span, not event
     volume (the SES/CUSUM state-bound argument)."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     daily = ev.groupBy(F.date_trunc("day", F.col("ts")).alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x")

@@ -20,13 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_table
+from ..session import load_table
 from .relational import _davg, _dsum, _frac, _money
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    configure_for_oracle(spark)
-    return load_table(spark, sf_dir, name)
 
 
 _REV = "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(6,2)))"
@@ -37,11 +32,11 @@ def q_tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — nation joined twice under different aliases, symmetric pair
     predicate, revenue per (supp_nation, cust_nation, ship-year). Both
     nation joins broadcast; the only shuffle is the final group-by."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
     n1 = nation.select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
     )
@@ -75,13 +70,13 @@ def q_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue sum per year, customers restricted to one REGION (region ->
     nation -> customer chain), parts restricted by type. Ratio of two
     exact decimal sums cast to double (q14 determinism pattern)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    part = _t(spark, sf_dir, "part")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    part = load_table(spark, sf_dir, "part")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     cnat = nation.join(
         F.broadcast(region.filter(F.col("r_name") == "ASIA")),
         nation.n_regionkey == region.r_regionkey,
@@ -113,11 +108,11 @@ def q_tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter. No partsupp in fixtures, so supply cost is proxied by
     p_retailprice: amount = rev - l_quantity * p_retailprice (all exact
     decimals, scale 4 — sum-then-cast is deterministic)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    supp = _t(spark, sf_dir, "supplier")
-    part = _t(spark, sf_dir, "part")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    supp = load_table(spark, sf_dir, "supplier")
+    part = load_table(spark, sf_dir, "part")
+    nation = load_table(spark, sf_dir, "nation")
     amount = _money("l_extendedprice") * (1 - _frac("l_discount")) - _money(
         "l_quantity"
     ) * _money("p_retailprice")
@@ -140,9 +135,9 @@ def q_tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery): parts whose revenue exceeds 0.1% of total revenue shipped
     by suppliers of one region. The total is a second aggregation over
     the same filtered frame, broadcast as a 1-row cross join."""
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
     eu = nation.filter(F.col("n_regionkey") == 3).select(
         F.col("n_nationkey").alias("s_nkey")
     )
@@ -164,8 +159,8 @@ def q_tpch_q13_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     (customers with zero qualifying orders must survive with count 0),
     then a second aggregation over the first's result. Two shuffles by
     design; the first keys on c_custkey (high cardinality, well spread)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "4-NOT SPECIFIED"
     )
     per_cust = (
@@ -180,11 +175,11 @@ def q_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q15 shape: scalar-MAX subquery — supplier(s) whose revenue over a
     ship-date window equals the maximum such revenue. Revenue is an exact
     decimal sum cast to double, so the equality join is deterministic."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     )
-    supp = _t(spark, sf_dir, "supplier")
+    supp = load_table(spark, sf_dir, "supplier")
     rev = li.groupBy("l_suppkey").agg(
         _dsum(_money("l_extendedprice") * (1 - _frac("l_discount"))).alias("total_revenue")
     )
@@ -204,8 +199,8 @@ def q_tpch_q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation joined back to the fact (two passes over the filtered
     fact, no row-at-a-time correlation). _davg (exact-sum/count) keeps
     the 0.2*avg threshold bit-identical across engines."""
-    part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#5")
-    li = _t(spark, sf_dir, "lineitem").join(
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#5")
+    li = load_table(spark, sf_dir, "lineitem").join(
         F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"), "left_semi"
     )
     avg_qty = li.groupBy(F.col("l_partkey").alias("a_partkey")).agg(
@@ -224,10 +219,10 @@ def q_tpch_q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     partsupp's availqty is proxied by the shipped-quantity aggregate per
     (supplier, part). Each level reduces before joining: part filter ->
     per-(supp,part) agg -> HAVING -> distinct suppliers -> semi-join."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("small%"))
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation").filter(F.col("n_regionkey") == 2)
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("small%"))
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation").filter(F.col("n_regionkey") == 2)
     shipped = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey, "left_semi")
         .groupBy("l_suppkey", "l_partkey")
@@ -252,9 +247,9 @@ def q_tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct late suppliers) — a single shuffle on l_orderkey instead of
     two correlated fact-fact joins; the oracle states the EXISTS form and
     proves the rewrite equivalent."""
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    li = load_table(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
     lo = li.join(orders, li.l_orderkey == orders.o_orderkey).withColumn(
         "late",
         (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")).cast(
@@ -291,9 +286,9 @@ def q_tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_quantity (IEEE double division — bit-identical across engines, so
     the min-equality join is deterministic). The correlated subquery is
     a per-part min joined back — no row-at-a-time correlation."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_size") == 5)
-    supp = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_size") == 5)
+    supp = load_table(spark, sf_dir, "supplier")
     offers = li.join(F.broadcast(part), li.l_partkey == part.p_partkey).select(
         "l_partkey",
         "l_suppkey",

@@ -14,20 +14,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_table
+from ..session import load_table
 from .relational import _dsum, _frac, _money
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    configure_for_oracle(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def q_tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 shape: EXISTS semi-join (orders having any line shipped after
     the order date) -> priority histogram."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     late = li.filter(F.col("l_shipdate") > F.lit("1997-06-01").cast("timestamp")).select(
         F.col("l_orderkey").alias("o_orderkey")
     )
@@ -45,10 +40,10 @@ def q_tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q10 shape: revenue lost to returns per customer (returnflag=R),
     4-way join, top-20 by revenue (deterministic tiebreak)."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     rev = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -62,8 +57,8 @@ def q_tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q12_priority_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q12 shape: conditional CASE aggregation — high/low-priority order
     counts per line status (shipmode remapped to l_linestatus)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").cast("long")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -80,8 +75,8 @@ def q_tpch_q12_priority_by_status(spark: SparkSession, sf_dir: str) -> DataFrame
 def q_tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q14 shape: conditional-revenue ratio (PROMO parts share). The
     ratio divides two exact decimal sums cast to double — deterministic."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     rev = _money("l_extendedprice") * (1 - _frac("l_discount"))
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast("decimal(19,4)"))
     joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey).filter(
@@ -99,8 +94,8 @@ def q_tpch_q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q16 shape: distinct-supplier counts per part attribute with a
     NOT-IN exclusion (brand exclusion stands in for the psupp complaint
     filter)."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     return (
         li.join(F.broadcast(part.filter(F.col("p_brand") != "Brand#1")),
                 li.l_partkey == part.p_partkey)
@@ -112,9 +107,9 @@ def q_tpch_q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q18 shape: group-HAVING on the fact table (orders whose total
     quantity exceeds a threshold) joined back to customer + order."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     big = (
         li.groupBy("l_orderkey")
         .agg(_dsum(_money("l_quantity")).alias("sum_qty"))
@@ -130,8 +125,8 @@ def q_tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q19 shape: OR-of-ANDs predicate (brand x size-range x qty-range
     alternatives) — exercises disjunctive filter pushdown + join."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
     cond = (
         ((F.col("p_brand") == "Brand#1") & (F.col("p_size").between(1, 15))
@@ -151,8 +146,8 @@ def q_tpch_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q22 shape: anti-join + scalar subquery — above-average-balance
     customers with no URGENT orders, grouped by nation (plain "no orders"
     is empty at sf0.01 — every high-balance customer has orders)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     avg_bal = cust.filter(F.col("c_acctbal") > 0).agg(
         (F.sum(_money("c_acctbal")).cast("double") / F.count("*")).alias("a")
     )

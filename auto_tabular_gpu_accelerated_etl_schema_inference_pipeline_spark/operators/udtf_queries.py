@@ -4,7 +4,9 @@ Scale note: a LATERAL UDTF is map-side only — no shuffle is introduced
 by the expansion itself; the downstream groupBy shuffles the (much
 smaller) aggregated bigram counts. Arrow transfer is enabled for the
 UDTF so token batches cross the JVM/Python boundary columnar, not
-pickled row-by-row.
+pickled row-by-row. Both UDTF lanes run on one cached forked session,
+so the Arrow conf, their temp views and their registered UDTFs stay off
+the caller's session.
 """
 
 from __future__ import annotations
@@ -12,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.udtfs import BigramUDTF, NgramUDTF
-from ..session import configure_for_oracle, load_table
+from ..session import forked_session, load_table
 
 MIN_BIGRAM_COUNT = 5
 
@@ -21,12 +23,11 @@ def q_udtf_bigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus bigram vocabulary via a LATERAL Python UDTF: explode every
     document into word bigrams, keep those seen >= MIN_BIGRAM_COUNT
     times — the vocabulary-induction step of n-gram tokenization."""
-    configure_for_oracle(spark)
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-    docs = load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("udtf_docs")
-    spark.udtf.register("bigrams", BigramUDTF)
-    return spark.sql(
+    s = forked_session(spark, "udtf")
+    s.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
+    load_table(s, sf_dir, "documents").createOrReplaceTempView("udtf_docs")
+    s.udtf.register("bigrams", BigramUDTF)
+    return s.sql(
         f"""
         SELECT b.ngram, count(*) AS n
         FROM udtf_docs d, LATERAL bigrams(d.text) b
@@ -42,14 +43,14 @@ def q_udtf_trigram_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the literal argument at plan time. Restricted to doc_id < 50 so the
     expansion stays oracle-comparison-sized; the lateral expansion
     itself is map-only at any scale."""
-    configure_for_oracle(spark)
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-    docs = load_table(spark, sf_dir, "documents").filter("doc_id < 50")
-    docs.createOrReplaceTempView("udtf_docs3")
     from pyspark.sql.functions import udtf as _udtf
 
-    spark.udtf.register("ngrams_n", _udtf(NgramUDTF))
-    return spark.sql(
+    s = forked_session(spark, "udtf")
+    s.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
+    docs = load_table(s, sf_dir, "documents").filter("doc_id < 50")
+    docs.createOrReplaceTempView("udtf_docs3")
+    s.udtf.register("ngrams_n", _udtf(NgramUDTF))
+    return s.sql(
         """
         SELECT d.doc_id, t.ngram3, t.pos
         FROM udtf_docs3 d,
@@ -103,7 +104,6 @@ def q_grouped_stats_apply_in_arrow(
     partial aggregation (groupBy.agg) when groups are huge."""
     import pyarrow as pa
 
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents").select("source", "n_chars")
 
     def stats(table: pa.Table) -> pa.Table:

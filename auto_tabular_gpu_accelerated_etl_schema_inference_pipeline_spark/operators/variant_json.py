@@ -16,14 +16,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_events
+from ..session import load_events
 
 
 def q_variant_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode props into VARIANT once, extract ``$.k`` typed, and compute
     per-type stats over the k >= 50 slice (distinct shape from the
     string-lane query: filter AFTER typed extraction, plus min/max)."""
-    configure_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     v = F.parse_json(F.col("props"))
     k = F.variant_get(v, "$.k", "int")

@@ -25,7 +25,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_table
+from ..session import load_table
 from ..sources.readers import read_xml
 from ..sources.sinks import write_xml
 
@@ -45,7 +45,6 @@ def q_xml_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events subset -> XML files -> scan -> to_xml -> from_xml ->
     per-type aggregate; oracle aggregates the original parquet rows, so
     any lossiness anywhere in the XML loop breaks the value hash."""
-    configure_for_oracle(spark)
     xml_dir = _xml_dir(sf_dir)
     if not os.path.exists(os.path.join(xml_dir, "_SUCCESS")):
         events = load_table(spark, sf_dir, "events")
@@ -96,7 +95,6 @@ def q_csv_dialect_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     can't be found mid-file), so the read parallelism is per-FILE —
     fine for interchange ingest, never the analytics hot path; convert
     to parquet on landing (the sinks module's compaction shape)."""
-    configure_for_oracle(spark)
     csv_dir = _csv_dir(sf_dir)
     if not os.path.exists(os.path.join(csv_dir, "_SUCCESS")):
         docs = load_table(spark, sf_dir, "documents")

@@ -66,22 +66,16 @@ def prepare_training_data(
     # bound quality gate (r12, guide §2.5; no-op at production split
     # counts)
     docs = load_spread(spark, sf_dir, "documents")
-    # Exact dedup via a BOUNDED pin (r13, VERDICT r12 item 4: the r12
-    # shape localCheckpointed the full quality-filtered TEXT corpus —
-    # size-of-data to executor-local storage). Guide §8 discipline:
-    # decide with small rows, move big rows once. The quality gate +
-    # digest run ONCE, projected to (doc_id, fp) — ids + 16-byte
-    # digests, the bounded decision table — and that is all that pins;
-    # the winner set is a min-per-digest over the pinned table; the
-    # text-bearing rows then move once through a semi-join keyed on the
-    # unique doc_id (reps ⊆ quality survivors, so the raw scan needs no
-    # second quality-gate evaluation). Size class of the pin: O(n) rows
-    # x ~40 bytes (no text).
+    # Exact dedup: decide with small rows, move big rows once. The
+    # quality gate + digest project to (doc_id, fp) — ids + 16-byte
+    # digests, no text — and the winner set is a min-per-digest over
+    # them; the text-bearing rows then move once through a semi-join
+    # keyed on the unique doc_id (reps ⊆ quality survivors, so the raw
+    # scan needs no second quality-gate evaluation). The first pin is
+    # ``base`` below: reps feeds nothing but the semi-join that builds
+    # it, so the gate and digest run once without a pin of their own.
     fp = F.md5(F.lower(F.trim(F.col("text"))))
-    keyed = (
-        quality_filter(docs).select("doc_id", fp.alias("fp"))
-        .localCheckpoint()
-    )
+    keyed = quality_filter(docs).select("doc_id", fp.alias("fp"))
     reps = (
         keyed.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
@@ -202,9 +196,7 @@ def q_corpus_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         _UPPER_Q,
         GATE_MIN_TOKENS,
     )
-    from .session import configure_for_oracle
 
-    configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",

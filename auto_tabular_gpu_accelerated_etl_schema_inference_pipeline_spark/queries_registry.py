@@ -5,10 +5,13 @@ takes ``(spark, sf_dir)`` and returns a DataFrame) and ``ORACLES:
 dict[str, str]`` (ANSI SQL DuckDB runs on the same parquet views). A
 query present in QUERIES but absent from ORACLES gets the driver's weaker
 rows-only check (reserved for approximate / non-SQL-expressible ops).
+Every entry queries() hands out runs under UTC (see _under_utc); the
+lane functions themselves leave the caller's timezone alone.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from importlib import import_module
 
@@ -124,8 +127,29 @@ def _modules():
     return [import_module(f"{_PKG}.{m}") for m in _MODULES]
 
 
+def _under_utc(
+    fn: Callable[[SparkSession, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """``fn`` run on a session set to UTC first, whoever built the
+    session (an external caller brings its own): UTC so Spark renders
+    the same instants DuckDB reads from the parquet footers. Forks inherit it
+    through session._FORK_SYNCED_CONFS. ANSI mode is deliberately left
+    at Spark 4's default (ON) — the whole registry passes under it
+    (degenerate cases are guarded explicitly, e.g. kappa's p_e = 1 NULL,
+    rather than leaning on non-ANSI NaN→0 casts), so queries behave
+    identically on strict production clusters."""
+
+    @functools.wraps(fn)
+    def lane(spark: SparkSession, sf_dir: str) -> DataFrame:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        return fn(spark, sf_dir)
+
+    return lane
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry in external-verification priority order.
+    """Registry in external-verification priority order, each entry
+    wrapped by _under_utc.
 
     Three tiers: (1) the curated window, in window order; (2) every other
     oracle-backed query; (3) rows-only queries, which can't produce a
@@ -150,7 +174,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return (1, 0)
 
     return {
-        name: raw[name]
+        name: _under_utc(raw[name])
         for name in sorted(raw, key=lambda n: tier(n))  # stable sort
     }
 

@@ -92,19 +92,6 @@ def get_spark(
     return spark
 
 
-def configure_for_oracle(spark: SparkSession) -> SparkSession:
-    """Runtime settings every oracle-compared query needs regardless of
-    who built the session (the driver builds its own): UTC timestamps so
-    Spark renders the same instants DuckDB reads from the parquet
-    footers. ANSI mode is deliberately left at Spark 4's default (ON) —
-    the whole registry passes under it (degenerate cases are guarded
-    explicitly, e.g. kappa's p_e = 1 NULL, rather than leaning on
-    non-ANSI NaN→0 casts), so queries behave identically on strict
-    production clusters."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark
-
-
 #: The one per-session cache: everything derived once per (SparkContext,
 #: SparkSession) — checkpoint-pinned shared relations, forked sessions,
 #: split-count probes, the exact boundary model, and parquet schemas and
@@ -164,14 +151,17 @@ def session_memo(spark: SparkSession, key: str, sf_dir: str, build) -> DataFrame
 
 
 #: runtime confs re-synced from the parent on EVERY forked_session call
-#: — the plan-shaping ones a reused fork must track rather than freeze
-#: at whatever the parent held when the fork was first created (a
-#: harness that tunes these mid-process would otherwise bake its
-#: transient value into every later lane run).
+#: — the plan- and result-shaping ones a reused fork must track rather
+#: than freeze at whatever the parent held when the fork was first
+#: created (a harness that tunes these mid-process would otherwise bake
+#: its transient value into every later lane run). The timezone is the
+#: one the registry sets before every lane, so a forked lane renders
+#: instants exactly as its parent does.
 _FORK_SYNCED_CONFS = (
     "spark.sql.shuffle.partitions",
     "spark.sql.adaptive.enabled",
     "spark.sql.ansi.enabled",
+    "spark.sql.session.timeZone",
 )
 
 
@@ -185,8 +175,8 @@ def forked_session(spark: SparkSession, purpose: str) -> SparkSession:
     purposes never see each other's — at a session count bounded by
     lanes x parents, not invocations. ``newSession()`` starts from
     SparkContext defaults, NOT the parent's runtime conf changes, so the
-    plan-shaping confs (_FORK_SYNCED_CONFS) are synced from the parent
-    on EVERY call, create and reuse alike. Lanes must (re)apply their
+    plan- and result-shaping confs (_FORK_SYNCED_CONFS) are synced from
+    the parent on EVERY call, create and reuse alike. Lanes must (re)apply their
     OWN confs and createOrReplaceTempView their views on every call: the
     fork is reused, not reset."""
     s = ctx_cache(spark, ("fork", purpose), spark.newSession)

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle, load_table
+from ..session import load_table
 from .windows import _events_stream
 
 
@@ -28,7 +28,6 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events stream ⋈ broadcast(customer) on user_id = c_custkey,
     aggregated per (c_mktsegment, event_type): row counts and exact
     decimal value sums. Complete-mode memory sink, drained."""
-    configure_for_oracle(spark)
     ev = _events_stream(spark, sf_dir)
     cust = F.broadcast(
         load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")

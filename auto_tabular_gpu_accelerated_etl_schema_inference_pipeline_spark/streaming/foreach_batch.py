@@ -28,8 +28,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle
-
 
 def _current_table(target_dir: str, spark: SparkSession):
     """Resolve the committed state table via the CURRENT pointer file,
@@ -112,7 +110,6 @@ def run_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the bounded events stream through the merge sink; return the
     final target table (decimal partials widened to double at the end —
     the cross-engine-exact pattern used by incremental_user_totals)."""
-    configure_for_oracle(spark)
     from .windows import _events_stream
 
     ev = _events_stream(spark, sf_dir).select("user_id", "value")
@@ -193,8 +190,6 @@ def q_streaming_cdc_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the batch cdc_latest_snapshot exactly — which it does
     because the per-batch argmax + greatest-struct merge is the same
     total order the batch window uses."""
-    configure_for_oracle(spark)
-
     # split the fixture into 3 files and feed them ONE PER MICRO-BATCH
     # (maxFilesPerTrigger=1): the greatest-struct merge then actually
     # runs twice across batch boundaries — a single-batch drain would
@@ -282,7 +277,6 @@ def q_streaming_topk_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see _topk_batch). The oracle is the batch top-10 over the same
     data — equality proves the merge loses nothing across micro-batch
     splits."""
-    configure_for_oracle(spark)
     from .windows import _events_stream
 
     ev = _events_stream(spark, sf_dir).select(
@@ -396,7 +390,6 @@ def q_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.sketches import HLL_ALPHA_M2, HLL_M
 
-    configure_for_oracle(spark)
     # pre-split the fixture into 4 deterministic files (by user_id mod 4)
     src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
     stat = os.stat(src)

@@ -24,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle
 from .windows import _events_stream
 
 
@@ -66,7 +65,6 @@ def q_streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFra
     [click.ts, click.ts + 2 hours] — both sides streams, both
     watermarked 1 hour. Output is ids + user (timestamps omitted: the
     ns->us truncation is engine-side, ids are the stable identity)."""
-    configure_for_oracle(spark)
     joined = click_purchase_joined(_events_stream(spark, sf_dir))
     name = "stream_click_purchase_out"
     q = (
@@ -98,7 +96,6 @@ def q_streaming_click_purchase_left_join(spark: SparkSession, sf_dir: str) -> Da
     purchase could still arrive; the oracle reproduces the same cutoff
     relationally, so streaming outer-join semantics are pinned
     bit-exact, including WHICH rows are withheld."""
-    configure_for_oracle(spark)
     ev = _events_stream(spark, sf_dir)
     clicks = (
         ev.filter(F.col("event_type") == "click")

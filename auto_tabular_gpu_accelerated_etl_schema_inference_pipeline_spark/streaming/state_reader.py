@@ -29,7 +29,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle
 from .windows import _events_stream
 
 
@@ -72,7 +71,6 @@ def q_statestore_reader_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY — passing means the persisted state bytes encode exactly
     the batch answer (unified-engine equivalence, checked at the
     storage layer rather than the sink)."""
-    configure_for_oracle(spark)
     # cached forked session for the read: the HDFS-backed provider's
     # snapshot-lag telemetry phones a StateStoreCoordinator RPC endpoint
     # that only exists while a streaming query is RUNNING — a batch read

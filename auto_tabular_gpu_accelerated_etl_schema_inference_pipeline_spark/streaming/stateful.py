@@ -25,8 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..session import configure_for_oracle
-
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
 STATE_SCHEMA = "n bigint, total double"
 
@@ -50,7 +48,6 @@ def run_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the bounded events stream through a per-user stateful
     counter; returns the final per-user totals (update mode — last emit
     per key wins; the bounded source makes that the complete answer)."""
-    configure_for_oracle(spark)
     from .windows import _events_stream
 
     # one state store is initialized per shuffle partition per micro-

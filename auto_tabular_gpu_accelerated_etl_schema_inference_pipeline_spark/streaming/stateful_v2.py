@@ -29,8 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-from ..session import configure_for_oracle
-
 OUTPUT_SCHEMA = (
     "user_id bigint, n_events bigint, total_value double, max_value double"
 )
@@ -71,7 +69,6 @@ class UserStatsProcessor(StatefulProcessor):
 def run_stateful_v2_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the bounded events stream through the StatefulProcessor;
     return the final per-user stats (last emit per key wins)."""
-    configure_for_oracle(spark)
     # transformWithState requires the RocksDB state store provider
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",

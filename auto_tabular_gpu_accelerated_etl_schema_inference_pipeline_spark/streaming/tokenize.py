@@ -27,7 +27,6 @@ from ..operators.quantile_bin import (
     LINEITEM_MEASURES,
     bucketize,
 )
-from ..session import configure_for_oracle
 
 
 def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -62,7 +61,6 @@ def q_streaming_tokenize_lineitem(
     map-only Bucketizer + sink drain."""
     from ..operators.quantile_bin_queries import cached_exact_boundaries
 
-    configure_for_oracle(spark)
     bounds = cached_exact_boundaries(spark, sf_dir)
     stream = _table_stream(spark, sf_dir, "lineitem")
     tokens = bucketize(stream, bounds, keep_cols=LINEITEM_KEYS)

@@ -22,8 +22,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure_for_oracle
-
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded file stream over events.parquet. The nanosecond ts column
@@ -65,7 +63,6 @@ def run_tumbling_stream(spark: SparkSession, sf_dir: str, gap: str = "1 hour") -
     """Tumbling-window streaming aggregation, drained to completion.
     Returns the final (complete-mode) result as a batch DataFrame with
     the same shape as the batch q_events_tumbling_window."""
-    configure_for_oracle(spark)
     ev = _events_stream(spark, sf_dir)
     agg = (
         ev.groupBy(F.window("ts", gap).alias("w"), "event_type")
@@ -116,7 +113,6 @@ def q_streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns only the KEY COLUMNS — that set is deterministic and carries
     a bit-exact DISTINCT oracle, proving streaming dedup == batch
     distinct under Spark's unified engine."""
-    configure_for_oracle(spark)
     ev = _events_stream(spark, sf_dir)
     deduped = (
         ev.withWatermark("ts", "1 hour")
@@ -148,7 +144,6 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs append-mode with a watermark so closed sessions emit and state
     evicts; complete-mode-over-bounded-input is the fixture-friendly
     configuration (same trade as run_tumbling_stream)."""
-    configure_for_oracle(spark)
     ev = _events_stream(spark, sf_dir)
     agg = (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
@@ -184,7 +179,6 @@ def q_streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete-mode. Carries the batch query's oracle — overlapping-window
     state merge is the incremental-maintenance case tumbling windows
     don't exercise."""
-    configure_for_oracle(spark)
     ev = _events_stream(spark, sf_dir)
     agg = (
         ev.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
@@ -230,7 +224,6 @@ def q_streaming_dedup_within_watermark(
     re-emit-after-eviction behavior is inherently arrival-order-
     dependent (which replay emits depends on batch boundaries); its
     batch-expressible twin is events_debounce's lag()-gap dedup."""
-    configure_for_oracle(spark)
     ev = _events_stream(spark, sf_dir)
     deduped = (
         ev.withWatermark("ts", "30 days")
@@ -271,7 +264,6 @@ def q_streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     import math
 
-    configure_for_oracle(spark)
     ev = _events_stream(spark, sf_dir)
     hourly = (
         ev.groupBy(F.window("ts", "1 hour").alias("w"))

@@ -11,6 +11,11 @@ Usage:
                                             # then smoke the rows-only
                                             # tail (execute + count)
     python scripts/sweep.py name1 name2 ... # specific queries
+
+Each lane also gets a drift report: a ``DRIFT <lane>: ...`` line for
+every runtime conf or temp view the lane left changed on the session it
+was handed (the timezone excepted — the registry sets it), and a count
+at the end. Drift is reported, not gated.
 """
 
 from __future__ import annotations
@@ -28,6 +33,28 @@ import __spark_entry__ as entrymod  # noqa: E402
 from tests.oracle_harness import compare, duckdb_conn  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
+# the registry sets this before every lane, so it is not drift
+_REGISTRY_TZ = "spark.sql.session.timeZone"
+
+
+def _session_state(spark: SparkSession) -> dict[str, str]:
+    """The caller-visible session state a lane can leave behind: its
+    runtime confs and, as ``view:<name>`` keys, its temp views."""
+    state = {k: v for k, v in spark.conf.getAll.items() if k != _REGISTRY_TZ}
+    for t in spark.catalog.listTables():
+        if t.isTemporary:
+            state[f"view:{t.name}"] = "temp view"
+    return state
+
+
+def _drift(name: str, before: dict[str, str], after: dict[str, str]) -> int:
+    """Print one DRIFT line per key the lane changed; return the count."""
+    changed = sorted(k for k in before.keys() | after.keys()
+                     if before.get(k) != after.get(k))
+    for k in changed:
+        print(f"DRIFT {name}: {k} {before.get(k)!r} -> {after.get(k)!r}",
+              flush=True)
+    return len(changed)
 
 
 def main(argv: list[str]) -> int:
@@ -65,10 +92,12 @@ def main(argv: list[str]) -> int:
     )
     print(f"session: tz={tz} ansi={ansi} sf={SF}", flush=True)
     failed = []
+    drifted = 0
     t0 = time.time()
     for i, name in enumerate(names, 1):
         con = duckdb_conn(SF)
         t1 = time.time()
+        before = _session_state(spark)
         try:
             df = queries[name](spark, SF)
             compare(df, con, oracles[name], name)
@@ -79,9 +108,11 @@ def main(argv: list[str]) -> int:
             traceback.print_exc()
         finally:
             con.close()
+        drifted += _drift(name, before, _session_state(spark))
     oracle_green = len(names) - len(failed)
     for i, name in enumerate(smoke, 1):
         t1 = time.time()
+        before = _session_state(spark)
         try:
             n_rows = queries[name](spark, SF).count()
             print(
@@ -93,12 +124,14 @@ def main(argv: list[str]) -> int:
             failed.append(name)
             print(f"[smoke {i}/{len(smoke)}] FAIL {name}: {exc}", flush=True)
             traceback.print_exc()
+        drifted += _drift(name, before, _session_state(spark))
     # Summary AFTER the smoke loop (ADVICE r8): printing it before let a
     # smoke-tail failure appear below a line that already claimed green.
     smoke_green = len(names) + len(smoke) - len(failed) - oracle_green
     print(
         f"\n{oracle_green}/{len(names)} oracle green, "
-        f"{smoke_green}/{len(smoke)} smoke green in {time.time()-t0:.0f}s"
+        f"{smoke_green}/{len(smoke)} smoke green in {time.time()-t0:.0f}s, "
+        f"{drifted} session drift line(s)"
     )
     if failed:
         print("FAILED:", failed)

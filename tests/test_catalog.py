@@ -211,18 +211,25 @@ def test_forked_session_syncs_confs_on_first_creation(spark):
         forked_session,
     )
 
+    tz = "spark.sql.session.timeZone"
     orig = spark.conf.get("spark.sql.shuffle.partitions")
+    orig_tz = spark.conf.get(tz)
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
+        spark.conf.set(tz, "America/New_York")
         fresh = forked_session(spark, "t.purpose_first_sync")
         assert fresh.conf.get("spark.sql.shuffle.partitions") == "7"
+        assert fresh.conf.get(tz) == "America/New_York"
         # ...and the reuse path keeps tracking the parent
         spark.conf.set("spark.sql.shuffle.partitions", "11")
+        spark.conf.set(tz, "Asia/Kolkata")
         again = forked_session(spark, "t.purpose_first_sync")
         assert again is fresh
         assert again.conf.get("spark.sql.shuffle.partitions") == "11"
+        assert again.conf.get(tz) == "Asia/Kolkata"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", orig)
+        spark.conf.set(tz, orig_tz)
 
 
 def test_pinned_shuffle_width_floor_and_cap(spark):

@@ -21,6 +21,35 @@ def test_training_data_prep(spark, sf_dir):
     assert {"doc_id", "lang", "source", "f_tokens_bin", "f_chars_bin"} <= cols
 
 
+def test_training_data_prep_job_and_pin_budget(spark, sf_dir, tmp_path):
+    """prepare_training_data with a sink: its job count and the
+    persisted RDDs it leaves behind. The exact dedup's (doc_id, digest)
+    table feeds only the persisted dedup base, so it carries no pin of
+    its own. Measured on the sf0.01 fixture: 19 jobs at 4 and 8 cores, 17 at 2."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.pipelines import (
+        prepare_training_data,
+    )
+    from tests.test_serve_model import _jobs
+
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs
+    before = set(persisted().keySet())
+    try:
+        _, jobs = _jobs(
+            spark,
+            lambda: prepare_training_data(
+                spark, sf_dir, out_path=str(tmp_path / "out")
+            ),
+        )
+        left = set(persisted().keySet()) - before
+        assert jobs <= 19
+        assert len(left) <= 3
+    finally:
+        rdds = persisted()
+        for rdd_id in set(rdds.keySet()) - before:
+            rdds.get(rdd_id).unpersist(False)
+
+
 def test_engine_info(spark):
     info = engine_info(spark)
     assert info["pyspark_version"]

@@ -90,6 +90,34 @@ def test_registry_imports_every_module():
     assert len(qr._modules()) == len(qr._MODULES)
 
 
+def test_registry_runs_lanes_under_utc(spark, sf_dir):
+    """The registry, not each lane, sets the oracle timezone: through
+    queries(), a timestamp lane matches its oracle on a New York
+    session, and a lane that needs its own confs, views and UDTFs
+    leaves the caller's session as it found it (the timezone apart).
+    The caller is a fresh session off the fixture's context, so what
+    earlier tests left on the fixture session cannot mask drift."""
+    tz = "spark.sql.session.timeZone"
+    caller = spark.newSession()
+    caller.conf.set(tz, "America/New_York")
+
+    def state():
+        confs = {k: v for k, v in caller.conf.getAll.items() if k != tz}
+        views = {t.name for t in caller.catalog.listTables() if t.isTemporary}
+        return confs, views
+
+    con = duckdb_conn(sf_dir)
+    try:
+        df = QUERIES["events_tumbling_window"](caller, sf_dir)
+        compare(df, con, ORACLES["events_tumbling_window"], "events_tumbling_window")
+    finally:
+        con.close()
+    caller.conf.set(tz, "America/New_York")
+    before = state()
+    assert QUERIES["udtf_bigram_vocab"](caller, sf_dir).count() > 0
+    assert state() == before
+
+
 def test_registry_rotation_invariants():
     """The rotation bookkeeping the external gate rides on, machine-
     checked (VERDICT r7 item 4): the curated window must be exactly the
