@@ -397,31 +397,42 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify join touches only colliding pairs — the LSH S-curve keeps that
     near-linear for high thresholds. Rows-only check (xxhash64 is
     Spark-specific); ground truth = dedup_ngram_jaccard."""
-    return minhash_near_dup_pairs(load_spread(spark, sf_dir, "documents"))
+    return minhash_near_dup_pairs(
+        pin_doc_tokens(load_spread(spark, sf_dir, "documents"))
+    )
 
 
-def _minhash_toks_bands(
-    docs: DataFrame, carry_sig: bool = False
-) -> tuple[DataFrame, DataFrame]:
-    """Shared MinHash plumbing: per-doc distinct tokens and the
-    (doc_id, band, bucket[, sig, sz]) frame. Bands carry ONLY ids+buckets
-    (plus the 32-long signature and token-set size when ``carry_sig`` —
-    ~260 B/row, used for in-bucket Jaccard estimation and the length
-    filter): the candidate join must never shuffle token arrays — at
-    scale the arrays dominate the row width and the bucket fan-out
-    squares it."""
-    r = MINHASH_K // MINHASH_BANDS
+def pin_doc_tokens(docs: DataFrame, *keep) -> DataFrame:
+    """``(doc_id, *keep, toks)`` over a text-bearing frame, pinned with
+    ``localCheckpoint``: ``toks`` is each doc's distinct normalized
+    tokens, the one input the MinHash operators read. ``keep`` are
+    extra columns (names or expressions) a caller wants on the same pin,
+    so the text is read and tokenized in one pass and nothing
+    downstream of the pin carries it.
+
+    The pin is what makes the signatures cheap (r12, guide §1.2 per-task
+    work): the 32 array_min(transform(...)) slots are higher-order
+    functions — excluded from both whole-stage codegen and common-
+    subexpression elimination — so inlining the split+distinct
+    EXPRESSION into each slot re-evaluated the tokenization 33x per row
+    (measured: the signature+bands pass dropped 4.9 s -> 2.1 s at sf0.1
+    when the slots read a pinned column instead). The verify stage
+    broadcasts the same pinned column. ``localCheckpoint``, not
+    ``persist()``: under AQE each cached relation runs as its own query
+    stage, ~3 more jobs per corpus curation."""
     toks = F.array_distinct(F.split(_norm_text(), " "))
-    # Materialize the token arrays FIRST and derive the signatures from
-    # the materialized COLUMN (r12, guide §1.2 per-task work): the 32
-    # array_min(transform(...)) slots are higher-order functions —
-    # excluded from both whole-stage codegen and common-subexpression
-    # elimination — so inlining the split+distinct EXPRESSION into each
-    # slot re-evaluated the tokenization 33x per row (measured: the
-    # signature+bands pass dropped 4.9 s -> 2.1 s at sf0.1 when the
-    # slots read a pinned column instead). The pinned frame is also what the verify stage
-    # broadcasts, so this materialization was already paid below.
-    toks_df = docs.select("doc_id", toks.alias("toks")).localCheckpoint()
+    return docs.select("doc_id", *keep, toks.alias("toks")).localCheckpoint()
+
+
+def _minhash_bands(toks_df: DataFrame, carry_sig: bool = False) -> DataFrame:
+    """Shared MinHash plumbing over a ``(doc_id, toks)`` frame: the
+    pinned (doc_id, band, bucket[, sig, sz]) frame. Bands carry ONLY
+    ids+buckets (plus the 32-long signature and token-set size when
+    ``carry_sig`` — ~260 B/row, used for in-bucket Jaccard estimation
+    and the length filter): the candidate join must never shuffle token
+    arrays — at scale the arrays dominate the row width and the bucket
+    fan-out squares it."""
+    r = MINHASH_K // MINHASH_BANDS
     sigs = toks_df.select(
         "doc_id",
         _minhash_sig_col(F.col("toks"), MINHASH_K).alias("sig"),
@@ -445,24 +456,25 @@ def _minhash_toks_bands(
             )
         ).alias("bb"),
     ).select("doc_id", *extra, "bb.band", "bb.bucket")
-    # Materialize bands too (r12, guide §2.4/§5): it feeds the two sides
-    # of the candidate self-join plus the rep-cap window, and Catalyst
+    # Materialize bands (r12, guide §2.4/§5): it feeds the two sides of
+    # the candidate self-join plus the rep-cap window, and Catalyst
     # shares no subtrees across DAG branches, so uncached the signature
     # pipeline re-ran up to 5x per query (measured: the near-dedup stage
-    # of training_data_prep dropped ~2.5x at sf0.1 with the pins). Both
-    # pinned frames are the SMALL by-construction artifacts (ids +
-    # 32-slot sigs / per-doc distinct tokens, never raw text) —
-    # output-sized, same class the verify broadcast already assumes.
-    return toks_df, bands.localCheckpoint()
+    # of training_data_prep dropped ~2.5x at sf0.1 with the pins). Like
+    # the token pin it is a SMALL by-construction artifact (ids + 32-slot
+    # sigs, never raw text) — output-sized, same class the verify
+    # broadcast already assumes. Unpinning it to share the (band, bucket)
+    # exchange between the join sides measured ~+40% CPU.
+    return bands.localCheckpoint()
 
 
-def minhash_near_dup_pairs(docs: DataFrame) -> DataFrame:
-    """MinHash-LSH near-dup pairs over any (doc_id, text) frame — see
-    q_dedup_minhash_lsh for the algorithm notes. NOTE: output is ALL
-    verified pairs — inherently quadratic in near-dup cluster size (a
-    1600-doc family is ~1.3M pairs). For dedup decisions use
-    minhash_near_dup_drop_ids, which is linear."""
-    toks_df, bands = _minhash_toks_bands(docs)
+def minhash_near_dup_pairs(toks_df: DataFrame) -> DataFrame:
+    """MinHash-LSH near-dup pairs over a ``(doc_id, toks)`` frame (see
+    pin_doc_tokens) — see q_dedup_minhash_lsh for the algorithm notes.
+    NOTE: output is ALL verified pairs — inherently quadratic in
+    near-dup cluster size (a 1600-doc family is ~1.3M pairs). For dedup
+    decisions use minhash_near_dup_drop_ids, which is linear."""
+    bands = _minhash_bands(toks_df)
     a = bands.alias("a")
     b = bands.alias("b")
     cand = (
@@ -491,8 +503,9 @@ def minhash_near_dup_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_near_dup_drop_ids(docs: DataFrame) -> DataFrame:
-    """Docs to DROP for near-dedup, with at most ONE exact-Jaccard
+def minhash_near_dup_drop_ids(toks_df: DataFrame) -> DataFrame:
+    """Docs to DROP for near-dedup over a ``(doc_id, toks)`` frame (see
+    pin_doc_tokens), with at most ONE exact-Jaccard
     verification per doc instead of the all-pairs formulation's
     O(cluster^2) verifications (measured 66 s -> seconds at sf0.1 where
     the corpus has ~1600-doc near-dup families; exact verification over
@@ -514,7 +527,7 @@ def minhash_near_dup_drop_ids(docs: DataFrame) -> DataFrame:
        length filter + cross-band pair dedup (sf0.01). Precision stays
        1 (exact verify gates every drop); recall tested >= 0.9 against
        the all-pairs drop set."""
-    toks_df, bands = _minhash_toks_bands(docs, carry_sig=True)
+    bands = _minhash_bands(toks_df, carry_sig=True)
     # GIANT-BUCKET CAP: the droppable side pairs only with its bucket's
     # REPS_PER_BUCKET smallest ids. Near-dup families land in the same
     # buckets, so a family of K docs would otherwise emit K^2 in-bucket
@@ -557,7 +570,10 @@ def minhash_near_dup_drop_ids(docs: DataFrame) -> DataFrame:
             F.abs(F.col("sz_a") - F.col("sz_b")).alias("sz_diff"),
         )
         # a pair colliding in several bands appears once per band — dedup
-        # BEFORE ranking or duplicates eat most of the top-M verify slots
+        # BEFORE ranking or duplicates eat most of the top-M verify slots.
+        # Hash on b_id first: that one exchange satisfies both the pair
+        # dedup (keyed on a superset of b_id) and the per-b_id window.
+        .repartition("b_id")
         .dropDuplicates(["a_id", "b_id"])
     )
     w = Window.partitionBy("b_id").orderBy(

@@ -195,7 +195,7 @@ _ZONES_SQL = " UNION ALL ".join(
 HILBERT_BITS = 8  # 8-bit coords -> 16-bit curve index (256x256 grid)
 
 
-def _hilbert_sql() -> str:
+def _hilbert_sql(customer: str = "customer") -> str:
     """ONE SQL text (runs verbatim on Spark and DuckDB) computing the
     Hilbert d-index of each customer's 8-bit grid cell by unrolling the
     standard xy2d loop into one CTE per bit level. The quadrant term
@@ -240,7 +240,7 @@ WITH c0 AS (
     CAST(({xv} - {xv} % 40) / 40 AS BIGINT) AS x,
     CAST(({yv} - {yv} % 40) / 40 AS BIGINT) AS y,
     0 AS d
-  FROM customer
+  FROM {customer}
 ),
 {body}
 SELECT c_custkey,
@@ -264,10 +264,11 @@ def q_geo_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-partition by."""
     from ..session import load_table
 
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "customer"
+    # a DataFrame argument, not a temp view: a caller's own ``customer``
+    # view stays as it was
+    return spark.sql(
+        _hilbert_sql("{customer}"), customer=load_table(spark, sf_dir, "customer")
     )
-    return spark.sql(_hilbert_sql())
 
 
 QUERIES = {

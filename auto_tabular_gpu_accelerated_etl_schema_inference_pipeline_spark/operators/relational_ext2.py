@@ -326,24 +326,29 @@ FROM part
 #: surface — Spark plans it as a rewritten ranking join, DuckDB as a
 #: lateral nested loop; both produce the same 3 rows per group under
 #: the stated total order (cents DESC, c_custkey).
-_LATERAL_TOPK_SQL = """
+_LATERAL_TOPK_TEMPLATE = """
 SELECT n.n_name, t.c_custkey, t.cents
-FROM nation n, LATERAL (
+FROM {nation} n, LATERAL (
   SELECT c_custkey, CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-  FROM customer WHERE c_nationkey = n.n_nationkey
+  FROM {customer} WHERE c_nationkey = n.n_nationkey
   ORDER BY cents DESC, c_custkey LIMIT 3
 ) t
 """
+_LATERAL_TOPK_SQL = _LATERAL_TOPK_TEMPLATE.format(
+    nation="nation", customer="customer"
+)
 
 
 def q_lateral_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery with per-group ORDER BY/LIMIT —
-    byte-identical SQL on both engines (see _LATERAL_TOPK_SQL)."""
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "customer"
+    byte-identical SQL on both engines (see _LATERAL_TOPK_SQL). The
+    tables are DataFrame arguments, not temp views: a caller's own
+    ``nation`` or ``customer`` view stays as it was."""
+    return spark.sql(
+        _LATERAL_TOPK_TEMPLATE,
+        nation=load_table(spark, sf_dir, "nation"),
+        customer=load_table(spark, sf_dir, "customer"),
     )
-    return spark.sql(_LATERAL_TOPK_SQL)
 
 
 QUERIES = {

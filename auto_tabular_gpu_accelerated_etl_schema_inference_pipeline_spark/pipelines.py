@@ -4,12 +4,20 @@ tokenize -> partitioned sink, each stage one of the engine's operators.
 
 Stage plan shapes (why this survives scale-up):
 1. quality filter: map-only column expressions over the documents scan;
-2. exact dedup: one shuffle keyed on a 16-byte digest (not the text);
-3. near-dedup: MinHash-LSH candidates + verified Jaccard (bounded
-   shuffles; see operators/dedup.py);
-4. numeric tokenize: sketch fit (KBs of driver state) + map-only
-   bucketize;
-5. sink: partitioned parquet so downstream reads prune.
+2. exact dedup: one shuffle keyed on a 16-byte digest (not the text),
+   then a semi-join that moves the surviving text-bearing rows once;
+3. one narrow pin: the survivors are projected once to (doc_id, lang,
+   source, f_tokens, f_chars, toks) and localCheckpointed — the only
+   plan that reads text, and the only place it is tokenized;
+4. near-dedup: MinHash-LSH candidates + verified Jaccard over the pin's
+   toks (bounded shuffles; see operators/dedup.py), then a left-anti
+   join over the narrow columns into a lazily persisted frame;
+5. numeric tokenize: sketch fit (KBs of driver state; its first job
+   fills the cache) + map-only bucketize;
+6. sink: partitioned parquet so downstream reads prune; the cache is
+   released after the write.
+No exchange, broadcast or cache below the sink carries text: 13 jobs
+per call on a 10k-document corpus at 4 cores.
 """
 
 from __future__ import annotations
@@ -17,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.dedup import minhash_near_dup_drop_ids
+from .operators.dedup import minhash_near_dup_drop_ids, pin_doc_tokens
 from .operators.model import QuantileBinModel
 from .operators.text import STOPWORDS
 from .session import load_spread, load_table
@@ -47,11 +55,12 @@ def dedup_near_remove(docs: DataFrame) -> DataFrame:
     (MinHash-LSH buckets, exact-Jaccard verified >= threshold against
     the representative only — linear in corpus size, vs the all-pairs
     formulation that is quadratic in near-dup cluster size; see
-    minhash_near_dup_drop_ids). Runs on the already-filtered/exact-
-    deduped corpus — near-dedup of rows earlier stages discarded is
-    wasted work."""
-    drop = minhash_near_dup_drop_ids(docs)
-    return docs.join(drop, "doc_id", "left_anti")
+    minhash_near_dup_drop_ids) from a pinned ``(doc_id, ..., toks)``
+    frame (see pin_doc_tokens). The survivors keep every column but
+    ``toks``. Runs on the already-filtered/exact-deduped corpus —
+    near-dedup of rows earlier stages discarded is wasted work."""
+    drop = minhash_near_dup_drop_ids(docs.select("doc_id", "toks"))
+    return docs.drop("toks").join(drop, "doc_id", "left_anti")
 
 
 def prepare_training_data(
@@ -71,45 +80,41 @@ def prepare_training_data(
     # digests, no text — and the winner set is a min-per-digest over
     # them; the text-bearing rows then move once through a semi-join
     # keyed on the unique doc_id (reps ⊆ quality survivors, so the raw
-    # scan needs no second quality-gate evaluation). The first pin is
-    # ``base`` below: reps feeds nothing but the semi-join that builds
-    # it, so the gate and digest run once without a pin of their own.
+    # scan needs no second quality-gate evaluation).
     fp = F.md5(F.lower(F.trim(F.col("text"))))
     keyed = quality_filter(docs).select("doc_id", fp.alias("fp"))
     reps = (
         keyed.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    # persist: the near-dedup stage references this frame from several
-    # self-join branches (signatures, bands, verification) — without the
-    # cache each branch re-runs the scan+semi-join lineage from parquet.
-    # persist (MEMORY_AND_DISK) rather than localCheckpoint: spill-safe,
-    # lineage preserved, and released explicitly below.
-    base = docs.join(reps, "doc_id", "left_semi").persist()
-    docs = base
-    if near_dedup:
-        # persist the near-deduped corpus too: fit, transform and the
-        # sink are three separate actions — uncached, EACH re-ran the
-        # whole MinHash drop computation (measured 3x ~10 s at sf0.1).
-        # Materialize it eagerly so the pre-dedup cache can be released
-        # before the downstream stages run.
-        docs = dedup_near_remove(base).persist()
-        docs.count()
-        base.unpersist()
-
-    # numeric side: tokenize document stats (the reference op applied to
-    # derived features) — fit on the filtered corpus, map-only transform
-    feats = docs.select(
-        "doc_id",
+    # The one pin: the survivors' text is read here once and leaves as
+    # the narrow (doc_id, lang, source, f_tokens, f_chars, toks). The
+    # MinHash stage reads toks from it; the anti-join, the cache, the
+    # fit and the sink see only the narrow columns, never text.
+    # f_tokens counts the raw split, not the distinct normalized toks.
+    feats = pin_doc_tokens(
+        docs.join(reps, "doc_id", "left_semi"),
         "lang",
         "source",
         F.size(F.split(F.col("text"), " ")).cast("double").alias("f_tokens"),
         F.length("text").cast("double").alias("f_chars"),
     )
+    if near_dedup:
+        # persist the near-deduped frame: the fit's two jobs and the sink
+        # are separate actions, and uncached EACH re-ran the MinHash drop
+        # computation (measured 3x ~10 s at sf0.1). Lazy: the fit's first
+        # job fills the cache, so no count() runs just to fill it.
+        feats = dedup_near_remove(feats).persist()
+    else:
+        feats = feats.drop("toks")
+
+    # numeric side: tokenize document stats (the reference op applied to
+    # derived features) — fit on the filtered corpus, map-only transform
     model = QuantileBinModel.fit(feats, ["f_tokens", "f_chars"], bins=20)
     tokenized = model.transform(feats, keep_cols=["doc_id", "lang", "source"])
     if out_path:
         tokenized.write.mode("overwrite").partitionBy("lang").parquet(out_path)
+        feats.unpersist()
     return tokenized
 
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 from collections import OrderedDict
+from contextlib import contextmanager
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
@@ -183,6 +184,25 @@ def forked_session(spark: SparkSession, purpose: str) -> SparkSession:
     for c in _FORK_SYNCED_CONFS:
         s.conf.set(c, spark.conf.get(c))
     return s
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set runtime ``confs`` for the body, then restore the caller's
+    state: a key the caller had set gets its value back, a key it had
+    left unset is unset again (setting the default value ``conf.get``
+    reads would turn the default into an explicit setting)."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def pinned_shuffle_width(spark: SparkSession) -> int:

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..session import parquet_schema
+from ..session import parquet_schema, scoped_confs
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -154,12 +154,11 @@ def footer_stats(
     (e.g. a column type without footer min/max) — Spark only pushes the
     aggregate when every row group can answer it.
     """
-    conf = spark.conf
-    prev_v1 = conf.get("spark.sql.sources.useV1SourceList")
-    prev_agg = conf.get("spark.sql.parquet.aggregatePushdown", "false")
-    conf.set("spark.sql.sources.useV1SourceList", "")
-    conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    try:
+    v2_aggregates = {
+        "spark.sql.sources.useV1SourceList": "",
+        "spark.sql.parquet.aggregatePushdown": "true",
+    }
+    with scoped_confs(spark, v2_aggregates):
         exprs = ["count(*) AS n_rows"]
         for c in cols:
             exprs += [f"min({c}) AS min_{c}", f"max({c}) AS max_{c}"]
@@ -168,9 +167,6 @@ def footer_stats(
         # evaluation never depends on the restored conf state
         row = spark.read.parquet(path).selectExpr(*exprs).collect()
         return spark.createDataFrame(row)
-    finally:
-        conf.set("spark.sql.sources.useV1SourceList", prev_v1)
-        conf.set("spark.sql.parquet.aggregatePushdown", prev_agg)
 
 
 def read_xml(

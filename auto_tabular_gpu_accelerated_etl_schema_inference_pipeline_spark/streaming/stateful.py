@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import scoped_confs
+
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
 STATE_SCHEMA = "n bigint, total double"
 
@@ -48,19 +50,13 @@ def run_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the bounded events stream through a per-user stateful
     counter; returns the final per-user totals (update mode — last emit
     per key wins; the bounded source makes that the complete answer)."""
-    from .windows import _events_stream
-
     # one state store is initialized per shuffle partition per micro-
     # batch; with 150 distinct keys 32 stores are pure setup overhead
     # (measured ~2 s of the query). A real deployment sizes this to key
     # cardinality / cluster width; the partition count is baked into the
     # checkpoint, so it is set before the query starts, like production.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
         return _run_stateful_inner(spark, sf_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def _run_stateful_inner(spark: SparkSession, sf_dir: str) -> DataFrame:

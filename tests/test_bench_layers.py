@@ -42,3 +42,33 @@ def test_bench_lane_records_from_rollup():
         "tasks": 0, "shuffle_write_bytes": 0, "spill_bytes": 0,
         "python_s": 0, "memo_hit": True,
     }
+
+
+def test_corpus_pipeline_calls_drop_ids_through_module_attribute(
+    spark, sf_dir, monkeypatch
+):
+    """perfbench traces the corpus op's MinHash stage by replacing
+    ``pipelines.minhash_near_dup_drop_ids``, and a traced run fails its
+    check if that span never fires. prepare_training_data must call the
+    stage through that module attribute, exactly once."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark import (
+        pipelines,
+    )
+
+    calls = []
+    real = pipelines.minhash_near_dup_drop_ids
+
+    def spy(toks_df):
+        calls.append(toks_df.columns)
+        return real(toks_df)
+
+    monkeypatch.setattr(pipelines, "minhash_near_dup_drop_ids", spy)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet())
+    try:
+        pipelines.prepare_training_data(spark, sf_dir)
+    finally:
+        rdds = persisted()
+        for rdd_id in set(rdds.keySet()) - before:
+            rdds.get(rdd_id).unpersist(False)
+    assert calls == [["doc_id", "toks"]]

@@ -232,6 +232,63 @@ def test_forked_session_syncs_confs_on_first_creation(spark):
         spark.conf.set(tz, orig_tz)
 
 
+def test_lanes_keep_callers_views(spark, sf_dir):
+    """Lanes that read fixture tables by name take them as spark.sql
+    DataFrame arguments, so a caller's own ``customer`` and ``nation``
+    views survive geo_hilbert_layout and lateral_join_topk. The caller
+    is a fresh session, so views other tests left cannot mask drift."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.geo import (
+        q_geo_hilbert_layout,
+    )
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.relational_ext2 import (
+        q_lateral_join_topk,
+    )
+
+    caller = spark.newSession()
+    caller.createDataFrame([(7,)], "mine int").createOrReplaceTempView("customer")
+    caller.createDataFrame([(8,)], "mine int").createOrReplaceTempView("nation")
+    assert q_geo_hilbert_layout(caller, sf_dir).count() > 0
+    assert q_lateral_join_topk(caller, sf_dir).count() > 0
+    assert [tuple(r) for r in caller.table("customer").collect()] == [(7,)]
+    assert [tuple(r) for r in caller.table("nation").collect()] == [(8,)]
+    views = {t.name for t in caller.catalog.listTables() if t.isTemporary}
+    assert views == {"customer", "nation"}
+
+
+def test_scoped_confs_restore_unset_keys(spark, sf_dir):
+    """footer_stats and the stateful streaming lane flip confs for their
+    own run and restore the caller's state: a key that was unset is
+    unset again (not set to the default it read), a key that was set
+    gets its value back."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.sources.readers import (
+        footer_stats,
+    )
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.streaming.stateful import (
+        run_stateful_user_totals,
+    )
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.sources.useV1SourceList",
+        "spark.sql.parquet.aggregatePushdown",
+    )
+    caller = spark.newSession()
+    caller.conf.unset("spark.sql.shuffle.partitions")
+
+    def state():
+        return {k: caller.conf.get(k, None) for k in keys}
+
+    assert state() == dict.fromkeys(keys)
+    path = os.path.join(sf_dir, "lineitem.parquet")
+    footer_stats(caller, path, ["l_quantity"]).collect()
+    assert state() == dict.fromkeys(keys)
+    assert run_stateful_user_totals(caller, sf_dir).count() > 0
+    assert state() == dict.fromkeys(keys)
+    caller.conf.set("spark.sql.parquet.aggregatePushdown", "false")
+    footer_stats(caller, path, ["l_quantity"]).collect()
+    assert caller.conf.get("spark.sql.parquet.aggregatePushdown") == "false"
+
+
 def test_pinned_shuffle_width_floor_and_cap(spark):
     """ADVICE r11: the anti-flap fixed-width exchanges (as-of, PPJoin
     verify, retrieval buckets) share one floored+capped derivation —

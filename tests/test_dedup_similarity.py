@@ -106,9 +106,8 @@ def test_minhash_drop_ids_subset_and_recall(spark, sf_dir):
     dropped doc has a verified smaller-id near-dup in the all-pairs set,
     and (b) near-complete: recall vs the all-pairs drop set stays high
     (representatives are themselves cluster members)."""
-    pairs = dedup.minhash_near_dup_pairs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-    )
+    toks = dedup.pin_doc_tokens(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    pairs = dedup.minhash_near_dup_pairs(toks)
     from pyspark.sql import functions as F
 
     all_pairs_drop = {
@@ -117,9 +116,7 @@ def test_minhash_drop_ids_subset_and_recall(spark, sf_dir):
     }
     lin_drop = {
         r["doc_id"]
-        for r in dedup.minhash_near_dup_drop_ids(
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
-        ).collect()
+        for r in dedup.minhash_near_dup_drop_ids(toks).collect()
     }
     assert lin_drop <= all_pairs_drop
     if all_pairs_drop:

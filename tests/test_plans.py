@@ -755,3 +755,78 @@ def test_asof_events_orders_pinned_smj_window_exchange(spark, sf_dir):
     assert "BroadcastExchange" not in final, final
     assert final.count("REPARTITION_BY_NUM") == 2, final
     assert final.count("ENSURE_REQUIREMENTS") == 1, final
+
+
+def _seq(s):
+    """A Scala Seq as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _plan_nodes(node):
+    """Every node of a physical plan, descending into AQE's current plan,
+    its query stages, and cached relations (innerChildren)."""
+    kids = _seq(node.children()) + _seq(node.innerChildren())
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        kids.append(node.executedPlan())
+    if cls.endswith("QueryStageExec"):
+        kids.append(node.plan())
+    yield node
+    for k in kids:
+        yield from _plan_nodes(k)
+
+
+def test_training_data_prep_moves_no_text(spark, sf_dir):
+    """prepare_training_data reads the survivors' text once, into its one
+    narrow pin (doc_id, lang, source, f_tokens, f_chars, toks). Below the
+    sink, no exchange, broadcast or cached relation carries a ``text``
+    attribute: the localCheckpoint cuts the scan-side plan that read it
+    out of the lineage, so the anti-join, the cache, the fit and the
+    sink move only the narrow columns."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.pipelines import (
+        prepare_training_data,
+    )
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet())
+    try:
+        out = prepare_training_data(spark, sf_dir)
+        nodes = list(_plan_nodes(out._jdf.queryExecution().executedPlan()))
+        kinds = {n.getClass().getSimpleName() for n in nodes}
+        assert "InMemoryRelation" in kinds, kinds
+        assert any("Exchange" in k for k in kinds), kinds
+        carrying = [
+            n.getClass().getSimpleName()
+            for n in nodes
+            if any(
+                w in n.getClass().getSimpleName()
+                for w in ("Exchange", "InMemory", "Broadcast")
+            )
+            and "text" in {a.name() for a in _seq(n.output())}
+        ]
+        assert not carrying, carrying
+    finally:
+        rdds = persisted()
+        for rdd_id in set(rdds.keySet()) - before:
+            rdds.get(rdd_id).unpersist(False)
+
+
+def test_minhash_drop_ids_one_b_id_exchange(spark, sf_dir):
+    """The candidate pairs are hashed on b_id once: that exchange serves
+    both the pair dedup (keyed on a_id, b_id ⊇ b_id) and the top-M window
+    partitioned by b_id, so no other exchange keys on a pair id."""
+    import re
+
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.dedup import (
+        minhash_near_dup_drop_ids,
+        pin_doc_tokens,
+    )
+
+    toks = pin_doc_tokens(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    plan = minhash_near_dup_drop_ids(toks)._jdf.queryExecution().executedPlan().toString()
+    keyed = [
+        k for k in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+        if re.search(r"\b[ab]_id#", k)
+    ]
+    assert len(keyed) == 1, plan[:3000]
+    assert re.match(r"b_id#\d+L?, \d+$", keyed[0]), keyed

@@ -229,17 +229,18 @@ def test_degenerate_inputs_dedup(spark):
 
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.dedup import (
         minhash_near_dup_drop_ids,
+        pin_doc_tokens,
     )
 
     empty = spark.createDataFrame(
         [], "doc_id bigint, text string, lang string, source string, n_chars bigint"
     )
-    assert minhash_near_dup_drop_ids(empty).count() == 0
+    assert minhash_near_dup_drop_ids(pin_doc_tokens(empty)).count() == 0
     one = spark.createDataFrame(
         [(1, "a b c d e f g h", "en", "s", 15)],
         "doc_id bigint, text string, lang string, source string, n_chars bigint",
     )
-    assert minhash_near_dup_drop_ids(one).count() == 0
+    assert minhash_near_dup_drop_ids(pin_doc_tokens(one)).count() == 0
 
 
 def test_fold_ops_partition_invariant(spark, sf_dir):
