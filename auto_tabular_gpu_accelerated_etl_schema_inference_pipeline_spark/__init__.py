@@ -9,8 +9,9 @@ plumbing.
 
 Design principles (SURVEY.md §7):
 - DataFrame/SQL first; Catalyst optimizes declaratively-expressed plans.
-- Exact, oracle-matchable variants (window ``ntile``) alongside scalable
-  variants (``approxQuantile`` + ``Bucketizer``) selected by data size.
+- Exact, oracle-matchable variants (window ``ntile``) alongside the
+  scalable lane (a ``percentile_approx`` fit + a JVM ``Bucketizer``
+  transform); the caller picks the lane, nothing selects one by size.
 - Python only at Arrow-batch granularity (pandas_udf / mapInPandas);
   never row-at-a-time UDFs in the hot path.
 """

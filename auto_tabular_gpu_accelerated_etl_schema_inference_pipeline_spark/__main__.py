@@ -29,11 +29,14 @@ import sys
 def _session(cpus: str):
     from pyspark.sql import SparkSession
 
+    from .session import HUGE_METHOD_LIMIT
+
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark-cli")
         .config("spark.sql.shuffle.partitions", str(min(int(cpus), 32)))
         .config("spark.sql.session.timeZone", "UTC")
+        .config(*HUGE_METHOD_LIMIT)
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import listing_memo
+from ..session import listing_memo, quote_name
 
 DEFAULT_BINS = 100
 
@@ -148,7 +148,8 @@ def fit_quantile_boundaries(
         return fit_quantile_boundaries_exact_distributed(df, cols, bins=bins)
     accuracy = max(100, min(int(1 / relative_error), 50_000))
     exprs = [
-        F.percentile_approx(c, probs_arr, F.lit(accuracy)).alias(c) for c in cols
+        F.percentile_approx(F.col(quote_name(c)), probs_arr, F.lit(accuracy)).alias(c)
+        for c in cols
     ]
     row = df.agg(*exprs).collect()[0]
     return {c: [float(x) for x in row[c]] for c in cols}
@@ -553,6 +554,15 @@ def load_boundaries(spark, path: str) -> dict[str, list[float]]:
     return {c: list(v) for c, v in bounds.items()}
 
 
+#: how a ``DoubleArrayArrayParam`` decodes the non-finite doubles from
+#: JSON, which has no literal for them
+_JSON_NONFINITE = {float("inf"): "Inf", float("-inf"): "-Inf"}
+
+
+def _json_double(x: float):
+    return "NaN" if x != x else _JSON_NONFINITE.get(x, x)
+
+
 def bucketize(
     df: DataFrame,
     boundaries: dict[str, list[float]],
@@ -572,39 +582,56 @@ def bucketize(
     NaN/null to +inf so nothing is "invalid" by the time the JVM
     Bucketizer sees it (handleInvalid='error' enforces that claim).
 
-    Map-only stage: no shuffle, fully codegen'd, scales linearly.
-    """
-    from pyspark.ml.feature import Bucketizer
+    Built in a fixed number of Py4J calls per column, none per split:
+    the JVM ``org.apache.spark.ml.feature.Bucketizer`` is created
+    directly and its splits and column params are set from JSON that
+    the params decode JVM-side (pyspark.ml would convert the 101 splits
+    of every column one element per call). The normalization and the
+    final ``CAST(... AS INT)`` are SQL text, one ``selectExpr`` each.
+    Column names are backquoted, so a dot or backquote in a name is
+    part of it; the Bucketizer only sees internal, position-named
+    columns.
 
+    Map-only stage: no shuffle, scales linearly.
+    """
+    import json
+
+    spark = df.sparkSession
     cols = list(boundaries)
-    splits_arr = [
-        [float("-inf")] + _interior_splits(boundaries[c]) + [float("inf")]
-        for c in cols
-    ]
+    keep = [quote_name(k) for k in (keep_cols or [])]
+    ins = [f"__bucketize_in_{i}" for i in range(len(cols))]
+    outs = [f"__bucketize_out_{i}" for i in range(len(cols))]
     # +0.0 canonicalizes -0.0 so the JVM's Double.compare total order
     # agrees with the kernels' IEEE comparison (see _interior_splits);
     # NaN/null -> +inf lands them in the last bucket (splits' top bucket
     # is upper-inclusive), matching np.searchsorted's NaN-at-end result
-    norm_in = [f"__{c}_norm" for c in cols]
-    normed = df.withColumns(
-        {
-            t: F.when(
-                F.col(c).isNull() | F.isnan(F.col(c)), F.lit(float("inf"))
-            ).otherwise(F.col(c) + F.lit(0.0))
-            for c, t in zip(cols, norm_in)
-        }
+    normed = df.selectExpr(
+        *keep,
+        *[
+            f"CASE WHEN {q} IS NULL OR isnan({q}) THEN CAST('Infinity' AS DOUBLE)"
+            f" ELSE {q} + 0.0D END AS {t}"
+            for q, t in zip(map(quote_name, cols), ins)
+        ],
     )
-    raw_out = [f"__{c}_bin_raw" for c in cols]
-    model = Bucketizer(
-        inputCols=norm_in, outputCols=raw_out, splitsArray=splits_arr,
-        handleInvalid="error",
+    splits = [
+        [float("-inf")] + _interior_splits(boundaries[c]) + [float("inf")]
+        for c in cols
+    ]
+    jb = spark._jvm.org.apache.spark.ml.feature.Bucketizer()
+    for param, value in (
+        (jb.inputCols(), ins),
+        (jb.outputCols(), outs),
+        (jb.splitsArray(), [[_json_double(x) for x in s] for s in splits]),
+    ):
+        jb.set(param, param.jsonDecode(json.dumps(value)))
+    jb.setHandleInvalid("error")
+    return DataFrame(jb.transform(normed._jdf), spark).selectExpr(
+        *keep,
+        *[
+            f"CAST({t} AS INT) AS {quote_name(f'{c}_bin')}"
+            for c, t in zip(cols, outs)
+        ],
     )
-    keep = keep_cols if keep_cols is not None else []
-    out = model.transform(normed).select(
-        *[F.col(k) for k in keep],
-        *[F.col(r).cast("int").alias(f"{c}_bin") for c, r in zip(cols, raw_out)],
-    )
-    return out
 
 
 def bucketize_pandas_udf(

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
-from ..session import ctx_cache, load_table
+from ..session import ctx_cache, load_table, quote_name
 from .quantile_bin import LINEITEM_MEASURES
 from .quantile_bin_queries import boundary_bin_oracle
 
@@ -73,9 +73,9 @@ def _value_counts(df: DataFrame) -> DataFrame:
     from functools import reduce
 
     cols = [
-        (F.col(f.name).cast("string"), StringType())
+        (F.col(quote_name(f.name)).cast("string"), StringType())
         if isinstance(f.dataType, ArrayType)
-        else (F.col(f.name), f.dataType)
+        else (F.col(quote_name(f.name)), f.dataType)
         for f in df.schema.fields
     ]
     slots = list(dict.fromkeys(t for _, t in cols))
@@ -246,21 +246,48 @@ def q_categorical_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dict_code(c: str, vocab: list[str | None]):
+def _sql_string(v: str | None) -> str:
+    """``v`` as SQL text: NULL, or a hex binary literal cast to string,
+    which reads back as ``v`` whatever quotes, backslashes or control
+    characters it holds and whatever the parser's escaping setting."""
+    return "NULL" if v is None else f"CAST(X'{v.encode().hex()}' AS STRING)"
+
+
+def _dict_code(c: str, vocab: list[str | None]) -> str:
     """Column ``c``'s code against its fitted vocabulary (see
-    infer_column_classes): the 1-based position, which is the dense_rank
-    the fitted column gave the value. A literal lookup, map-only — no
-    join, no window. A value the fit never saw gets a null code
-    (array_position's 0, not an error, so ANSI sessions serve it too);
-    null gets code 1 when the fit saw a null, else null."""
-    pos = F.array_position(
-        F.array(*[F.lit(v) for v in vocab]).cast("array<string>"),
-        F.col(c).cast("string"),
-    )
-    code = F.when(pos > 0, pos)
+    infer_column_classes), as SQL text: the 1-based position, which is
+    the dense_rank the fitted column gave the value. A literal lookup,
+    map-only — no join, no window. A value the fit never saw gets a null
+    code (array_position's 0, not an error, so ANSI sessions serve it
+    too); null gets code 1 when the fit saw a null, else null."""
+    q = quote_name(c)
+    values = ", ".join(map(_sql_string, vocab))
+    pos = f"array_position(CAST(array({values}) AS ARRAY<STRING>), CAST({q} AS STRING))"
+    code = f"CASE WHEN {pos} > 0 THEN {pos} END"
     if vocab[:1] == [None]:
-        code = F.when(F.col(c).isNull(), F.lit(1)).otherwise(code)
-    return code.cast("int").alias(f"{c}_code")
+        code = f"CASE WHEN {q} IS NULL THEN 1 ELSE {code} END"
+    return f"CAST({code} AS INT) AS {quote_name(f'{c}_code')}"
+
+
+def _token_sql(c: str, k: str, vocab: list[str | None] | None) -> str | None:
+    """SQL text of column ``c``'s token under its inferred class ``k``;
+    None for numeric_continuous, which bucketize bins."""
+    q = quote_name(c)
+    if k == "identifier":
+        return q
+    if k in _DICT_CLASSES:
+        return _dict_code(c, vocab)
+    if k == "timestamp":
+        # cast handles timestamp_ntz (session TZ pinned to UTC)
+        return (
+            f"CAST(unix_micros(CAST({q} AS TIMESTAMP)) / 86400000000L AS INT)"
+            f" AS {quote_name(f'{c}_daybucket')}"
+        )
+    if k == "text":
+        return f"md5({q}) AS {quote_name(f'{c}_fp')}"
+    if k in ("json", "vector"):
+        return f"CAST({q} AS STRING) AS {quote_name(f'{c}_raw')}"
+    return None
 
 
 def auto_tokenize(
@@ -290,10 +317,12 @@ def auto_tokenize(
     to every later batch. The batch is coded against the FITTED
     vocabulary, so codes are stable across batches; a value the fit
     never saw gets a null code. Serving runs no Spark job of its own:
-    the result is one map-only plan. A model that does not cover every
-    continuous column raises ``ValueError``: refitting the missing
-    columns would mix model vintages, and refitting them all would
-    silently drop the model the caller served."""
+    the result is one map-only plan, built as SQL text (one string per
+    column, so the vocabularies cost no Py4J call per value). A model
+    that does not cover every continuous column raises ``ValueError``:
+    refitting the missing columns would mix model vintages, and
+    refitting them all would silently drop the model the caller
+    served."""
     from .quantile_bin import bucketize, fit_quantile_boundaries
 
     if classes_df is None:
@@ -303,28 +332,14 @@ def auto_tokenize(
         r["column_name"] for r in model
         if r["inferred_class"] == "numeric_continuous"
     ]
-    out_cols = []
-    for r in model:
-        c, k = r["column_name"], r["inferred_class"]
-        if k == "identifier":
-            out_cols.append(F.col(c))
-        elif k in _DICT_CLASSES:
-            out_cols.append(_dict_code(c, r["vocab"]))
-        elif k == "timestamp":
-            # cast handles timestamp_ntz (session TZ pinned to UTC)
-            out_cols.append(
-                (F.unix_micros(F.col(c).cast("timestamp")) / F.lit(86_400_000_000))
-                .cast("int")
-                .alias(f"{c}_daybucket")
-            )
-        elif k == "text":
-            out_cols.append(F.md5(F.col(c)).alias(f"{c}_fp"))
-        elif k in ("json", "vector"):
-            out_cols.append(F.col(c).cast("string").alias(f"{c}_raw"))
+    tokens = [
+        t for r in model
+        if (t := _token_sql(r["column_name"], r["inferred_class"], r["vocab"]))
+    ]
     if not cont:
-        return df.select(*out_cols)
-    # Single-pass: run the Bucketizer over the full frame (keeping every
-    # original column so the non-continuous token expressions still
+        return df.selectExpr(*tokens)
+    # Single-pass: run the Bucketizer over the frame (keeping every
+    # non-continuous column so the other token expressions still
     # resolve), then select tokens + bin codes together. No join — works
     # for tables with no identifier column (the reference's canonical
     # all-numeric col_0..col_19 shape) and keeps the plan map-only.
@@ -338,8 +353,8 @@ def auto_tokenize(
                 f"the continuous columns {missing} of {table!r}"
             )
         bounds = {c: boundaries[c] for c in cont}  # serve path: no refit
-    binned = bucketize(df, bounds, keep_cols=list(df.columns))
-    return binned.select(*out_cols, *[F.col(f"{c}_bin") for c in cont])
+    binned = bucketize(df, bounds, keep_cols=[c for c in df.columns if c not in bounds])
+    return binned.selectExpr(*tokens, *[quote_name(f"{c}_bin") for c in cont])
 
 
 def q_auto_tokenize_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:

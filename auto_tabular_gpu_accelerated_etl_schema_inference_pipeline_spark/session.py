@@ -36,6 +36,14 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # SPARK_DRIVER_MEMORY when a workload genuinely needs more heap.
 _DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEMORY", "6g")
 
+#: Spark's documented value for HotSpot, which leaves every method over
+#: 8,000 bytecode bytes to the interpreter (``DontCompileHugeMethods``).
+#: A whole-stage-codegen subtree whose largest method is over it falls
+#: back to per-operator generated code, which the JIT does compile. The
+#: fused 24-column serve projection is such a subtree: 8,111 bytes.
+#: An engine rule, set on every session this package builds.
+HUGE_METHOD_LIMIT = ("spark.sql.codegen.hugeMethodLimit", "8000")
+
 
 def get_spark(
     app_name: str = "auto-tabular-spark",
@@ -52,6 +60,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config(*HUGE_METHOD_LIMIT)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Heap sizing: small, fully committed, pre-touched. This box's
         # hypervisor reclaims guest memory aggressively (measured: first
@@ -157,12 +166,14 @@ def session_memo(spark: SparkSession, key: str, sf_dir: str, build) -> DataFrame
 #: created (a harness that tunes these mid-process would otherwise bake
 #: its transient value into every later lane run). The timezone is the
 #: one the registry sets before every lane, so a forked lane renders
-#: instants exactly as its parent does.
+#: instants exactly as its parent does; the codegen method limit, so a
+#: forked lane runs the same JIT-compilable code as its parent.
 _FORK_SYNCED_CONFS = (
     "spark.sql.shuffle.partitions",
     "spark.sql.adaptive.enabled",
     "spark.sql.ansi.enabled",
     "spark.sql.session.timeZone",
+    HUGE_METHOD_LIMIT[0],
 )
 
 
@@ -370,6 +381,13 @@ def parquet_schema(spark: SparkSession, path: str):
         path,
         lambda: _infer_parquet_schema(spark, path),
     )
+
+
+def quote_name(name: str) -> str:
+    """``name`` as a SQL identifier: backquoted, any backquote doubled,
+    so a dot or a backquote in a column name is part of the name and
+    never a struct field access (``F.col("price.usd")`` parses one)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -42,6 +42,57 @@ def _table(spark, path, rows):
     return spark.read.parquet(path)
 
 
+#: the serving pool's float columns
+FLOATS = [f"col_{k}" for k in range(20)]
+
+
+def _serving_pool(spark, path):
+    """A 2,400-row frame shaped like the serving pool: an id, 20 floats,
+    a 12-level string, a 5-level int and a timestamp."""
+    spark.range(2400).select(
+        "id",
+        *[F.rand(seed=k).alias(c) for k, c in enumerate(FLOATS)],
+        F.concat(F.lit("seg_"), (F.col("id") % 12).cast("string")).alias("segment"),
+        (F.col("id") % 5 + 1).cast("int").alias("grade"),
+        F.timestamp_seconds(F.lit(1_600_000_000) + F.col("id") * 3600).alias("event_ts"),
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _served_pool(spark, path):
+    """(pool, classes frame, boundary model): a serving pool with the
+    serving model fitted on it, as auto_tokenize serves it."""
+    pool = _serving_pool(spark, path)
+    classes = schema_infer.infer_column_classes(spark, pool, "pool")
+    bounds = quantile_bin.fit_quantile_boundaries(pool, FLOATS)
+    return pool, classes, bounds
+
+
+def _round_trips(fn):
+    """(fn(), Py4J commands fn's thread sent to the JVM while it ran).
+    Py4J's finalizer thread, which frees the JVM references of
+    collected Python objects, is not counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    n = 0
+    caller = threading.get_ident()
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        nonlocal n
+        n += threading.get_ident() == caller
+        return send(self, command, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        out = fn()
+    finally:
+        ClientServerConnection.send_command = send
+    return out, n
+
+
 def test_serve_job_budget(spark, tmp_path):
     """Serving runs no job of its own: the classes frame collects
     driver-side (0 jobs); the boundary model loads with its known schema
@@ -232,15 +283,7 @@ def test_profiling_job_budget(spark, tmp_path):
     the dict-encoded columns' vocabularies. Checked on a 2-column frame
     and on a 24-column frame shaped like the serving pool (an id, 20
     floats, a 12-level string, a 5-level int, a timestamp)."""
-    path = str(tmp_path / "pool")
-    spark.range(2400).select(
-        "id",
-        *[F.rand(seed=k).alias(f"col_{k}") for k in range(20)],
-        F.concat(F.lit("seg_"), (F.col("id") % 12).cast("string")).alias("segment"),
-        (F.col("id") % 5 + 1).cast("int").alias("grade"),
-        F.timestamp_seconds(F.lit(1_600_000_000) + F.col("id") * 3600).alias("event_ts"),
-    ).write.parquet(path)
-    pool = spark.read.parquet(path)
+    pool = _serving_pool(spark, str(tmp_path / "pool"))
     for df in (pool.select("segment", "grade"), pool):
         classes, n = _jobs(
             spark, lambda: schema_infer.infer_column_classes(spark, df, "pool")
@@ -310,3 +353,121 @@ def test_profiling_zero_rows_under_ansi(spark, tmp_path):
         "f1": (0, 0, "numeric_continuous", None),
         "f2": (0, 0, "numeric_continuous", None),
     }
+
+
+def test_serve_py4j_budget(spark, tmp_path):
+    """Building a served frame costs a few Py4J round trips per column
+    and none per split point or vocabulary value: bucketize on 20
+    columns of 101 boundaries (70 measured), and serve-mode
+    auto_tokenize on the 24-column serving pool (112). pyspark.ml's
+    Bucketizer converted the splits one element per call and F.lit
+    cost a call per vocabulary value: ~5,700 and ~6,300 calls."""
+    pool, classes, bounds = _served_pool(spark, str(tmp_path / "pool"))
+    _, n = _round_trips(lambda: quantile_bin.bucketize(pool, bounds, keep_cols=["id"]))
+    assert n <= 80, n
+    _, n = _round_trips(
+        lambda: schema_infer.auto_tokenize(
+            spark, pool, "pool", classes_df=classes, boundaries=bounds
+        )
+    )
+    assert n <= 125, n
+
+
+def _codegen_method_sizes(spark, plan):
+    """The largest generated method, in bytecode bytes, of every
+    WholeStageCodegenExec in the physical ``plan``: its code generated
+    and compiled the way the node compiles it when it executes."""
+    codegen = getattr(
+        spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen, "CodeGenerator$"
+    ).__getattr__("MODULE$")
+    sizes, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if kind.endswith("QueryStageExec"):
+            todo.append(node.plan())
+            continue
+        if kind == "WholeStageCodegenExec":
+            stats = codegen.compile(node.doCodeGen()._2())._2()
+            sizes.append(stats.maxMethodCodeSize())
+        children = node.children().iterator()
+        while children.hasNext():
+            todo.append(children.next())
+    return sizes
+
+
+def test_serve_plan_runs_jit_compilable_code(spark, tmp_path):
+    """HotSpot leaves a method over 8,000 bytecode bytes to the
+    interpreter. Every whole-stage-codegen subtree of the 24-column
+    serve plan whose largest method is over that is also over the
+    session's spark.sql.codegen.hugeMethodLimit, so Spark runs it as
+    per-operator code instead; the limit itself is at most 8,000 on
+    the session and on its forked sessions."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (
+        forked_session,
+    )
+
+    key = "spark.sql.codegen.hugeMethodLimit"
+    limit = int(spark.conf.get(key))
+    pool, classes, bounds = _served_pool(spark, str(tmp_path / "pool"))
+    out = schema_infer.auto_tokenize(
+        spark, pool, "pool", classes_df=classes, boundaries=bounds
+    )
+    sizes = _codegen_method_sizes(spark, out._jdf.queryExecution().executedPlan())
+    assert sizes
+    assert all(size > limit for size in sizes if size > 8000), (sizes, limit)
+    assert out.count() == pool.count()
+    assert limit <= 8000
+    assert int(forked_session(spark, "t.codegen_limit").conf.get(key)) == limit
+
+
+def test_dotted_and_backquoted_column_names(spark):
+    """A dot or a backquote in a column name is part of the name, not a
+    struct field access: bucketize bins ``price.usd`` and ``we`ird``
+    as np.searchsorted does (null and NaN in the last bin), and
+    infer_column_classes and auto_tokenize profile and code them."""
+    import numpy as np
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("price.usd", T.DoubleType()),
+        T.StructField("we`ird", T.DoubleType()),
+        T.StructField("seg.name", T.StringType()),
+    ])
+    rows = [
+        (
+            i,
+            (i * 37 % 101) / 7.0 - 3.0,
+            None if i % 9 == 0 else float("nan") if i % 11 == 0 else -0.0 if i % 7 == 0 else float(i % 13),
+            "ab"[i % 2],
+        )
+        for i in range(200)
+    ]
+    df = spark.createDataFrame(rows, schema)
+    cont = ["price.usd", "we`ird"]
+    bounds = quantile_bin.fit_quantile_boundaries(df, cont, bins=10)
+    binned = {
+        r["id"]: r for r in quantile_bin.bucketize(df, bounds, keep_cols=["id", "seg.name"]).collect()
+    }
+    for j, c in enumerate(cont, start=1):
+        interior = np.asarray(quantile_bin._interior_splits(bounds[c]))
+        values = np.asarray([np.nan if r[j] is None else r[j] for r in rows]) + 0.0
+        want = np.searchsorted(interior, values, side="right")
+        assert [binned[r[0]][f"{c}_bin"] for r in rows] == want.tolist(), c
+    classes = schema_infer.infer_column_classes(spark, df, "t")
+    assert {r["column_name"]: r["inferred_class"] for r in classes.collect()} == {
+        "id": "identifier",
+        "price.usd": "numeric_continuous",
+        "we`ird": "numeric_continuous",
+        "seg.name": "categorical",
+    }
+    served = schema_infer.auto_tokenize(spark, df, "t", classes_df=classes, boundaries=bounds)
+    assert served.columns == ["id", "seg.name_code", "price.usd_bin", "we`ird_bin"]
+    for r in served.collect():
+        b = binned[r["id"]]
+        assert r["seg.name_code"] == {"a": 1, "b": 2}[b["seg.name"]]
+        assert (r["price.usd_bin"], r["we`ird_bin"]) == (b["price.usd_bin"], b["we`ird_bin"])
