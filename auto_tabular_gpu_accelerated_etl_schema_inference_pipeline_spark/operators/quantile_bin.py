@@ -110,10 +110,11 @@ def exact_quantile_bin_grouped(
             "total order within each group"
         )
     keys = keys if keys is not None else []
-    out = [F.col(k) for k in keys] + [F.col(g) for g in group_cols]
+    groups = [F.col(quote_name(g)) for g in group_cols]
+    out = [F.col(quote_name(k)) for k in keys] + groups
     for c in cols:
-        w = Window.partitionBy(*group_cols).orderBy(
-            F.col(c).asc(), *[F.col(t).asc() for t in tiebreak]
+        w = Window.partitionBy(*groups).orderBy(
+            *[F.col(quote_name(t)).asc() for t in [c, *tiebreak]]
         )
         out.append(
             (F.ntile(bins).over(w) - F.lit(1)).cast("int").alias(f"{c}_bin")
@@ -350,11 +351,11 @@ def _value_histogram(df: DataFrame, cols: list[str]) -> DataFrame:
     double: nulls dropped (percentile/window semantics), ``+ 0.0``
     canonicalizes -0.0 so it counts with +0.0. The shuffle key is the
     distinct value set, already compressed."""
-    long = df.selectExpr(
-        "stack({}, {}) AS (col, value)".format(
-            len(cols),
-            ", ".join(f"'{c}', CAST({c} AS DOUBLE)" for c in cols),
-        )
+    long = df.select(
+        F.stack(
+            F.lit(len(cols)),
+            *[x for c in cols for x in (F.lit(c), F.col(quote_name(c)).cast("double"))],
+        ).alias("col", "value")
     ).filter(F.col("value").isNotNull())
     long = long.withColumn("value", F.col("value") + F.lit(0.0))
     return long.groupBy("col", "value").agg(F.count(F.lit(1)).alias("cnt"))
@@ -441,7 +442,7 @@ def fit_quantile_boundaries_head_sample(
         for f in files:
             part = (
                 spark.read.schema(df.schema).parquet(f)
-                .select(cols).limit(sample_rows - got).toPandas()
+                .select(*map(quote_name, cols)).limit(sample_rows - got).toPandas()
             )
             frames.append(part)
             got += len(part)
@@ -451,7 +452,7 @@ def fit_quantile_boundaries_head_sample(
 
         pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
     if pdf is None:  # not a plain file scan (e.g. a derived frame)
-        pdf = df.select(cols).limit(sample_rows).toPandas()
+        pdf = df.select(*map(quote_name, cols)).limit(sample_rows).toPandas()
     probs = np.linspace(0.0, 1.0, bins + 1)
     return {c: [float(x) for x in np.quantile(pdf[c].to_numpy(), probs)] for c in cols}
 
@@ -468,8 +469,8 @@ def cumulative_value_counts(df: DataFrame, col: str) -> DataFrame:
     Nulls are excluded (window functions would rank them; callers decide
     null policy)."""
     mm = df.agg(
-        F.min(F.col(col).cast("double")).alias("lo"),
-        F.max(F.col(col).cast("double")).alias("hi"),
+        F.min(F.col(quote_name(col)).cast("double")).alias("lo"),
+        F.max(F.col(quote_name(col)).cast("double")).alias("hi"),
     ).collect()[0]
     lo = float(mm["lo"]) if mm["lo"] is not None else 0.0
     hi = float(mm["hi"]) if mm["hi"] is not None else 0.0
@@ -661,10 +662,10 @@ def bucketize_pandas_udf(
             use_gpu = False
 
     keep = keep_cols if keep_cols is not None else []
-    out_exprs = [F.col(k) for k in keep]
+    out_exprs = [F.col(quote_name(k)) for k in keep]
     for c in list(boundaries):
         udf = make_searchsorted_udf(_interior_splits(boundaries[c]), use_gpu)
-        out_exprs.append(udf(F.col(c)).alias(f"{c}_bin"))
+        out_exprs.append(udf(F.col(quote_name(c))).alias(f"{c}_bin"))
     return df.select(*out_exprs)
 
 
@@ -686,34 +687,35 @@ def bucketize_map_in_arrow(
 
     cols = list(boundaries)
     keep = keep_cols if keep_cols is not None else []
-    interiors = {
-        c: np.asarray(_interior_splits(boundaries[c]), dtype=np.float64)
-        for c in cols
-    }
+    interiors = [
+        np.asarray(_interior_splits(boundaries[c]), dtype=np.float64) for c in cols
+    ]
     out_fields = [(k, df.schema[k].dataType.simpleString()) for k in keep] + [
         (f"{c}_bin", "int") for c in cols
     ]
-    schema = ", ".join(f"{n} {t}" for n, t in out_fields)
+    schema = ", ".join(f"{quote_name(n)} {t}" for n, t in out_fields)
+    names = [n for n, _ in out_fields]
 
     def kernel(batches):
         import pyarrow as pa
 
         for batch in batches:
-            arrays = [batch.column(batch.schema.get_field_index(k)) for k in keep]
-            names = list(keep)
-            for c in cols:
-                vals = batch.column(batch.schema.get_field_index(c)).to_numpy(
-                    zero_copy_only=False
-                )  # nulls -> NaN; NaN sorts after every boundary -> last bin
+            arrays = batch.columns[: len(keep)]
+            for i, interior in enumerate(interiors, start=len(keep)):
+                # nulls -> NaN; NaN sorts after every boundary -> last bin
+                vals = batch.column(i).to_numpy(zero_copy_only=False)
                 vals = vals + 0.0  # canonicalize -0.0 (see _interior_splits)
-                bins = np.searchsorted(interiors[c], vals, side="right").astype(
-                    "int32"
-                )
+                bins = np.searchsorted(interior, vals, side="right").astype("int32")
                 arrays.append(pa.array(bins))
-                names.append(f"{c}_bin")
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    return df.select(*keep, *cols).mapInArrow(kernel, schema=schema)
+    # position-named inputs: mapInArrow resolves each input column by
+    # name through a parser that rejects a backquote in it
+    ins = [
+        F.col(quote_name(c)).alias(f"__bucketize_in_{i}")
+        for i, c in enumerate(keep + cols)
+    ]
+    return df.select(*ins).mapInArrow(kernel, schema=schema)
 
 
 # ---------------------------------------------------------------------------

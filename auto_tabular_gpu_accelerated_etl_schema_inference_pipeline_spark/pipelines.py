@@ -67,7 +67,6 @@ def prepare_training_data(
     spark: SparkSession,
     sf_dir: str,
     out_path: str | None = None,
-    near_dedup: bool = True,
 ) -> DataFrame:
     """documents + lineitem-derived numeric features -> one tokenized,
     deduped, quality-filtered training table."""
@@ -99,14 +98,11 @@ def prepare_training_data(
         F.size(F.split(F.col("text"), " ")).cast("double").alias("f_tokens"),
         F.length("text").cast("double").alias("f_chars"),
     )
-    if near_dedup:
-        # persist the near-deduped frame: the fit's two jobs and the sink
-        # are separate actions, and uncached EACH re-ran the MinHash drop
-        # computation (measured 3x ~10 s at sf0.1). Lazy: the fit's first
-        # job fills the cache, so no count() runs just to fill it.
-        feats = dedup_near_remove(feats).persist()
-    else:
-        feats = feats.drop("toks")
+    # persist the near-deduped frame: the fit's two jobs and the sink
+    # are separate actions, and uncached EACH re-ran the MinHash drop
+    # computation (measured 3x ~10 s at sf0.1). Lazy: the fit's first
+    # job fills the cache, so no count() runs just to fill it.
+    feats = dedup_near_remove(feats).persist()
 
     # numeric side: tokenize document stats (the reference op applied to
     # derived features) — fit on the filtered corpus, map-only transform

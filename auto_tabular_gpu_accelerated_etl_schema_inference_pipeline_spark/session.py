@@ -412,24 +412,28 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet: ts arrives either as a native TIMESTAMP (fixture
-    generations that write micros) or as TIMESTAMP(NANOS), which Spark's
-    vectorized parquet reader rejects — for the latter, read nanos as long
-    (legacy conf, runtime-settable) and truncate to microsecond timestamps,
-    exactly what DuckDB's reader does, so oracle comparisons line up. `div`
-    (integer division) is load-bearing there: ns epoch values ~1.7e18 lose
-    precision through double division. The branch is schema-driven, so the
-    same code works against both fixture vintages."""
+    """events.parquet, read with nanos-as-long (a legacy conf, runtime-
+    settable) because Spark's vectorized parquet reader rejects
+    TIMESTAMP(NANOS), and its ts normalized by normalize_event_ts."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return normalize_event_ts(load_table(spark, sf_dir, "events"))
+
+
+def normalize_event_ts(events: DataFrame) -> DataFrame:
+    """The events ``ts`` as a microsecond TIMESTAMP, for a batch read or a
+    stream. ts arrives either as a native timestamp (fixture generations
+    that write micros) or, read nanos-as-long, as TIMESTAMP(NANOS) epoch
+    nanoseconds, which are truncated to microseconds exactly as DuckDB's
+    reader does, so oracle comparisons line up. `div` (integer division)
+    is load-bearing there: ns epoch values ~1.7e18 lose precision through
+    double division. The branch is schema-driven, so the same code works
+    against both fixture vintages."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
-    df = load_table(spark, sf_dir, "events")
-    if isinstance(df.schema["ts"].dataType, LongType):  # nanos-as-long vintage
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        # native micros arrive as TIMESTAMP_NTZ; normalize to TIMESTAMP
-        # (session tz is UTC, so the instant is unchanged) — downstream
-        # ops (unix_micros, windows) and the oracle expect TIMESTAMP
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    if isinstance(events.schema["ts"].dataType, LongType):  # nanos-as-long vintage
+        return events.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    # native micros arrive as TIMESTAMP_NTZ; normalize to TIMESTAMP
+    # (session tz is UTC, so the instant is unchanged) — downstream
+    # ops (unix_micros, windows) and the oracle expect TIMESTAMP
+    return events.withColumn("ts", F.col("ts").cast("timestamp"))

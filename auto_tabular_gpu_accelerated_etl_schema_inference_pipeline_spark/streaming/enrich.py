@@ -21,40 +21,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import load_table
-from .windows import _events_stream
+from .run import drain_to_memory, table_stream
+from .windows import sum_value
 
 
 def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events stream ⋈ broadcast(customer) on user_id = c_custkey,
     aggregated per (c_mktsegment, event_type): row counts and exact
     decimal value sums. Complete-mode memory sink, drained."""
-    ev = _events_stream(spark, sf_dir)
     cust = F.broadcast(
         load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     )
-    agg = (
-        ev.join(cust, ev.user_id == cust.c_custkey)
+    return drain_to_memory(
+        spark,
+        lambda: table_stream(spark, sf_dir, "events")
+        .join(cust, F.col("user_id") == cust.c_custkey)
         .groupBy("c_mktsegment", "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("sum_value"),
-            # exact count-distinct is unsupported on streams (it can't be
-            # incrementally merged); approx_count_distinct is the
-            # streaming-native sketch — kept OUT of the oracle columns
-        )
+        # exact count-distinct is unsupported on streams (it can't be
+        # incrementally merged); approx_count_distinct is the
+        # streaming-native sketch — kept OUT of the oracle columns
+        .agg(F.count("*").alias("n_events"), sum_value()),
+        "complete",
     )
-    name = "stream_static_enrich_out"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
 
 
 QUERIES = {"streaming_static_enrich": q_streaming_static_enrich}

@@ -21,12 +21,14 @@ equality below proves the merge arithmetic itself.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
-import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import load_events, parquet_schema, scoped_confs
+from .run import STREAM_CONFS, built_once, run_to_end, table_stream
 
 
 def _current_table(target_dir: str, spark: SparkSession):
@@ -106,41 +108,39 @@ def _merge_batch(target_dir: str, spark: SparkSession):
     return apply
 
 
-def run_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drain the bounded events stream through the merge sink; return the
-    final target table (decimal partials widened to double at the end —
-    the cross-engine-exact pattern used by incremental_user_totals)."""
-    from .windows import _events_stream
-
-    ev = _events_stream(spark, sf_dir).select("user_id", "value")
-    target_dir = tempfile.mkdtemp(prefix="febatch_target_")
-    ckpt = os.path.join(target_dir, "ckpt")
-    q = (
-        ev.writeStream.foreachBatch(_merge_batch(target_dir, spark))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-    out = (
-        _current_table(target_dir, spark)
-        .select(
-            "user_id",
-            "n_events",
-            F.round(F.col("sum_value").cast("double"), 2).alias("sum_value"),
+def _drain_merged(
+    spark: SparkSession,
+    stream: Callable[[], DataFrame],
+    merge: Callable[[str, SparkSession], Callable[[DataFrame, int], None]],
+    project: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Run ``stream()`` to its end (availableNow) through the foreachBatch
+    sink ``merge(target_dir, spark)`` and return ``project`` of the final
+    target table, materialized: the target dir is removed on return."""
+    with tempfile.TemporaryDirectory(prefix="febatch_target_") as target:
+        run_to_end(
+            spark,
+            lambda: stream()
+            .writeStream.foreachBatch(merge(target, spark))
+            .trigger(availableNow=True),
         )
-        # materialize before the temp dir can be cleaned up
-        .localCheckpoint()
-    )
-    shutil.rmtree(target_dir, ignore_errors=True)
-    return out
+        return project(_current_table(target, spark)).localCheckpoint()
 
 
 def q_streaming_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_foreach_batch_upsert(spark, sf_dir)
+    """Drain the bounded events stream through the merge sink; return the
+    final target table (decimal partials widened to double at the end —
+    the cross-engine-exact pattern used by incremental_user_totals)."""
+    return _drain_merged(
+        spark,
+        lambda: table_stream(spark, sf_dir, "events").select("user_id", "value"),
+        _merge_batch,
+        lambda t: t.select(
+            "user_id",
+            "n_events",
+            F.round(F.col("sum_value").cast("double"), 2).alias("sum_value"),
+        ),
+    )
 
 
 def _cdc_merge_batch(target_dir: str, spark: SparkSession):
@@ -193,52 +193,29 @@ def q_streaming_cdc_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split the fixture into 3 files and feed them ONE PER MICRO-BATCH
     # (maxFilesPerTrigger=1): the greatest-struct merge then actually
     # runs twice across batch boundaries — a single-batch drain would
-    # never exercise the associativity the docstring claims
-    import hashlib
+    # never exercise the associativity the docstring claims. The split
+    # holds the NORMALIZED frame (ts already a micros timestamp), so the
+    # stream schema is vintage-independent.
+    def split(d: str) -> None:
+        load_events(spark, sf_dir).select(
+            "event_id", "ts", "user_id", "event_type", "value"
+        ).repartition(3).write.parquet(d)
 
-    from ..session import load_events
-
-    batch_ev = load_events(spark, sf_dir).select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    src = os.path.join(sf_dir, "events.parquet")
-    tag = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:12]
-    split_dir = os.path.join(
-        tempfile.gettempdir(), f"events_split3_{tag}"
-    )
-    if not os.path.exists(os.path.join(split_dir, "_SUCCESS")):
-        # write the NORMALIZED frame (ts already micros-timestamp), so
-        # the stream schema is vintage-independent
-        batch_ev.repartition(3).write.mode("overwrite").parquet(split_dir)
-    ev = (
-        spark.readStream.schema(batch_ev.schema)
+    with scoped_confs(spark, STREAM_CONFS):  # load_events sets nanosAsLong
+        split_dir = built_once(os.path.join(sf_dir, "events.parquet"), "events_split3", split)
+    return _drain_merged(
+        spark,
+        lambda: spark.readStream.schema(parquet_schema(spark, split_dir))
         .option("maxFilesPerTrigger", 1)
-        .parquet(split_dir)
-    )
-    target_dir = tempfile.mkdtemp(prefix="cdclatest_target_")
-    ckpt = os.path.join(target_dir, "ckpt")
-    q = (
-        ev.writeStream.foreachBatch(_cdc_merge_batch(target_dir, spark))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-    out = (
-        _current_table(target_dir, spark)
-        .select(
+        .parquet(split_dir),
+        _cdc_merge_batch,
+        lambda t: t.select(
             "user_id",
             F.col("rec.event_type").alias("last_state"),
             F.col("rec.value").alias("last_value"),
             F.timestamp_micros(F.col("rec.ts_us")).alias("last_ts"),
-        )
-        .localCheckpoint()
+        ),
     )
-    shutil.rmtree(target_dir, ignore_errors=True)
-    return out
 
 
 TOPK_K = 10
@@ -277,40 +254,24 @@ def q_streaming_topk_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see _topk_batch). The oracle is the batch top-10 over the same
     data — equality proves the merge loses nothing across micro-batch
     splits."""
-    from .windows import _events_stream
-
-    ev = _events_stream(spark, sf_dir).select(
-        "event_id",
-        "user_id",
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-    target_dir = tempfile.mkdtemp(prefix="topk_target_")
-    ckpt = os.path.join(target_dir, "ckpt")
-    q = (
-        ev.writeStream.foreachBatch(_topk_batch(target_dir, spark))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     from pyspark.sql import Window
 
     w = Window.orderBy(F.desc("cents"), "event_id")
-    out = (
-        _current_table(target_dir, spark)
-        .select(
+    return _drain_merged(
+        spark,
+        lambda: table_stream(spark, sf_dir, "events").select(
+            "event_id",
+            "user_id",
+            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        ),
+        _topk_batch,
+        lambda t: t.select(
             "event_id",
             "user_id",
             "cents",
             F.row_number().over(w).cast("int").alias("rnk"),
-        )
-        .localCheckpoint()
+        ),
     )
-    shutil.rmtree(target_dir, ignore_errors=True)
-    return out
 
 
 def _hll_register_table(df: DataFrame) -> DataFrame:
@@ -386,81 +347,39 @@ def q_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per batch, one map-side-combinable register aggregate
     (256 rows out) and a 256-row merge — streaming state is the sketch,
     kilobytes regardless of stream volume."""
-    import hashlib
-
     from ..operators.sketches import HLL_ALPHA_M2, HLL_M
 
     # pre-split the fixture into 4 deterministic files (by user_id mod 4)
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    stat = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{stat.st_size}:{int(stat.st_mtime)}".encode()
-    ).hexdigest()[:12]
-    split_dir = os.path.join(tempfile.gettempdir(), f"events_4split_{tag}")
-    if not os.path.exists(split_dir):
-        # build in a process-unique dir and RENAME into place: a plain
-        # marker-file guard races across processes (a second builder's
-        # mode("overwrite") deletes files out from under the first
-        # process's running stream); rename is atomic, and the loser of
-        # the race just discards its build. uuid suffix: pid alone is
-        # shared by same-process threads and retries
-        build = f"{split_dir}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        full = spark.read.parquet(src)
-        for i in range(4):
-            (
-                full.filter(F.expr(f"pmod(user_id, 4) = {i}"))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(build, f"part_{i}"))
-            )
-        try:
-            os.rename(build, split_dir)
-        except OSError:  # another process won the race
-            shutil.rmtree(build, ignore_errors=True)
-    from ..session import parquet_schema
+    src = os.path.join(sf_dir, "events.parquet")
 
-    schema = parquet_schema(spark, src)  # memoized footer read (r13)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(split_dir)
-        .select("user_id")
-    )
-    target_dir = tempfile.mkdtemp(prefix="hll_stream_target_")
-    ckpt = os.path.join(target_dir, "ckpt")
-    q = (
-        stream.writeStream.foreachBatch(_hll_merge_batch(target_dir, spark))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-    regs = _current_table(target_dir, spark)
-    agg = regs.agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("r").cast("double"))).alias(
-            "z_present"
-        ),
-        F.count(F.lit(1)).alias("m_present"),
-        F.sum((F.col("r") == 0).cast("bigint")).alias("zeros_present"),
-    )
-    z = F.col("z_present") + (F.lit(HLL_M) - F.col("m_present"))
-    zeros = F.col("zeros_present") + (F.lit(HLL_M) - F.col("m_present"))
-    raw = F.lit(HLL_ALPHA_M2) / z
-    est = F.when(
-        (raw <= 2.5 * HLL_M) & (zeros > 0),
-        F.lit(float(HLL_M))
-        * F.log(F.lit(float(HLL_M)) / zeros.cast("double")),
-    ).otherwise(raw)
-    exact = spark.read.parquet(src).agg(
-        F.countDistinct("user_id").cast("bigint").alias("n_exact")
-    )
-    out = (
-        exact.crossJoin(F.broadcast(agg))
-        .select(
+    def split(d: str) -> None:
+        full = spark.read.schema(schema).parquet(src)
+        for i in range(4):
+            full.filter(F.expr(f"pmod(user_id, 4) = {i}")).coalesce(1).write.parquet(
+                os.path.join(d, f"part_{i}")
+            )
+
+    with scoped_confs(spark, STREAM_CONFS):
+        schema = parquet_schema(spark, src)
+        split_dir = built_once(src, "events_4split", split)
+
+    def estimate(regs: DataFrame) -> DataFrame:
+        agg = regs.agg(
+            F.sum(F.pow(F.lit(2.0), -F.col("r").cast("double"))).alias("z_present"),
+            F.count(F.lit(1)).alias("m_present"),
+            F.sum((F.col("r") == 0).cast("bigint")).alias("zeros_present"),
+        )
+        z = F.col("z_present") + (F.lit(HLL_M) - F.col("m_present"))
+        zeros = F.col("zeros_present") + (F.lit(HLL_M) - F.col("m_present"))
+        raw = F.lit(HLL_ALPHA_M2) / z
+        est = F.when(
+            (raw <= 2.5 * HLL_M) & (zeros > 0),
+            F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / zeros.cast("double")),
+        ).otherwise(raw)
+        exact = spark.read.schema(schema).parquet(src).agg(
+            F.countDistinct("user_id").cast("bigint").alias("n_exact")
+        )
+        return exact.crossJoin(F.broadcast(agg)).select(
             "n_exact",
             F.round(est * 1000).cast("bigint").alias("hll_estimate_milli"),
             F.round(
@@ -471,10 +390,17 @@ def q_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("err_ppm"),
         )
-        .localCheckpoint()  # materialize before target_dir cleanup
+
+    return _drain_merged(
+        spark,
+        lambda: spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(split_dir)
+        .select("user_id"),
+        _hll_merge_batch,
+        estimate,
     )
-    shutil.rmtree(target_dir, ignore_errors=True)
-    return out
 
 
 QUERIES = {

@@ -24,14 +24,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .windows import _events_stream
+from .run import drain_to_memory, table_stream
 
 
-def click_purchase_joined(ev: DataFrame) -> DataFrame:
+def click_purchase_joined(ev: DataFrame, how: str) -> DataFrame:
     """The production join plan, factored so tests can drive it from
-    their own (multi-batch, time-advancing) stream: clicks ⋈ same-user
-    purchases within [click.ts, click.ts + 2 h], both sides watermarked
-    1 h. State-eviction bound pinned by
+    their own (multi-batch, time-advancing) stream: clicks joined
+    (``how``: inner or left_outer) to same-user purchases within
+    [click.ts, click.ts + 2 h], both sides watermarked 1 h. State-eviction
+    bound pinned by
     tests/test_streaming.py::test_stream_join_state_is_evicted."""
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -56,8 +57,16 @@ def click_purchase_joined(ev: DataFrame) -> DataFrame:
         (F.col("c_user") == F.col("p_user"))
         & (F.col("p_ts") >= F.col("c_ts"))
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 2 HOURS")),
-        "inner",
+        how,
     ).select("click_id", "purchase_id", F.col("c_user").alias("user_id"))
+
+
+def _drain_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    return drain_to_memory(
+        spark,
+        lambda: click_purchase_joined(table_stream(spark, sf_dir, "events"), how),
+        "append",
+    )
 
 
 def q_streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,19 +74,7 @@ def q_streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFra
     [click.ts, click.ts + 2 hours] — both sides streams, both
     watermarked 1 hour. Output is ids + user (timestamps omitted: the
     ns->us truncation is engine-side, ids are the stable identity)."""
-    joined = click_purchase_joined(_events_stream(spark, sf_dir))
-    name = "stream_click_purchase_out"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _drain_join(spark, sf_dir, "inner")
 
 
 def q_streaming_click_purchase_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -96,44 +93,7 @@ def q_streaming_click_purchase_left_join(spark: SparkSession, sf_dir: str) -> Da
     purchase could still arrive; the oracle reproduces the same cutoff
     relationally, so streaming outer-join semantics are pinned
     bit-exact, including WHICH rows are withheld."""
-    ev = _events_stream(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 2 HOURS")),
-        "left_outer",
-    ).select("click_id", "purchase_id", F.col("c_user").alias("user_id"))
-    name = "stream_click_purchase_left_out"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _drain_join(spark, sf_dir, "left_outer")
 
 
 QUERIES = {

@@ -21,48 +21,30 @@ complete-mode aggregation.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .windows import _events_stream
+from .run import built_once, run_to_end, table_stream
 
 
 def _checkpoint_for(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per fixture) a checkpoint whose operator-0 state is
+    """The checkpoint (built once per fixture) whose operator-0 state is
     the per-event_type running count over the whole events table."""
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    stat = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{stat.st_size}:{int(stat.st_mtime)}".encode()
-    ).hexdigest()[:12]
-    ck = os.path.join(tempfile.gettempdir(), f"state_ck_counts_{tag}")
-    if not os.path.exists(ck):
-        # build under a process-unique path, rename into place when the
-        # stream has fully stopped: atomic publish, no marker-file race
-        # with a concurrent builder (the events_4split discipline);
-        # uuid suffix keeps same-process threads and retries disjoint
-        build = f"{ck}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        agg = _events_stream(spark, sf_dir).groupBy("event_type").count()
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("complete")
-            .option("checkpointLocation", build)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        try:
-            os.rename(build, ck)
-        except OSError:  # another process won the race
-            import shutil
 
-            shutil.rmtree(build, ignore_errors=True)
-    return ck
+    def build(ck: str) -> None:
+        run_to_end(
+            spark,
+            lambda: table_stream(spark, sf_dir, "events")
+            .groupBy("event_type")
+            .count()
+            .writeStream.format("noop")
+            .outputMode("complete"),
+            checkpoint=ck,
+        )
+
+    return built_once(os.path.join(sf_dir, "events.parquet"), "state_ck_counts", build)
 
 
 def q_statestore_reader_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,9 +14,6 @@ timeout fires.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
 from collections.abc import Iterator
 
 import pandas as pd
@@ -25,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..session import scoped_confs
+from .run import drain_to_memory, table_stream
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
 STATE_SCHEMA = "n bigint, total double"
@@ -50,48 +47,37 @@ def run_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the bounded events stream through a per-user stateful
     counter; returns the final per-user totals (update mode — last emit
     per key wins; the bounded source makes that the complete answer)."""
-    # one state store is initialized per shuffle partition per micro-
-    # batch; with 150 distinct keys 32 stores are pure setup overhead
-    # (measured ~2 s of the query). A real deployment sizes this to key
-    # cardinality / cluster width; the partition count is baked into the
-    # checkpoint, so it is set before the query starts, like production.
-    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
-        return _run_stateful_inner(spark, sf_dir)
-
-
-def _run_stateful_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .windows import _events_stream
-
-    ev = _events_stream(spark, sf_dir).select("user_id", "value")
-    out = ev.groupBy("user_id").applyInPandasWithState(
-        _update_user_state,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    result = drain_to_memory(
+        spark,
+        lambda: table_stream(spark, sf_dir, "events")
+        .select("user_id", "value")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _update_user_state,
+            outputStructType=OUTPUT_SCHEMA,
+            stateStructType=STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        ),
+        "update",
+        # one state store is initialized per shuffle partition per
+        # micro-batch; with 150 distinct keys 32 stores are pure setup
+        # overhead (measured ~2 s of the query). A real deployment sizes
+        # this to key cardinality / cluster width; the partition count is
+        # baked into the checkpoint at start, like production.
+        {"spark.sql.shuffle.partitions": "8"},
     )
-    name = "stream_stateful_out"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stateful_")
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", os.path.join(ckpt, "cp"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)  # checkpoint is single-use
-    # update-mode memory sink may hold multiple emits per key (one per
-    # micro-batch): the final state per user is the max n_events row
-    result = spark.table(name)
+    return last_emit_per_user(result)
+
+
+def last_emit_per_user(drained: DataFrame) -> DataFrame:
+    """An update-mode sink holds one emit per key per micro-batch: the
+    final state per user is its max n_events row."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        result.withColumn("rn", F.row_number().over(w))
+        drained.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
     )

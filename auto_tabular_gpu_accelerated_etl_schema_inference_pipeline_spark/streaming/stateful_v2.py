@@ -18,16 +18,15 @@ to 2dp on both sides).
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
 from collections.abc import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
+
+from .run import drain_to_memory, table_stream
+from .stateful import last_emit_per_user
 
 OUTPUT_SCHEMA = (
     "user_id bigint, n_events bigint, total_value double, max_value double"
@@ -66,50 +65,29 @@ class UserStatsProcessor(StatefulProcessor):
         pass
 
 
-def run_stateful_v2_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_streaming_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the bounded events stream through the StatefulProcessor;
     return the final per-user stats (last emit per key wins)."""
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    return last_emit_per_user(
+        drain_to_memory(
+            spark,
+            lambda: table_stream(spark, sf_dir, "events")
+            .select("user_id", "value")
+            .groupBy("user_id")
+            .transformWithStateInPandas(
+                statefulProcessor=UserStatsProcessor(),
+                outputStructType=OUTPUT_SCHEMA,
+                outputMode="Update",
+                timeMode="None",
+            ),
+            "update",
+            # transformWithState requires the RocksDB state store provider
+            {
+                "spark.sql.streaming.stateStore.providerClass": "org.apache.spark.sql"
+                ".execution.streaming.state.RocksDBStateStoreProvider"
+            },
+        )
     )
-    from .windows import _events_stream
-
-    ev = _events_stream(spark, sf_dir).select("user_id", "value")
-    out = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserStatsProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-    name = "stream_stateful_v2_out"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_tws_")
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", os.path.join(ckpt, "cp"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)  # checkpoint is single-use
-    result = spark.table(name)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        result.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
-def q_streaming_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_stateful_v2_user_stats(spark, sf_dir)
 
 
 def tws_available() -> bool:

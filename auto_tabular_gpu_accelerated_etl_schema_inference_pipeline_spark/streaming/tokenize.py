@@ -16,8 +16,6 @@ quantile_bin_exact_boundaries, here with the exact (distributed) fit.
 
 from __future__ import annotations
 
-import hashlib
-import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,22 +25,7 @@ from ..operators.quantile_bin import (
     LINEITEM_MEASURES,
     bucketize,
 )
-
-
-def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Bounded file stream over a fixture table (the events-stream
-    symlink-dir pattern, generalized)."""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    from ..session import parquet_schema
-
-    schema = parquet_schema(spark, src)  # memoized footer read (r13)
-    tag = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:12]
-    stream_dir = os.path.join(tempfile.gettempdir(), f"{table}_stream_{tag}")
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, f"{table}.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    return spark.readStream.schema(schema).parquet(stream_dir)
+from .run import run_to_end, table_stream
 
 
 def q_streaming_tokenize_lineitem(
@@ -62,8 +45,6 @@ def q_streaming_tokenize_lineitem(
     from ..operators.quantile_bin_queries import cached_exact_boundaries
 
     bounds = cached_exact_boundaries(spark, sf_dir)
-    stream = _table_stream(spark, sf_dir, "lineitem")
-    tokens = bucketize(stream, bounds, keep_cols=LINEITEM_KEYS)
     # Parquet file sink, not the memory sink (r13, guide §5 "the driver
     # should do almost no data work": the memory sink COLLECTED the
     # full 600k-row tokenized output to the driver per drain — A/B
@@ -72,25 +53,18 @@ def q_streaming_tokenize_lineitem(
     # production topology the lane's docstring claims: a stream
     # tokenizer lands rows in a table, it does not collect them.
     # The data dir must outlive this call (the returned DataFrame reads
-    # it lazily); the single-use checkpoint is removed after stop.
+    # it lazily).
     out_dir = tempfile.mkdtemp(prefix="stream_tokenize_out_")
-    data_dir = os.path.join(out_dir, "data")
-    ckpt_dir = os.path.join(out_dir, "ckpt")
-    q = (
-        tokens.writeStream.outputMode("append")
+    run_to_end(
+        spark,
+        lambda: bucketize(
+            table_stream(spark, sf_dir, "lineitem"), bounds, keep_cols=LINEITEM_KEYS
+        )
+        .writeStream.outputMode("append")
         .format("parquet")
-        .option("path", data_dir)
-        .option("checkpointLocation", ckpt_dir)
-        .start()
+        .option("path", out_dir),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        import shutil
-
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return spark.read.parquet(data_dir)
+    return spark.read.parquet(out_dir)
 
 
 _PROBS = ",".join(str(i / 100) for i in range(101))

@@ -2,12 +2,13 @@
 streaming is absent from the strictly-batch reference; this module is the
 engine's stream surface).
 
-The fixture parquet drives a bounded file stream: readStream -> windowed
-aggregation -> memory sink, drained synchronously with
-processAllAvailable(). The SAME logical window aggregation runs in
-streaming and batch (q_events_tumbling_window), so the streaming result
-is oracle-checkable against the batch SQL — Spark's unified-engine
-guarantee, demonstrated.
+The fixture parquet drives a bounded file stream (run.table_stream):
+readStream -> windowed aggregation -> memory sink, run to its end and
+returned as a frame by run.drain_to_memory, which leaves no conf and no
+temp view on the caller's session. The SAME logical window aggregation
+runs in streaming and batch (q_events_tumbling_window), so the streaming
+result is oracle-checkable against the batch SQL — Spark's
+unified-engine guarantee, demonstrated.
 
 At scale the source becomes Kafka/object-store listings, the sink a
 transactional table, and a watermark (`withWatermark("ts", ...)`) bounds
@@ -17,82 +18,40 @@ fixture-friendly configuration.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded file stream over events.parquet. The nanosecond ts column
-    is read as long (same legacy conf as the batch reader) and truncated
-    to microsecond timestamps with exact integer division."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = os.path.join(sf_dir, "events.parquet")
-    # memoized footer read (r13): every streaming lane re-derived this
-    # schema per construction, ~70 ms of driver time each
-    from ..session import parquet_schema
-
-    batch_schema = parquet_schema(spark, src)
-    # file-stream sources must be directories: expose the fixture file
-    # through a symlink in a per-sf_dir cached dir (deterministic name ->
-    # created once, reused by every later stream over the same fixtures;
-    # no per-call mkdtemp leak)
-    import hashlib
-    import tempfile
-
-    tag = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:12]
-    stream_dir = os.path.join(tempfile.gettempdir(), f"events_stream_{tag}")
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    stream = spark.readStream.schema(batch_schema).parquet(stream_dir)
-    from pyspark.sql.types import LongType
-
-    if isinstance(batch_schema["ts"].dataType, LongType):  # nanos-as-long vintage
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        # native micros arrive as TIMESTAMP_NTZ; normalize to TIMESTAMP
-        # (UTC session -> same instant), matching the batch reader
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+from .run import drain_to_memory, table_stream
 
 
-def run_tumbling_stream(spark: SparkSession, sf_dir: str, gap: str = "1 hour") -> DataFrame:
-    """Tumbling-window streaming aggregation, drained to completion.
-    Returns the final (complete-mode) result as a batch DataFrame with
-    the same shape as the batch q_events_tumbling_window."""
-    ev = _events_stream(spark, sf_dir)
-    agg = (
-        ev.groupBy(F.window("ts", gap).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("sum_value"),
-            # exact count-distinct can't merge incrementally on streams;
-            # its HLL stand-in (approx_count_distinct) is demonstrated by
-            # agg_approx_distinct and kept OUT of this output so the
-            # streaming twin is value-verifiable against the batch SQL
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
+def sum_value() -> Column:
+    """Exact sum of ``value`` as double: decimal partials make the sum
+    independent of merge order, so stream and batch agree bit-for-bit."""
+    return F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("sum_value")
+
+
+def _window_sums(spark: SparkSession, sf_dir: str, window: Column) -> DataFrame:
+    """Drained complete-mode (window_start, event_type, n_events,
+    sum_value) over the events stream."""
+    return drain_to_memory(
+        spark,
+        lambda: table_stream(spark, sf_dir, "events")
+        .groupBy(window.alias("w"), "event_type")
+        # exact count-distinct can't merge incrementally on streams; its
+        # HLL stand-in (approx_count_distinct) is demonstrated by
+        # agg_approx_distinct and kept OUT of this output so the
+        # streaming twin is value-verifiable against the batch SQL
+        .agg(F.count("*").alias("n_events"), sum_value())
+        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value"),
+        "complete",
     )
-    name = "stream_tumbling_out"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+
+
+def run_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hourly tumbling-window streaming aggregation, drained to
+    completion: the final (complete-mode) result as a batch DataFrame
+    with the same shape as the batch q_events_tumbling_window."""
+    return _window_sums(spark, sf_dir, F.window("ts", "1 hour"))
 
 
 def q_streaming_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,24 +72,14 @@ def q_streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns only the KEY COLUMNS — that set is deterministic and carries
     a bit-exact DISTINCT oracle, proving streaming dedup == batch
     distinct under Spark's unified engine."""
-    ev = _events_stream(spark, sf_dir)
-    deduped = (
-        ev.withWatermark("ts", "1 hour")
+    return drain_to_memory(
+        spark,
+        lambda: table_stream(spark, sf_dir, "events")
+        .withWatermark("ts", "1 hour")
         .dropDuplicates(["user_id", "event_type"])
-        .select("user_id", "event_type")
+        .select("user_id", "event_type"),
+        "append",
     )
-    name = "stream_dedup_out"
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
 
 
 def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -144,33 +93,20 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs append-mode with a watermark so closed sessions emit and state
     evicts; complete-mode-over-bounded-input is the fixture-friendly
     configuration (same trade as run_tumbling_stream)."""
-    ev = _events_stream(spark, sf_dir)
-    agg = (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("sum_value"),
-        )
+    return drain_to_memory(
+        spark,
+        lambda: table_stream(spark, sf_dir, "events")
+        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
+        .agg(F.count("*").alias("n_events"), sum_value())
         .select(
             "user_id",
             F.col("sw.start").alias("session_start"),
             F.col("sw.end").alias("session_end"),
             "n_events",
             "sum_value",
-        )
+        ),
+        "complete",
     )
-    name = "stream_session_out"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
 
 
 def q_streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,32 +115,7 @@ def q_streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete-mode. Carries the batch query's oracle — overlapping-window
     state merge is the incremental-maintenance case tumbling windows
     don't exercise."""
-    ev = _events_stream(spark, sf_dir)
-    agg = (
-        ev.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    name = "stream_sliding_out"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _window_sums(spark, sf_dir, F.window("ts", "2 hours", "1 hour"))
 
 
 def q_streaming_dedup_within_watermark(
@@ -224,24 +135,14 @@ def q_streaming_dedup_within_watermark(
     re-emit-after-eviction behavior is inherently arrival-order-
     dependent (which replay emits depends on batch boundaries); its
     batch-expressible twin is events_debounce's lag()-gap dedup."""
-    ev = _events_stream(spark, sf_dir)
-    deduped = (
-        ev.withWatermark("ts", "30 days")
+    return drain_to_memory(
+        spark,
+        lambda: table_stream(spark, sf_dir, "events")
+        .withWatermark("ts", "30 days")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-        .select("user_id", "event_type")
+        .select("user_id", "event_type"),
+        "append",
     )
-    name = "stream_dedup_wm_out"
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
 
 
 def q_streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,29 +165,17 @@ def q_streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     import math
 
-    ev = _events_stream(spark, sf_dir)
-    hourly = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"))
+    drained = drain_to_memory(
+        spark,
+        lambda: table_stream(spark, sf_dir, "events")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(
-                (F.col("event_type") == "purchase").cast("bigint")
-            ).alias("x"),
+            F.sum((F.col("event_type") == "purchase").cast("bigint")).alias("x"),
         )
-        .select(F.col("w.start").alias("h"), "n", "x")
+        .select(F.col("w.start").alias("h"), "n", "x"),
+        "complete",
     )
-    name = "stream_sprt_hourly"
-    q = (
-        hourly.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    drained = spark.table(name)
     c1_mu = int(round(round(math.log(SPRT_P1 / SPRT_P0), 6) * 1e6))
     c0_mu = int(
         round(round(math.log((1 - SPRT_P1) / (1 - SPRT_P0)), 6) * 1e6)

@@ -259,7 +259,8 @@ def test_scoped_confs_restore_unset_keys(spark, sf_dir):
     """footer_stats and the stateful streaming lane flip confs for their
     own run and restore the caller's state: a key that was unset is
     unset again (not set to the default it read), a key that was set
-    gets its value back."""
+    gets its value back. The stream's nanos-as-long read is scoped the
+    same way."""
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.sources.readers import (
         footer_stats,
     )
@@ -271,6 +272,7 @@ def test_scoped_confs_restore_unset_keys(spark, sf_dir):
         "spark.sql.shuffle.partitions",
         "spark.sql.sources.useV1SourceList",
         "spark.sql.parquet.aggregatePushdown",
+        "spark.sql.legacy.parquet.nanosAsLong",
     )
     caller = spark.newSession()
     caller.conf.unset("spark.sql.shuffle.partitions")

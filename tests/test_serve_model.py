@@ -16,6 +16,7 @@ from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators 
     quantile_bin,
     schema_infer,
 )
+from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import quote_name
 from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.sources import (
     readers,
 )
@@ -428,7 +429,10 @@ def test_dotted_and_backquoted_column_names(spark):
     """A dot or a backquote in a column name is part of the name, not a
     struct field access: bucketize bins ``price.usd`` and ``we`ird``
     as np.searchsorted does (null and NaN in the last bin), and
-    infer_column_classes and auto_tokenize profile and code them."""
+    infer_column_classes and auto_tokenize profile and code them. The
+    pandas-UDF and mapInArrow lanes bin them as bucketize does, the
+    exact fit equals SQL percentile, and the head-sample fit, the
+    per-group ntile and the running value counts resolve them too."""
     import numpy as np
     from pyspark.sql import types as T
 
@@ -471,3 +475,37 @@ def test_dotted_and_backquoted_column_names(spark):
         b = binned[r["id"]]
         assert r["seg.name_code"] == {"a": 1, "b": 2}[b["seg.name"]]
         assert (r["price.usd_bin"], r["we`ird_bin"]) == (b["price.usd_bin"], b["we`ird_bin"])
+    # the other bucketize lanes bin as bucketize does
+    for lane in (quantile_bin.bucketize_pandas_udf, quantile_bin.bucketize_map_in_arrow):
+        got = {r["id"]: r.asDict() for r in lane(df, bounds, keep_cols=["id", "seg.name"]).collect()}
+        assert got == {i: r.asDict() for i, r in binned.items()}, lane.__name__
+    # the exact fit (relative_error=0) equals SQL percentile
+    exact = quantile_bin.fit_quantile_boundaries(df, cont, bins=10, relative_error=0)
+    probs = [i / 10 for i in range(11)]
+    want = df.agg(*[F.percentile(F.col(quote_name(c)), probs).alias(c) for c in cont]).first()
+    for c in cont:  # NaN, the largest double, is a boundary of we`ird
+        assert np.array_equal(exact[c], want[c], equal_nan=True), c
+    head = quantile_bin.fit_quantile_boundaries_head_sample(df, cont, bins=10)
+    want = np.quantile([r[1] for r in rows], np.linspace(0.0, 1.0, 11))
+    assert head["price.usd"] == want.tolist()
+    # per-group ntile and the running value counts
+    grouped = quantile_bin.exact_quantile_bin_grouped(df, ["seg.name"], cont, 10, ["id"], keys=["id"])
+    ntiles = df.select(
+        "id",
+        F.col("`seg.name`"),
+        *[
+            (F.ntile(10).over(Window.partitionBy("`seg.name`").orderBy(F.col(quote_name(c)), "id")) - 1)
+            .cast("int")
+            .alias(f"{c}_bin")
+            for c in cont
+        ],
+    )
+    assert sorted(map(tuple, grouped.collect())) == sorted(map(tuple, ntiles.collect()))
+    for j, c in enumerate(cont, start=1):
+
+        def order(v):  # Spark's double order: NaN above every number
+            return (1, 0.0) if math.isnan(v) else (0, v + 0.0)
+
+        vals = [order(r[j]) for r in rows if r[j] is not None]
+        cum = sorted((order(r["value"]), r["cum_end"]) for r in quantile_bin.cumulative_value_counts(df, c).collect())
+        assert cum == [(v, sum(x <= v for x in vals)) for v in sorted(set(vals))], c

@@ -311,7 +311,7 @@ def test_stream_join_state_is_evicted(spark, tmp_path):
         .parquet(str(src))
     )
     q = (
-        click_purchase_joined(ev)
+        click_purchase_joined(ev, "inner")
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("state_evict_probe")
@@ -399,3 +399,31 @@ def test_stream_dedup_state_is_evicted(spark, tmp_path):
     assert max(totals) <= n_keys // 2, totals
     mid, last = totals[len(totals) // 2], totals[-1]
     assert last <= 1.5 * mid, totals
+
+
+def test_streaming_lanes_keep_callers_session(spark, sf_dir):
+    """Every streaming registry lane, run through queries() on a fresh
+    session, leaves that session's confs (the registry's timezone
+    apart) and temp views as it found them, and the frame it returns
+    still collects once its memory-sink view is gone. The caller is a
+    fresh session, so what earlier tests left cannot mask drift."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.queries_registry import (
+        queries,
+    )
+
+    tz = "spark.sql.session.timeZone"
+    qs = queries()
+    lanes = [n for n, fn in qs.items() if ".streaming." in fn.__module__]
+    assert len(lanes) >= 16, lanes
+    caller = spark.newSession()
+
+    def state():
+        confs = {k: v for k, v in caller.conf.getAll.items() if k != tz}
+        views = {t.name for t in caller.catalog.listTables() if t.isTemporary}
+        return confs, views
+
+    before = state()
+    for name in lanes:
+        df = qs[name](caller, sf_dir)
+        assert state() == before, name
+        assert df.collect(), name
