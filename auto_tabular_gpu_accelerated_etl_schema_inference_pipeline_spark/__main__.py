@@ -26,22 +26,6 @@ import os
 import sys
 
 
-def _session(cpus: str):
-    from pyspark.sql import SparkSession
-
-    from .session import HUGE_METHOD_LIMIT
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark-cli")
-        .config("spark.sql.shuffle.partitions", str(min(int(cpus), 32)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config(*HUGE_METHOD_LIMIT)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-
-
 def main(argv: list[str] | None = None) -> int:
     from . import queries_registry
 
@@ -89,7 +73,12 @@ def main(argv: list[str] | None = None) -> int:
             print(f"did you mean: {', '.join(hint)}?", file=sys.stderr)
         return 2
 
-    spark = _session(args.cpus)
+    from .session import get_spark
+
+    spark = get_spark(
+        app_name="auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark-cli",
+        cpus=args.cpus,
+    )
     df = queries[args.name](spark, args.sf_dir)
     if args.cmd == "explain":
         print(

@@ -2,7 +2,7 @@
 retention (survival analysis over the events stream) and Cohen's kappa
 inter-rater agreement (label-quality audit for LLM annotation pipelines).
 
-Exactness discipline (the llm_prep3/llm_prep4 pattern): every count is
+Exactness discipline (the llm_prep pattern): every count is
 exact BIGINT; the single transcendental per operator (one ``ln`` per
 life-table row in KM) is quantized to micro-nats BEFORE any cross-row
 arithmetic, so prefix sums and the final ``exp`` see identical inputs on

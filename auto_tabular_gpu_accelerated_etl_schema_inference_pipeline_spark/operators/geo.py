@@ -122,7 +122,6 @@ def q_geo_cell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("x") / 250).alias("l3x"),
         F.floor(F.col("y") / 250).alias("l3y"),
     )
-    levels.createOrReplaceTempView("_geo_levels")
     return spark.sql(
         """
         SELECT
@@ -132,9 +131,10 @@ def q_geo_cell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
           coalesce(l1y, l2y, l3y) AS cell_y,
           count(*) AS n_customers,
           CAST(sum(cents) AS BIGINT) AS balance_cents
-        FROM _geo_levels
+        FROM {levels}
         GROUP BY GROUPING SETS ((l1x, l1y), (l2x, l2y), (l3x, l3y))
-        """
+        """,
+        levels=levels,
     )
 
 
@@ -254,7 +254,7 @@ FROM {prev}
 
 def q_geo_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hilbert-curve clustering key — the space-filling-curve layout
-    alternative to the Morton z-order (relational_ext2.q_zorder_layout):
+    alternative to the Morton z-order (relational.q_zorder_layout):
     Hilbert has strictly better locality (no diagonal jumps between
     quadrants), which is why lakehouse OPTIMIZE implementations offer
     it for multi-dimensional clustering. The xy2d walk is unrolled into

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import forked_session, load_table
 
 
 def q_sql_udf_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -33,25 +33,26 @@ def q_sql_udf_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to tpch_q1 — pushed filter, pruned scan,
     partial agg, one small shuffle. The UDF leaves no trace in the
-    physical plan (that is the point)."""
-    spark.sql(
+    physical plan (that is the point). The function is a temporary one
+    on the lane's forked session, so the caller's session gains none."""
+    s = forked_session(spark, "sql_surface.sql_udf")
+    s.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION net_price("
         "p DECIMAL(12,2), d DECIMAL(12,2)) RETURNS DECIMAL(18,4) "
         "RETURN p * (CAST(1 AS DECIMAL(1,0)) - d)"
     )
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("li_sqludf")
-    return spark.sql(
+    return s.sql(
         """
         SELECT l_returnflag, l_linestatus,
           CAST(sum(net_price(CAST(l_extendedprice AS DECIMAL(12,2)),
                              CAST(l_discount AS DECIMAL(12,2))))
                * 10000 AS BIGINT) AS net_revenue_e4,
           count(*) AS n_items
-        FROM li_sqludf
+        FROM {lineitem}
         WHERE l_shipdate <= CAST('1998-09-02' AS TIMESTAMP)
         GROUP BY l_returnflag, l_linestatus
-        """
+        """,
+        lineitem=load_table(s, sf_dir, "lineitem"),
     )
 
 
@@ -214,18 +215,17 @@ def q_sql_pipe_syntax_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: same as tpch_q1 — pushed filter, pruned scan, partial
     agg, one small shuffle; the post-AGGREGATE `|> WHERE` is a HAVING
     that runs on the aggregated (tiny) relation."""
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("li_pipe")
     return spark.sql(
         """
-        FROM li_pipe
+        FROM {lineitem}
         |> WHERE l_shipdate <= TIMESTAMP '1998-09-02'
         |> EXTEND CAST(round(l_extendedprice * 100) AS BIGINT) AS price_cents
         |> AGGREGATE CAST(count(*) AS BIGINT) AS n_items,
                      sum(price_cents) AS revenue_cents
            GROUP BY l_returnflag, l_linestatus
         |> WHERE n_items > 1
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -257,14 +257,13 @@ def q_parameterized_sql_segment_revenue(
     cast to timestamp identically on both engines.
 
     Scale shape: standard fact⋈dim join (customer side small → Spark
-    broadcasts it), pushed date filter, one aggregate shuffle."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "cust_param"
-    )
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "ord_param"
-    )
-    return spark.sql(
+    broadcasts it), pushed date filter, one aggregate shuffle. The
+    named tables are views on the lane's forked session, so the
+    caller's session gains none."""
+    s = forked_session(spark, "sql_surface.param_sql")
+    load_table(s, sf_dir, "customer").createOrReplaceTempView("cust_param")
+    load_table(s, sf_dir, "orders").createOrReplaceTempView("ord_param")
+    return s.sql(
         """
         SELECT c_mktsegment,
           CAST(count(*) AS BIGINT) AS n_orders,
@@ -317,8 +316,6 @@ def q_sql_scripting_threshold_report(
     # cached forked session: scripting stays scoped to this lane instead
     # of silently changing what SQL the caller's shared session accepts
     # (the join_runtime_bloom_filter / statestore_reader discipline)
-    from ..session import forked_session
-
     s = forked_session(spark, "sql_surface.scripting")
     s.conf.set("spark.sql.scripting.enabled", "true")
     load_table(s, sf_dir, "orders").createOrReplaceTempView("ord_script")

@@ -21,10 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import load_table
-from .relational import _davg, _dsum, _frac, _money
-
-
-_REV = "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(6,2)))"
+from .relational import _REV, _davg, _dsum, _money, _revenue
 
 
 def q_tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -61,7 +58,7 @@ def q_tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             "supp_nation", "cust_nation", F.year("l_shipdate").cast("int").alias("l_year")
         )
-        .agg(_dsum(_money("l_extendedprice") * (1 - _frac("l_discount"))).alias("revenue"))
+        .agg(_dsum(_revenue()).alias("revenue"))
     )
 
 
@@ -84,7 +81,7 @@ def q_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     snat = nation.select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
     )
-    rev = _money("l_extendedprice") * (1 - _frac("l_discount"))
+    rev = _revenue()
     national = F.when(F.col("supp_nation") == "NATION_3", rev).otherwise(
         F.lit(0).cast("decimal(19,4)")
     )
@@ -113,9 +110,7 @@ def q_tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier")
     part = load_table(spark, sf_dir, "part")
     nation = load_table(spark, sf_dir, "nation")
-    amount = _money("l_extendedprice") * (1 - _frac("l_discount")) - _money(
-        "l_quantity"
-    ) * _money("p_retailprice")
+    amount = _revenue() - _money("l_quantity") * _money("p_retailprice")
     return (
         li.join(F.broadcast(part.filter(F.col("p_name").like("%red%"))),
                 li.l_partkey == part.p_partkey)
@@ -181,7 +176,7 @@ def q_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     supp = load_table(spark, sf_dir, "supplier")
     rev = li.groupBy("l_suppkey").agg(
-        _dsum(_money("l_extendedprice") * (1 - _frac("l_discount"))).alias("total_revenue")
+        _dsum(_revenue()).alias("total_revenue")
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     return (

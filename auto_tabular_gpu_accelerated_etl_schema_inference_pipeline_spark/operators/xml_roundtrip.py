@@ -11,21 +11,20 @@ serializes doubles with the shortest round-trippable decimal form).
 
 Scale notes: XML is a row-oriented text feed format — fine for
 interchange, never the analytics hot path (no columnar pruning, no
-pushdown). The write is a one-time per-fixture materialization into a
-deterministic md5-tagged temp dir (the same idempotent pattern as the
-streaming fixtures), so repeated runs don't rewrite or leak dirs.
+pushdown). The write is a one-time materialization per source parquet
+file (``session.built_once``, shared with the streaming fixtures), so
+repeated runs neither rewrite nor leak dirs, and a regenerated fixture
+gets fresh files.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import built_once, load_table
 from ..sources.readers import read_xml
 from ..sources.sinks import write_xml
 
@@ -36,22 +35,23 @@ XML_MAX_EVENT_ID = 2000
 _XML_SCHEMA = "event_id BIGINT, event_type STRING, value DOUBLE"
 
 
-def _xml_dir(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"events_xml_{tag}")
-
-
 def q_xml_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events subset -> XML files -> scan -> to_xml -> from_xml ->
     per-type aggregate; oracle aggregates the original parquet rows, so
     any lossiness anywhere in the XML loop breaks the value hash."""
-    xml_dir = _xml_dir(sf_dir)
-    if not os.path.exists(os.path.join(xml_dir, "_SUCCESS")):
-        events = load_table(spark, sf_dir, "events")
-        subset = events.filter(F.col("event_id") < XML_MAX_EVENT_ID).select(
-            "event_id", "event_type", "value"
+
+    def build(d: str) -> None:
+        subset = load_table(spark, sf_dir, "events").filter(
+            F.col("event_id") < XML_MAX_EVENT_ID
         )
-        write_xml(subset, xml_dir, row_tag="event", root_tag="events")
+        write_xml(
+            subset.select("event_id", "event_type", "value"),
+            d,
+            row_tag="event",
+            root_tag="events",
+        )
+
+    xml_dir = built_once(os.path.join(sf_dir, "events.parquet"), "events_xml", build)
     back = read_xml(spark, xml_dir, row_tag="event", schema=_XML_SCHEMA)
     # column-function leg: struct -> XML string -> struct, proving the
     # writer and the expression parser agree on one wire format
@@ -74,13 +74,6 @@ def q_xml_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 CSV_MAX_DOC_ID = 50
 
 
-def _csv_dir(sf_dir: str) -> str:
-    tag = hashlib.md5(
-        (os.path.abspath(sf_dir) + ":csvdialect").encode()
-    ).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"docs_csv_{tag}")
-
-
 def q_csv_dialect_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFC 4180 CSV dialect proof: payloads containing embedded QUOTES
     and NEWLINES — the two things that break naive CSV pipelines — are
@@ -95,9 +88,8 @@ def q_csv_dialect_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     can't be found mid-file), so the read parallelism is per-FILE —
     fine for interchange ingest, never the analytics hot path; convert
     to parquet on landing (the sinks module's compaction shape)."""
-    csv_dir = _csv_dir(sf_dir)
-    if not os.path.exists(os.path.join(csv_dir, "_SUCCESS")):
-        docs = load_table(spark, sf_dir, "documents")
+
+    def build(d: str) -> None:
         payload = F.concat(
             F.lit('say "'),
             F.substring(F.col("text"), 1, 40),
@@ -105,15 +97,17 @@ def q_csv_dialect_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("lang"),
         )
         (
-            docs.filter(F.col("doc_id") < CSV_MAX_DOC_ID)
+            load_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < CSV_MAX_DOC_ID)
             .select("doc_id", payload.alias("payload"))
             .coalesce(1)
             .write.option("header", True)
             .option("quoteAll", True)
             .option("escape", '"')
-            .mode("overwrite")
-            .csv(csv_dir)
+            .csv(d)
         )
+
+    csv_dir = built_once(os.path.join(sf_dir, "documents.parquet"), "docs_csv", build)
     back = (
         spark.read.option("header", True)
         .option("multiLine", True)

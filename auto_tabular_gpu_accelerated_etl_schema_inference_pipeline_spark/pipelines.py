@@ -190,7 +190,7 @@ def q_corpus_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     moves); the report is a partial agg onto |sources| rows."""
     from pyspark.sql import Window
 
-    from .operators.llm_prep2 import (
+    from .operators.llm_prep import (
         _UNIQ_P,
         _UNIQ_Q,
         _UPPER_P,
@@ -248,7 +248,7 @@ def q_corpus_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curation_oracle() -> str:
-    from .operators.llm_prep2 import (
+    from .operators.llm_prep import (
         _UNIQ_P,
         _UNIQ_Q,
         _UPPER_P,

@@ -47,9 +47,6 @@ _MODULES = [
     "operators.audit",
     "operators.cdc",
     "operators.llm_prep",
-    "operators.llm_prep2",
-    "operators.llm_prep3",
-    "operators.llm_prep4",
     "operators.eval_stats",
     "operators.text_stats",
     "operators.sql_surface",
@@ -65,9 +62,6 @@ _MODULES = [
     "operators.tpch_deep",
     "operators.quantile_bin_queries",
     "operators.relational",
-    "operators.relational_ext",
-    "operators.relational_ext2",
-    "operators.tpch_more",
     "pipelines",
 ]
 

@@ -9,8 +9,13 @@ transfer at etl_benchmark.py:53), UTC session timezone (oracle parity).
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
+import uuid
 from collections import OrderedDict
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from py4j.protocol import Py4JJavaError
@@ -46,16 +51,13 @@ HUGE_METHOD_LIMIT = ("spark.sql.codegen.hugeMethodLimit", "8000")
 
 
 def get_spark(
-    app_name: str = "auto-tabular-spark",
-    cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
+    app_name: str = "auto-tabular-spark", cpus: int | str | None = None
 ) -> SparkSession:
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS") or "32")
-    shuffle = str(shuffle_partitions or cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle)
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -381,6 +383,35 @@ def parquet_schema(spark: SparkSession, path: str):
         path,
         lambda: _infer_parquet_schema(spark, path),
     )
+
+
+def built_once(src: str, prefix: str, build: Callable[[str], None]) -> str:
+    """The directory ``<tmp>/<prefix>_<tag>`` derived from the file
+    ``src`` (tag: its path, size and mtime), made by ``build(dir)`` on
+    first use. ``build`` fills a directory unique to this call, which is
+    then renamed into place: the rename is atomic, so no reader sees a
+    half-built directory, and the loser of a race between two builders
+    discards its own copy. (A ``_SUCCESS`` check plus
+    ``mode("overwrite")`` lets a second builder delete files under the
+    first one's reader.) The tag follows ``src``, so a regenerated
+    fixture gets a fresh directory instead of stale files."""
+    st = os.stat(src)
+    key = f"{os.path.abspath(src)}:{st.st_size}:{int(st.st_mtime)}"
+    out = os.path.join(
+        tempfile.gettempdir(),
+        f"{prefix}_{hashlib.md5(key.encode()).hexdigest()[:12]}",
+    )
+    if not os.path.exists(out):
+        tmp = f"{out}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+        try:
+            build(tmp)
+            os.rename(tmp, out)
+        except OSError:
+            if not os.path.isdir(out):  # not a lost race
+                raise
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    return out
 
 
 def quote_name(name: str) -> str:

@@ -27,8 +27,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_events, parquet_schema, scoped_confs
-from .run import STREAM_CONFS, built_once, run_to_end, table_stream
+from ..session import built_once, load_events, parquet_schema, scoped_confs
+from .run import STREAM_CONFS, run_to_end, table_stream
 
 
 def _current_table(target_dir: str, spark: SparkSession):

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .run import drain_to_memory, table_stream
+from .run import STATE_CONFS, drain_to_memory, table_stream
 
 
 def click_purchase_joined(ev: DataFrame, how: str) -> DataFrame:
@@ -66,6 +66,7 @@ def _drain_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
         spark,
         lambda: click_purchase_joined(table_stream(spark, sf_dir, "events"), how),
         "append",
+        STATE_CONFS,
     )
 
 

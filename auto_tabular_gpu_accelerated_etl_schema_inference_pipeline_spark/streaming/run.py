@@ -6,9 +6,10 @@ the drained result); this module owns the rest:
 - ``run_to_end``: build a stream and its sink, start it, process all of
   its input, stop it;
 - ``drain_to_memory``: run a stream to its end into a memory sink and
-  return the drained rows as a frame;
-- ``built_once``: a per-fixture artifact directory (stream source dirs,
-  pre-split inputs, a state checkpoint), published with one rename.
+  return the drained rows as a frame.
+
+Per-fixture artifact directories (stream source dirs, pre-split inputs,
+a state checkpoint) come from ``session.built_once``.
 
 Session state: the confs a stream needs (STREAM_CONFS plus the lane's
 own) are set only around the source build and ``start()``. A started
@@ -21,9 +22,7 @@ left on the caller's session.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 import tempfile
 import uuid
 from collections.abc import Callable
@@ -31,40 +30,22 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
-from ..session import normalize_event_ts, parquet_schema, scoped_confs
+from ..session import built_once, normalize_event_ts, parquet_schema, scoped_confs
 
 #: confs every stream is built and started under: the events fixture's
 #: TIMESTAMP(NANOS) ts is read as epoch nanos (normalize_event_ts
 #: truncates them), which Spark's parquet reader otherwise rejects
 STREAM_CONFS = {"spark.sql.legacy.parquet.nanosAsLong": "true"}
 
-
-def built_once(src: str, prefix: str, build: Callable[[str], None]) -> str:
-    """The directory ``<tmp>/<prefix>_<tag>`` derived from the file
-    ``src`` (tag: its path, size and mtime), made by ``build(dir)`` on
-    first use. ``build`` fills a directory unique to this call, which is
-    then renamed into place: the rename is atomic, so no reader sees a
-    half-built directory, and the loser of a race between two builders
-    discards its own copy. (A ``_SUCCESS`` check plus
-    ``mode("overwrite")`` lets a second builder delete files under the
-    first one's running stream.)"""
-    st = os.stat(src)
-    key = f"{os.path.abspath(src)}:{st.st_size}:{int(st.st_mtime)}"
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"{prefix}_{hashlib.md5(key.encode()).hexdigest()[:12]}",
-    )
-    if not os.path.exists(out):
-        tmp = f"{out}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        try:
-            build(tmp)
-            os.rename(tmp, out)
-        except OSError:
-            if not os.path.isdir(out):  # not a lost race
-                raise
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return out
+#: confs of the stateful lanes (a grouped state store, a stream-stream
+#: join): one state store is initialized per shuffle partition per
+#: micro-batch, so the width follows the fixture's key count (150
+#: users), not the caller's shuffle width. At a default session's 200
+#: the two stream-join lanes took 55 s and 50 s at sf0.01 on local[8];
+#: at 8 they take 10 s and 4 s. A real deployment sizes this to key
+#: cardinality / cluster width; the width is baked into the checkpoint
+#: at start, like production.
+STATE_CONFS = {"spark.sql.shuffle.partitions": "8"}
 
 
 def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:

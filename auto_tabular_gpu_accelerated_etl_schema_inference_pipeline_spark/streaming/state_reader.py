@@ -26,7 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .run import built_once, run_to_end, table_stream
+from ..session import built_once
+from .run import run_to_end, table_stream
 
 
 def _checkpoint_for(spark: SparkSession, sf_dir: str) -> str:

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .run import drain_to_memory, table_stream
+from .run import STATE_CONFS, drain_to_memory, table_stream
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
 STATE_SCHEMA = "n bigint, total double"
@@ -60,12 +60,7 @@ def run_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         ),
         "update",
-        # one state store is initialized per shuffle partition per
-        # micro-batch; with 150 distinct keys 32 stores are pure setup
-        # overhead (measured ~2 s of the query). A real deployment sizes
-        # this to key cardinality / cluster width; the partition count is
-        # baked into the checkpoint at start, like production.
-        {"spark.sql.shuffle.partitions": "8"},
+        STATE_CONFS,
     )
     return last_emit_per_user(result)
 

@@ -16,6 +16,8 @@ quantile_bin_exact_boundaries, here with the exact (distributed) fit.
 
 from __future__ import annotations
 
+import atexit
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,8 +55,9 @@ def q_streaming_tokenize_lineitem(
     # production topology the lane's docstring claims: a stream
     # tokenizer lands rows in a table, it does not collect them.
     # The data dir must outlive this call (the returned DataFrame reads
-    # it lazily).
+    # it lazily), so it is removed when the process exits.
     out_dir = tempfile.mkdtemp(prefix="stream_tokenize_out_")
+    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
     run_to_end(
         spark,
         lambda: bucketize(

@@ -13,8 +13,8 @@ Usage:
     python scripts/sweep.py name1 name2 ... # specific queries
 
 Each lane also gets a drift report: a ``DRIFT <lane>: ...`` line for
-every runtime conf or temp view the lane left changed on the session it
-was handed (the timezone excepted — the registry sets it), and a count
+every runtime conf, temp view or temporary function the lane left
+changed on the session it was handed (the timezone excepted — the registry sets it), and a count
 at the end. Drift is reported, not gated.
 """
 
@@ -39,11 +39,15 @@ _REGISTRY_TZ = "spark.sql.session.timeZone"
 
 def _session_state(spark: SparkSession) -> dict[str, str]:
     """The caller-visible session state a lane can leave behind: its
-    runtime confs and, as ``view:<name>`` keys, its temp views."""
+    runtime confs, as ``view:<name>`` keys its temp views, and as
+    ``function:<name>`` keys its user functions (temporary ones
+    included; built-ins are not listed)."""
     state = {k: v for k, v in spark.conf.getAll.items() if k != _REGISTRY_TZ}
     for t in spark.catalog.listTables():
         if t.isTemporary:
             state[f"view:{t.name}"] = "temp view"
+    for (fn,) in spark.sql("SHOW USER FUNCTIONS").collect():
+        state[f"function:{fn}"] = "user function"
     return state
 
 

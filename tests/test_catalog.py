@@ -235,13 +235,27 @@ def test_forked_session_syncs_confs_on_first_creation(spark):
 def test_lanes_keep_callers_views(spark, sf_dir):
     """Lanes that read fixture tables by name take them as spark.sql
     DataFrame arguments, so a caller's own ``customer`` and ``nation``
-    views survive geo_hilbert_layout and lateral_join_topk. The caller
-    is a fresh session, so views other tests left cannot mask drift."""
+    views survive geo_hilbert_layout and lateral_join_topk. The lanes
+    whose subject is a named table or a temporary function (the
+    IDENTIFIER lane, the SQL-UDF lane) register them on their forked
+    session. The caller is a fresh session, so views other tests left
+    cannot mask drift: it ends with only its own views and no
+    temporary function."""
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.geo import (
+        q_geo_cell_rollup,
         q_geo_hilbert_layout,
     )
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.relational_ext2 import (
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.relational import (
+        q_agg_listagg,
+        q_exists_subquery,
+        q_grouping_sets,
         q_lateral_join_topk,
+        q_lateral_posexplode,
+    )
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.sql_surface import (
+        q_parameterized_sql_segment_revenue,
+        q_sql_pipe_syntax_profile,
+        q_sql_udf_discounted_revenue,
     )
 
     caller = spark.newSession()
@@ -249,10 +263,22 @@ def test_lanes_keep_callers_views(spark, sf_dir):
     caller.createDataFrame([(8,)], "mine int").createOrReplaceTempView("nation")
     assert q_geo_hilbert_layout(caller, sf_dir).count() > 0
     assert q_lateral_join_topk(caller, sf_dir).count() > 0
+    for lane in (
+        q_geo_cell_rollup,
+        q_lateral_posexplode,
+        q_grouping_sets,
+        q_exists_subquery,
+        q_agg_listagg,
+        q_sql_udf_discounted_revenue,
+        q_sql_pipe_syntax_profile,
+        q_parameterized_sql_segment_revenue,
+    ):
+        assert lane(caller, sf_dir).count() > 0, lane.__name__
     assert [tuple(r) for r in caller.table("customer").collect()] == [(7,)]
     assert [tuple(r) for r in caller.table("nation").collect()] == [(8,)]
     views = {t.name for t in caller.catalog.listTables() if t.isTemporary}
     assert views == {"customer", "nation"}
+    assert caller.sql("SHOW USER FUNCTIONS").collect() == []
 
 
 def test_scoped_confs_restore_unset_keys(spark, sf_dir):

@@ -33,7 +33,7 @@ from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.
 from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.audit import (  # noqa: E402
     q_t_closeness_audit,
 )
-from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep4 import (  # noqa: E402
+from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep import (  # noqa: E402
     CURRICULUM_STAGE_DOCS,
     q_curriculum_stages,
 )
@@ -269,7 +269,7 @@ def test_watermark_unwatermarked_fixture_flags_nothing(spark, sf_dir):
     """Natural (un-watermarked) text should sit near z = 0: with the
     3-sigma threshold the false-positive rate is ~0.3%, so flags on the
     fixture must be a tiny fraction of docs."""
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep4 import (
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep import (
         q_watermark_greenlist_scan,
     )
 
@@ -282,7 +282,7 @@ def test_watermark_unwatermarked_fixture_flags_nothing(spark, sf_dir):
 def test_max_cover_gains_monotone_nonincreasing(spark, sf_dir):
     """Greedy marginal gains are non-increasing (submodularity of
     coverage) and cumulative coverage is their exact running sum."""
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep4 import (
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep import (
         MAXCOVER_K,
         q_max_cover_selection,
     )
@@ -468,7 +468,7 @@ def test_bootstrap_ci_brackets_point_estimate(spark, sf_dir):
 
 
 def test_quota_sums_exactly_to_budget(spark, sf_dir):
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep4 import (
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep import (
         QUOTA_BUDGET,
         q_quota_apportionment,
     )
@@ -502,17 +502,17 @@ def test_max_cover_antijoin_fallback_equivalent(spark, sf_dir):
     from unittest import mock
 
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators import (
-        llm_prep4,
+        llm_prep,
     )
 
     base = sorted(
-        map(tuple, llm_prep4.q_max_cover_selection(spark, sf_dir).collect())
+        map(tuple, llm_prep.q_max_cover_selection(spark, sf_dir).collect())
     )
-    with mock.patch.object(llm_prep4, "_MAXCOVER_INSET_MAX", 0):
+    with mock.patch.object(llm_prep, "_MAXCOVER_INSET_MAX", 0):
         forced = sorted(
             map(
                 tuple,
-                llm_prep4.q_max_cover_selection(spark, sf_dir).collect(),
+                llm_prep.q_max_cover_selection(spark, sf_dir).collect(),
             )
         )
     assert base == forced and len(base) >= 1

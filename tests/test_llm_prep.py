@@ -138,7 +138,7 @@ def test_winnowing_coverage_guarantee(spark, sf_dir):
     first window, and the last inside the last. (The naive
     'min-of-window-starting-here' rule fails this on decreasing hash
     runs — this test is what caught it.)"""
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep3 import (
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep import (
         WINNOW_W,
         q_winnowing_fingerprint,
     )

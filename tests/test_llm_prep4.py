@@ -1,4 +1,4 @@
-"""Property tests for the round-4 batch-2 operators (llm_prep4 /
+"""Property tests for the round-4 batch-2 operators (llm_prep selection lanes /
 graph LPA / retrieval NDCG) — semantic invariants the oracle parity
 check can't see (parity proves both engines agree, not that the
 agreed-on answer has the claimed structure)."""
@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep4 import (  # noqa: E402
+from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep import (  # noqa: E402
     q_content_defined_chunks,
     q_dsir_importance_weights,
 )

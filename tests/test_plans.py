@@ -143,7 +143,7 @@ def test_variant_extract_prunes_scan(spark, sf_dir):
 def test_gap_fill_no_global_window(spark, sf_dir):
     """The forward-fill window is per-user partitioned — a single-
     partition window here would serialize the whole grid."""
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.relational_ext2 import (
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.relational import (
         q_events_gap_fill,
     )
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.plans.inspect import (
@@ -156,7 +156,7 @@ def test_gap_fill_no_global_window(spark, sf_dir):
 def test_doc_chunk_overlap_map_only(spark, sf_dir):
     """The chunker is a pure 1-to-N map-side expansion: zero Exchange in
     the plan, and the scan reads only (doc_id, text)."""
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep2 import (
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep import (
         q_doc_chunk_overlap,
     )
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.plans.inspect import (
@@ -173,7 +173,7 @@ def test_doc_chunk_overlap_map_only(spark, sf_dir):
 def test_zscore_transform_broadcasts_stats(spark, sf_dir):
     """The z-score transform enriches every row with the 1-row fitted
     stats via broadcast — the lineitem side must not shuffle for it."""
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep2 import (
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep import (
         q_zscore_normalize,
     )
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.plans.inspect import (

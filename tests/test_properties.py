@@ -76,7 +76,7 @@ def test_backend_agreement(spark, values):
 def test_freq_items_no_false_negatives(spark, sf_dir):
     """freqItems contract: every value with frequency > support*n must
     appear in the result list (false positives allowed, negatives not)."""
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.relational_ext import (
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.relational import (
         q_stat_freq_items,
     )
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (
@@ -101,7 +101,7 @@ def test_approx_top_k_exact_at_fixture_cardinality(spark, sf_dir):
     5-value event_type cardinality, so items AND counts must equal the
     exact groupBy top-k here — the sketch is only allowed to
     approximate when capacity is exceeded."""
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.relational_ext2 import (
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.relational import (
         q_agg_approx_top_k,
     )
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (
@@ -290,7 +290,7 @@ def test_shuffle_hash_limb_split_matches_bignum(doc_id):
     the WHOLE bigint domain — including doc_id beyond 3.5e9 where the
     naive BIGINT product overflows (the 100 TB regime the fix targets).
     Pure arithmetic, no Spark session needed."""
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep3 import (
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.llm_prep import (
         KNUTH_C,
         MOD32,
     )

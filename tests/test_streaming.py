@@ -427,3 +427,27 @@ def test_streaming_lanes_keep_callers_session(spark, sf_dir):
         df = qs[name](caller, sf_dir)
         assert state() == before, name
         assert df.collect(), name
+
+
+def test_stream_tokenize_output_removed_at_exit(spark, sf_dir):
+    """streaming_tokenize_lineitem lands its rows in a fresh temporary
+    directory that the returned frame reads lazily. The directory is
+    registered for removal at process exit: the frame still reads it
+    during the process, and the registered cleanup removes it. The
+    atexit registration is captured, not run at exit, so this needs no
+    second process."""
+    from unittest import mock
+
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.streaming import (
+        tokenize,
+    )
+
+    with mock.patch.object(tokenize.atexit, "register") as register:
+        df = tokenize.q_streaming_tokenize_lineitem(spark, sf_dir)
+    # Spark's own code may register exit hooks during the stream too
+    removals = [c for c in register.call_args_list if c.args[0] is tokenize.shutil.rmtree]
+    assert len(removals) == 1, register.call_args_list
+    (cleanup, out_dir), kwargs = removals[0]
+    assert os.path.isdir(out_dir) and df.count() > 0
+    cleanup(out_dir, **kwargs)
+    assert not os.path.exists(out_dir)
