@@ -514,21 +514,23 @@ def save_boundaries(
     split the reference's in-process fit+transform lacks: fit once on
     the training corpus, ship the KB-sized model, tokenize any later
     batch/stream without refitting."""
-    rows = [
-        (c, i, float(v))
-        for c, vals in bounds.items()
-        for i, v in enumerate(vals)
-    ]
-    # One-slice parallelize, NOT createDataFrame(rows).coalesce(1): the
-    # plain createDataFrame spreads the pickled rows over default-
-    # parallelism slices, and coalesce(1) then evaluates all 32 parent
-    # slices SERIALLY inside one task — one Python-worker round-trip
-    # each, measured 5.3 s for a 400-row model vs 0.4 s single-slice
-    # (r13; the cost landed in every first-on-box model build).
+    import pyarrow as pa
+
+    model = pa.Table.from_pylist(
+        [
+            {"col": c, "idx": i, "value": float(v)}
+            for c, vals in bounds.items()
+            for i, v in enumerate(vals)
+        ],
+        pa.schema([("col", pa.string()), ("idx", pa.int32()), ("value", pa.float64())]),
+    )
+    # An Arrow table becomes a LocalRelation whose rows are already in
+    # the JVM, so the write starts no Python worker; a frame of Python
+    # rows is an RDD whose task pickles them through one. coalesce(1)
+    # writes one task and one part file.
     (
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), _MODEL_SCHEMA
-        )
+        spark.createDataFrame(model, _MODEL_SCHEMA)
+        .coalesce(1)
         .write.mode("overwrite")
         .parquet(path)
     )

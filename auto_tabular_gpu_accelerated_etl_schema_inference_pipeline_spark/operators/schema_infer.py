@@ -17,9 +17,10 @@ etl_benchmark.py:27). We provide it properly:
    timestamps, passthrough for identifiers.
 
 Scale: profiling is one plan, ``_value_counts``: every column's value
-counts from a UNION of single-column scans through one shared exchange.
-The stats, the vocabularies and the partition advisor all read it, so
-profiling a table runs at most 5 Spark jobs at any width; the transform
+counts from one scan that turns each row into one (column, value) pair
+per column, through one shared exchange. The stats, the vocabularies and
+the partition advisor all read it, so profiling a table reads each file
+once per pass and runs at most 5 Spark jobs at any width; the transform
 is map-only — dict codes are a literal lookup, not a join.
 """
 
@@ -58,29 +59,32 @@ _CLASSES_SCHEMA = (
 _DICT_CLASSES = ("categorical", "numeric_discrete")
 
 
-def _value_counts(df: DataFrame) -> DataFrame:
+def _value_counts(df: DataFrame, keep: list[int] | None = None) -> DataFrame:
     """Every column's value counts as one long frame ``(i, v, n)``: ``n``
     rows of column ``i`` (its position in ``df``) hold the value ``v``.
+    ``keep`` lists the positions to count (default: all of them).
 
     ``v`` is a struct with one slot per column type, named by the type
     (``v.bigint``, ``v.string``, ...), so every value keeps its native
     type: ``-0.0`` groups with ``0.0``, NaN with NaN, and ints order as
     numbers. An array value is cast to string. A null cell gives a null
-    ``v``. The plan is a UNION of per-column projections, each scanning
-    one column chunk, under one ``groupBy(i, v)``: all columns share a
-    single exchange, and a filter on ``i`` prunes the union to the
-    columns it keeps."""
-    from functools import reduce
-
-    cols = [
-        (F.col(quote_name(f.name)).cast("string"), StringType())
-        if isinstance(f.dataType, ArrayType)
-        else (F.col(quote_name(f.name)), f.dataType)
-        for f in df.schema.fields
-    ]
-    slots = list(dict.fromkeys(t for _, t in cols))
-    parts = [
-        df.select(
+    ``v``. The plan is one scan of the kept columns: each row becomes one
+    ``(i, v)`` pair per kept column (``inline`` of an array of structs,
+    a Generate) under one ``groupBy(i, v)``, so a file is read once
+    whatever the width and all columns share a single exchange. Columns
+    are addressed by position, so duplicate names count apart."""
+    fields = df.schema.fields
+    keep = range(len(fields)) if keep is None else keep
+    df = df.toDF(*[f"c{i}" for i in range(len(fields))])
+    cols = {
+        i: (F.col(f"c{i}").cast("string"), StringType())
+        if isinstance(fields[i].dataType, ArrayType)
+        else (F.col(f"c{i}"), fields[i].dataType)
+        for i in keep
+    }
+    slots = list(dict.fromkeys(t for _, t in cols.values()))
+    pairs = [
+        F.struct(
             F.lit(i).alias("i"),
             F.when(
                 c.isNotNull(),
@@ -90,10 +94,10 @@ def _value_counts(df: DataFrame) -> DataFrame:
                 ]),
             ).alias("v"),
         )
-        for i, (c, t) in enumerate(cols)
+        for i, (c, t) in cols.items()
     ]
     return (
-        reduce(DataFrame.unionAll, parts)
+        df.select(F.inline(F.array(*pairs)))
         .groupBy("i", "v")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -125,17 +129,18 @@ def infer_column_classes(spark: SparkSession, df: DataFrame, table: str) -> Data
     for dict-encoded classes, the fitted ``vocab`` — everything
     auto_tokenize needs to serve a later batch.
 
-    Both passes read one _value_counts plan, whatever the column count:
+    Each pass is one _value_counts plan, one scan of the table whatever
+    the column count:
     - the stats (rows, exact distinct values, JSON-shaped values) are
       one ``groupBy(i)`` over it, read with one collect: 3 jobs, one
       per exchange and the result;
-    - the vocabularies are the same frame filtered to the dict-encoded
-      columns, which prunes the union to their scans: 2 jobs, none when
-      no column is dict-encoded. A vocabulary is the column's values
-      sorted on the driver in native order (ints numeric, strings by
-      code point, as Spark orders them) and cast to string, led by None
-      when the column holds a null, so a value's 1-based position is
-      its dense_rank over the column.
+    - the vocabularies are the same plan built over the dict-encoded
+      columns only (keeping their positions), so its scan reads just
+      those columns: 2 jobs, none when no column is dict-encoded. A
+      vocabulary is the column's values sorted on the driver in native
+      order (ints numeric, strings by code point, as Spark orders them)
+      and cast to string, led by None when the column holds a null, so
+      a value's 1-based position is its dense_rank over the column.
     So profiling runs at most 5 jobs, and the driver holds at most
     CATEGORICAL_MAX_DISTINCT values per dict-encoded column, never a
     text column's distinct values.
@@ -179,7 +184,7 @@ def infer_column_classes(spark: SparkSession, df: DataFrame, table: str) -> Data
         })
     values = {i: [] for i, r in enumerate(rows) if r["inferred_class"] in _DICT_CLASSES}
     if values:
-        for r in counts.where(F.col("i").isin(list(values))).collect():
+        for r in _value_counts(df, list(values)).collect():
             slot = rows[r["i"]]["spark_type"]
             values[r["i"]].append(None if r["v"] is None else r["v"][slot])
     for i, vs in values.items():

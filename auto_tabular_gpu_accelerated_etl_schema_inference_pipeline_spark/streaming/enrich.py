@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import load_table
-from .run import drain_to_memory, table_stream
+from .run import STATE_CONFS, drain_to_memory, table_stream
 from .windows import sum_value
 
 
@@ -42,6 +42,7 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         # streaming-native sketch — kept OUT of the oracle columns
         .agg(F.count("*").alias("n_events"), sum_value()),
         "complete",
+        STATE_CONFS,
     )
 
 

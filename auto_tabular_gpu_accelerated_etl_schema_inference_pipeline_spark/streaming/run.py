@@ -37,14 +37,14 @@ from ..session import built_once, normalize_event_ts, parquet_schema, scoped_con
 #: truncates them), which Spark's parquet reader otherwise rejects
 STREAM_CONFS = {"spark.sql.legacy.parquet.nanosAsLong": "true"}
 
-#: confs of the stateful lanes (a grouped state store, a stream-stream
-#: join): one state store is initialized per shuffle partition per
-#: micro-batch, so the width follows the fixture's key count (150
-#: users), not the caller's shuffle width. At a default session's 200
-#: the two stream-join lanes took 55 s and 50 s at sf0.01 on local[8];
-#: at 8 they take 10 s and 4 s. A real deployment sizes this to key
-#: cardinality / cluster width; the width is baked into the checkpoint
-#: at start, like production.
+#: confs of the stateful lanes (a windowed aggregate, a dedup, a grouped
+#: state store, a stream-stream join): one state store is initialized
+#: per shuffle partition per micro-batch, so the width follows the
+#: fixture's key count (150 users), not the caller's shuffle width. At a
+#: default session's 200 the two stream-join lanes took 55 s and 50 s at
+#: sf0.01 on local[8]; at 8 they take 10 s and 4 s. A real deployment
+#: sizes this to key cardinality / cluster width; the width is baked
+#: into the checkpoint at start, like production.
 STATE_CONFS = {"spark.sql.shuffle.partitions": "8"}
 
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .run import drain_to_memory, table_stream
+from .run import STATE_CONFS, drain_to_memory, table_stream
 
 
 def sum_value() -> Column:
@@ -44,6 +44,7 @@ def _window_sums(spark: SparkSession, sf_dir: str, window: Column) -> DataFrame:
         .agg(F.count("*").alias("n_events"), sum_value())
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value"),
         "complete",
+        STATE_CONFS,
     )
 
 
@@ -79,6 +80,7 @@ def q_streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["user_id", "event_type"])
         .select("user_id", "event_type"),
         "append",
+        STATE_CONFS,
     )
 
 
@@ -106,6 +108,7 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         ),
         "complete",
+        STATE_CONFS,
     )
 
 
@@ -142,6 +145,7 @@ def q_streaming_dedup_within_watermark(
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type"),
         "append",
+        STATE_CONFS,
     )
 
 
@@ -175,6 +179,7 @@ def q_streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("h"), "n", "x"),
         "complete",
+        STATE_CONFS,
     )
     c1_mu = int(round(round(math.log(SPRT_P1 / SPRT_P0), 6) * 1e6))
     c0_mu = int(

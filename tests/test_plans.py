@@ -615,37 +615,55 @@ def test_memoized_builders_raw_plans_audited(spark, sf_dir):
         assert "BroadcastNestedLoopJoin" not in plan, fn.__name__
 
 
-def test_profiling_pass_prunes_columns_no_expand(spark, sf_dir):
+def test_profiling_pass_is_one_scan(spark, sf_dir):
     """Profiling is one plan: _value_counts, the frame every profiling
-    pass (infer_column_classes, partition_advisor) reads, unions
-    per-column projections over PRUNED single-column scans — no Expand
-    node (the multi-countDistinct shape that replicates every row once
-    per counted column) and every leaf scan reads exactly one column —
-    and all columns share exactly one exchange, keyed on (i, v), for a
-    2-column and a 5-column frame alike."""
+    pass (infer_column_classes, partition_advisor) reads, has exactly one
+    leaf scan, whose ReadSchema holds exactly the profiled columns; a
+    Generate turns each row into one (i, v) pair per column, with no
+    Expand node (the multi-countDistinct shape); and all columns share
+    exactly one exchange, keyed on (i, v), for a 2-column and a 5-column
+    frame alike. infer_column_classes' vocabulary pass scans only the
+    dict-encoded columns."""
     import re
+    from unittest import mock
 
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.schema_infer import (
-        _value_counts,
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators import (
+        schema_infer,
     )
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (
         load_table,
     )
+
+    def read_columns(df):
+        # the formatted plan prints each scan's ReadSchema in full
+        (schema,) = re.findall(r"ReadSchema: struct<([^>]*)>", formatted_plan(df))
+        return sorted(f.split(":")[0] for f in schema.split(","))
 
     li = load_table(spark, sf_dir, "lineitem")
     for cols in (
         ["l_orderkey", "l_returnflag"],
         ["l_orderkey", "l_returnflag", "l_quantity", "l_linenumber", "l_shipdate"],
     ):
-        plan = _value_counts(li.select(*cols))._jdf.queryExecution().executedPlan().toString()
-        assert "Expand" not in plan, plan[:2000]
-        read_schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-        assert len(read_schemas) == len(cols), plan[:2000]
-        for rs in read_schemas:
-            assert rs.count(":") == 1, f"scan reads more than one column: {rs}"
+        counts = schema_infer._value_counts(li.select(*cols))
+        assert read_columns(counts) == sorted(cols)
+        plan = counts._jdf.queryExecution().executedPlan().toString()
+        assert "Generate" in plan and "Expand" not in plan, plan[:2000]
         exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
         assert len(exchanges) == 1, plan[:2000]
         assert re.match(r"i#\d+, v#\d+, \d+$", exchanges[0]), exchanges
+
+    passes = []
+    real = schema_infer._value_counts
+
+    def spy(df, keep=None):
+        passes.append(real(df, keep))
+        return passes[-1]
+
+    with mock.patch.object(schema_infer, "_value_counts", spy):
+        schema_infer.infer_column_classes(spark, li, "lineitem")
+    stats, vocab = passes
+    assert read_columns(stats) == sorted(li.columns)
+    assert read_columns(vocab) == ["l_linenumber", "l_linestatus", "l_returnflag"]
 
 
 def test_range_join_bucketed_is_equi_join(spark, sf_dir):

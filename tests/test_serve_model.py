@@ -356,6 +356,86 @@ def test_profiling_zero_rows_under_ansi(spark, tmp_path):
     }
 
 
+def _profiles(spark, df, ref=None):
+    """(got, want): infer_column_classes' (n_rows, n_distinct, vocab) per
+    column of ``df``, and the same per column of ``ref`` (default ``df``)
+    from an independent ``groupBy(c).count()`` (an array column grouped
+    by its string form) sorted by Spark, nulls first: its row total, its
+    non-null keys and, where ``df``'s column is dict-encoded, the keys
+    as strings."""
+    ref = df if ref is None else ref
+    classes = schema_infer.infer_column_classes(spark, df, "t").collect()
+    got = [(r["n_rows"], r["n_distinct"], r["vocab"]) for r in classes]
+    want = []
+    for f, r in zip(ref.schema.fields, classes):
+        c = F.col(quote_name(f.name))
+        if f.dataType.simpleString().startswith("array"):
+            c = c.cast("string")
+        groups = ref.groupBy(c.alias("k")).count().orderBy("k").collect()
+        keys = [g["k"] for g in groups]
+        want.append((
+            sum(g["count"] for g in groups),
+            sum(k is not None for k in keys),
+            [None if k is None else str(k) for k in keys]
+            if r["strategy"] == "dict_encode" else None,
+        ))
+    return got, want
+
+
+def test_profile_matches_per_column_group_by(spark, sf_dir):
+    """On every sf0.01 table, each column's row count, distinct count
+    and vocabulary equal a per-column groupBy's."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (
+        load_events,
+        load_table,
+    )
+
+    for t in ("region", "nation", "customer", "supplier", "part", "orders",
+              "lineitem", "events", "documents", "embeddings"):
+        df = load_events(spark, sf_dir) if t == "events" else load_table(spark, sf_dir, t)
+        got, want = _profiles(spark, df)
+        assert got == want, t
+
+
+def test_profile_edge_values_match_group_by_under_ansi(spark):
+    """Under ANSI, a frame with nulls in every column but the id, NaN,
+    -0.0 and 0.0, JSON strings, arrays (one holding -0.0, one 0.0) and
+    timestamps profiles as the per-column groupBy counts it, and so does
+    its 0-row form. Columns are counted by position: two columns of one
+    name keep their own counts."""
+    nan = float("nan")
+    rows = [
+        (
+            i,
+            None if i % 7 == 0 else (-0.0, 0.0, nan, 1.5)[i % 4],
+            None if i % 10 == 0 else "bca"[i % 3],
+            None if i % 9 == 0 else (30, 2, 10)[i % 3],
+            None if i % 11 == 0 else '{"k": %d}' % i,
+            None if i % 8 == 0 else [(-0.0, 0.0, 1.0)[i % 3], 1.0],
+            None if i % 6 == 0 else i * 3600,
+        )
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "doc_id bigint, x double, seg string, grade int, js string, "
+        "emb array<float>, secs bigint",
+    ).withColumn("ts", F.timestamp_seconds("secs")).drop("secs")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got, want = _profiles(spark, df)
+        assert got == want
+        assert [v is not None for _, _, v in got] == [False, False, True, True, False, False, False]
+        got, want = _profiles(spark, df.limit(0))
+        assert got == want == [(0, 0, None)] * 7
+        pair = df.select("doc_id", "seg")
+        got, want = _profiles(spark, pair.toDF("k", "k"), ref=pair)
+        assert got == want
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
 def test_serve_py4j_budget(spark, tmp_path):
     """Building a served frame costs a few Py4J round trips per column
     and none per split point or vocabulary value: bucketize on 20
