@@ -402,6 +402,11 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _doc_toks():
+    """Each doc's distinct normalized tokens."""
+    return F.array_distinct(F.split(_norm_text(), " ")).alias("toks")
+
+
 def pin_doc_tokens(docs: DataFrame, *keep) -> DataFrame:
     """``(doc_id, *keep, toks)`` over a text-bearing frame, pinned with
     ``localCheckpoint``: ``toks`` is each doc's distinct normalized
@@ -419,19 +424,43 @@ def pin_doc_tokens(docs: DataFrame, *keep) -> DataFrame:
     when the slots read a pinned column instead). The verify stage
     broadcasts the same pinned column. ``localCheckpoint``, not
     ``persist()``: under AQE each cached relation runs as its own query
-    stage, ~3 more jobs per corpus curation."""
-    toks = F.array_distinct(F.split(_norm_text(), " "))
-    return docs.select("doc_id", *keep, toks.alias("toks")).localCheckpoint()
+    stage, ~3 more jobs per corpus curation. The pin is released
+    through its ``LogicalRDD`` (``unpin``)."""
+    return docs.select("doc_id", *keep, _doc_toks()).localCheckpoint()
+
+
+def unique_doc_tokens(docs: DataFrame, *keep) -> DataFrame:
+    """``(doc_id, *keep, toks)`` like pin_doc_tokens, unpinned, for the
+    first document (lowest non-null doc_id) of each normalized-text md5
+    digest: exact dedup through one exchange. The narrow columns and
+    the 32-char hex digest are projected BEFORE the window, so the exchange
+    keyed on the digest moves ids, digests and token sets, never text;
+    the text-bearing scan is read once, with no join back onto it."""
+    first = Window.partitionBy("fp").orderBy(F.col("doc_id").asc_nulls_last())
+    return (
+        docs.select("doc_id", *keep, _doc_toks(), F.md5(_norm_text()).alias("fp"))
+        .withColumn("fp_rk", F.row_number().over(first))
+        .filter((F.col("fp_rk") == 1) & F.col("doc_id").isNotNull())
+        .drop("fp_rk", "fp")
+    )
+
+
+def unpin(pinned: DataFrame) -> None:
+    """Release a ``localCheckpoint`` pin: a checkpointed frame has no
+    ``unpersist()``, but its analyzed plan is the ``LogicalRDD`` over the
+    persisted RDD. A frame that reads the pin fails if it runs after
+    this: a local checkpoint keeps no lineage to recompute its blocks."""
+    pinned._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def _minhash_bands(toks_df: DataFrame, carry_sig: bool = False) -> DataFrame:
     """Shared MinHash plumbing over a ``(doc_id, toks)`` frame: the
-    pinned (doc_id, band, bucket[, sig, sz]) frame. Bands carry ONLY
+    (doc_id, band, bucket[, sig, sz]) frame, unpinned. Bands carry ONLY
     ids+buckets (plus the 32-long signature and token-set size when
     ``carry_sig`` — ~260 B/row, used for in-bucket Jaccard estimation
-    and the length filter): the candidate join must never shuffle token
-    arrays — at scale the arrays dominate the row width and the bucket
-    fan-out squares it."""
+    and the length filter): the candidate pairing must never shuffle
+    token arrays — at scale the arrays dominate the row width and the
+    bucket fan-out squares it."""
     r = MINHASH_K // MINHASH_BANDS
     sigs = toks_df.select(
         "doc_id",
@@ -439,7 +468,7 @@ def _minhash_bands(toks_df: DataFrame, carry_sig: bool = False) -> DataFrame:
         F.size("toks").alias("sz"),
     )
     extra = ["sig", "sz"] if carry_sig else []
-    bands = sigs.select(
+    return sigs.select(
         "doc_id",
         *extra,
         F.explode(
@@ -456,16 +485,6 @@ def _minhash_bands(toks_df: DataFrame, carry_sig: bool = False) -> DataFrame:
             )
         ).alias("bb"),
     ).select("doc_id", *extra, "bb.band", "bb.bucket")
-    # Materialize bands (r12, guide §2.4/§5): it feeds the two sides of
-    # the candidate self-join plus the rep-cap window, and Catalyst
-    # shares no subtrees across DAG branches, so uncached the signature
-    # pipeline re-ran up to 5x per query (measured: the near-dedup stage
-    # of training_data_prep dropped ~2.5x at sf0.1 with the pins). Like
-    # the token pin it is a SMALL by-construction artifact (ids + 32-slot
-    # sigs, never raw text) — output-sized, same class the verify
-    # broadcast already assumes. Unpinning it to share the (band, bucket)
-    # exchange between the join sides measured ~+40% CPU.
-    return bands.localCheckpoint()
 
 
 def minhash_near_dup_pairs(toks_df: DataFrame) -> DataFrame:
@@ -474,7 +493,12 @@ def minhash_near_dup_pairs(toks_df: DataFrame) -> DataFrame:
     NOTE: output is ALL verified pairs — inherently quadratic in
     near-dup cluster size (a 1600-doc family is ~1.3M pairs). For dedup
     decisions use minhash_near_dup_drop_ids, which is linear."""
-    bands = _minhash_bands(toks_df)
+    # Pin the bands (r12, guide §2.4/§5): both sides of the self-join
+    # read them, and Catalyst shares no subtrees across DAG branches, so
+    # unpinned each side recomputed the signatures (measured ~+40% CPU
+    # sharing the (band, bucket) exchange instead). Ids + buckets only,
+    # never raw text.
+    bands = _minhash_bands(toks_df).localCheckpoint()
     a = bands.alias("a")
     b = bands.alias("b")
     cand = (
@@ -503,6 +527,32 @@ def minhash_near_dup_pairs(toks_df: DataFrame) -> DataFrame:
     )
 
 
+def _bucket_rep_pairs(bands: DataFrame) -> DataFrame:
+    """``(b_id, b_sig, sz_b, a_id, a_sig, sz_a)``: every band row (b)
+    beside each of its (band, bucket)'s REPS_PER_BUCKET smallest ids (a)
+    — the rows of ``reps ⋈ bands`` on (band, bucket), from one exchange.
+    The representatives reach every row of their bucket as one list
+    (<= REPS_PER_BUCKET entries) collected over the whole (band, bucket)
+    window, then inlined: no join, and no broadcast of the band rows,
+    so the shape holds once they outgrow a broadcast."""
+    bucket_w = Window.partitionBy("band", "bucket")
+    rep = F.struct(
+        F.col("doc_id").alias("a_id"), F.col("sig").alias("a_sig"),
+        F.col("sz").alias("sz_a"),
+    )
+    return (
+        bands.withColumn("rep_rk", F.row_number().over(bucket_w.orderBy("doc_id")))
+        .select(
+            F.col("doc_id").alias("b_id"), F.col("sig").alias("b_sig"),
+            F.col("sz").alias("sz_b"),
+            F.collect_list(F.when(F.col("rep_rk") <= REPS_PER_BUCKET, rep))
+            .over(bucket_w)
+            .alias("reps"),
+        )
+        .select("b_id", "b_sig", "sz_b", F.inline("reps"))
+    )
+
+
 def minhash_near_dup_drop_ids(toks_df: DataFrame) -> DataFrame:
     """Docs to DROP for near-dedup over a ``(doc_id, toks)`` frame (see
     pin_doc_tokens), with at most ONE exact-Jaccard
@@ -527,30 +577,19 @@ def minhash_near_dup_drop_ids(toks_df: DataFrame) -> DataFrame:
        length filter + cross-band pair dedup (sf0.01). Precision stays
        1 (exact verify gates every drop); recall tested >= 0.9 against
        the all-pairs drop set."""
+    # Signatures are computed in the map stage of the one (band, bucket)
+    # exchange below, their only reader, so the bands are not pinned.
     bands = _minhash_bands(toks_df, carry_sig=True)
     # GIANT-BUCKET CAP: the droppable side pairs only with its bucket's
     # REPS_PER_BUCKET smallest ids. Near-dup families land in the same
     # buckets, so a family of K docs would otherwise emit K^2 in-bucket
     # pairs per band (measured: 1600-doc families -> 10M candidate rows
     # x 260 B of carried signature at sf0.1 = the near-dedup stage's
-    # whole cost). Capping the partner set keeps the join linear in
+    # whole cost). Capping the partner set keeps the pairing linear in
     # bucket size; recall survives (tested >= 0.9 vs the all-pairs drop
     # set) because any family member verifies against the family's
     # smallest ids, which are exactly the docs the dedup keeps.
-    rep_w = Window.partitionBy("band", "bucket").orderBy(F.col("doc_id").asc())
-    reps = (
-        bands.withColumn("rep_rk", F.row_number().over(rep_w))
-        .filter(F.col("rep_rk") <= REPS_PER_BUCKET)
-        .drop("rep_rk")
-    )
-    a = reps.select(
-        F.col("doc_id").alias("a_id"), F.col("sig").alias("a_sig"),
-        F.col("sz").alias("sz_a"), "band", "bucket",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("b_id"), F.col("sig").alias("b_sig"),
-        F.col("sz").alias("sz_b"), "band", "bucket",
-    )
+    pairs = _bucket_rep_pairs(bands)
     est = (
         F.size(
             F.filter(
@@ -562,8 +601,7 @@ def minhash_near_dup_drop_ids(toks_df: DataFrame) -> DataFrame:
     )
     size_ratio = F.least("sz_a", "sz_b") / F.greatest("sz_a", "sz_b")
     cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))
+        pairs.filter(F.col("a_id") < F.col("b_id"))
         .filter(size_ratio >= JACCARD_THRESHOLD)
         .select(
             "a_id", "b_id", est.alias("est"),

@@ -4,20 +4,23 @@ tokenize -> partitioned sink, each stage one of the engine's operators.
 
 Stage plan shapes (why this survives scale-up):
 1. quality filter: map-only column expressions over the documents scan;
-2. exact dedup: one shuffle keyed on a 16-byte digest (not the text),
-   then a semi-join that moves the surviving text-bearing rows once;
-3. one narrow pin: the survivors are projected once to (doc_id, lang,
-   source, f_tokens, f_chars, toks) and localCheckpointed — the only
-   plan that reads text, and the only place it is tokenized;
-4. near-dedup: MinHash-LSH candidates + verified Jaccard over the pin's
-   toks (bounded shuffles; see operators/dedup.py), then a left-anti
-   join over the narrow columns into a lazily persisted frame;
-5. numeric tokenize: sketch fit (KBs of driver state; its first job
+2. exact dedup + the one narrow pin: the survivors are projected to
+   (doc_id, lang, source, f_tokens, f_chars, toks) plus a 32-char md5
+   digest, the first doc per digest is kept through one exchange keyed
+   on the digest (text never crosses it), and the result is
+   localCheckpointed — the only plan that reads text, read once, and
+   the only place it is tokenized;
+3. near-dedup: MinHash-LSH candidates + verified Jaccard over the pin's
+   toks (one exchange per (band, bucket), bands unpinned; see
+   operators/dedup.py), then a left-anti join over the narrow columns
+   into a lazily persisted frame;
+4. numeric tokenize: sketch fit (KBs of driver state; its first job
    fills the cache) + map-only bucketize;
-6. sink: partitioned parquet so downstream reads prune; the cache is
-   released after the write.
-No exchange, broadcast or cache below the sink carries text: 13 jobs
-per call on a 10k-document corpus at 4 cores.
+5. sink: partitioned parquet so downstream reads prune; then the cache
+   and the pin are released and the written table is returned.
+No exchange, broadcast or cache below the sink carries text: 10 jobs
+per call on a 10k-document corpus at 4 cores, and with a sink nothing
+stays persisted.
 """
 
 from __future__ import annotations
@@ -25,10 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.dedup import minhash_near_dup_drop_ids, pin_doc_tokens
+from .operators.dedup import minhash_near_dup_drop_ids, unique_doc_tokens, unpin
 from .operators.model import QuantileBinModel
 from .operators.text import STOPWORDS
-from .session import load_spread, load_table
+from .session import load_spread, load_table, parquet_schema
 
 
 def quality_filter(
@@ -69,54 +72,56 @@ def prepare_training_data(
     out_path: str | None = None,
 ) -> DataFrame:
     """documents + lineitem-derived numeric features -> one tokenized,
-    deduped, quality-filtered training table."""
+    deduped, quality-filtered training table. With ``out_path`` the
+    table is written there, every pin is released, and the frame
+    returned reads the written table; without it the frame is lazy and
+    keeps its pins (see q_training_data_prep)."""
     # spread an under-split scan across cores before the expression-
     # bound quality gate (r12, guide §2.5; no-op at production split
     # counts)
     docs = load_spread(spark, sf_dir, "documents")
-    # Exact dedup: decide with small rows, move big rows once. The
-    # quality gate + digest project to (doc_id, fp) — ids + 16-byte
-    # digests, no text — and the winner set is a min-per-digest over
-    # them; the text-bearing rows then move once through a semi-join
-    # keyed on the unique doc_id (reps ⊆ quality survivors, so the raw
-    # scan needs no second quality-gate evaluation).
-    fp = F.md5(F.lower(F.trim(F.col("text"))))
-    keyed = quality_filter(docs).select("doc_id", fp.alias("fp"))
-    reps = (
-        keyed.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    # The one pin: the survivors' text is read here once and leaves as
-    # the narrow (doc_id, lang, source, f_tokens, f_chars, toks). The
-    # MinHash stage reads toks from it; the anti-join, the cache, the
-    # fit and the sink see only the narrow columns, never text.
-    # f_tokens counts the raw split, not the distinct normalized toks.
-    feats = pin_doc_tokens(
-        docs.join(reps, "doc_id", "left_semi"),
+    # The one pin, which is also the exact dedup: the quality survivors'
+    # text is read here once and leaves as the narrow (doc_id, lang,
+    # source, f_tokens, f_chars, toks), first per text digest through
+    # one exchange that moves no text. The MinHash stage reads toks from
+    # it; the anti-join, the cache, the fit and the sink see only the
+    # narrow columns. f_tokens counts the raw split, not the distinct
+    # normalized toks.
+    pin = unique_doc_tokens(
+        quality_filter(docs),
         "lang",
         "source",
         F.size(F.split(F.col("text"), " ")).cast("double").alias("f_tokens"),
         F.length("text").cast("double").alias("f_chars"),
-    )
+    ).localCheckpoint()
     # persist the near-deduped frame: the fit's two jobs and the sink
     # are separate actions, and uncached EACH re-ran the MinHash drop
     # computation (measured 3x ~10 s at sf0.1). Lazy: the fit's first
     # job fills the cache, so no count() runs just to fill it.
-    feats = dedup_near_remove(feats).persist()
+    feats = dedup_near_remove(pin).persist()
 
     # numeric side: tokenize document stats (the reference op applied to
     # derived features) — fit on the filtered corpus, map-only transform
     model = QuantileBinModel.fit(feats, ["f_tokens", "f_chars"], bins=20)
     tokenized = model.transform(feats, keep_cols=["doc_id", "lang", "source"])
-    if out_path:
-        tokenized.write.mode("overwrite").partitionBy("lang").parquet(out_path)
-        feats.unpersist()
-    return tokenized
+    if not out_path:
+        return tokenized
+    tokenized.write.mode("overwrite").partitionBy("lang").parquet(out_path)
+    # nothing stays pinned: the written table is the result, read with
+    # its footer schema (no job), so neither the cache nor the pin has a
+    # reader left
+    feats.unpersist()
+    unpin(pin)
+    written = spark.read.schema(parquet_schema(spark, out_path)).parquet(out_path)
+    return written.select(*tokenized.columns)
 
 
 def q_training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry (rows-only: composition of oracle-covered stages +
-    an approximate near-dedup stage)."""
+    an approximate near-dedup stage). Without a sink the result is lazy
+    and still reads the narrow pin and the near-deduped cache, so both
+    stay persisted for the session's lifetime: the one case where the
+    pipeline leaves a pin behind."""
     return prepare_training_data(spark, sf_dir, out_path=None)
 
 

@@ -10,7 +10,8 @@ Usage:
     python scripts/sweep.py --all           # every oracle-backed query,
                                             # then smoke the rows-only
                                             # tail (execute + count)
-    python scripts/sweep.py name1 name2 ... # specific queries
+    python scripts/sweep.py name1 name2 ... # specific queries (rows-only
+                                            # ones are smoked)
 
 Each lane also gets a drift report: a ``DRIFT <lane>: ...`` line for
 every runtime conf, temp view or temporary function the lane left
@@ -73,7 +74,9 @@ def main(argv: list[str]) -> int:
         # (execute + row count) so --all covers the whole registry
         smoke = [n for n in queries if n not in oracles]
     elif argv:
-        names = argv
+        # named rows-only queries are smoked, like --all's tail
+        names = [n for n in argv if n in oracles]
+        smoke = [n for n in argv if n not in oracles]
     else:
         # filter THEN slice: the default must mirror the driver's
         # 50-oracle-query gate even if a non-oracle entry ever lands in

@@ -123,6 +123,87 @@ def test_minhash_drop_ids_subset_and_recall(spark, sf_dir):
         assert len(lin_drop) / len(all_pairs_drop) >= 0.9
 
 
+def _rep_join_candidates(bands):
+    """(a_id, b_id, sz_a, sz_b) of a plain reps ⋈ bands join on (band,
+    bucket): each bucket's REPS_PER_BUCKET smallest ids against every
+    row of that bucket."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    rank = F.row_number().over(Window.partitionBy("band", "bucket").orderBy("doc_id"))
+    reps = bands.withColumn("rk", rank).filter(F.col("rk") <= dedup.REPS_PER_BUCKET)
+    a = reps.select(F.col("doc_id").alias("a_id"), F.col("sz").alias("sz_a"), "band", "bucket")
+    b = bands.select(F.col("doc_id").alias("b_id"), F.col("sz").alias("sz_b"), "band", "bucket")
+    return a.join(b, ["band", "bucket"]).select("a_id", "b_id", "sz_a", "sz_b")
+
+
+def _assert_rep_candidates_match_join(bands):
+    from collections import Counter
+
+    cols = ["a_id", "b_id", "sz_a", "sz_b"]
+    got = Counter(map(tuple, dedup._bucket_rep_pairs(bands).select(*cols).collect()))
+    want = Counter(map(tuple, _rep_join_candidates(bands).collect()))
+    assert got == want
+
+
+def test_bucket_rep_list_equals_rep_join_sf(spark, sf_dir):
+    """The drop-ids path pairs rows with their bucket's representatives
+    through one per-(band, bucket) list, not a join: on the fixture
+    documents its candidates are exactly those of reps ⋈ bands, pair
+    for pair and as often (a pair colliding in two bands counts twice)."""
+    toks = dedup.pin_doc_tokens(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    _assert_rep_candidates_match_join(dedup._minhash_bands(toks, carry_sig=True))
+
+
+def test_bucket_rep_list_equals_rep_join_giant_bucket(spark):
+    """Same equivalence where one bucket holds more rows than
+    REPS_PER_BUCKET: 40 identical token sets share every band's bucket,
+    so only the 16 smallest of their ids are representatives."""
+    n_dup = dedup.REPS_PER_BUCKET + 24
+    rows = [(1000 - 7 * i, ["w1", "w2", "w3", "w4", "w5"]) for i in range(n_dup)]
+    rows += [(i, [f"u{i}", f"v{i}", "w1"]) for i in range(30)]
+    toks = spark.createDataFrame(rows, "doc_id bigint, toks array<string>").repartition(3)
+    bands = dedup._minhash_bands(toks, carry_sig=True)
+    biggest = bands.groupBy("band", "bucket").count().agg({"count": "max"}).first()[0]
+    assert biggest == n_dup
+    _assert_rep_candidates_match_join(bands)
+
+
+def test_digest_window_survivors_equal_min_semi_join(spark):
+    """unique_doc_tokens keeps the first doc per normalized-text digest
+    through a window: the survivors, and their token sets, equal the
+    min(doc_id)-per-digest aggregate semi-joined back to the documents.
+    Planted duplicates differ only in case and outer spaces, with the
+    lowest id neither first nor last in input order; a null id never
+    wins over a real one, and a digest held only by a null id has no
+    survivor (the semi-join matches no null)."""
+    from pyspark.sql import functions as F
+
+    rows = [
+        (7, "alpha beta gamma"),
+        (3, "  Alpha Beta Gamma"),
+        (11, "ALPHA BETA GAMMA  "),
+        (5, "delta epsilon"),
+        (2, "Delta Epsilon "),
+        (8, " DELTA epsilon"),
+        (None, "zeta eta"),
+        (9, "Zeta Eta"),
+        (None, "lonely text"),
+        (4, "theta"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string").repartition(3)
+    fp = F.md5(F.lower(F.trim(F.col("text"))))
+    reps = docs.groupBy(fp.alias("fp")).agg(F.min("doc_id").alias("doc_id"))
+    semi = docs.join(reps.select("doc_id"), "doc_id", "left_semi")
+
+    def rows_of(df):
+        return sorted((r["doc_id"], sorted(r["toks"])) for r in df.collect())
+
+    got = rows_of(dedup.unique_doc_tokens(docs))
+    assert got == rows_of(dedup.pin_doc_tokens(semi))
+    assert [d for d, _ in got] == [2, 3, 4, 9]
+
+
 def test_connected_components_hand_graph(spark):
     """Chain 1-2-3, pair 10-11, isolates 20/21: labels converge to the
     min id of each component; isolates keep their own id."""

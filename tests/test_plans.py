@@ -848,3 +848,62 @@ def test_minhash_drop_ids_one_b_id_exchange(spark, sf_dir):
     ]
     assert len(keyed) == 1, plan[:3000]
     assert re.match(r"b_id#\d+L?, \d+$", keyed[0]), keyed
+
+
+def test_exact_dedup_pin_one_fp_exchange(spark, sf_dir):
+    """The exact dedup that feeds the corpus pipeline's one pin is a
+    window over the text digest: the quality survivors' narrow columns
+    cross one exchange keyed on ``fp``, with no broadcast and no second
+    read of the documents (the min-per-digest aggregate it replaced was
+    semi-joined back onto a second scan)."""
+    import re
+
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.dedup import (
+        unique_doc_tokens,
+    )
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.pipelines import (
+        quality_filter,
+    )
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (
+        load_spread,
+    )
+
+    docs = quality_filter(load_spread(spark, sf_dir, "documents"))
+    plan = unique_doc_tokens(docs, "lang", "source")._jdf.queryExecution().executedPlan().toString()
+    hashed = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    assert len(hashed) == 1, plan[:3000]
+    assert re.match(r"fp#\d+, \d+$", hashed[0]), hashed
+    assert "BroadcastExchange" not in plan, plan[:3000]
+    assert "Join" not in plan, plan[:3000]
+    assert plan.count("FileScan parquet") == 1, plan[:3000]
+
+
+def test_minhash_drop_ids_one_bucket_exchange_no_band_pin(spark, sf_dir):
+    """The drop-ids path pairs each band row with its bucket's
+    representatives through one exchange keyed on (band, bucket): no
+    join keys on band or bucket, and the band rows are not pinned (no
+    RDD scan carries a band column), so the signatures are computed in
+    that exchange's map stage."""
+    import re
+
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.dedup import (
+        minhash_near_dup_drop_ids,
+        pin_doc_tokens,
+    )
+
+    toks = pin_doc_tokens(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    plan = minhash_near_dup_drop_ids(toks)._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    banded = [
+        k for k in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+        if re.search(r"\b(band|bucket)#", k)
+    ]
+    assert len(banded) == 1, plan[:3000]
+    assert re.match(r"band#\d+, bucket#\d+L?, \d+$", banded[0]), banded
+    band_joins = [
+        ln for ln in lines if "Join" in ln and re.search(r"\b(band|bucket)#", ln)
+    ]
+    assert not band_joins, band_joins
+    rdd_scans = [ln for ln in lines if "Scan ExistingRDD" in ln]
+    assert rdd_scans, plan[:3000]
+    assert not [ln for ln in rdd_scans if re.search(r"\bband#", ln)], rdd_scans
