@@ -374,18 +374,36 @@ FROM groups a JOIN groups b
 """
 
 
-def _minhash_sig_col(tokens_col, k: int):
-    """Array of k minhashes: min over tokens of xxhash64(token, seed=i).
-    Pure built-ins (transform + array_min + xxhash64) — no UDF, fully
-    codegen'd."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(tokens_col, lambda t: F.xxhash64(t, F.lit(i)))
-            )
-            for i in range(k)
-        ]
+#: The MinHash stage as SQL text: one definition of the signature, the
+#: bands, the estimate and the verify, shared by the drop path and the
+#: pair path. A ``selectExpr`` string crosses Py4J as one argument; the
+#: same projections built from Column objects sent one command per
+#: function node. Building the corpus pipeline's near-dedup stage took
+#: 2,718 commands and 0.5-0.9 s of driver time before any job ran; as
+#: text it takes 142 and ~0.24 s (4 vCPU).
+_R = MINHASH_K // MINHASH_BANDS
+#: k minhashes: min over the doc's tokens of xxhash64(token, i). Pure
+#: built-ins, no UDF.
+_SIG = "array({}) AS sig".format(
+    ", ".join(f"array_min(transform(toks, t -> xxhash64(t, {i})))" for i in range(MINHASH_K))
+)
+#: one (band, bucket) row per band: the bucket hashes the band's r slots
+_BANDS = "inline(array({}))".format(
+    ", ".join(
+        "named_struct('band', {}, 'bucket', xxhash64({}))".format(
+            i, ", ".join(f"sig[{i * _R + j}]" for j in range(_R))
+        )
+        for i in range(MINHASH_BANDS)
     )
+)
+#: MinHash estimate of a pair's Jaccard: the share of agreeing slots
+_EST = f"size(filter(zip_with(a_sig, b_sig, (x, y) -> x = y), m -> m)) / {MINHASH_K}"
+#: exact token-set Jaccard of a pair
+_JACCARD = (
+    "size(array_intersect(toks_a, toks_b))"
+    " / (size(toks_a) + size(toks_b) - size(array_intersect(toks_a, toks_b)))"
+)
+_AT_LEAST = f">= {JACCARD_THRESHOLD!r}D"
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -454,37 +472,27 @@ def unpin(pinned: DataFrame) -> None:
 
 
 def _minhash_bands(toks_df: DataFrame, carry_sig: bool = False) -> DataFrame:
-    """Shared MinHash plumbing over a ``(doc_id, toks)`` frame: the
-    (doc_id, band, bucket[, sig, sz]) frame, unpinned. Bands carry ONLY
-    ids+buckets (plus the 32-long signature and token-set size when
-    ``carry_sig`` — ~260 B/row, used for in-bucket Jaccard estimation
-    and the length filter): the candidate pairing must never shuffle
-    token arrays — at scale the arrays dominate the row width and the
+    """Shared MinHash plumbing over a ``(doc_id, toks, *carried)`` frame:
+    the (doc_id, band, bucket) frame, unpinned. With ``carry_sig`` (the
+    drop path) every row also carries the 32-long signature and the
+    token-set size (~260 B/row, used for in-bucket Jaccard estimation
+    and the length filter), and the band-0 row carries ``keep``: a
+    struct of the doc's columns but ``toks``, null on the other bands,
+    so a doc's own columns cross the exchange once. Bands never carry
+    token arrays: at scale the arrays dominate the row width and the
     bucket fan-out squares it."""
-    r = MINHASH_K // MINHASH_BANDS
-    sigs = toks_df.select(
-        "doc_id",
-        _minhash_sig_col(F.col("toks"), MINHASH_K).alias("sig"),
-        F.size("toks").alias("sz"),
+    if not carry_sig:
+        return toks_df.selectExpr("doc_id", _SIG).selectExpr("doc_id", _BANDS)
+    keep = ", ".join("`{}`".format(c.replace("`", "``")) for c in toks_df.columns if c != "toks")
+    return (
+        toks_df.selectExpr("doc_id", _SIG, "size(toks) AS sz", f"struct({keep}) AS keep")
+        .selectExpr("doc_id", "sig", "sz", "keep", _BANDS)
+        .selectExpr("doc_id", "sig", "sz", "band", "bucket", "IF(band = 0, keep, NULL) AS keep")
     )
-    extra = ["sig", "sz"] if carry_sig else []
-    return sigs.select(
-        "doc_id",
-        *extra,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.xxhash64(
-                            *[F.element_at("sig", i * r + j + 1) for j in range(r)]
-                        ).alias("bucket"),
-                    )
-                    for i in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", *extra, "bb.band", "bb.bucket")
+
+
+def _broadcast_toks(toks_df: DataFrame, id_col: str, toks_col: str) -> DataFrame:
+    return toks_df.selectExpr(f"doc_id AS {id_col}", f"toks AS {toks_col}").hint("broadcast")
 
 
 def minhash_near_dup_pairs(toks_df: DataFrame) -> DataFrame:
@@ -499,68 +507,65 @@ def minhash_near_dup_pairs(toks_df: DataFrame) -> DataFrame:
     # sharing the (band, bucket) exchange instead). Ids + buckets only,
     # never raw text.
     bands = _minhash_bands(toks_df).localCheckpoint()
-    a = bands.alias("a")
-    b = bands.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
+        bands.selectExpr("doc_id AS a_id", "band", "bucket")
+        .join(bands.selectExpr("doc_id AS b_id", "band", "bucket"), ["band", "bucket"])
+        .filter("a_id < b_id")
+        .select("a_id", "b_id")
         .dropDuplicates(["a_id", "b_id"])
     )
     # verification: broadcast the token table (per-doc distinct tokens —
     # MBs, not the quadratic pair set) so the exact-Jaccard check is a
     # map-only stage over the candidates.
-    ta = F.broadcast(toks_df.select(F.col("doc_id").alias("a_id"), F.col("toks").alias("toks_a")))
-    tb = F.broadcast(toks_df.select(F.col("doc_id").alias("b_id"), F.col("toks").alias("toks_b")))
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    union = F.size("toks_a") + F.size("toks_b") - inter
     return (
-        cand.join(ta, "a_id")
-        .join(tb, "b_id")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("a_id", "b_id", "jaccard")
+        cand.join(_broadcast_toks(toks_df, "a_id", "toks_a"), "a_id")
+        .join(_broadcast_toks(toks_df, "b_id", "toks_b"), "b_id")
+        .selectExpr("a_id", "b_id", f"{_JACCARD} AS jaccard")
+        .filter(f"jaccard {_AT_LEAST}")
     )
 
 
 def _bucket_rep_pairs(bands: DataFrame) -> DataFrame:
-    """``(b_id, b_sig, sz_b, a_id, a_sig, sz_a)``: every band row (b)
-    beside each of its (band, bucket)'s REPS_PER_BUCKET smallest ids (a)
-    — the rows of ``reps ⋈ bands`` on (band, bucket), from one exchange.
-    The representatives reach every row of their bucket as one list
-    (<= REPS_PER_BUCKET entries) collected over the whole (band, bucket)
-    window, then inlined: no join, and no broadcast of the band rows,
-    so the shape holds once they outgrow a broadcast."""
-    bucket_w = Window.partitionBy("band", "bucket")
-    rep = F.struct(
-        F.col("doc_id").alias("a_id"), F.col("sig").alias("a_sig"),
-        F.col("sz").alias("sz_a"),
-    )
+    """``(b_id, b_sig, sz_b, a_id, a_sig, sz_a, keep)``: every band row
+    (b) beside each of its (band, bucket)'s REPS_PER_BUCKET smallest ids
+    (a) — the rows of ``reps ⋈ bands`` on (band, bucket), ``keep`` null
+    — plus one SELF row per band-0 row: ``a_*`` null and ``keep`` the
+    doc's carried columns. One exchange: the representatives reach
+    every row of their bucket as one list (<= REPS_PER_BUCKET entries)
+    collected over the whole (band, bucket) window, and a band-0 row
+    appends its self entry before the list is inlined. No join, and no
+    broadcast of the band rows, so the shape holds once they outgrow a
+    broadcast."""
+    bucket = "PARTITION BY band, bucket"
+    rep = "named_struct('a_id', doc_id, 'a_sig', sig, 'sz_a', sz, 'keep', NULL)"
+    own = "named_struct('a_id', NULL, 'a_sig', NULL, 'sz_a', NULL, 'keep', b_keep)"
     return (
-        bands.withColumn("rep_rk", F.row_number().over(bucket_w.orderBy("doc_id")))
-        .select(
-            F.col("doc_id").alias("b_id"), F.col("sig").alias("b_sig"),
-            F.col("sz").alias("sz_b"),
-            F.collect_list(F.when(F.col("rep_rk") <= REPS_PER_BUCKET, rep))
-            .over(bucket_w)
-            .alias("reps"),
+        bands.selectExpr("*", f"row_number() OVER ({bucket} ORDER BY doc_id) AS rep_rk")
+        .selectExpr(
+            "doc_id AS b_id", "sig AS b_sig", "sz AS sz_b", "keep AS b_keep",
+            f"collect_list(IF(rep_rk <= {REPS_PER_BUCKET}, {rep}, NULL)) OVER ({bucket}) AS reps",
         )
-        .select("b_id", "b_sig", "sz_b", F.inline("reps"))
+        .selectExpr(
+            "b_id", "b_sig", "sz_b",
+            f"inline(IF(b_keep IS NULL, reps, concat(reps, array({own}))))",
+        )
     )
 
 
 def minhash_near_dup_drop_ids(toks_df: DataFrame) -> DataFrame:
-    """Docs to DROP for near-dedup over a ``(doc_id, toks)`` frame (see
-    pin_doc_tokens), with at most ONE exact-Jaccard
-    verification per doc instead of the all-pairs formulation's
-    O(cluster^2) verifications (measured 66 s -> seconds at sf0.1 where
+    """Near-dedup fates over a ``(doc_id, toks, *carried)`` frame (see
+    pin_doc_tokens): one row per input row, ``(doc_id, *carried,
+    dropped)`` in the input's column order without ``toks``. ``dropped``
+    is true when the doc has a smaller-id near-dup: at most VERIFY_TOP_M
+    exact-Jaccard verifications per doc instead of the all-pairs
+    formulation's O(cluster^2) (measured 66 s -> seconds at sf0.1 where
     the corpus has ~1600-doc near-dup families; exact verification over
     ~200-token arrays is ~100x the cost of the 32-slot signature compare
-    used here for estimation).
+    used here for estimation). A caller keeps the survivors with
+    ``NOT dropped``: the fate is decided in the stage that already
+    groups the candidates by b_id, so nothing joins back onto the input.
+    Rows that share a doc_id share a fate, as under an anti-join on
+    doc_id; a null doc_id is never dropped.
 
     Plan: in-bucket candidate pairs carry only ids + signatures + token-
     set sizes. Two pruners bound the exact-verify work:
@@ -588,50 +593,46 @@ def minhash_near_dup_drop_ids(toks_df: DataFrame) -> DataFrame:
     # whole cost). Capping the partner set keeps the pairing linear in
     # bucket size; recall survives (tested >= 0.9 vs the all-pairs drop
     # set) because any family member verifies against the family's
-    # smallest ids, which are exactly the docs the dedup keeps.
-    pairs = _bucket_rep_pairs(bands)
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("a_sig"), F.col("b_sig"), lambda x, y: x == y),
-                lambda m: m,
-            )
-        )
-        / MINHASH_K
+    # smallest ids, which are exactly the docs the dedup keeps. The
+    # candidates are filtered after the inline, in generated code, not
+    # by a higher-order filter over the list (lambdas are interpreted).
+    pairs = _bucket_rep_pairs(bands).filter(
+        "keep IS NOT NULL OR (a_id < b_id"
+        f" AND least(sz_a, sz_b) / greatest(sz_a, sz_b) {_AT_LEAST})"
     )
-    size_ratio = F.least("sz_a", "sz_b") / F.greatest("sz_a", "sz_b")
-    cand = (
-        pairs.filter(F.col("a_id") < F.col("b_id"))
-        .filter(size_ratio >= JACCARD_THRESHOLD)
-        .select(
-            "a_id", "b_id", est.alias("est"),
-            F.abs(F.col("sz_a") - F.col("sz_b")).alias("sz_diff"),
-        )
-        # a pair colliding in several bands appears once per band — dedup
-        # BEFORE ranking or duplicates eat most of the top-M verify slots.
-        # Hash on b_id first: that one exchange satisfies both the pair
-        # dedup (keyed on a superset of b_id) and the per-b_id window.
-        .repartition("b_id")
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    w = Window.partitionBy("b_id").orderBy(
-        F.col("est").desc(), F.col("sz_diff").asc(), F.col("a_id").asc()
-    )
+    # One exchange on b_id carries the candidates and each doc's self
+    # row. A pair colliding in several bands appears once per band with
+    # the same estimate: dense_rank gives its copies one rank, so the
+    # top M ranks are the top M distinct pairs, and only the first copy
+    # (lag) is verified. The self row (null estimate) ranks last.
+    by_b = "PARTITION BY b_id ORDER BY est DESC, sz_diff, a_id"
     best = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= VERIFY_TOP_M)
-        .select("a_id", "b_id")
+        pairs.selectExpr(
+            "a_id", "b_id", "keep",
+            f"IF(keep IS NULL, {_EST}, NULL) AS est", "abs(sz_a - sz_b) AS sz_diff",
+        )
+        .selectExpr(
+            "a_id", "b_id", "keep",
+            f"dense_rank() OVER ({by_b}) AS rk", f"lag(a_id) OVER ({by_b}) AS prev_a",
+        )
+        .filter(f"keep IS NOT NULL OR (rk <= {VERIFY_TOP_M} AND NOT prev_a <=> a_id)")
     )
-    ta = F.broadcast(toks_df.select(F.col("doc_id").alias("a_id"), F.col("toks").alias("toks_a")))
-    tb = F.broadcast(toks_df.select(F.col("doc_id").alias("b_id"), F.col("toks").alias("toks_b")))
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    union = F.size("toks_a") + F.size("toks_b") - inter
+    # Verify against the broadcast token sets; the self row looks up
+    # neither side. Both joins keep the b_id partitioning, so the fate
+    # is a window over b_id with no further exchange.
+    verified = (
+        best.join(_broadcast_toks(toks_df, "a_id", "toks_a"), "a_id", "left")
+        .join(
+            _broadcast_toks(toks_df, "v_id", "toks_b"),
+            F.expr("keep IS NULL AND v_id = b_id"),
+            "left",
+        )
+        .selectExpr("b_id", "keep", f"IF(keep IS NULL, {_JACCARD} {_AT_LEAST}, NULL) AS hit")
+    )
     return (
-        best.join(ta, "a_id")
-        .join(tb, "b_id")
-        .filter((inter / union) >= JACCARD_THRESHOLD)
-        .select(F.col("b_id").alias("doc_id"))
-        .distinct()
+        verified.selectExpr("keep", "bool_or(hit) OVER (PARTITION BY b_id) AS dropped")
+        .filter("keep IS NOT NULL")
+        .selectExpr("keep.*", "coalesce(dropped, false) AS dropped")
     )
 
 

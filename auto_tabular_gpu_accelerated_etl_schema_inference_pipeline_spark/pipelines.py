@@ -11,19 +11,25 @@ Stage plan shapes (why this survives scale-up):
    localCheckpointed — the only plan that reads text, read once, and
    the only place it is tokenized;
 3. near-dedup: MinHash-LSH candidates + verified Jaccard over the pin's
-   toks (one exchange per (band, bucket), bands unpinned; see
-   operators/dedup.py), then a left-anti join over the narrow columns
-   into a lazily persisted frame;
+   toks, one exchange per (band, bucket) and one per b_id (bands
+   unpinned; see operators/dedup.py). The narrow columns ride each
+   doc's band-0 row and its self row through both, and come out beside
+   the doc's fate, so the survivors are a filter into a lazily
+   persisted frame, with no join back onto the pin;
 4. numeric tokenize: sketch fit (KBs of driver state; its first job
    fills the cache) + map-only bucketize;
 5. sink: partitioned parquet so downstream reads prune; then the cache
    and the pin are released and the written table is returned.
-No exchange, broadcast or cache below the sink carries text: 10 jobs
+No exchange, broadcast or cache below the sink carries text: 9 jobs
 per call on a 10k-document corpus at 4 cores, and with a sink nothing
 stays persisted.
 """
 
 from __future__ import annotations
+
+import atexit
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,10 +66,11 @@ def dedup_near_remove(docs: DataFrame) -> DataFrame:
     formulation that is quadratic in near-dup cluster size; see
     minhash_near_dup_drop_ids) from a pinned ``(doc_id, ..., toks)``
     frame (see pin_doc_tokens). The survivors keep every column but
-    ``toks``. Runs on the already-filtered/exact-deduped corpus —
-    near-dedup of rows earlier stages discarded is wasted work."""
-    drop = minhash_near_dup_drop_ids(docs.select("doc_id", "toks"))
-    return docs.drop("toks").join(drop, "doc_id", "left_anti")
+    ``toks``: the MinHash stage carries them to where it decides each
+    doc's fate, so keeping them is a filter, not a join. Runs on the
+    already-filtered/exact-deduped corpus — near-dedup of rows earlier
+    stages discarded is wasted work."""
+    return minhash_near_dup_drop_ids(docs).filter("NOT dropped").drop("dropped")
 
 
 def prepare_training_data(
@@ -84,9 +91,9 @@ def prepare_training_data(
     # text is read here once and leaves as the narrow (doc_id, lang,
     # source, f_tokens, f_chars, toks), first per text digest through
     # one exchange that moves no text. The MinHash stage reads toks from
-    # it; the anti-join, the cache, the fit and the sink see only the
-    # narrow columns. f_tokens counts the raw split, not the distinct
-    # normalized toks.
+    # it and carries the rest to the survivors; the cache, the fit and
+    # the sink see only the narrow columns. f_tokens counts the raw
+    # split, not the distinct normalized toks.
     pin = unique_doc_tokens(
         quality_filter(docs),
         "lang",
@@ -95,7 +102,7 @@ def prepare_training_data(
         F.length("text").cast("double").alias("f_chars"),
     ).localCheckpoint()
     # persist the near-deduped frame: the fit's two jobs and the sink
-    # are separate actions, and uncached EACH re-ran the MinHash drop
+    # are separate actions, and uncached EACH re-ran the MinHash
     # computation (measured 3x ~10 s at sf0.1). Lazy: the fit's first
     # job fills the cache, so no count() runs just to fill it.
     feats = dedup_near_remove(pin).persist()
@@ -118,11 +125,14 @@ def prepare_training_data(
 
 def q_training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry (rows-only: composition of oracle-covered stages +
-    an approximate near-dedup stage). Without a sink the result is lazy
-    and still reads the narrow pin and the near-deduped cache, so both
-    stay persisted for the session's lifetime: the one case where the
-    pipeline leaves a pin behind."""
-    return prepare_training_data(spark, sf_dir, out_path=None)
+    an approximate near-dedup stage). The table is written to a
+    temporary directory, removed when the process exits, and the frame
+    returned reads it, so the lane leaves nothing persisted (the lazy
+    form keeps the narrow pin and the near-deduped cache for as long as
+    the frame may run)."""
+    out_dir = tempfile.mkdtemp(prefix="training_data_prep_")
+    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    return prepare_training_data(spark, sf_dir, out_path=out_dir)
 
 
 def build_analytics_mart(

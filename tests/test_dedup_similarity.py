@@ -116,7 +116,7 @@ def test_minhash_drop_ids_subset_and_recall(spark, sf_dir):
     }
     lin_drop = {
         r["doc_id"]
-        for r in dedup.minhash_near_dup_drop_ids(toks).collect()
+        for r in dedup.minhash_near_dup_drop_ids(toks).filter("dropped").collect()
     }
     assert lin_drop <= all_pairs_drop
     if all_pairs_drop:
@@ -124,26 +124,37 @@ def test_minhash_drop_ids_subset_and_recall(spark, sf_dir):
 
 
 def _rep_join_candidates(bands):
-    """(a_id, b_id, sz_a, sz_b) of a plain reps ⋈ bands join on (band,
-    bucket): each bucket's REPS_PER_BUCKET smallest ids against every
-    row of that bucket."""
+    """(a_id, b_id, sz_a, sz_b, a_sig, b_sig) of a plain reps ⋈ bands
+    join on (band, bucket): each bucket's REPS_PER_BUCKET smallest ids
+    against every row of that bucket."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     rank = F.row_number().over(Window.partitionBy("band", "bucket").orderBy("doc_id"))
     reps = bands.withColumn("rk", rank).filter(F.col("rk") <= dedup.REPS_PER_BUCKET)
-    a = reps.select(F.col("doc_id").alias("a_id"), F.col("sz").alias("sz_a"), "band", "bucket")
-    b = bands.select(F.col("doc_id").alias("b_id"), F.col("sz").alias("sz_b"), "band", "bucket")
-    return a.join(b, ["band", "bucket"]).select("a_id", "b_id", "sz_a", "sz_b")
+    a = reps.selectExpr("doc_id AS a_id", "sz AS sz_a", "sig AS a_sig", "band", "bucket")
+    b = bands.selectExpr("doc_id AS b_id", "sz AS sz_b", "sig AS b_sig", "band", "bucket")
+    return a.join(b, ["band", "bucket"]).select("a_id", "b_id", "sz_a", "sz_b", "a_sig", "b_sig")
 
 
 def _assert_rep_candidates_match_join(bands):
+    """The candidate rows (``keep`` null) are the rows of reps ⋈ bands,
+    and every band-0 row adds exactly one self row: ``a_*`` null and
+    ``keep`` holding the doc's own id."""
     from collections import Counter
 
     cols = ["a_id", "b_id", "sz_a", "sz_b"]
-    got = Counter(map(tuple, dedup._bucket_rep_pairs(bands).select(*cols).collect()))
-    want = Counter(map(tuple, _rep_join_candidates(bands).collect()))
+    pairs = dedup._bucket_rep_pairs(bands)
+    got = Counter(map(tuple, pairs.filter("keep IS NULL").select(*cols).collect()))
+    want = Counter(map(tuple, _rep_join_candidates(bands).select(*cols).collect()))
     assert got == want
+    own = pairs.filter("keep IS NOT NULL").selectExpr(
+        "b_id", "keep.doc_id", "a_id", "a_sig", "sz_a"
+    )
+    band0 = bands.filter("band = 0").select("doc_id").collect()
+    assert Counter(map(tuple, own.collect())) == Counter(
+        (r["doc_id"], r["doc_id"], None, None, None) for r in band0
+    )
 
 
 def test_bucket_rep_list_equals_rep_join_sf(spark, sf_dir):
@@ -167,6 +178,165 @@ def test_bucket_rep_list_equals_rep_join_giant_bucket(spark):
     biggest = bands.groupBy("band", "bucket").count().agg({"count": "max"}).first()[0]
     assert biggest == n_dup
     _assert_rep_candidates_match_join(bands)
+
+
+def _anti_join_survivors(toks):
+    """The survivors of the old two-step near-dedup: the drop set (top
+    VERIFY_TOP_M distinct candidates per b_id by MinHash estimate, any
+    one verified at exact Jaccard) left-anti-joined onto the input."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    est = F.size(
+        F.filter(F.zip_with("a_sig", "b_sig", lambda x, y: x == y), lambda m: m)
+    ) / dedup.MINHASH_K
+    cand = (
+        _rep_join_candidates(dedup._minhash_bands(toks, carry_sig=True))
+        .filter(F.col("a_id") < F.col("b_id"))
+        .filter(
+            F.least("sz_a", "sz_b") / F.greatest("sz_a", "sz_b")
+            >= dedup.JACCARD_THRESHOLD
+        )
+        .select("a_id", "b_id", est.alias("est"), F.abs(F.col("sz_a") - F.col("sz_b")).alias("sz_diff"))
+        .dropDuplicates(["a_id", "b_id"])
+    )
+    w = Window.partitionBy("b_id").orderBy(F.col("est").desc(), "sz_diff", "a_id")
+    best = cand.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= dedup.VERIFY_TOP_M
+    )
+    ta = toks.selectExpr("doc_id AS a_id", "toks AS toks_a")
+    tb = toks.selectExpr("doc_id AS b_id", "toks AS toks_b")
+    inter = F.size(F.array_intersect("toks_a", "toks_b"))
+    union = F.size("toks_a") + F.size("toks_b") - inter
+    drop = (
+        best.join(ta, "a_id").join(tb, "b_id")
+        .filter(inter / union >= dedup.JACCARD_THRESHOLD)
+        .select(F.col("b_id").alias("doc_id"))
+        .distinct()
+    )
+    return toks.drop("toks").join(drop, "doc_id", "left_anti")
+
+
+def _assert_survivors_equal_anti_join(toks):
+    from collections import Counter
+
+    fates = dedup.minhash_near_dup_drop_ids(toks)
+    assert fates.columns == [c for c in toks.columns if c != "toks"] + ["dropped"]
+    assert fates.count() == toks.count()
+    kept = fates.filter("NOT dropped").drop("dropped")
+    got = Counter(map(tuple, kept.collect()))
+    want = Counter(map(tuple, _anti_join_survivors(toks).collect()))
+    assert got == want
+    return got
+
+
+def test_drop_flag_survivors_equal_anti_join_sf(spark, sf_dir):
+    """minhash_near_dup_drop_ids returns every doc's fate beside its
+    carried columns, so the corpus pipeline keeps ``NOT dropped`` where
+    it used to left-anti-join the drop set: on the pipeline's own pin
+    over the fixture, the survivors are the same rows, as often. Empty
+    and one-row frames keep every row."""
+    from pyspark.sql import functions as F
+
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.pipelines import (
+        quality_filter,
+    )
+
+    docs = quality_filter(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    pin = dedup.unique_doc_tokens(
+        docs,
+        "lang",
+        "source",
+        F.size(F.split(F.col("text"), " ")).cast("double").alias("f_tokens"),
+    ).localCheckpoint()
+    try:
+        got = _assert_survivors_equal_anti_join(pin)
+        assert 0 < sum(got.values()) < pin.count()
+    finally:
+        dedup.unpin(pin)
+    schema = "doc_id bigint, lang string, toks array<string>"
+    for rows in ([], [(1, "en", ["a", "b"])]):
+        toks = spark.createDataFrame(rows, schema)
+        assert sum(_assert_survivors_equal_anti_join(toks).values()) == len(rows)
+
+
+def test_drop_flag_survivors_equal_anti_join_giant_bucket(spark):
+    """Same equivalence where one bucket holds 40 rows, more than
+    REPS_PER_BUCKET: the 39 copies above the smallest id drop."""
+    n_dup = dedup.REPS_PER_BUCKET + 24
+    rows = [(1000 - 7 * i, f"d{i}", ["w1", "w2", "w3", "w4", "w5"]) for i in range(n_dup)]
+    rows += [(i, f"u{i}", [f"u{i}", f"v{i}", "w1"]) for i in range(30)]
+    toks = spark.createDataFrame(
+        rows, "doc_id bigint, tag string, toks array<string>"
+    ).repartition(3)
+    got = _assert_survivors_equal_anti_join(toks)
+    assert sum(got.values()) == 30 + 1
+
+
+def test_drop_flag_top_m_counts_distinct_pairs(spark):
+    """A pair that shares all four bands reaches the b_id exchange four
+    times, and its copies take one of the VERIFY_TOP_M places, not four.
+    Docs 1-4 are 30 shared tokens plus one token that is never a slot's
+    minimum, so all five signatures are equal (estimate 1.0, same size,
+    ranked by a_id); only doc 4 verifies against doc 5 (Jaccard 1 vs
+    30/32), and it is the 4th distinct candidate, behind 12 rows."""
+    shared = [f"s{i}" for i in range(30)]
+    rows = [(i + 1, shared + [x]) for i, x in enumerate(["x1", "x6", "x10", "x11", "x11"])]
+    toks = spark.createDataFrame(rows, "doc_id bigint, toks array<string>").repartition(2)
+    sigs = {tuple(r.sig) for r in toks.selectExpr(dedup._SIG).collect()}
+    assert len(sigs) == 1
+    got = _assert_survivors_equal_anti_join(toks)
+    assert sorted(got) == [(1,), (2,), (3,), (4,)]
+
+
+def test_drop_flag_survivors_equal_anti_join_repeated_id(spark):
+    """A doc_id that appears more than once: the anti-join keeps or
+    drops every row of that id together (any copy verifying against a
+    smaller id drops them all), and the drop flag does the same, row
+    for row. Also a null id, which is never dropped."""
+    base = [f"w{i}" for i in range(40)]
+
+    def swap(i, tok):
+        return base[:i] + [tok] + base[i + 1:]
+
+    rows = [
+        (1, "a", base),
+        (2, "b", swap(0, "z2")),  # j(1, 2) = 39/41
+        (2, "b2", swap(0, "z2")),
+        (3, "c", [f"u{i}" for i in range(40)]),
+        (3, "c2", swap(1, "z3")),  # only this copy is a near-dup of 1
+        (4, "d", [f"v{i}" for i in range(40)]),
+        (5, "e", base),
+        (5, "e", base),  # the same row twice
+        (None, "n", base),
+    ]
+    toks = spark.createDataFrame(
+        rows, "doc_id bigint, tag string, toks array<string>"
+    ).repartition(3)
+    got = _assert_survivors_equal_anti_join(toks)
+    assert sorted(got, key=repr) == sorted([(1, "a"), (4, "d"), (None, "n")], key=repr)
+
+
+def test_drop_ids_builds_in_few_py4j_commands(spark, sf_dir):
+    """The near-dedup plan is SQL text: building it over a pin of the
+    fixture documents sends at most 200 Py4J commands (142 over the
+    corpus pipeline's pin). The same plan built
+    from Column objects sent 2,718, 0.5-0.9 s of driver time per call
+    before any job ran."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.pipelines import (
+        dedup_near_remove,
+    )
+    from tests.test_serve_model import _round_trips
+
+    pin = dedup.pin_doc_tokens(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), "lang", "source"
+    )
+    try:
+        dedup_near_remove(pin)  # warm: the first call resolves JVM classes
+        _, n = _round_trips(lambda: dedup_near_remove(pin))
+        assert n <= 200, n
+    finally:
+        dedup.unpin(pin)
 
 
 def test_digest_window_survivors_equal_min_semi_join(spark):

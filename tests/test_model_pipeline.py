@@ -25,9 +25,10 @@ def test_training_data_prep_job_and_pin_budget(spark, sf_dir, tmp_path):
     """prepare_training_data with a sink: its job count, the persisted
     RDDs it leaves behind, and what it returns. The exact dedup is one
     window exchange into the one narrow pin, the MinHash bands are not
-    pinned, and after the write the cache and the pin are released:
-    nothing stays persisted, and the returned frame reads the written
-    table. Measured on the sf0.01 fixture: 11 jobs at 4 and 8
+    pinned, the survivors come out of the MinHash stage with no join
+    back onto the pin, and after the write the cache and the pin are
+    released: nothing stays persisted, and the returned frame reads the
+    written table. Measured on the sf0.01 fixture: 10 jobs at 4 and 8
     cores."""
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.pipelines import (
         prepare_training_data,
@@ -43,11 +44,34 @@ def test_training_data_prep_job_and_pin_budget(spark, sf_dir, tmp_path):
             spark, lambda: prepare_training_data(spark, sf_dir, out_path=out_path)
         )
         left = set(persisted().keySet()) - before
-        assert jobs <= 11
+        assert jobs <= 10
         assert len(left) == 0
         written = spark.read.parquet(out_path).select(*out.columns)
         assert sorted(out.collect(), key=repr) == sorted(written.collect(), key=repr)
         assert out.count() > 0
+    finally:
+        rdds = persisted()
+        for rdd_id in set(rdds.keySet()) - before:
+            rdds.get(rdd_id).unpersist(False)
+
+
+def test_training_data_prep_lane_leaves_nothing_persisted(spark, sf_dir):
+    """The training_data_prep registry lane writes its table to a
+    temporary directory and returns a frame over it: building and
+    collecting the lane adds no persisted RDD, and the rows are those
+    of the lazy pipeline."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.pipelines import (
+        prepare_training_data,
+        q_training_data_prep,
+    )
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet())
+    try:
+        rows = q_training_data_prep(spark, sf_dir).collect()
+        assert not set(persisted().keySet()) - before
+        lazy = prepare_training_data(spark, sf_dir)
+        assert sorted(rows, key=repr) == sorted(lazy.collect(), key=repr)
     finally:
         rdds = persisted()
         for rdd_id in set(rdds.keySet()) - before:

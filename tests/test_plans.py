@@ -831,8 +831,9 @@ def test_training_data_prep_moves_no_text(spark, sf_dir):
 
 def test_minhash_drop_ids_one_b_id_exchange(spark, sf_dir):
     """The candidate pairs are hashed on b_id once: that exchange serves
-    both the pair dedup (keyed on a_id, b_id ⊇ b_id) and the top-M window
-    partitioned by b_id, so no other exchange keys on a pair id."""
+    the top-M window, the verify joins (broadcast, so they keep the
+    partitioning) and the fate window, all partitioned by b_id, so no
+    other exchange keys on a pair id."""
     import re
 
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.dedup import (
@@ -848,6 +849,43 @@ def test_minhash_drop_ids_one_b_id_exchange(spark, sf_dir):
     ]
     assert len(keyed) == 1, plan[:3000]
     assert re.match(r"b_id#\d+L?, \d+$", keyed[0]), keyed
+
+
+def test_training_data_prep_keeps_survivors_without_join(spark, sf_dir):
+    """The corpus pipeline keeps the near-dedup survivors with a filter
+    on the MinHash stage's fate column: its plan, the cached relation
+    included, has no left-anti join and no exchange keyed on doc_id
+    alone, and the near-dedup runs through exactly one exchange keyed
+    on (band, bucket) and one keyed on b_id."""
+    import re
+
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.pipelines import (
+        prepare_training_data,
+    )
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet())
+    try:
+        out = prepare_training_data(spark, sf_dir)
+        nodes = list(_plan_nodes(out._jdf.queryExecution().executedPlan()))
+        joins = [n.toString() for n in nodes if "Join" in n.getClass().getSimpleName()]
+        assert not [j for j in joins if "LeftAnti" in j], joins
+        shuffles = [  # each exchange's own line, not its subtree
+            n.toString().splitlines()[0] for n in nodes
+            if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+        ]
+        keys = [
+            re.sub(r"#\d+L?|, \d+$", "", k)
+            for s in shuffles
+            for k in re.findall(r"hashpartitioning\(([^)]*)\)", s)
+        ]
+        assert "doc_id" not in keys, keys
+        assert keys.count("band, bucket") == 1, keys
+        assert keys.count("b_id") == 1, keys
+    finally:
+        rdds = persisted()
+        for rdd_id in set(rdds.keySet()) - before:
+            rdds.get(rdd_id).unpersist(False)
 
 
 def test_exact_dedup_pin_one_fp_exchange(spark, sf_dir):

@@ -240,7 +240,8 @@ def test_degenerate_inputs_dedup(spark):
         [(1, "a b c d e f g h", "en", "s", 15)],
         "doc_id bigint, text string, lang string, source string, n_chars bigint",
     )
-    assert minhash_near_dup_drop_ids(pin_doc_tokens(one)).count() == 0
+    fates = minhash_near_dup_drop_ids(pin_doc_tokens(one)).collect()
+    assert [(r["doc_id"], r["dropped"]) for r in fates] == [(1, False)]
 
 
 def test_fold_ops_partition_invariant(spark, sf_dir):
