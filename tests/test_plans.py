@@ -799,8 +799,8 @@ def test_training_data_prep_moves_no_text(spark, sf_dir):
     narrow pin (doc_id, lang, source, f_tokens, f_chars, toks). Below the
     sink, no exchange, broadcast or cached relation carries a ``text``
     attribute: the localCheckpoint cuts the scan-side plan that read it
-    out of the lineage, so the anti-join, the cache, the fit and the
-    sink move only the narrow columns."""
+    out of the lineage, so the MinHash stage, the cache, the fit and
+    the sink move only the narrow columns."""
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.pipelines import (
         prepare_training_data,
     )
