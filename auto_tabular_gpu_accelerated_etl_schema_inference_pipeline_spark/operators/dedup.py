@@ -6,6 +6,8 @@ Scale design (100 TB):
 - **exact**: group by md5(normalized text) — the shuffle key is a 16-byte
   digest instead of the full document, so the exchange moves ~32 B/row
   regardless of document size. Map-side partial aggregation applies.
+  Ahead of MinHash it needs no exchange: equal digests share every
+  bucket, so the bucket window keeps the first (minhash_near_dup_drop_ids).
 - **n-gram Jaccard (exact)**: inverted-index self-join (explode distinct
   tokens -> pair counts -> Jaccard from set sizes). Quadratic in the df of
   hot tokens — usable as the *verifier*; at scale you bound candidate
@@ -28,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import load_spread, load_table, pinned_shuffle_width
+from ..session import load_spread, load_table, pinned_shuffle_width, quote_name, write_released
 
 JACCARD_THRESHOLD = 0.95
 MINHASH_K = 32          # number of hash functions
@@ -414,10 +416,10 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard >= threshold on the candidate pairs only. At 100 TB the
     verify join touches only colliding pairs — the LSH S-curve keeps that
     near-linear for high thresholds. Rows-only check (xxhash64 is
-    Spark-specific); ground truth = dedup_ngram_jaccard."""
-    return minhash_near_dup_pairs(
-        pin_doc_tokens(load_spread(spark, sf_dir, "documents"))
-    )
+    Spark-specific); ground truth = dedup_ngram_jaccard. Written to a
+    temporary table with both pins released (write_released)."""
+    pairs = minhash_near_dup_pairs(pin_doc_tokens(load_spread(spark, sf_dir, "documents")))
+    return write_released(pairs, release=(pairs,))
 
 
 def _doc_toks():
@@ -443,51 +445,35 @@ def pin_doc_tokens(docs: DataFrame, *keep) -> DataFrame:
     broadcasts the same pinned column. ``localCheckpoint``, not
     ``persist()``: under AQE each cached relation runs as its own query
     stage, ~3 more jobs per corpus curation. The pin is released
-    through its ``LogicalRDD`` (``unpin``)."""
+    through its ``LogicalRDD`` (``unpin``). A ``doc_fp()`` in ``keep``
+    adds the exact dedup to the drop path (minhash_near_dup_drop_ids)."""
     return docs.select("doc_id", *keep, _doc_toks()).localCheckpoint()
 
 
-def unique_doc_tokens(docs: DataFrame, *keep) -> DataFrame:
-    """``(doc_id, *keep, toks)`` like pin_doc_tokens, unpinned, for the
-    first document (lowest non-null doc_id) of each normalized-text md5
-    digest: exact dedup through one exchange. The narrow columns and
-    the 32-char hex digest are projected BEFORE the window, so the exchange
-    keyed on the digest moves ids, digests and token sets, never text;
-    the text-bearing scan is read once, with no join back onto it."""
-    first = Window.partitionBy("fp").orderBy(F.col("doc_id").asc_nulls_last())
-    return (
-        docs.select("doc_id", *keep, _doc_toks(), F.md5(_norm_text()).alias("fp"))
-        .withColumn("fp_rk", F.row_number().over(first))
-        .filter((F.col("fp_rk") == 1) & F.col("doc_id").isNotNull())
-        .drop("fp_rk", "fp")
-    )
-
-
-def unpin(pinned: DataFrame) -> None:
-    """Release a ``localCheckpoint`` pin: a checkpointed frame has no
-    ``unpersist()``, but its analyzed plan is the ``LogicalRDD`` over the
-    persisted RDD. A frame that reads the pin fails if it runs after
-    this: a local checkpoint keeps no lineage to recompute its blocks."""
-    pinned._jdf.queryExecution().analyzed().rdd().unpersist(False)
+def doc_fp():
+    """The 16-byte md5 of the normalized text: equal keys, equal toks."""
+    return F.unhex(F.md5(_norm_text())).alias("fp")
 
 
 def _minhash_bands(toks_df: DataFrame, carry_sig: bool = False) -> DataFrame:
     """Shared MinHash plumbing over a ``(doc_id, toks, *carried)`` frame:
     the (doc_id, band, bucket) frame, unpinned. With ``carry_sig`` (the
-    drop path) every row also carries the 32-long signature and the
+    drop path) every row also carries the 32-long signature, the
     token-set size (~260 B/row, used for in-bucket Jaccard estimation
-    and the length filter), and the band-0 row carries ``keep``: a
-    struct of the doc's columns but ``toks``, null on the other bands,
-    so a doc's own columns cross the exchange once. Bands never carry
-    token arrays: at scale the arrays dominate the row width and the
-    bucket fan-out squares it."""
+    and the length filter) and, when the frame has one, the 16-byte
+    ``fp`` (doc_fp); the band-0 row carries ``keep``: a struct of the
+    doc's columns but ``toks`` and ``fp``, null on the other bands, so a
+    doc's own columns cross the exchange once. Bands never carry token
+    arrays: at scale the arrays dominate the row width and the bucket
+    fan-out squares it."""
     if not carry_sig:
         return toks_df.selectExpr("doc_id", _SIG).selectExpr("doc_id", _BANDS)
-    keep = ", ".join("`{}`".format(c.replace("`", "``")) for c in toks_df.columns if c != "toks")
+    fp = [c for c in toks_df.columns if c == "fp"]
+    keep = ", ".join(quote_name(c) for c in toks_df.columns if c not in ("toks", "fp"))
     return (
-        toks_df.selectExpr("doc_id", _SIG, "size(toks) AS sz", f"struct({keep}) AS keep")
-        .selectExpr("doc_id", "sig", "sz", "keep", _BANDS)
-        .selectExpr("doc_id", "sig", "sz", "band", "bucket", "IF(band = 0, keep, NULL) AS keep")
+        toks_df.selectExpr("doc_id", *fp, _SIG, "size(toks) AS sz", f"struct({keep}) AS keep")
+        .selectExpr("doc_id", *fp, "sig", "sz", "keep", _BANDS)
+        .selectExpr("doc_id", *fp, "sig", "sz", "band", "bucket", "IF(band = 0, keep, NULL) AS keep")
     )
 
 
@@ -526,28 +512,37 @@ def minhash_near_dup_pairs(toks_df: DataFrame) -> DataFrame:
 
 
 def _bucket_rep_pairs(bands: DataFrame) -> DataFrame:
-    """``(b_id, b_sig, sz_b, a_id, a_sig, sz_a, keep)``: every band row
-    (b) beside each of its (band, bucket)'s REPS_PER_BUCKET smallest ids
-    (a) — the rows of ``reps ⋈ bands`` on (band, bucket), ``keep`` null
-    — plus one SELF row per band-0 row: ``a_*`` null and ``keep`` the
-    doc's carried columns. One exchange: the representatives reach
+    """``(b_id, b_sig, sz_b, dup, a_id, a_sig, sz_a, keep)``: every band
+    row (b) beside each of its (band, bucket)'s REPS_PER_BUCKET smallest
+    ids (a) — the rows of ``reps ⋈ bands`` on (band, bucket), ``keep``
+    null — plus one SELF row per band-0 row: ``a_*`` null and ``keep``
+    the doc's carried columns. One exchange: the representatives reach
     every row of their bucket as one list (<= REPS_PER_BUCKET entries)
     collected over the whole (band, bucket) window, and a band-0 row
     appends its self entry before the list is inlined. No join, and no
     broadcast of the band rows, so the shape holds once they outgrow a
-    broadcast."""
+    broadcast. With ``fp`` the window is also the exact dedup: copies
+    share every bucket, and a row whose predecessor in (fp, doc_id)
+    order has its fp is a ``dup`` (a window over fp would add an
+    exchange). Dups are never representatives and send only the band-0
+    self row, ``dup`` set; without ``fp`` no row is a dup."""
     bucket = "PARTITION BY band, bucket"
+    lag = f"coalesce(lag(fp) OVER ({bucket} ORDER BY fp, doc_id) = fp, false)"
+    dup = lag if "fp" in bands.columns else "false"
     rep = "named_struct('a_id', doc_id, 'a_sig', sig, 'sz_a', sz, 'keep', NULL)"
-    own = "named_struct('a_id', NULL, 'a_sig', NULL, 'sz_a', NULL, 'keep', b_keep)"
+    own = "array(named_struct('a_id', NULL, 'a_sig', NULL, 'sz_a', NULL, 'keep', b_keep))"
     return (
-        bands.selectExpr("*", f"row_number() OVER ({bucket} ORDER BY doc_id) AS rep_rk")
+        bands.selectExpr("*", f"{dup} AS dup")
+        .selectExpr("*", f"row_number() OVER ({bucket} ORDER BY dup, doc_id) AS rep_rk")
         .selectExpr(
-            "doc_id AS b_id", "sig AS b_sig", "sz AS sz_b", "keep AS b_keep",
-            f"collect_list(IF(rep_rk <= {REPS_PER_BUCKET}, {rep}, NULL)) OVER ({bucket}) AS reps",
+            "doc_id AS b_id", "sig AS b_sig", "sz AS sz_b", "dup", "keep AS b_keep",
+            f"collect_list(IF(rep_rk <= {REPS_PER_BUCKET} AND NOT dup, {rep}, NULL))"
+            f" OVER ({bucket}) AS reps",
         )
         .selectExpr(
-            "b_id", "b_sig", "sz_b",
-            f"inline(IF(b_keep IS NULL, reps, concat(reps, array({own}))))",
+            "b_id", "b_sig", "sz_b", "dup",
+            f"inline(CASE WHEN b_keep IS NULL THEN IF(dup, NULL, reps) WHEN dup THEN {own}"
+            f" ELSE concat(reps, {own}) END)",
         )
     )
 
@@ -566,6 +561,14 @@ def minhash_near_dup_drop_ids(toks_df: DataFrame) -> DataFrame:
     groups the candidates by b_id, so nothing joins back onto the input.
     Rows that share a doc_id share a fate, as under an anti-join on
     doc_id; a null doc_id is never dropped.
+
+    With an ``fp`` column (doc_fp, not returned) this is also the exact
+    dedup: each row but the first per fp (lowest doc_id) drops on its
+    own, and the near-dedup sees first rows only — the two-step form
+    (first per fp, then near-dedup) without its exchange. The two differ
+    only where one doc_id labels a first row and an exact copy of a
+    smaller id's text: the verify lookups, keyed on doc_id, read the
+    copy's token set too.
 
     Plan: in-bucket candidate pairs carry only ids + signatures + token-
     set sizes. Two pruners bound the exact-verify work:
@@ -608,11 +611,11 @@ def minhash_near_dup_drop_ids(toks_df: DataFrame) -> DataFrame:
     by_b = "PARTITION BY b_id ORDER BY est DESC, sz_diff, a_id"
     best = (
         pairs.selectExpr(
-            "a_id", "b_id", "keep",
+            "a_id", "b_id", "dup", "keep",
             f"IF(keep IS NULL, {_EST}, NULL) AS est", "abs(sz_a - sz_b) AS sz_diff",
         )
         .selectExpr(
-            "a_id", "b_id", "keep",
+            "a_id", "b_id", "dup", "keep",
             f"dense_rank() OVER ({by_b}) AS rk", f"lag(a_id) OVER ({by_b}) AS prev_a",
         )
         .filter(f"keep IS NOT NULL OR (rk <= {VERIFY_TOP_M} AND NOT prev_a <=> a_id)")
@@ -627,12 +630,12 @@ def minhash_near_dup_drop_ids(toks_df: DataFrame) -> DataFrame:
             F.expr("keep IS NULL AND v_id = b_id"),
             "left",
         )
-        .selectExpr("b_id", "keep", f"IF(keep IS NULL, {_JACCARD} {_AT_LEAST}, NULL) AS hit")
+        .selectExpr("b_id", "dup", "keep", f"IF(keep IS NULL, {_JACCARD} {_AT_LEAST}, NULL) AS hit")
     )
     return (
-        verified.selectExpr("keep", "bool_or(hit) OVER (PARTITION BY b_id) AS dropped")
+        verified.selectExpr("dup", "keep", "bool_or(hit) OVER (PARTITION BY b_id) AS dropped")
         .filter("keep IS NOT NULL")
-        .selectExpr("keep.*", "coalesce(dropped, false) AS dropped")
+        .selectExpr("keep.*", "dup OR coalesce(dropped, false) AS dropped")
     )
 
 

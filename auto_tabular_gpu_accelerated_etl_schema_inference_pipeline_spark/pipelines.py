@@ -4,40 +4,35 @@ tokenize -> partitioned sink, each stage one of the engine's operators.
 
 Stage plan shapes (why this survives scale-up):
 1. quality filter: map-only column expressions over the documents scan;
-2. exact dedup + the one narrow pin: the survivors are projected to
-   (doc_id, lang, source, f_tokens, f_chars, toks) plus a 32-char md5
-   digest, the first doc per digest is kept through one exchange keyed
-   on the digest (text never crosses it), and the result is
+2. the one narrow pin: the survivors with a doc_id, projected map-only
+   to (doc_id, lang, source, f_tokens, f_chars, fp, toks) and
    localCheckpointed — the only plan that reads text, read once, and
-   the only place it is tokenized;
-3. near-dedup: MinHash-LSH candidates + verified Jaccard over the pin's
-   toks, one exchange per (band, bucket) and one per b_id (bands
-   unpinned; see operators/dedup.py). The narrow columns ride each
-   doc's band-0 row and its self row through both, and come out beside
-   the doc's fate, so the survivors are a filter into a lazily
-   persisted frame, with no join back onto the pin;
+   the only place it is tokenized (fp: md5 of the normalized text);
+3. exact + near dedup in one MinHash stage over toks and fp: one
+   exchange per (band, bucket) and one per b_id (see operators/dedup.py;
+   exact copies share every bucket). The narrow columns ride each doc's
+   band-0 row and its self row through both, and come out beside the
+   doc's fate, so the survivors are a filter into a lazily persisted
+   frame, with no join back onto the pin;
 4. numeric tokenize: sketch fit (KBs of driver state; its first job
    fills the cache) + map-only bucketize;
 5. sink: partitioned parquet so downstream reads prune; then the cache
    and the pin are released and the written table is returned.
-No exchange, broadcast or cache below the sink carries text: 9 jobs
+No exchange, broadcast or cache below the sink carries text: 8 jobs
 per call on a 10k-document corpus at 4 cores, and with a sink nothing
 stays persisted.
 """
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .operators.dedup import minhash_near_dup_drop_ids, unique_doc_tokens, unpin
+from .operators.dedup import doc_fp, minhash_near_dup_drop_ids, pin_doc_tokens
+from .operators.llm_prep import _UNIQ_P, _UNIQ_Q, _UPPER_P, _UPPER_Q, GATE_MIN_TOKENS
 from .operators.model import QuantileBinModel
 from .operators.text import STOPWORDS
-from .session import load_spread, load_table, parquet_schema
+from .session import load_spread, load_table, write_released
 
 
 def quality_filter(
@@ -60,79 +55,69 @@ def quality_filter(
 
 
 def dedup_near_remove(docs: DataFrame) -> DataFrame:
-    """Drop near-duplicates of each LSH bucket's min-id representative
-    (MinHash-LSH buckets, exact-Jaccard verified >= threshold against
-    the representative only — linear in corpus size, vs the all-pairs
-    formulation that is quadratic in near-dup cluster size; see
-    minhash_near_dup_drop_ids) from a pinned ``(doc_id, ..., toks)``
-    frame (see pin_doc_tokens). The survivors keep every column but
-    ``toks``: the MinHash stage carries them to where it decides each
-    doc's fate, so keeping them is a filter, not a join. Runs on the
-    already-filtered/exact-deduped corpus — near-dedup of rows earlier
-    stages discarded is wasted work."""
+    """Drop exact copies (given an ``fp`` column) and near-duplicates of
+    each LSH bucket's min-id representatives (exact-Jaccard verified,
+    linear in corpus size; see minhash_near_dup_drop_ids) from a pinned
+    ``(doc_id, ..., toks)`` frame (see pin_doc_tokens). The survivors
+    keep every column but ``toks`` and ``fp``: the MinHash stage carries
+    them to where it decides each doc's fate, so keeping them is a
+    filter, not a join. Runs on the quality-filtered corpus."""
     return minhash_near_dup_drop_ids(docs).filter("NOT dropped").drop("dropped")
 
 
-def prepare_training_data(
-    spark: SparkSession,
-    sf_dir: str,
-    out_path: str | None = None,
-) -> DataFrame:
-    """documents + lineitem-derived numeric features -> one tokenized,
-    deduped, quality-filtered training table. With ``out_path`` the
-    table is written there, every pin is released, and the frame
-    returned reads the written table; without it the frame is lazy and
-    keeps its pins (see q_training_data_prep)."""
+def _curated(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, tuple]:
+    """The lazy training table and the cache and the pin it reads."""
     # spread an under-split scan across cores before the expression-
     # bound quality gate (r12, guide §2.5; no-op at production split
     # counts)
     docs = load_spread(spark, sf_dir, "documents")
-    # The one pin, which is also the exact dedup: the quality survivors'
-    # text is read here once and leaves as the narrow (doc_id, lang,
-    # source, f_tokens, f_chars, toks), first per text digest through
-    # one exchange that moves no text. The MinHash stage reads toks from
-    # it and carries the rest to the survivors; the cache, the fit and
-    # the sink see only the narrow columns. f_tokens counts the raw
-    # split, not the distinct normalized toks.
-    pin = unique_doc_tokens(
-        quality_filter(docs),
+    # The one pin, map-only: the quality survivors' text is read once and
+    # leaves as the narrow columns. The MinHash stage reads toks and fp
+    # (exact + near dedup) and carries the rest to the survivors; the
+    # cache, the fit and the sink see only those. f_tokens counts the
+    # raw split, not the distinct normalized toks.
+    pin = pin_doc_tokens(
+        quality_filter(docs).filter("doc_id IS NOT NULL"),
         "lang",
         "source",
         F.size(F.split(F.col("text"), " ")).cast("double").alias("f_tokens"),
         F.length("text").cast("double").alias("f_chars"),
-    ).localCheckpoint()
-    # persist the near-deduped frame: the fit's two jobs and the sink
-    # are separate actions, and uncached EACH re-ran the MinHash
-    # computation (measured 3x ~10 s at sf0.1). Lazy: the fit's first
-    # job fills the cache, so no count() runs just to fill it.
+        doc_fp(),
+    )
+    # persist the deduped frame: the fit's two jobs and the sink are
+    # separate actions, and uncached EACH re-ran the MinHash computation
+    # (measured 3x ~10 s at sf0.1). Lazy: the fit's first job fills the
+    # cache, so no count() runs just to fill it.
     feats = dedup_near_remove(pin).persist()
 
     # numeric side: tokenize document stats (the reference op applied to
     # derived features) — fit on the filtered corpus, map-only transform
     model = QuantileBinModel.fit(feats, ["f_tokens", "f_chars"], bins=20)
     tokenized = model.transform(feats, keep_cols=["doc_id", "lang", "source"])
+    return tokenized, (feats, pin)
+
+
+def prepare_training_data(spark: SparkSession, sf_dir: str, out_path: str | None = None) -> DataFrame:
+    """documents + lineitem-derived numeric features -> one tokenized,
+    deduped, quality-filtered training table. With ``out_path`` the
+    table is written there, the pin and the cache are released, and the
+    frame returned reads the written table (write_released); without it
+    the frame is lazy and keeps them (see q_training_data_prep)."""
+    tokenized, release = _curated(spark, sf_dir)
     if not out_path:
         return tokenized
-    tokenized.write.mode("overwrite").partitionBy("lang").parquet(out_path)
-    # nothing stays pinned: the written table is the result, read with
-    # its footer schema (no job), so neither the cache nor the pin has a
-    # reader left
-    feats.unpersist()
-    unpin(pin)
-    written = spark.read.schema(parquet_schema(spark, out_path)).parquet(out_path)
-    return written.select(*tokenized.columns)
+    return write_released(tokenized, out_path, release, ("lang",))
 
 
 def q_training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry (rows-only: composition of oracle-covered stages +
     an approximate near-dedup stage). The table is written to a
-    temporary directory, removed when the process exits, and the frame
-    returned reads it, so the lane leaves nothing persisted (the lazy
-    form keeps the narrow pin and the near-deduped cache for as long as
-    the frame may run)."""
-    out_dir = tempfile.mkdtemp(prefix="training_data_prep_")
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
-    return prepare_training_data(spark, sf_dir, out_path=out_dir)
+    temporary directory (write_released), and the frame returned reads
+    it, so the lane leaves nothing persisted (the lazy form keeps the
+    narrow pin and the near-deduped cache for as long as the frame may
+    run)."""
+    tokenized, release = _curated(spark, sf_dir)
+    return write_released(tokenized, None, release, ("lang",))
 
 
 def build_analytics_mart(
@@ -203,16 +188,6 @@ def q_corpus_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: gate flags are map-only; the dedup winner is a
     min-over-window on the 32-byte digest (one shuffle, text never
     moves); the report is a partial agg onto |sources| rows."""
-    from pyspark.sql import Window
-
-    from .operators.llm_prep import (
-        _UNIQ_P,
-        _UNIQ_Q,
-        _UPPER_P,
-        _UPPER_Q,
-        GATE_MIN_TOKENS,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
@@ -263,14 +238,6 @@ def q_corpus_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curation_oracle() -> str:
-    from .operators.llm_prep import (
-        _UNIQ_P,
-        _UNIQ_Q,
-        _UPPER_P,
-        _UPPER_Q,
-        GATE_MIN_TOKENS,
-    )
-
     return f"""
 WITH flagged AS (
   SELECT doc_id, source,

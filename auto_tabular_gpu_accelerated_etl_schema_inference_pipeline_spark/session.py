@@ -9,6 +9,7 @@ transfer at etl_benchmark.py:53), UTC session timezone (oracle parity).
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
 import shutil
@@ -383,6 +384,35 @@ def parquet_schema(spark: SparkSession, path: str):
         path,
         lambda: _infer_parquet_schema(spark, path),
     )
+
+
+def write_released(
+    df: DataFrame, out_path: str | None = None, release: tuple = (), partition_by: tuple = ()
+) -> DataFrame:
+    """Write ``df`` as parquet to ``out_path`` (None: a temporary
+    directory removed at exit), release the caches and pins only this
+    write reads, and return a frame over the written table with its
+    footer schema (no job): ``df``'s rows, nothing left persisted."""
+    if out_path is None:
+        out_path = tempfile.mkdtemp(prefix="spark_graft_table_")
+        atexit.register(shutil.rmtree, out_path, ignore_errors=True)
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(out_path)
+    for frame in release:
+        frame.unpersist()
+        unpin(frame)
+    spark = df.sparkSession
+    return spark.read.schema(parquet_schema(spark, out_path)).parquet(out_path).select(*df.columns)
+
+
+def unpin(frame: DataFrame) -> None:
+    """Release every ``localCheckpoint`` pin a frame reads (the
+    ``LogicalRDD`` leaves of its analyzed plan), the caller's own only:
+    a session_memo relation is one too. A frame that reads a released
+    pin fails: a local checkpoint keeps no lineage."""
+    leaves = frame._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        if leaves.apply(i).nodeName() == "LogicalRDD":
+            leaves.apply(i).rdd().unpersist(False)
 
 
 def built_once(src: str, prefix: str, build: Callable[[str], None]) -> str:

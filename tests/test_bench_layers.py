@@ -71,4 +71,4 @@ def test_corpus_pipeline_calls_drop_ids_through_module_attribute(
         rdds = persisted()
         for rdd_id in set(rdds.keySet()) - before:
             rdds.get(rdd_id).unpersist(False)
-    assert calls == [["doc_id", "lang", "source", "f_tokens", "f_chars", "toks"]]
+    assert calls == [["doc_id", "lang", "source", "f_tokens", "f_chars", "fp", "toks"]]

@@ -12,6 +12,9 @@ from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators 
     dedup,
     similarity,
 )
+from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (  # noqa: E402
+    unpin,
+)
 
 
 def test_minhash_pairs_subset_of_exact(spark, sf_dir):
@@ -180,6 +183,36 @@ def test_bucket_rep_list_equals_rep_join_giant_bucket(spark):
     _assert_rep_candidates_match_join(bands)
 
 
+def test_bucket_rep_list_skips_exact_copies(spark):
+    """With an ``fp`` column, only the first row per fp (lowest doc_id)
+    is a representative or pairs with one; every band-0 row still adds
+    its self row, with ``dup`` set on all but the first rows. Here 40
+    rows share one token set, and so every bucket, but alternate between
+    two fp values by id, so no row follows a row of its own fp in
+    doc_id order: the candidates equal reps ⋈ bands over the first rows
+    alone."""
+    from collections import Counter
+
+    n_dup = dedup.REPS_PER_BUCKET + 24
+    rows = [(1000 - 7 * i, ["w1", "w2", "w3", "w4", "w5"], "AB"[i % 2]) for i in range(n_dup)]
+    rows += [(i, [f"u{i}", f"v{i}", "w1"], f"u{i}") for i in range(30)]
+    toks = spark.createDataFrame(
+        rows, "doc_id bigint, toks array<string>, fp string"
+    ).repartition(3)
+    first = {min(d for d, _, f in rows if f == fp) for fp in {f for *_, f in rows}}
+    bands = dedup._minhash_bands(toks, carry_sig=True)
+    pairs = dedup._bucket_rep_pairs(bands)
+    cols = ["a_id", "b_id", "sz_a", "sz_b"]
+    got = Counter(map(tuple, pairs.filter("keep IS NULL").select(*cols).collect()))
+    firsts = bands.filter(bands.doc_id.isin(sorted(first)))
+    want = Counter(map(tuple, _rep_join_candidates(firsts).select(*cols).collect()))
+    assert got == want
+    own = pairs.filter("keep IS NOT NULL").selectExpr("b_id", "keep.doc_id", "dup")
+    assert Counter(map(tuple, own.collect())) == Counter(
+        (d, d, d not in first) for d, *_ in rows
+    )
+
+
 def _anti_join_survivors(toks):
     """The survivors of the old two-step near-dedup: the drop set (top
     VERIFY_TOP_M distinct candidates per b_id by MinHash estimate, any
@@ -243,7 +276,7 @@ def test_drop_flag_survivors_equal_anti_join_sf(spark, sf_dir):
     )
 
     docs = quality_filter(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    pin = dedup.unique_doc_tokens(
+    pin = unique_doc_tokens(
         docs,
         "lang",
         "source",
@@ -253,7 +286,7 @@ def test_drop_flag_survivors_equal_anti_join_sf(spark, sf_dir):
         got = _assert_survivors_equal_anti_join(pin)
         assert 0 < sum(got.values()) < pin.count()
     finally:
-        dedup.unpin(pin)
+        unpin(pin)
     schema = "doc_id bigint, lang string, toks array<string>"
     for rows in ([], [(1, "en", ["a", "b"])]):
         toks = spark.createDataFrame(rows, schema)
@@ -336,17 +369,63 @@ def test_drop_ids_builds_in_few_py4j_commands(spark, sf_dir):
         _, n = _round_trips(lambda: dedup_near_remove(pin))
         assert n <= 200, n
     finally:
-        dedup.unpin(pin)
+        unpin(pin)
+
+
+def unique_doc_tokens(docs, *keep):
+    """Reference exact dedup, the first step of the two-step form:
+    ``(doc_id, *keep, toks)`` for the first document (lowest non-null
+    doc_id) of each normalized-text md5 digest, through a window keyed
+    on the digest."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    first = Window.partitionBy("fp").orderBy(F.col("doc_id").asc_nulls_last())
+    return (
+        docs.select("doc_id", *keep, dedup._doc_toks(), F.md5(dedup._norm_text()).alias("fp"))
+        .withColumn("fp_rk", F.row_number().over(first))
+        .filter((F.col("fp_rk") == 1) & F.col("doc_id").isNotNull())
+        .drop("fp_rk", "fp")
+    )
+
+
+def _survivors(pin):
+    """The rows the drop flag keeps, as a multiset, and every row's fate
+    checked: one output row per pin row, in the pin's column order
+    without ``toks`` and ``fp``."""
+    from collections import Counter
+
+    fates = dedup.minhash_near_dup_drop_ids(pin)
+    assert fates.columns == [c for c in pin.columns if c not in ("toks", "fp")] + ["dropped"]
+    assert fates.count() == pin.count()
+    return Counter(map(tuple, fates.filter("NOT dropped").drop("dropped").collect()))
+
+
+def _assert_fused_equals_two_step(docs, *keep):
+    """The exact dedup inside the MinHash bucket window (the corpus
+    pipeline's path: a map-only pin of the non-null ids with doc_fp)
+    keeps the same rows, as often, as the reference two-step form: the
+    digest window, then drop-ids over its survivors."""
+    two_step = unique_doc_tokens(docs, *keep).localCheckpoint()
+    fused = dedup.pin_doc_tokens(docs.filter("doc_id IS NOT NULL"), *keep, dedup.doc_fp())
+    try:
+        got, want = _survivors(fused), _survivors(two_step)
+        assert got == want
+        return got
+    finally:
+        unpin(two_step)
+        unpin(fused)
 
 
 def test_digest_window_survivors_equal_min_semi_join(spark):
-    """unique_doc_tokens keeps the first doc per normalized-text digest
-    through a window: the survivors, and their token sets, equal the
-    min(doc_id)-per-digest aggregate semi-joined back to the documents.
-    Planted duplicates differ only in case and outer spaces, with the
-    lowest id neither first nor last in input order; a null id never
-    wins over a real one, and a digest held only by a null id has no
-    survivor (the semi-join matches no null)."""
+    """The exact dedup keeps the first doc per normalized-text digest:
+    the survivors of the fused path (no near-dups here), and their token
+    sets, equal the min(doc_id)-per-digest aggregate semi-joined back to
+    the documents, and so does the reference digest window. Planted
+    duplicates differ only in case and outer spaces, with the lowest id
+    neither first nor last in input order; a null id never wins over a
+    real one, and a digest held only by a null id has no survivor (the
+    semi-join matches no null)."""
     from pyspark.sql import functions as F
 
     rows = [
@@ -369,9 +448,142 @@ def test_digest_window_survivors_equal_min_semi_join(spark):
     def rows_of(df):
         return sorted((r["doc_id"], sorted(r["toks"])) for r in df.collect())
 
-    got = rows_of(dedup.unique_doc_tokens(docs))
+    pin = dedup.pin_doc_tokens(docs.filter("doc_id IS NOT NULL"), dedup.doc_fp())
+    try:
+        kept = dedup.minhash_near_dup_drop_ids(pin).filter("NOT dropped").select("doc_id")
+        got = rows_of(pin.join(kept, "doc_id", "left_semi"))
+    finally:
+        unpin(pin)
     assert got == rows_of(dedup.pin_doc_tokens(semi))
+    assert got == rows_of(unique_doc_tokens(docs))
     assert [d for d, _ in got] == [2, 3, 4, 9]
+
+
+def _pipeline_keep():
+    """The corpus pipeline's carried columns (prepare_training_data)."""
+    from pyspark.sql import functions as F
+
+    return (
+        "lang",
+        "source",
+        F.size(F.split(F.col("text"), " ")).cast("double").alias("f_tokens"),
+        F.length("text").cast("double").alias("f_chars"),
+    )
+
+
+def _corpus(spark, rows):
+    return spark.createDataFrame(
+        [(i, t, "en", f"s{n % 3}") for n, (i, t) in enumerate(rows)],
+        "doc_id bigint, text string, lang string, source string",
+    ).repartition(3)
+
+
+def test_fused_dedup_equals_two_step_sf(spark, sf_dir):
+    """On the fixture documents behind the pipeline's quality gate, the
+    fused exact + near dedup keeps the two-step form's rows."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.pipelines import (
+        quality_filter,
+    )
+
+    docs = quality_filter(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    got = _assert_fused_equals_two_step(docs, *_pipeline_keep())
+    assert 0 < sum(got.values()) < docs.count()
+
+
+def test_fused_dedup_equals_two_step_planted_family(spark):
+    """A 40-copy exact family (more than REPS_PER_BUCKET; the copies
+    differ only in case and outer spaces, and the lowest id is neither
+    first nor last in input order), near-dups of that family with
+    smaller and larger ids, an exact copy of a near-dup, a near-dup of
+    a near-dup, null ids, and unrelated docs: the fused path keeps the
+    two-step form's rows. Exact copies are never representatives, so
+    they cannot crowd the family's near-dups out of the
+    REPS_PER_BUCKET."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.pipelines import (
+        quality_filter,
+    )
+
+    base = [f"w{i}" for i in range(40)]
+    text = " ".join(base)
+    forms = [text, text.upper(), "  " + text, text.title() + " ", " " + text.upper() + "  "]
+    ids = [600 - 7 * i for i in range(40)]
+    ids = ids[10:] + ids[:10]  # the lowest id, 327, sits mid-list
+    rows = [(d, forms[n % len(forms)]) for n, d in enumerate(ids)]
+    swap = " ".join(base[:-1] + ["z1"])  # Jaccard 39/41 with the family
+    grow = text + " z2"  # 40/41
+    rows += [(900, swap), (200, grow), (950, swap.upper()), (None, text), (None, "q " + text)]
+    # 800 is a near-dup of 700 (40/42) but not of the family (39/43): it
+    # drops only if 700 stays a representative beside the 40 copies
+    rows += [(700, text + " y1"), (800, " ".join(base[1:] + ["y1", "y2"]))]
+    rows += [(10 + i, " ".join(f"u{i}_{j}" for j in range(25))) for i in range(30)]
+    docs = quality_filter(_corpus(spark, rows))
+    got = _assert_fused_equals_two_step(docs, *_pipeline_keep())
+    assert 200 in {r[0] for r in got}
+    assert not {327, 700, 800, 900, 950} & {r[0] for r in got}
+
+
+def test_fused_dedup_degenerate_corpora(spark):
+    """All documents copies of three texts: three survivors, the lowest
+    id of each. No document passing the quality gate: no rows, and no
+    error, on either path."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.pipelines import (
+        quality_filter,
+    )
+
+    texts = [" ".join(f"{p}{i}" for i in range(30)) for p in ("a", "b", "c")]
+    rows = [(100 - i, texts[i % 3].upper() if i % 2 else texts[i % 3]) for i in range(30)]
+    got = _assert_fused_equals_two_step(quality_filter(_corpus(spark, rows)), *_pipeline_keep())
+    assert sorted(r[0] for r in got) == [71, 72, 73] and sum(got.values()) == 3
+    short = [(i, "too short to pass") for i in range(10)]
+    got = _assert_fused_equals_two_step(quality_filter(_corpus(spark, short)), *_pipeline_keep())
+    assert not got
+
+
+def test_fused_dedup_repeated_ids(spark):
+    """A doc_id that appears more than once, where no id also labels an
+    exact copy of a smaller id's text: the same row twice (one kept),
+    one id on two texts that are not copies (one fate for both), an id
+    on a text and a case variant of it, and null ids. The fused path
+    keeps the two-step form's rows."""
+    base = [f"w{i}" for i in range(40)]
+    text = " ".join(base)
+    rows = [
+        (1, text),
+        (2, " ".join(base[1:] + ["z2"])),  # near-dup of 1
+        (2, " ".join(f"u{i}" for i in range(40))),
+        (3, " ".join(f"v{i}" for i in range(40))),
+        (3, " ".join(f"v{i}" for i in range(40))),
+        (4, " ".join(f"x{i}" for i in range(40))),
+        (4, " ".join(f"X{i}" for i in range(40)) + " "),
+        (None, text),
+        (None, " ".join(f"y{i}" for i in range(40))),
+    ]
+    got = _assert_fused_equals_two_step(_corpus(spark, rows), "lang")
+    assert sorted(got) == [(1, "en"), (3, "en"), (4, "en")]
+    assert sum(got.values()) == 3
+
+
+def test_minhash_lsh_lane_leaves_nothing_persisted(spark, sf_dir):
+    """The dedup_minhash_lsh registry lane writes its pairs to a
+    temporary table and releases its two pins (the token pin and the
+    band pin): building and collecting it adds no persisted RDD, and its
+    rows are those of the lazy pairs."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (
+        load_spread,
+    )
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet())
+    rows = dedup.q_dedup_minhash_lsh(spark, sf_dir).collect()
+    assert not set(persisted().keySet()) - before
+    lazy = dedup.minhash_near_dup_pairs(
+        dedup.pin_doc_tokens(load_spread(spark, sf_dir, "documents"))
+    )
+    try:
+        assert rows and sorted(rows) == sorted(lazy.collect())
+    finally:
+        unpin(lazy)
+    assert not set(persisted().keySet()) - before
 
 
 def test_connected_components_hand_graph(spark):

@@ -796,7 +796,7 @@ def _plan_nodes(node):
 
 def test_training_data_prep_moves_no_text(spark, sf_dir):
     """prepare_training_data reads the survivors' text once, into its one
-    narrow pin (doc_id, lang, source, f_tokens, f_chars, toks). Below the
+    narrow pin (doc_id, lang, source, f_tokens, f_chars, fp, toks). Below the
     sink, no exchange, broadcast or cached relation carries a ``text``
     attribute: the localCheckpoint cuts the scan-side plan that read it
     out of the lineage, so the MinHash stage, the cache, the fit and
@@ -851,69 +851,66 @@ def test_minhash_drop_ids_one_b_id_exchange(spark, sf_dir):
     assert re.match(r"b_id#\d+L?, \d+$", keyed[0]), keyed
 
 
-def test_training_data_prep_keeps_survivors_without_join(spark, sf_dir):
+def test_training_data_prep_keeps_survivors_without_join(spark, sf_dir, monkeypatch):
     """The corpus pipeline keeps the near-dedup survivors with a filter
-    on the MinHash stage's fate column: its plan, the cached relation
-    included, has no left-anti join and no exchange keyed on doc_id
-    alone, and the near-dedup runs through exactly one exchange keyed
-    on (band, bucket) and one keyed on b_id."""
+    on the MinHash stage's fate column, and decides the exact dedup in
+    the same stage: its plan, the cached relation included, has no
+    left-anti join, no exchange keyed on doc_id alone and none keyed on
+    the digest ``fp``, and the dedup runs through exactly one exchange
+    keyed on (band, bucket) and one keyed on b_id. The pin reads the
+    documents in one FileScan, with no hash exchange, broadcast or
+    join."""
     import re
 
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.pipelines import (
-        prepare_training_data,
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark import (
+        pipelines,
     )
 
-    persisted = spark.sparkContext._jsc.getPersistentRDDs
-    before = set(persisted().keySet())
-    try:
-        out = prepare_training_data(spark, sf_dir)
-        nodes = list(_plan_nodes(out._jdf.queryExecution().executedPlan()))
-        joins = [n.toString() for n in nodes if "Join" in n.getClass().getSimpleName()]
-        assert not [j for j in joins if "LeftAnti" in j], joins
+    pinned = []
+    real = pipelines.pin_doc_tokens
+
+    def spy(docs, *keep):
+        pinned.append(docs.select("doc_id", *keep)._jdf.queryExecution().executedPlan())
+        return real(docs, *keep)
+
+    monkeypatch.setattr(pipelines, "pin_doc_tokens", spy)
+
+    def shuffle_keys(plan):
         shuffles = [  # each exchange's own line, not its subtree
-            n.toString().splitlines()[0] for n in nodes
+            n.toString().splitlines()[0] for n in _plan_nodes(plan)
             if n.getClass().getSimpleName() == "ShuffleExchangeExec"
         ]
-        keys = [
+        return [
             re.sub(r"#\d+L?|, \d+$", "", k)
             for s in shuffles
             for k in re.findall(r"hashpartitioning\(([^)]*)\)", s)
         ]
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet())
+    try:
+        out = pipelines.prepare_training_data(spark, sf_dir)
+        nodes = list(_plan_nodes(out._jdf.queryExecution().executedPlan()))
+        joins = [n.toString() for n in nodes if "Join" in n.getClass().getSimpleName()]
+        assert not [j for j in joins if "LeftAnti" in j], joins
+        keys = shuffle_keys(out._jdf.queryExecution().executedPlan())
         assert "doc_id" not in keys, keys
+        assert not [k for k in keys if re.search(r"\bfp\b", k)], keys
         assert keys.count("band, bucket") == 1, keys
         assert keys.count("b_id") == 1, keys
+        assert len(pinned) == 1
+        pin_plan = pinned[0].toString()
+        assert not shuffle_keys(pinned[0]), pin_plan[:3000]
+        assert "BroadcastExchange" not in pin_plan and "Join" not in pin_plan, pin_plan[:3000]
+        scans = [
+            n.toString() for n in _plan_nodes(pinned[0])
+            if n.getClass().getSimpleName() == "FileSourceScanExec"
+        ]
+        assert len(scans) == 1 and "documents" in scans[0], scans
     finally:
         rdds = persisted()
         for rdd_id in set(rdds.keySet()) - before:
             rdds.get(rdd_id).unpersist(False)
-
-
-def test_exact_dedup_pin_one_fp_exchange(spark, sf_dir):
-    """The exact dedup that feeds the corpus pipeline's one pin is a
-    window over the text digest: the quality survivors' narrow columns
-    cross one exchange keyed on ``fp``, with no broadcast and no second
-    read of the documents (the min-per-digest aggregate it replaced was
-    semi-joined back onto a second scan)."""
-    import re
-
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.dedup import (
-        unique_doc_tokens,
-    )
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.pipelines import (
-        quality_filter,
-    )
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (
-        load_spread,
-    )
-
-    docs = quality_filter(load_spread(spark, sf_dir, "documents"))
-    plan = unique_doc_tokens(docs, "lang", "source")._jdf.queryExecution().executedPlan().toString()
-    hashed = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    assert len(hashed) == 1, plan[:3000]
-    assert re.match(r"fp#\d+, \d+$", hashed[0]), hashed
-    assert "BroadcastExchange" not in plan, plan[:3000]
-    assert "Join" not in plan, plan[:3000]
-    assert plan.count("FileScan parquet") == 1, plan[:3000]
 
 
 def test_minhash_drop_ids_one_bucket_exchange_no_band_pin(spark, sf_dir):
